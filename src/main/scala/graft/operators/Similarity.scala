@@ -1084,13 +1084,6 @@ object Similarity {
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
 
-  /** PROBE the persisted IVF index ([[writeIvfIndex]]): queries assign
-    * to their cell via the broadcast centroid table (the shuffle-free
-    * argmax fold), then join the partitioned corpus on the PARTITION
-    * column — the broadcast join plants a dynamic-partition-pruning
-    * subquery on the scan, so only the probed cells' directories are
-    * read. Same top-k contract as [[ivfTopK]].
-    */
   /** ERASURE from a persisted IVF index (the GDPR-deletion-from-serving
     * lane): remove tombstoned vectors by rewriting ONLY the cell
     * partitions that contain them — dynamic partition overwrite leaves
@@ -1139,6 +1132,13 @@ object Similarity {
     }
   }
 
+  /** PROBE the persisted IVF index ([[writeIvfIndex]]): queries assign
+    * to their cell via the broadcast centroid table (the shuffle-free
+    * argmax fold), then join the partitioned corpus on the PARTITION
+    * column — the broadcast join plants a dynamic-partition-pruning
+    * subquery on the scan, so only the probed cells' directories are
+    * read. Same top-k contract as [[ivfTopK]].
+    */
   def probeIvfIndex(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
     probeIvfIndexVia(queries, idCol, vecCol, k,

@@ -4,17 +4,14 @@ import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
@@ -35,25 +32,24 @@ import org.apache.spark.util.SerializableConfiguration
   *
   *  - **Partition-filter pushdown as a first-class contract**: static
   *    `cell = k` / `cell IN (...)` predicates prune directories at
-  *    PLANNING time — and [[SupportsRuntimeFiltering]] accepts the
-  *    dynamic-partition-pruning subquery a broadcast probe join plants,
-  *    so the per-query cell pruning that probeIvfIndex hand-rolled via
-  *    DPP-on-parquet is now an ordinary V2 runtime filter.
-  *  - **Data-filter pushdown to the row-group layer**: predicates on
-  *    primitive data columns become parquet `FilterPredicate`s —
-  *    row groups whose column stats exclude the predicate never decode,
-  *    and parquet's record-level assembly enforces the residue EXACTLY,
-  *    so the filters are claimed as fully pushed (no re-evaluation).
-  *    General `Not` shapes are deliberately NOT claimed (parquet
-  *    `notEq` keeps nulls where SQL drops them) — except
-  *    `Not(EqualTo)`, claimed as `and(notEq(c,null), notEq(c,v))`
-  *    (round-12), which restores SQL's unknown→false exactly.
+  *    PLANNING time and are claimed exactly (never re-evaluated) — and
+  *    [[SupportsRuntimeFiltering]] accepts the dynamic-partition-pruning
+  *    subquery a broadcast probe join plants, so the per-query cell
+  *    pruning that probeIvfIndex hand-rolled via DPP-on-parquet is an
+  *    ordinary V2 runtime filter.
+  *  - **Data filters as pruning hints**: predicates on primitive data
+  *    columns are NOT claimed — Spark keeps its Filter above the scan —
+  *    but they reach the reader as parquet `FilterPredicate`s, so row
+  *    groups whose statistics or dictionaries exclude the predicate and
+  *    pages the column index rules out are never decoded. Pruning is
+  *    conservative by parquet's contract, so the re-filter above keeps
+  *    results exact.
   *  - **Aggregate pushdown from footer statistics**
   *    ([[SupportsPushDownAggregates]]): ungrouped COUNT(*) / MIN / MAX
   *    over numeric columns answer from row-group metadata — one row per
   *    file, ZERO data pages decoded; a file missing stats falls back to
-  *    scanning just that column. Refused whenever data filters are
-  *    pushed (stats ignore filters).
+  *    scanning just that column. Spark offers aggregates only to scans
+  *    with no filter left above them, so data filters rule it out.
   *  - **Post-pruning statistics** ([[SupportsReportStatistics]]): the
   *    reported sizeInBytes covers ONLY the selected partitions, so a
   *    probe of 3 cells out of 4096 is broadcast-eligible above the scan
@@ -66,14 +62,16 @@ import org.apache.spark.util.SerializableConfiguration
   *    `spark.sql.sources.v2.bucketing.enabled`) can skip the exchange.
   *  - **Column pruning to the IO layer**: the pruned schema becomes the
   *    parquet requested projection, so a probe reading (vec_b, vb, nb)
-  *    out of a wider index never decodes the rest; a COUNT with no
-  *    pushed data filters reads footers only.
+  *    out of a wider index never decodes the rest; a projection of
+  *    partition columns only reads footers.
   *
-  * The read path is parquet-hadoop's PUBLIC `ParquetReader[Group]` (no
-  * Spark-internal reader classes), converting Groups to InternalRows
-  * for the index schemas' types: integral/floating primitives, strings,
-  * booleans, and single-level arrays of them (Spark's 3-level list
-  * encoding). Unsupported types fail loudly at schema time.
+  * ONE decode path: every scan that reads a data column hands each file
+  * to Spark's own `VectorizedParquetRecordReader`
+  * ([[GraftIndexSparkVectorReader]]), so decode semantics — types,
+  * nested columns, missing columns, datetime rebase — are
+  * spark.read.parquet's by construction. Only the decode-free readers
+  * (footer row counts, footer-stats aggregates) are the connector's own.
+  * Column types outside the supported set fail loudly at schema time.
   *
   * Registered as `graft-index` via DataSourceRegister, so
   * `CREATE TABLE ivf USING `graft-index` LOCATION path` gives the index
@@ -102,19 +100,7 @@ class GraftIndexSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    new GraftIndexTable(pathOf(properties), schema,
-      // diagnostic escape hatch (and the lane-parity test handle):
-      // .option("rowlane", "true") pins every read to the Group-reader
-      // row path, bypassing the vectorized lane
-      forceRowLane = java.lang.Boolean.parseBoolean(
-        properties.getOrDefault("rowlane", "false")),
-      // .option("graftlane", "true") pins unfiltered vectorized reads to
-      // the in-house columnar decoder instead of the delegated
-      // VectorizedParquetRecordReader lane (round-12) — the decoder-
-      // parity test handle and the fallback if a workload ever hits a
-      // delegation edge first
-      forceGraftLane = java.lang.Boolean.parseBoolean(
-        properties.getOrDefault("graftlane", "false")))
+    new GraftIndexTable(pathOf(properties), schema)
 }
 
 object GraftIndexTable {
@@ -329,41 +315,20 @@ object GraftIndexTable {
     Some(StructType(data.fields ++ partField))
   } catch { case _: Exception => None }
 
-  /** Types the FILTERED in-house lanes decode (columnar scratch-residue
-    * reader and Group-walk row reader are flat-only). Tables made
-    * entirely of these keep the full claim surface.
+  /** Column types the table admits: the primitive leaves the index
+    * writers and mounted serving tables use, and struct/map/array over
+    * them (round-13) — all decoded by Spark's own vectorized reader.
     */
-  private[sources] def flatLane(dt: DataType): Boolean = dt match {
+  private def supported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType | StringType |
          BooleanType | TimestampType | DateType | BinaryType |
          ShortType | ByteType | TimestampNTZType => true
     case _: DecimalType => true
-    // string elements (round-12 fourth sitting): tags/tokens columns
-    case ArrayType(LongType | IntegerType | DoubleType | FloatType |
-                   StringType, _) => true
-    case _ => false
-  }
-
-  /** A table carrying any column the filtered lanes can't decode
-    * (struct/map/deep arrays — the mounted-lake-table `props` shape).
-    * Such tables refuse DATA claims wholesale: every filtered scan then
-    * arrives at the connector unfiltered, rides Spark's own vectorized
-    * reader (which decodes nested natively), and Spark re-filters above
-    * — exact by construction. Partition pruning and footer aggregates
-    * stay on (decode-free).
-    */
-  private[sources] def hasNested(s: StructType): Boolean =
-    !s.forall(f => flatLane(f.dataType))
-
-  private def supported(dt: DataType): Boolean = flatLane(dt) || (dt match {
-    // nested (round-13): struct/map/array over supported leaves — decode
-    // rides the delegated lane only; claims refused on nested-bearing
-    // tables (see hasNested)
     case StructType(fields) => fields.forall(f => supported(f.dataType))
     case MapType(k, v, _) => supported(k) && supported(v)
     case ArrayType(e, _) => supported(e)
     case _ => false
-  })
+  }
 
   /** Partition-column types: the original primitive set plus DATE
     * (round-12) — the `dt=2026-08-16` daily layout is THE canonical
@@ -401,8 +366,7 @@ object GraftIndexTable {
   }
 }
 
-class GraftIndexTable(path: String, tableSchema: StructType,
-    forceRowLane: Boolean = false, forceGraftLane: Boolean = false)
+class GraftIndexTable(path: String, tableSchema: StructType)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   override def name(): String = s"graft_index(`$path`)"
@@ -432,7 +396,7 @@ class GraftIndexTable(path: String, tableSchema: StructType,
       n
     }
     new GraftIndexScanBuilder(path, tableSchema,
-      GraftIndexTable.partitionColumns(path), forceRowLane, forceGraftLane,
+      GraftIndexTable.partitionColumns(path),
       // the cap is consumed as an Int (ReadLimit.maxFiles) — a value past
       // Int.MaxValue must fail HERE, not silently wrap to a non-positive
       // cap that admits nothing (round-11 ADVICE)
@@ -453,8 +417,7 @@ class GraftIndexTable(path: String, tableSchema: StructType,
 }
 
 class GraftIndexScanBuilder(path: String, tableSchema: StructType,
-    partColsOrdered: Seq[String], forceRowLane: Boolean = false,
-    forceGraftLane: Boolean = false,
+    partColsOrdered: Seq[String],
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None,
     logRetention: String = "all")
@@ -465,7 +428,6 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
   private val partCols = partColsOrdered.toSet
   private var required: StructType = tableSchema
   private var pushedPart: Array[Filter] = Array.empty
-  private var pushedData: Array[Filter] = Array.empty
   private var hintData: Array[Filter] = Array.empty
   private var agg: Option[Aggregation] = None
   private var aggSchema: StructType = _
@@ -486,7 +448,7 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
   /** Partition-column filters prune directories; see the pruner for the
     * evaluated shapes. Null comparands are rejected (they stay with
     * Spark, which evaluates them to unknown/false) — the same guard
-    * [[dataPushable]] applies, so a legal `cell IN (1, NULL)` never
+    * [[hintable]] applies, so a legal `cell IN (1, NULL)` never
     * reaches the pruner's comparator. EqualNullSafe and IsNull ARE
     * claimed: null partition values exist (Hive default-partition
     * directories) and the pruner matches them exactly.
@@ -502,7 +464,7 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
       case LessThanOrEqual(_, v) => v != null
       // `<>` / NOT IN (round-12): claimed as the leaves they desugar to
       // under SQL semantics — And(IsNotNull, ≠ each) — which map
-      // unknown→false like every other claimed leaf; see dataPushable
+      // unknown→false like every other claimed leaf
       case Not(EqualTo(_, v)) => v != null
       case Not(In(_, vs)) => vs != null && vs.nonEmpty && vs.forall(_ != null)
       // string predicates: never match null, so unknown→false holds
@@ -511,35 +473,35 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
       case StringContains(_, v) => v != null
       // negation-free compounds of claimed legs compose exactly: every
       // leg maps SQL unknown→false, and false ≡ unknown through a
-      // monotone AND/OR lattice for the keep/drop decision (the same
-      // argument as dataPushable; a general Not would break it and stays
-      // refused — Not(EqualTo) above is the one negated leaf whose
-      // claimed semantic is itself negation-free)
+      // monotone AND/OR lattice for the keep/drop decision (a general
+      // Not would break it and stays refused — Not(EqualTo) above is the
+      // one negated leaf whose claimed semantic is itself negation-free)
       case Or(l, r) => partPushable(l) && partPushable(r)
       case And(l, r) => partPushable(l) && partPushable(r)
       case _ => false
     })
 
-  /** Data-column filters become parquet FilterPredicates — EXACT under
-    * record-level assembly, so fully claimed. Only shapes whose parquet
-    * null semantics match SQL's are accepted: a bare parquet notEq keeps
-    * nulls where SQL `!=` drops them, so general Not-shapes stay with
-    * Spark — EXCEPT `Not(EqualTo)` (round-12), which is claimed as
-    * `and(notEq(c, null), notEq(c, v))`: the explicit not-null leg
-    * restores SQL's unknown→false, making `<>` exact under the same
-    * lattice argument as every other claimed leaf. (A `<>` serving
-    * predicate previously fell to full decode.)
+  /** Data-column filters that translate to parquet FilterPredicates
+    * ([[GraftIndexFilters.toParquet]]) — used as PRUNING HINTS only,
+    * never claimed. A hint may keep rows the filter drops (Spark's
+    * Filter above removes them) but must never drop a row the filter
+    * keeps, so only shapes whose parquet null semantics are at least as
+    * permissive as SQL's translate: a bare parquet notEq keeps nulls
+    * where SQL `!=` drops them, so `Not(EqualTo)` becomes
+    * `and(notEq(c, null), notEq(c, v))` and general Not-shapes stay
+    * out. Every leaf maps SQL unknown→false, so negation-free OR/AND
+    * compounds of them compose (false and unknown are
+    * indistinguishable through a monotone AND/OR lattice for WHERE's
+    * keep-iff-TRUE decision).
     */
-  private def dataPushable(f: Filter): Boolean = f match {
+  private def hintable(f: Filter): Boolean = f match {
     case EqualTo(a, v) => v != null && primitive(a)
     case Not(EqualTo(a, v)) => v != null && primitive(a)
     case In(a, vs) => vs.nonEmpty && vs.forall(_ != null) && primitive(a)
     // NOT IN desugars like `<>`: And(IsNotNull, ≠v1, ≠v2, …)
     case Not(In(a, vs)) => vs.nonEmpty && vs.forall(_ != null) && primitive(a)
-    // string predicates (round-12): exact via parquet UserDefinedPredicate
-    // on the row lane and the vectorized residue on the columnar lane;
-    // none matches NULL, so SQL's unknown→false holds by construction.
-    // startsWith additionally prunes row groups off min/max stats.
+    // string predicates (round-12): parquet UserDefinedPredicates; none
+    // matches NULL. startsWith also prunes row groups off min/max stats.
     case StringStartsWith(a, v) => v != null && stringCol(a)
     case StringEndsWith(a, v) => v != null && stringCol(a)
     case StringContains(a, v) => v != null && stringCol(a)
@@ -549,15 +511,8 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
     case LessThanOrEqual(a, v) => v != null && comparable(a)
     case IsNull(a) => primitive(a)
     case IsNotNull(a) => primitive(a)
-    // OR/AND of claimed legs (Spark splits top-level conjuncts, so And
-    // only appears nested under Or, e.g. (v<10 OR (v>90 AND w=1))):
-    // safe because every claimed leaf maps SQL unknown→false and the
-    // combination is negation-free — false and unknown are
-    // indistinguishable through a monotone AND/OR lattice for WHERE's
-    // keep-iff-TRUE decision. Parquet's record-level assembly applies
-    // the same mapping, so the claim stays EXACT.
-    case Or(l, r) => dataPushable(l) && dataPushable(r)
-    case And(l, r) => dataPushable(l) && dataPushable(r)
+    case Or(l, r) => hintable(l) && hintable(r)
+    case And(l, r) => hintable(l) && hintable(r)
     case _ => false
   }
 
@@ -570,44 +525,34 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
     dataColType(name).contains(StringType)
   // DATE joins the comparable set (round-12): the comparand arrives as
   // java.sql.Date / LocalDate and converts losslessly to the INT32
-  // epoch-day count parquet stores, so eq/range claims (and their
-  // row-group stats pruning) are exact — a date-range scan over a 100 TB
-  // event table is the single most common serving predicate there is.
-  // SHORT/BYTE (same sitting) are INT32-annotated physicals — the same
-  // intColumn comparators. DECIMAL, BINARY and timestamps stay
-  // unclaimed: their predicates remain with Spark over decoded rows.
+  // epoch-day count parquet stores, so eq/range hints prune row groups
+  // — a date-range scan over a 100 TB event table is the single most
+  // common serving predicate there is. SHORT/BYTE (same sitting) are
+  // INT32-annotated physicals — the same intColumn comparators. The
+  // comparable set doubles as the footer MIN/MAX aggregate set.
+  // DECIMAL, BINARY and timestamps give no hints.
   private def comparable(name: String): Boolean = dataColType(name).exists {
     case LongType | IntegerType | DoubleType | FloatType | DateType |
          ShortType | ByteType => true
     case _ => false
   }
 
+  /** Partition filters are CLAIMED (exact directory pruning); every
+    * data filter goes back to Spark, which runs it above the scan. The
+    * hintable ones also reach the reader as parquet predicates, so
+    * Spark's vectorized reader prunes row groups (stats/dictionary) and
+    * pages (column index) with them. A bare `IS NOT NULL` conjunct — the
+    * constraint Spark infers beside every comparison and join key — is
+    * left out: it can only prune all-null groups, yet any predicate makes
+    * the reader fetch column indexes for every row group it reads.
+    */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (part, rest0) = filters.partition(partPushable)
-    // nested-bearing tables (round-13): data claims refused WHOLESALE —
-    // the filtered lanes are flat-only and the projection isn't known
-    // yet at pushFilters time, so a claim could strand a nested column
-    // with no decoder. Refusal routes every filtered scan to the
-    // delegated vectorized lane + Spark's own re-filter: exact by
-    // construction. Partition filters still prune directories (no
-    // decode involved).
-    val (data, rest) =
-      if (GraftIndexTable.hasNested(tableSchema)) (Array.empty[Filter], rest0)
-      else rest0.partition(dataPushable)
-    // HINTS (round-13): the pushable data filters a nested-bearing
-    // table refuses as claims still reach the delegated reader's conf
-    // as parquet predicates — Spark's own vectorized reader then prunes
-    // row groups (stats/dict) and pages (column index) with them while
-    // Spark re-filters above. Exactness is untouched: pruning is
-    // conservative by parquet's contract and the filter still runs.
-    hintData =
-      if (GraftIndexTable.hasNested(tableSchema)) rest0.filter(dataPushable)
-      else Array.empty
+    val (part, rest) = filters.partition(partPushable)
     pushedPart = part
-    pushedData = data
+    hintData = rest.filter(f => hintable(f) && !f.isInstanceOf[IsNotNull])
     rest
   }
-  override def pushedFilters(): Array[Filter] = pushedPart ++ pushedData
+  override def pushedFilters(): Array[Filter] = pushedPart
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -615,8 +560,8 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
   /** Footer-stats aggregates: COUNT(*) / MIN / MAX over numeric data
     * columns (string stats may be truncated — refused), ungrouped or
     * grouped by PARTITION columns (whose values are directory
-    * constants). Refused when data filters are pushed (footer stats
-    * ignore them).
+    * constants). Spark only offers an aggregate when no filter remains
+    * above the scan, so footer stats never meet a data filter.
     *
     * Pushdown degree: when the groupBy covers the partition columns
     * EXACTLY, every grouped input split carries ALL files of its group
@@ -639,7 +584,6 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
     * (partition) columns first, then aggregate fields — the V2 contract.
     */
   private def aggSchemaOf(aggregation: Aggregation): Option[StructType] = {
-    if (pushedData.nonEmpty) return None
     val groupNames = aggregation.groupByExpressions.map(colName)
     if (groupNames.exists(n => n.isEmpty || !partCols(n.get))) return None
     val groupFields = groupNames.map(n =>
@@ -676,22 +620,19 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
     }
 
   override def build(): Scan =
-    new GraftIndexScan(path, tableSchema, required, pushedPart, pushedData,
-      partColsOrdered, agg, Option(aggSchema), limit, forceRowLane,
-      forceGraftLane, maxFilesPerTrigger, maxBytesPerTrigger, logRetention,
-      hintData)
+    new GraftIndexScan(path, tableSchema, required, pushedPart, hintData,
+      partColsOrdered, agg, Option(aggSchema), limit, maxFilesPerTrigger,
+      maxBytesPerTrigger, logRetention)
 }
 
 class GraftIndexScan(path: String, tableSchema: StructType,
     required: StructType, pushedPart: Array[Filter],
-    pushedData: Array[Filter], partColsOrdered: Seq[String],
+    hintData: Array[Filter], partColsOrdered: Seq[String],
     agg: Option[Aggregation], aggSchema: Option[StructType],
-    limit: Option[Int] = None, forceRowLane: Boolean = false,
-    forceGraftLane: Boolean = false,
+    limit: Option[Int] = None,
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None,
-    logRetention: String = "all",
-    hintData: Array[Filter] = Array.empty)
+    logRetention: String = "all")
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning {
 
@@ -702,7 +643,7 @@ class GraftIndexScan(path: String, tableSchema: StructType,
   override def toBatch: Batch = this
   override def description(): String =
     s"graft-index $path, pushedPartitionFilters=[${pushedPart.mkString(", ")}], " +
-      s"pushedDataFilters=[${pushedData.mkString(", ")}], " +
+      s"dataFilterHints=[${hintData.mkString(", ")}], " +
       s"pushedAggregation=[${agg.map(_.aggregateExpressions.mkString(", ")).getOrElse("")}]"
 
   // ---- partition pruning ---------------------------------------------
@@ -930,9 +871,9 @@ class GraftIndexScan(path: String, tableSchema: StructType,
     *    long-lived 100 TB index the offset itself became the
     *    bottleneck. Legacy list offsets still deserialize (v1
     *    checkpoints restart cleanly).
-    *  - Claimed pushdown stays honored: partition filters gate which
-    *    files enter offsets, data filters ride the same reader factory
-    *    (vectorized residue) as the batch lane.
+    *  - Pushdown stays honored: partition filters gate which files
+    *    enter offsets, data-filter hints ride the same reader factory as
+    *    the batch read.
     *  - ADMISSION CONTROL (round-11, [[SupportsAdmissionControl]] +
     *    [[SupportsTriggerAvailableNow]]): `maxFilesPerTrigger` /
     *    `maxBytesPerTrigger` read options cap each micro-batch at N
@@ -977,8 +918,7 @@ class GraftIndexScan(path: String, tableSchema: StructType,
           new SerializableConfiguration(GraftIndexTable.activeHadoopConf()))
         new GraftIndexReaderFactory(readSchema(),
           readSchema().fields.map(f => constCol(f.name)),
-          pushedData, tableSchema, limit, conf, forceRowLane, forceGraftLane,
-          hintData)
+          hintData, tableSchema, limit, conf)
       })
   }
 
@@ -1010,8 +950,7 @@ class GraftIndexScan(path: String, tableSchema: StructType,
         aggSchema.get.fields.map(f => partCols.contains(f.name)), conf)
       case None => new GraftIndexReaderFactory(schema,
         schema.fields.map(f => constCol(f.name)),
-        pushedData, tableSchema, limit, conf, forceRowLane, forceGraftLane,
-        hintData)
+        hintData, tableSchema, limit, conf)
     }
   }
 }
@@ -1062,8 +1001,8 @@ object GraftIndexScan {
     // (round-12's rule) closed tiny-file bins one file early — on an
     // index-cell table (~100 KB files, 4 MB openCost) that planned ~2×
     // Spark's task count, and the per-task overhead WAS the measured
-    // full-projection gap to the parquet twin (LaneBench: 41 vs 28
-    // tasks at identical ms/task).
+    // full-projection gap to the parquet twin (41 vs 28 tasks at
+    // identical ms/task).
     slices.sortBy(s => (-costOf(s._3, lenOf(s._1)), s._1, s._2))
       .foreach { case (f, start, len, parts) =>
         val dataLen = if (len == GraftIndexRange.Whole) lenOf(f) else len
@@ -1575,7 +1514,7 @@ object GraftIndexStreamOffset {
 
 object GraftIndexFilters {
 
-  /** Partially evaluate a claimed filter for ONE file of an evolved set,
+  /** Partially evaluate a hint filter for ONE file of an evolved set,
     * under the rule "a column the file lacks is NULL for every row":
     * Left(true) = the filter passes every row (drop the conjunct),
     * Left(false) = it drops every row (skip the file), Right(residual)
@@ -1601,16 +1540,19 @@ object GraftIndexFilters {
         case (x, Left(false)) => x
         case (Right(a), Right(b)) => Right(Or(a, b))
       }
-      // any other claimed leaf over an absent (all-null) column matches
+      // any other hintable leaf over an absent (all-null) column matches
       // nothing: EqualTo/In/ranges/Not(EqualTo) need a non-null value,
       // IsNotNull fails
       case _ => Left(false)
     }
 
-  /** Spark source Filter → parquet FilterPredicate for the claimed
-    * shapes; types resolved from the table schema.
+  /** Spark source Filter → parquet FilterPredicate for the hintable
+    * shapes; types resolved from the table schema. `days` turns a DATE
+    * comparand into the day count the file stores (a LEGACY-rebased
+    * file stores Julian days).
     */
-  def toParquet(f: Filter, schema: StructType): FilterPredicate = {
+  def toParquet(f: Filter, schema: StructType,
+      days: Any => Int = GraftIndexDate.toDays): FilterPredicate = {
     def dt(n: String) = schema.find(_.name == n).get.dataType
     def eq(n: String, v: Any): FilterPredicate = dt(n) match {
       case LongType => FilterApi.eq(FilterApi.longColumn(n),
@@ -1626,7 +1568,7 @@ object GraftIndexFilters {
       // DATE is INT32 epoch days on both sides (round-12)
       case DateType => FilterApi.eq(FilterApi.intColumn(n),
         if (v == null) null
-        else java.lang.Integer.valueOf(GraftIndexDate.toDays(v)))
+        else java.lang.Integer.valueOf(days(v)))
       case other => throw new IllegalStateException(s"eq over $other")
     }
     def notEqNull(n: String): FilterPredicate = dt(n) match {
@@ -1652,7 +1594,7 @@ object GraftIndexFilters {
       case StringType => FilterApi.notEq(FilterApi.binaryColumn(n),
         Binary.fromString(v.toString))
       case DateType => FilterApi.notEq(FilterApi.intColumn(n),
-        java.lang.Integer.valueOf(GraftIndexDate.toDays(v)))
+        java.lang.Integer.valueOf(days(v)))
       case other => throw new IllegalStateException(s"notEq over $other")
     }
     def rel(n: String, v: Any,
@@ -1687,7 +1629,7 @@ object GraftIndexFilters {
         }
       case DateType =>
         val c = FilterApi.intColumn(n)
-        val x = java.lang.Integer.valueOf(GraftIndexDate.toDays(v))
+        val x = java.lang.Integer.valueOf(days(v))
         op match {
           case ">" => FilterApi.gt(c, x); case ">=" => FilterApi.gtEq(c, x)
           case "<" => FilterApi.lt(c, x); case _ => FilterApi.ltEq(c, x)
@@ -1706,12 +1648,12 @@ object GraftIndexFilters {
     // 1.16's RECORD-LEVEL NotIn inspector is broken for sets with ≥2
     // values — its update() returns keep=true as soon as the value
     // differs from ANY set element (correct only for singletons), so a
-    // claimed notIn would silently keep every non-null row (caught by
-    // this repo's large-NOT-IN lane spec before it shipped). The old
+    // notIn predicate would silently keep every non-null row (caught by
+    // this repo's large-NOT-IN spec before it shipped). The old
     // And-of-notEq chain is no better at scale: a 5000-element NOT IN
     // builds a 5000-deep And tree and the record-level visitor
     // recursion overflows the task stack (also caught by the spec).
-    // The claim instead rides [[GraftNotInSet]] — a UserDefinedPredicate
+    // NOT IN instead rides [[GraftNotInSet]] — a UserDefinedPredicate
     // over the same hash set: exact keep (null never matches, SQL's
     // unknown→false by construction), one set lookup per record,
     // depth 1 however long the list.
@@ -1738,7 +1680,7 @@ object GraftIndexFilters {
         FilterApi.in(FilterApi.binaryColumn(n), s)
       case DateType =>
         val s = new java.util.HashSet[java.lang.Integer]()
-        vs.foreach(v => s.add(GraftIndexDate.toDays(v)))
+        vs.foreach(v => s.add(days(v)))
         FilterApi.in(FilterApi.intColumn(n), s)
       case other => throw new IllegalStateException(s"in over $other")
     }
@@ -1770,7 +1712,7 @@ object GraftIndexFilters {
           new GraftNotInSet[Binary](s))
       case DateType =>
         val s = new java.util.HashSet[java.lang.Integer]()
-        vs.foreach(v => s.add(GraftIndexDate.toDays(v)))
+        vs.foreach(v => s.add(days(v)))
         FilterApi.userDefined(FilterApi.intColumn(n),
           new GraftNotInSet[java.lang.Integer](s))
       case other => throw new IllegalStateException(s"notIn over $other")
@@ -1778,7 +1720,7 @@ object GraftIndexFilters {
     f match {
       case EqualTo(a, v) => eq(a, v)
       // `<>` / NOT IN under SQL semantics: parquet's bare notEq KEEPS
-      // nulls, so the explicit not-null leg is mandatory for the claim
+      // nulls, so the explicit not-null leg is mandatory
       case Not(EqualTo(a, v)) => FilterApi.and(notEqNull(a), notEq(a, v))
       case Not(In(a, vs)) =>
         FilterApi.and(notEqNull(a), notInSet(a, vs))
@@ -1799,11 +1741,13 @@ object GraftIndexFilters {
       case LessThan(a, v) => rel(a, v, "<")
       case LessThanOrEqual(a, v) => rel(a, v, "<=")
       // negation-free compounds compose exactly (unknown→false per leg
-      // on both engines; see dataPushable)
-      case Or(l, r) => FilterApi.or(toParquet(l, schema), toParquet(r, schema))
-      case And(l, r) => FilterApi.and(toParquet(l, schema), toParquet(r, schema))
+      // on both engines; see GraftIndexScanBuilder.hintable)
+      case Or(l, r) =>
+        FilterApi.or(toParquet(l, schema, days), toParquet(r, schema, days))
+      case And(l, r) =>
+        FilterApi.and(toParquet(l, schema, days), toParquet(r, schema, days))
       case other => throw new IllegalStateException(
-        s"graft-index: unpushable filter claimed: $other")
+        s"graft-index: filter has no parquet translation: $other")
     }
   }
 }
@@ -1838,7 +1782,7 @@ private[sources] class GraftStartsWith(prefix: String)
     cmp.compare(max.slice(0, math.min(p.length, max.length)), pb) < 0 ||
       cmp.compare(min.slice(0, math.min(p.length, min.length)), pb) > 0
   }
-  // only consulted under a pushed NOT(this) — never claimed; keep all
+  // only consulted under a pushed NOT(this) — never built; keep all
   override def inverseCanDrop(
       stat: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean =
     false
@@ -1851,8 +1795,8 @@ private[sources] class GraftStartsWith(prefix: String)
   * sets in parquet-mr 1.16 (keeps any value differing from ANY
   * element), and an And-of-notEq chain overflows the visitor's
   * recursion at a few thousand elements. keep(null) = false — SQL's
-  * unknown→false — so the surrounding And(IsNotNull, …) claim stays
-  * exact. No stats pruning: an exclusion list says nothing useful
+  * unknown→false — matching the surrounding And(IsNotNull, …). No
+  * stats pruning: an exclusion list says nothing useful
   * about a group's min/max.
   */
 private[sources] class GraftNotInSet[T <: Comparable[T]](
@@ -1960,21 +1904,20 @@ private[graft] object GraftFooterCache {
 }
 
 /** Executor-side reader factory: partition splits (one or many files)
-  * via the public ParquetReader[Group] API, Groups converted to
-  * InternalRows in readSchema order; partition columns are constants
-  * from the directory name. When NO data column is required and no data
-  * filters are pushed, the reader emits footer-counted constant rows —
-  * zero data pages decoded.
+  * decode through Spark's own vectorized parquet reader
+  * ([[GraftIndexSparkVectorReader]]) whenever a data column is
+  * projected; partition columns and `_file` are per-file constants.
+  * When NO data column is required (a partition-only projection or a
+  * COUNT), the reader emits footer-counted constant rows — zero data
+  * pages decoded.
   */
 class GraftIndexReaderFactory(readSchema: StructType, isPart: Array[Boolean],
-    pushedData: Array[Filter], tableSchema: StructType,
+    // data-filter PRUNING HINTS: parquet predicates for row-group/page
+    // pruning only — Spark re-filters above, so they carry no
+    // exactness weight
+    hintData: Array[Filter], tableSchema: StructType,
     limit: Option[Int] = None,
     private[graft] val conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
-    forceRowLane: Boolean = false, forceGraftLane: Boolean = false,
-    // refused-claim HINTS for the delegated lane (nested-bearing
-    // tables): parquet predicates for group/page pruning only — Spark
-    // re-filters above, so they carry no exactness weight
-    hintData: Array[Filter] = Array.empty,
     // session-SQL knobs captured at PLANNING time (the executor has no
     // SparkSession): exactly the keys Spark's own parquet scan copies
     // into its per-task Hadoop conf before handing it to the
@@ -1982,60 +1925,11 @@ class GraftIndexReaderFactory(readSchema: StructType, isPart: Array[Boolean],
     sql: GraftSessionSql = GraftSessionSql.capture())
     extends PartitionReaderFactory {
 
-  /** VECTORIZED lane eligibility. Round-10 shipped the lane for pure
-    * projections (closing the documented ~35% full-scan penalty of the
-    * Group-reader row path); round-11 extends it to scans with pushed
-    * data filters and limits — the common real serving shape (probe +
-    * row-group claim) no longer falls back to the slow row path. The
-    * claimed filters keep their EXACT semantics: row-group pruning
-    * happens at file open (footer stats via parquet's own
-    * filterRowGroups), then the residue is re-evaluated VECTORIZED over
-    * the decoded batch and survivors compact into the output batch —
-    * same rows as parquet's record-level assembly, decoded columnar. A
-    * filter column outside the projection decodes into a scratch vector
-    * that never reaches the output. The zero-data-column, zero-filter
-    * COUNT path stays on the footer-counting reader (zero decode beats
-    * any decode).
-    */
-  private[graft] val columnarEligible: Boolean = {
-    val dataFields = readSchema.fields.zip(isPart).collect { case (f, false) => f }
-    // UNFILTERED scans delegate to Spark's own vectorized reader, which
-    // decodes every type spark.read.parquet does — including DECIMAL
-    // and nested struct/map/array (round-13): eligibility there is just
-    // "something to decode". The type gates below govern only the
-    // in-house lanes (forced graft lane, or filtered scans).
-    if (pushedData.isEmpty && !forceGraftLane)
-      !forceRowLane && dataFields.nonEmpty
-    else {
-      // DECIMAL is deliberately absent from the in-house columnar set:
-      // filtered decimal scans fall back to the row lane's
-      // annotation-driven convert
-      def ok(dt: DataType): Boolean = dt match {
-        case LongType | IntegerType | DoubleType | FloatType | StringType |
-             BooleanType | TimestampType | DateType | BinaryType |
-             ShortType | ByteType | TimestampNTZType => true
-        case ArrayType(LongType | IntegerType | DoubleType | FloatType |
-                       StringType, _) => true
-        case _ => false
-      }
-      // pushed filters only ever reference flat primitives (dataPushable),
-      // but verify against the table schema — an unknown shape must fall
-      // back to the row lane, never decode wrong
-      def flatPrim(n: String): Boolean =
-        tableSchema.find(_.name == n).map(_.dataType).exists {
-          case LongType | IntegerType | DoubleType | FloatType | StringType |
-               BooleanType | TimestampType | DateType | ShortType |
-               ByteType => true
-          case _ => false
-        }
-      !forceRowLane &&
-        (dataFields.nonEmpty || pushedData.nonEmpty) &&
-        dataFields.forall(f => ok(f.dataType)) &&
-        pushedData.forall(_.references.forall(flatPrim))
-    }
-  }
+  private val dataFields: Array[StructField] =
+    readSchema.fields.zip(isPart).collect { case (f, false) => f }
 
-  override def supportColumnarReads(p: InputPartition): Boolean = columnarEligible
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    dataFields.nonEmpty
 
   /** Normalize both split kinds to (file, start, len, constant row):
     * partition values come from the split's directory chain, the
@@ -2063,37 +1957,16 @@ class GraftIndexReaderFactory(readSchema: StructType, isPart: Array[Boolean],
   }
 
   override def createColumnarReader(
-      p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val dataFields = readSchema.fields.zip(isPart).collect {
-      case (f, false) => f
-    }
-    // UNFILTERED decode delegates to Spark's own vectorized parquet
-    // reader (round-12): with no residue to enforce, the connector adds
-    // no decode-time value — and Spark's reader does bulk page decode
-    // where the in-house ColumnReader path pays a per-value virtual
-    // call, the measured ~40% full-projection gap to the parquet twin.
-    // Filtered scans keep the in-house scratch-residue reader, whose
-    // claim-exact semantics (and footer-cache row-group pruning)
-    // already bench in the parquet twin's noise band.
-    if (pushedData.isEmpty && !forceGraftLane)
-      new GraftIndexSparkVectorReader(fileParts(p), readSchema, isPart,
-        dataFields, limit, sql, conf.value.value, hintData, tableSchema)
-    else
-      new GraftIndexColumnarReader(fileParts(p), readSchema, isPart,
-        dataFields, pushedData, tableSchema, limit, conf.value.value)
-  }
+      p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftIndexSparkVectorReader(fileParts(p), readSchema, isPart,
+      dataFields, limit, sql, conf.value.value, hintData, tableSchema)
 
+  /** Row reads only ever carry constant columns (data-column scans are
+    * columnar, see supportColumnarReads).
+    */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val dataFields = readSchema.fields.zip(isPart).collect {
-      case (f, false) => f
-    }
-    val base =
-      if (dataFields.isEmpty && pushedData.isEmpty)
-        new GraftIndexCountingReader(fileParts(p), readSchema, isPart,
-          conf.value.value)
-      else
-        new GraftIndexRowReader(fileParts(p), readSchema, isPart,
-          dataFields, pushedData, tableSchema, conf.value.value)
+    val base = new GraftIndexCountingReader(fileParts(p), readSchema, isPart,
+      conf.value.value)
     limit match {
       case Some(n) => new PartitionReader[InternalRow] {
         private var emitted = 0
@@ -2167,7 +2040,7 @@ object GraftSessionSql {
   }
 }
 
-/** UNFILTERED vectorized lane (round-12): per file, Spark's OWN
+/** The connector's ONE data decoder: per file, Spark's OWN
   * VectorizedParquetRecordReader — the same bulk page decoder every
   * parquet FileSourceScan runs — initialized from the executor-side
   * cached footer (its public initialize overload accepts a pre-read
@@ -2180,15 +2053,15 @@ object GraftSessionSql {
   * semantics (missing columns → null vectors, timestamp rebase from
   * the file's own writer metadata, type widening under mergeSchema)
   * are spark.read.parquet's by construction — it IS that reader.
-  * Filtered scans never come here: the in-house scratch-residue reader
-  * keeps the claimed-filter semantics exact.
+  * Data-filter hints become the reader's parquet filter predicate, so
+  * row groups and pages they rule out are never decoded; Spark's Filter
+  * above the scan keeps the result exact.
   */
 class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any])],
     readSchema: StructType, isPart: Array[Boolean],
     dataFields: Array[StructField], limit: Option[Int],
     sql: GraftSessionSql, baseConf: Configuration,
-    hintFilters: Array[Filter] = Array.empty,
-    tableSchema: StructType = StructType(Nil))
+    hintFilters: Array[Filter], tableSchema: StructType)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
   import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
@@ -2231,6 +2104,18 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     c
   }
 
+  // ONE task context per distinct conf, reused across files:
+  // TaskAttemptContextImpl copies its conf into a JobConf, and that copy
+  // (plus the copy a hint conf needs) per file was the dominant cost of
+  // small-file filtered scans. Spark's reader only reads the conf.
+  private def newContext(c: Configuration) =
+    new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      c, new org.apache.hadoop.mapreduce.TaskAttemptID())
+  private lazy val plainContext = newContext(fc)
+  // keyed by the file's folded hints and whether its dates are LEGACY
+  private val hintContexts = scala.collection.mutable.HashMap[
+    (Seq[Filter], Boolean), org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl]()
+
   private def openNext(): Boolean = {
     // loop, not recursion: a constant-false hint fold skips a file, and
     // a bin can hold many skippable files (openCostInBytes=0 unbounds
@@ -2252,32 +2137,51 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     val (file, start, sliceLen, const) = fileQueue.dequeue()
     val p = new Path(file)
     val (footer0, fileLen) = GraftFooterCache.footerWithLen(file, fc)
-    // refused-claim HINTS (round-13, nested-bearing tables): fold the
-    // pushable-but-refused filters against THIS file's columns (absent
-    // column = all-null, exactly the claim lanes' rule) and stamp the
-    // residual on a per-file conf — Spark's own reader then prunes row
-    // groups by stats/dictionary and pages by the column index
-    // (ParquetRowGroupReaderImpl reads via readNextFilteredRowGroup).
-    // A conjunct that folds to constant FALSE skips the file with zero
-    // IO. Spark still runs the full Filter above: the hints only shed
-    // work, never rows that could match.
-    val ctxConf: Configuration =
-      if (hintFilters.isEmpty) fc
+    // rebase modes — DataSourceUtils' exact spec (round-13, was
+    // two-state): legacy-stamped files rebase LEGACY; files carrying a
+    // Spark 3+ version stamp decode verbatim (CORRECTED); files with NO
+    // Spark version metadata (non-Spark or pre-3.0 writers) fall back
+    // to the session's *RebaseModeInRead — default EXCEPTION, i.e.
+    // refuse ancient values rather than guess a calendar
+    val kv = Option(footer0.getFileMetaData.getKeyValueMetaData)
+      .getOrElse(java.util.Collections.emptyMap[String, String]())
+    def rebase(legacyKey: String, fallback: String): String =
+      if (kv.containsKey(legacyKey)) "LEGACY"
+      else if (kv.containsKey("org.apache.spark.version")) "CORRECTED"
+      else fallback
+    val dtMode = rebase("org.apache.spark.legacyDateTime", sql.dtRebaseRead)
+    val i96Mode = rebase("org.apache.spark.legacyINT96", sql.i96RebaseRead)
+    // data-filter HINTS: fold them against THIS file's columns (absent
+    // column = all-null) and stamp the residual on a per-file conf —
+    // Spark's own reader then prunes row groups by stats/dictionary and
+    // pages by the column index (ParquetRowGroupReaderImpl reads via
+    // readNextFilteredRowGroup). A conjunct that folds to constant FALSE
+    // skips the file with zero IO. Spark still runs the full Filter
+    // above: the hints only shed work, never rows that could match.
+    // DATE comparands follow the file's calendar exactly like Spark's
+    // ParquetFilters: a LEGACY-rebased file stores Julian day counts.
+    val ctx =
+      if (hintFilters.isEmpty) plainContext
       else {
         val present = footer0.getFileMetaData.getSchema.getFields
           .asInstanceOf[java.util.List[org.apache.parquet.schema.Type]]
           .stream().map[String](_.getName).toArray.map(_.toString).toSet
         val folded = hintFilters.map(GraftIndexFilters.forFile(_, present))
         if (folded.contains(Left(false))) return 0
-        val inFile = folded.collect { case Right(f) => f }
-        if (inFile.isEmpty) fc
-        else {
+        val inFile = folded.collect { case Right(f) => f }.toSeq
+        if (inFile.isEmpty) plainContext
+        else hintContexts.getOrElseUpdate((inFile, dtMode == "LEGACY"), {
+          val days: Any => Int =
+            if (dtMode == "LEGACY") v =>
+              org.apache.spark.sql.catalyst.util.RebaseDateTime
+                .rebaseGregorianToJulianDays(GraftIndexDate.toDays(v))
+            else GraftIndexDate.toDays
           val c = new Configuration(fc)
           org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(c,
-            inFile.map(GraftIndexFilters.toParquet(_, tableSchema))
+            inFile.map(GraftIndexFilters.toParquet(_, tableSchema, days))
               .reduce(FilterApi.and))
-          c
-        }
+          newContext(c)
+        })
       }
     // range slice: hand the reader a footer holding ONLY the slice's
     // midpoint-owned row groups (what Spark's own scans do — they read
@@ -2291,20 +2195,6 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
         GraftIndexRange.blocksIn(footer0, start, sliceLen))
     val splitLen =
       if (whole) fileLen else math.min(sliceLen, fileLen - start)
-    // rebase modes — DataSourceUtils' exact spec (round-13, was
-    // two-state): legacy-stamped files rebase LEGACY; files carrying a
-    // Spark 3+ version stamp decode verbatim (CORRECTED); files with NO
-    // Spark version metadata (non-Spark or pre-3.0 writers) fall back
-    // to the session's *RebaseModeInRead — default EXCEPTION, i.e.
-    // refuse ancient values rather than guess a calendar
-    val kv = Option(footer.getFileMetaData.getKeyValueMetaData)
-      .getOrElse(java.util.Collections.emptyMap[String, String]())
-    def rebase(legacyKey: String, fallback: String): String =
-      if (kv.containsKey(legacyKey)) "LEGACY"
-      else if (kv.containsKey("org.apache.spark.version")) "CORRECTED"
-      else fallback
-    val dtMode = rebase("org.apache.spark.legacyDateTime", sql.dtRebaseRead)
-    val i96Mode = rebase("org.apache.spark.legacyINT96", sql.i96RebaseRead)
     // INT96 zone conversion (round-13): ParquetFileFormat shifts
     // Impala-written INT96 into the session zone when
     // int96TimestampConversion is on and the file was NOT created by
@@ -2319,20 +2209,26 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     // base downcasts to the OLD interface internally
     val split = new org.apache.hadoop.mapred.FileSplit(
       p, start, splitLen, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      ctxConf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    val r = new VectorizedParquetRecordReader(
-      convertTz, dtMode, sql.tz, i96Mode, sql.tz, false, BatchRows)
+    // batch vectors sized to the slice: index-cell files hold a few
+    // hundred rows, and a full 4096-row allocation per file was a
+    // measurable share of small-file scans
+    var sliceRows = 0L
+    footer.getBlocks.forEach(b => sliceRows += b.getRowCount)
+    val r = new VectorizedParquetRecordReader(convertTz, dtMode, sql.tz,
+      i96Mode, sql.tz, false, math.max(1L, math.min(BatchRows, sliceRows)).toInt)
+    // the reader takes the cached footer only together with an open
+    // stream; without one it re-reads the footer from the file
+    val input = HadoopInputFile.fromPath(p, fc)
+    val stream = input.newStream()
     var ok = false
     try {
-      r.initialize(split, ctx,
-        Some(HadoopInputFile.fromPath(p, fc)), None, Some(footer))
+      r.initialize(split, ctx, Some(input), Some(stream), Some(footer))
       val pvals = new GenericInternalRow(
         partOrdinals.map(const(_)).asInstanceOf[Array[Any]])
       r.initBatch(partSchema, pvals)
       r.enableReturningBatches()
       ok = true
-    } finally if (!ok) r.close()
+    } finally if (!ok) { r.close(); stream.close() }
     inner = r
     val rb = r.resultBatch()
     out = new ColumnarBatch(order.map(j => rb.column(j): ColumnVector), 0)
@@ -2369,14 +2265,13 @@ object GraftIndexSparkVectorReader {
   private[graft] val opens = new java.util.concurrent.atomic.AtomicLong
 
   /** Rows emitted by delegated readers — the hint-pruning observable:
-    * with refused-claim hints stamped, pruned groups/pages never emit.
+    * with data-filter hints stamped, pruned groups/pages never emit.
     */
   private[graft] val rowsRead = new java.util.concurrent.atomic.AtomicLong
 }
 
-/** Footer-count-only reader for zero-data-column, zero-data-filter
-  * projections. Emits per FILE (constants may differ across a packed
-  * split's files).
+/** Footer-count-only reader for zero-data-column projections. Emits
+  * per FILE (constants may differ across a packed split's files).
   */
 class GraftIndexCountingReader(fileParts: Seq[(String, Long, Long, Array[Any])],
     readSchema: StructType, isPart: Array[Boolean], conf: Configuration)
@@ -2564,277 +2459,10 @@ object GraftIndexAggReaderFactory {
   }
 }
 
-class GraftIndexRowReader(fileParts: Seq[(String, Long, Long, Array[Any])],
-    readSchema: StructType, isPart: Array[Boolean],
-    dataFields: Array[StructField], pushedData: Array[Filter],
-    tableSchema: StructType, baseConf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private val fileQueue = scala.collection.mutable.Queue(fileParts: _*)
-  private var partConst: Array[Any] = _ // the CURRENT file's constants
-  private var reader: ParquetReader[Group] = _
-  private var current: Group = _
-  // > 0: the current file lacks EVERY projected data column — emit this
-  // many all-null data rows without a parquet record reader
-  private var constRows: Long = 0L
-
-  /** Advance to the next file that contributes rows. Files may carry
-    * HETEROGENEOUS schemas under one merged table schema (evolved
-    * writers): a column absent from a file reads as null — exactly
-    * spark.read.parquet's semantics — so
-    *  - projected columns absent from the file are skipped in the
-    *    parquet projection and emitted as null by convert();
-    *  - a pushed filter referencing an absent column is a PER-FILE
-    *    constant (the column is null for every row): IsNull keeps the
-    *    file and drops that conjunct, every other claimed shape needs a
-    *    non-null value → the whole file is skipped;
-    *  - a file lacking every projected data column still yields its
-    *    (filter-surviving) rows as partition-constant + null rows.
-    */
-  private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    while (fileQueue.nonEmpty) {
-      val (file, start, len, const) = fileQueue.dequeue()
-      partConst = const
-      val conf = new Configuration(baseConf)
-      // requested projection: required data columns ∪ filter columns (the
-      // record-level filter needs its inputs materialized); footer via
-      // the executor-side cache (round-12)
-      val footer = GraftFooterCache.footer(file, conf).getFileMetaData
-      GraftIndexTs.vetNoLegacyRebase(footer.getKeyValueMetaData,
-        (dataFields.map(_.dataType) ++ pushedData.flatMap(_.references)
-          .flatMap(n => tableSchema.find(_.name == n)).map(_.dataType)).toSeq,
-        file)
-      val fileSchema = footer.getSchema
-      val present = fileSchema.getFields
-        .asInstanceOf[java.util.List[org.apache.parquet.schema.Type]]
-        .stream().map[String](_.getName).toArray.map(_.toString).toSet
-      // per-file filter folding (absent column ⇒ NULL): constant-false
-      // skips the file, constant-true conjuncts drop, residuals enforce
-      val perFile = pushedData.map(GraftIndexFilters.forFile(_, present))
-      if (!perFile.contains(Left(false))) {
-        val filtersInFile = perFile.collect { case Right(f) => f }
-        val wanted = (dataFields.map(_.name).toSet ++
-          filtersInFile.flatMap(_.references)).intersect(present)
-        if (wanted.isEmpty) {
-          // no decodable column and no in-file filter: every row of the
-          // slice survives as partition constants + nulls
-          constRows = GraftIndexRange.rows(file, conf, start, len)
-          if (constRows > 0) return true
-        } else {
-          val projected = new org.apache.parquet.schema.MessageType(
-            fileSchema.getName,
-            fileSchema.getFields.asInstanceOf[java.util.List[org.apache.parquet.schema.Type]]
-              .stream().filter(t => wanted.contains(t.getName))
-              .toArray(n => new Array[org.apache.parquet.schema.Type](n)): _*)
-          conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-            projected.toString)
-          var b = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-            .withConf(conf)
-          // range slice: parquet's own withFileRange applies the same
-          // midpoint rule, so slices partition the file's rows exactly
-          if (!(start == 0L && len == GraftIndexRange.Whole))
-            b = b.withFileRange(start, GraftIndexRange.endOf(start, len))
-          if (filtersInFile.nonEmpty) {
-            val pred = filtersInFile.map(GraftIndexFilters.toParquet(_, tableSchema))
-              .reduce(FilterApi.and)
-            b = b.withFilter(FilterCompat.get(pred))
-          }
-          reader = b.build()
-          return true
-        }
-      }
-      // else: some conjunct folds to constant FALSE for this file
-      // (e.g. a range over an absent, all-null column) — skip it wholesale
-    }
-    false
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (constRows > 0) { constRows -= 1; current = null; return true }
-      if (reader == null && !openNext()) return false
-      if (constRows > 0) { constRows -= 1; current = null; return true }
-      current = reader.read()
-      if (current != null) return true
-      reader.close(); reader = null
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(readSchema.length)
-    var di = 0
-    var i = 0
-    while (i < readSchema.length) {
-      if (isPart(i)) row.update(i, partConst(i))
-      else {
-        // current == null: constant-rows mode (file lacks every
-        // projected data column) — all data columns are null
-        row.update(i,
-          if (current == null) null
-          else convert(current, dataFields(di).name, dataFields(di).dataType))
-        di += 1
-      }
-      i += 1
-    }
-    row
-  }
-
-  /** Group → Spark internal value for the supported index types.
-    * Arrays follow Spark's 3-level list encoding (group LIST → repeated
-    * group list → element). A column the file's schema lacks (evolved
-    * file sets) is null, like spark.read.parquet's merged view.
-    */
-  private def convert(g: Group, name: String, dt: DataType): Any = {
-    if (!g.getType.containsField(name)) return null
-    val idx = g.getType.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(idx) == 0) return null
-    dt match {
-      case LongType => java.lang.Long.valueOf(g.getLong(idx, 0))
-      case IntegerType => java.lang.Integer.valueOf(g.getInteger(idx, 0))
-      case DoubleType => java.lang.Double.valueOf(g.getDouble(idx, 0))
-      case FloatType => java.lang.Float.valueOf(g.getFloat(idx, 0))
-      case BooleanType => java.lang.Boolean.valueOf(g.getBoolean(idx, 0))
-      case StringType => UTF8String.fromString(g.getString(idx, 0))
-      // DATE: INT32 epoch days = Spark's internal DateType (round-12)
-      case DateType => java.lang.Integer.valueOf(g.getInteger(idx, 0))
-      // SHORT/BYTE: INT32-annotated physicals, narrowed here
-      case ShortType => java.lang.Short.valueOf(g.getInteger(idx, 0).toShort)
-      case ByteType => java.lang.Byte.valueOf(g.getInteger(idx, 0).toByte)
-      // BINARY payloads (multimodal lane, round-12): internal form is
-      // the raw byte array; getBytes copies out of the page buffer
-      case BinaryType => g.getBinary(idx, 0).getBytes
-      // DECIMAL: unscaled value by physical (INT32/INT64/FLBA), scale
-      // from the file's own annotation — Spark's internal Decimal at
-      // the TABLE's precision/scale (equal on the uniform layouts the
-      // writers emit; a genuinely rescaled evolved file would fail
-      // loudly in changePrecision, not silently misread)
-      case dt: DecimalType =>
-        val pt = g.getType.getType(idx).asPrimitiveType()
-        val scale = pt.getLogicalTypeAnnotation match {
-          case d: org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            d.getScale
-          case _ => dt.scale
-        }
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        val bd = pt.getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 =>
-            java.math.BigDecimal.valueOf(g.getInteger(idx, 0).toLong, scale)
-          case PrimitiveTypeName.INT64 =>
-            java.math.BigDecimal.valueOf(g.getLong(idx, 0), scale)
-          case _ => new java.math.BigDecimal(
-            new java.math.BigInteger(g.getBinary(idx, 0).getBytes), scale)
-        }
-        Decimal(BigDecimal(bd), dt.precision, dt.scale)
-      // TIMESTAMP_NTZ: same micros decode as TIMESTAMP — NTZ is
-      // timezone-free by definition, so there is no zone math anywhere
-      case TimestampNTZType =>
-        val pt = g.getType.getType(idx).asPrimitiveType()
-        java.lang.Long.valueOf(GraftIndexTs.adjustToMicros(pt, g.getLong(idx, 0)))
-      case TimestampType =>
-        val pt = g.getType.getType(idx).asPrimitiveType()
-        java.lang.Long.valueOf(
-          if (pt.getPrimitiveTypeName ==
-              org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96)
-            GraftIndexTs.int96ToMicros(g.getInt96(idx, 0))
-          else GraftIndexTs.adjustToMicros(pt, g.getLong(idx, 0)))
-      case ArrayType(elem, _) =>
-        val list = g.getGroup(idx, 0)
-        val n = list.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var j = 0
-        while (j < n) {
-          val e = list.getGroup(0, j)
-          out(j) =
-            if (e.getFieldRepetitionCount(0) == 0) null
-            else elem match {
-              case LongType => java.lang.Long.valueOf(e.getLong(0, 0))
-              case IntegerType => java.lang.Integer.valueOf(e.getInteger(0, 0))
-              case DoubleType => java.lang.Double.valueOf(e.getDouble(0, 0))
-              case FloatType => java.lang.Float.valueOf(e.getFloat(0, 0))
-              case StringType => UTF8String.fromString(e.getString(0, 0))
-              case other => throw new IllegalStateException(
-                s"graft-index: unsupported array element $other")
-            }
-          j += 1
-        }
-        new GenericArrayData(out)
-      case other => throw new IllegalStateException(
-        s"graft-index: unsupported type $other")
-    }
-  }
-
-  override def close(): Unit = if (reader != null) reader.close()
-}
-
-/** Parquet timestamp physicals → Spark's internal micros-since-epoch
-  * long (round-11). Both lanes decode INT64 TIMESTAMP(MILLIS/MICROS/
-  * NANOS) and the non-standard INT96 (julian day + nanos-of-day) the
-  * session may still write under the legacy outputTimestampType.
-  * INT96 conversion uses the plain julian-day arithmetic — exact for
-  * post-Gregorian instants, which is all the index writers emit (the
-  * pre-1582 rebase corrections of Spark's own reader are out of scope
-  * and spec-irrelevant here).
-  */
-object GraftIndexTs {
-  private val JulianDayOfEpoch = 2440588L
-  private val MicrosPerDay = 86400000000L
-
-  /** The in-house lanes decode temporal values VERBATIM (CORRECTED
-    * calendar). A file stamped with Spark's legacy-rebase markers may
-    * carry pre-Gregorian values that Spark's own reader would shift —
-    * decoding them verbatim here would silently diverge from the
-    * delegated lane, so refuse loudly instead (round-13). Only fires
-    * when the decode/filter set actually touches a temporal column;
-    * index writers (Spark 3+) never stamp legacy, so this bites only
-    * mounted legacy files — which still read correctly via the
-    * delegated lane (unfiltered scans).
-    */
-  def vetNoLegacyRebase(kv: java.util.Map[String, String],
-      touched: Iterable[DataType], file: String): Unit = {
-    val legacy = kv != null && (kv.containsKey("org.apache.spark.legacyDateTime") ||
-      kv.containsKey("org.apache.spark.legacyINT96"))
-    if (legacy && touched.exists {
-        case DateType | TimestampType | TimestampNTZType => true
-        case _ => false
-      })
-      throw new IllegalStateException(
-        s"graft-index: $file is stamped with Spark's LEGACY datetime " +
-          "rebase and this scan decodes a date/timestamp column on an " +
-          "in-house lane, which reads the proleptic calendar verbatim. " +
-          "Read the column unfiltered (the delegated lane rebases " +
-          "exactly like spark.read.parquet) or rewrite the file with a " +
-          "Spark 3+ writer.")
-  }
-
-  def int96ToMicros(b: Binary): Long = {
-    val buf = b.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - JulianDayOfEpoch) * MicrosPerDay +
-      java.lang.Math.floorDiv(nanosOfDay, 1000L)
-  }
-
-  def adjustToMicros(pt: org.apache.parquet.schema.PrimitiveType,
-      raw: Long): Long =
-    pt.getLogicalTypeAnnotation match {
-      case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-        t.getUnit match {
-          case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MILLIS =>
-            java.lang.Math.multiplyExact(raw, 1000L)
-          case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS =>
-            java.lang.Math.floorDiv(raw, 1000L)
-          case _ => raw // MICROS: Spark's internal representation already
-        }
-      case _ => raw // unannotated INT64: treat as micros
-    }
-}
-
 /** DATE comparand normalization (round-12): Spark's v1 Filters carry
   * java.sql.Date or java.time.LocalDate depending on
   * spark.sql.datetime.java8API.enabled; parquet DATE and Spark's
-  * internal DateType are both the epoch-day Int, so every claimed date
+  * internal DateType are both the epoch-day Int, so every date
   * predicate reduces to integer compares once the comparand is
   * converted here.
   */
@@ -2846,656 +2474,4 @@ object GraftIndexDate {
     case other => throw new IllegalStateException(
       s"graft-index: not a DATE comparand: $other (${other.getClass})")
   }
-}
-
-/** VECTORIZED read lane: decodes parquet pages straight into Spark
-  * [[org.apache.spark.sql.vectorized.ColumnarBatch]]es using ONLY public
-  * parquet-column API (`ParquetFileReader.readNextRowGroup` →
-  * `ColumnReadStoreImpl` → per-leaf `ColumnReader`), no Spark-internal
-  * parquet reader classes. Partition pruning and column pruning compose
-  * unchanged, since both act before decode (`setRequestedSchema` drops
-  * unwanted columns at the page-IO layer).
-  *
-  * Pushed data filters (round-11) keep their EXACT claimed semantics on
-  * this lane in three layers:
-  *  1. ROW-GROUP pruning: parquet's own RowGroupFilter folds the
-  *     claimed predicate over the footer's column statistics, so row
-  *     groups the stats exclude never decode — applied to the footer
-  *     the open already read (round-12; the former reopen-with-options
-  *     paid a second ~8 ms footer read per file);
-  *  2. PER-FILE constants: a filter referencing a column the file lacks
-  *     (evolved sets) is constant there — IsNull keeps the file, every
-  *     other claimed shape skips it wholesale (matching the row lane);
-  *  3. VECTORIZED residue: each decoded batch re-evaluates the claimed
-  *     filters over the column vectors and compacts survivors into the
-  *     output batch. A filter column outside the projection decodes
-  *     into a SCRATCH vector that never reaches the output.
-  * A pushed limit truncates emission (partial semantics — Spark keeps
-  * the global limit above, exactly like the row lane's wrapper).
-  *
-  * Per 4096-row batch: partition columns are constant-filled, flat
-  * primitive columns decode def-level/value pairs (timestamps normalize
-  * INT64 millis/micros/nanos and INT96 to Spark's internal micros),
-  * array columns decode rep/def runs into the vector's child (standard
-  * 3-level list encoding; null list / empty list / null element all
-  * distinguished by definition level against the leaf descriptor). A
-  * projected column ABSENT from a file (evolved schemas) fills nulls,
-  * matching the row lane and spark.read.parquet — including the edge
-  * where a file carries NONE of the decode columns (all-null rows at
-  * the footer's record count, no page reader at all). Batches never
-  * split a row: each batch covers whole rows of one row group, so
-  * array runs stay intact.
-  */
-class GraftIndexColumnarReader(fileParts: Seq[(String, Long, Long, Array[Any])],
-    readSchema: StructType, isPart: Array[Boolean],
-    dataFields: Array[StructField], pushedData: Array[Filter],
-    tableSchema: StructType, limit: Option[Int], conf: Configuration)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  import org.apache.parquet.column.ColumnReader
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.parquet.example.DummyRecordConverter
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val BatchRows = 4096
-  private val vectors = OnHeapColumnVector.allocateColumns(BatchRows, readSchema)
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-
-  // decode set = projected data columns ∪ filter-only scratch columns
-  private val extraFields: Array[StructField] =
-    pushedData.flatMap(_.references).distinct
-      .filterNot(n => dataFields.exists(_.name == n))
-      .map(n => tableSchema.find(_.name == n).get)
-  private val decodeFields: Array[StructField] = dataFields ++ extraFields
-  // output column index of each projected data field (decode order)
-  private val dataOutIdx: Array[Int] =
-    readSchema.fields.zip(isPart).zipWithIndex.collect {
-      case ((_, false), i) => i
-    }
-  // no filters: decode straight into the output vectors (zero copy);
-  // filters: decode into scratch, compact survivors into the output
-  private val scratchLane = pushedData.nonEmpty
-  private val decodeVecs: Array[OnHeapColumnVector] =
-    if (!scratchLane) dataOutIdx.map(vectors(_))
-    else OnHeapColumnVector.allocateColumns(BatchRows, StructType(decodeFields))
-
-  private var rowsRemaining: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
-
-  private val fileQueue = scala.collection.mutable.Queue(fileParts: _*)
-  private var partConst: Array[Any] = _ // the CURRENT file's constants
-  private var reader: org.apache.parquet.hadoop.ParquetFileReader = _
-  private var projected: org.apache.parquet.schema.MessageType = _
-  private var createdBy: String = _
-  // per decodeField, rebound per row group; null = column absent from file
-  private var crs: Array[ColumnReader] = _
-  private var valuesLeft: Array[Long] = _
-  private var rowsLeftInGroup: Long = 0L
-
-  // PAGE-level pruning state (round-13): when the current file reads
-  // through readNextFilteredRowGroup, surviving row groups shed the
-  // pages the column index proves can't match — rowsExpected/rowsSeen
-  // make the shed rows observable (spec + LaneBench probe)
-  private var useFilteredRead = false
-  private var rowsExpected = 0L
-  private var rowsSeen = 0L
-
-  /** Advance to the next non-empty row group, opening files as needed.
-    * False when every file is exhausted. Files are vetted at open:
-    * filters over absent columns either pass wholesale (IsNull) or skip
-    * the file (per-file constant false); in-file filters prune row
-    * groups by statistics on the already-read footer — ONE footer read
-    * per file, however the scan is filtered (round-12) — then PAGES
-    * within surviving groups by the column index (round-13).
-    */
-  private def advance(): Boolean = {
-    while (true) {
-      if (reader != null) {
-        val pages =
-          if (useFilteredRead) reader.readNextFilteredRowGroup()
-          else reader.readNextRowGroup()
-        if (pages == null) {
-          if (useFilteredRead && rowsExpected > rowsSeen)
-            GraftIndexColumnarReader.pageFilteredRows
-              .addAndGet(rowsExpected - rowsSeen)
-          reader.close(); reader = null
-        }
-        else if (pages.getRowCount > 0) {
-          rowsSeen += pages.getRowCount
-          bind(pages); return true
-        }
-      }
-      if (reader == null) {
-        if (fileQueue.isEmpty) return false
-        val (file, start, len, const) = fileQueue.dequeue()
-        partConst = const
-        val path = new Path(file)
-        // footer via the executor-side cache (round-12): a repeatedly-
-        // probed serving index parses each footer ONCE per executor,
-        // not once per file per query — the measured ~8-10 ms/file that
-        // dominated filtered shapes at index file sizes
-        val footer = GraftFooterCache.footer(file, conf)
-        val meta = footer.getFileMetaData
-        GraftIndexTs.vetNoLegacyRebase(meta.getKeyValueMetaData,
-          decodeFields.map(_.dataType).toSeq, file)
-        val present = meta.getSchema.getFields
-          .asInstanceOf[java.util.List[org.apache.parquet.schema.Type]]
-          .stream().map[String](_.getName).toArray.map(_.toString).toSet
-        // per-file filter folding (absent column ⇒ NULL) — the
-        // vectorized residue below would get these right anyway (absent
-        // columns decode as null vectors), but constant-false conjuncts
-        // skip the file with zero decode, and row-group pruning may only
-        // reference in-file columns
-        val perFile = pushedData.map(GraftIndexFilters.forFile(_, present))
-        val inFile = perFile.collect { case Right(f) => f }
-        if (!perFile.contains(Left(false))) {
-          createdBy = meta.getCreatedBy
-          val wanted = decodeFields.map(_.name).toSet
-          val projFields = meta.getSchema.getFields
-            .asInstanceOf[java.util.List[org.apache.parquet.schema.Type]]
-            .stream().filter(t => wanted.contains(t.getName))
-            .toArray(n => new Array[org.apache.parquet.schema.Type](n))
-          if (projFields.isEmpty) {
-            // the file lacks EVERY decode column: its rows are all-null
-            // data + partition constants, counted from the footer
-            val n = GraftIndexRange.rows(file, conf, start, len)
-            if (n > 0) { bindAllNull(n); return true }
-          } else {
-            projected = new org.apache.parquet.schema.MessageType(
-              meta.getSchema.getName, projFields: _*)
-            // row-group stats pruning on the CACHED footer (round-12):
-            // RowGroupFilter folds the claimed predicate over each
-            // block's column statistics — zero footer IO (the round-11
-            // reopen re-paid the footer open per file), and pruning is
-            // unconditionally on (an in-memory stats visit). Stats
-            // level only — dictionary/bloom pruning would need page
-            // IO; the vectorized residue keeps the claim exact
-            // regardless of how many groups survive.
-            // range slice first (midpoint rule — each group belongs to
-            // exactly one slice), then stats pruning on the survivors
-            val ranged = GraftIndexRange.blocksIn(footer, start, len)
-            val toRead =
-              if (inFile.isEmpty) ranged
-              else {
-                val pred = inFile
-                  .map(GraftIndexFilters.toParquet(_, tableSchema))
-                  .reduce(FilterApi.and)
-                org.apache.parquet.filter2.compat.RowGroupFilter
-                  .filterRowGroups(FilterCompat.get(pred),
-                    ranged, meta.getSchema)
-              }
-            if (!toRead.isEmpty) {
-              // PAGE-level (column-index) pruning (round-13): the
-              // filtered-row-group read binds SynchronizingColumnReaders
-              // that present exactly the rows whose pages can match the
-              // claim — a range probe over a SORTED column (the
-              // event-time cutoff shape) decodes a few pages of a
-              // surviving group instead of all of them. Exactness is
-              // parquet's own contract (ranges are a superset of
-              // matching rows; the vectorized residue above still
-              // enforces the claim row by row), and files without
-              // column indexes fall back to whole-group ranges inside
-              // parquet itself. The LIST decode walks repetition levels
-              // with its own value accounting, which filtered pages
-              // would break — array-projecting scans keep whole-group
-              // reads.
-              useFilteredRead = inFile.nonEmpty &&
-                !decodeFields.exists(_.dataType.isInstanceOf[ArrayType])
-              def mkReader(blocks: java.util.List[org.apache.parquet.hadoop.metadata.BlockMetaData]) = {
-                val r =
-                  if (useFilteredRead) {
-                    val pred = inFile
-                      .map(GraftIndexFilters.toParquet(_, tableSchema))
-                      .reduce(FilterApi.and)
-                    // stats/dictionary/bloom re-pruning OFF — the block
-                    // list is already pruned on the cached footer above;
-                    // only the column-index level is parquet's to apply
-                    val opts = org.apache.parquet.HadoopReadOptions
-                      .builder(conf, path)
-                      .withRecordFilter(FilterCompat.get(pred))
-                      .useStatsFilter(false).useDictionaryFilter(false)
-                      .useBloomFilter(false).useColumnIndexFilter(true)
-                      .build()
-                    new org.apache.parquet.hadoop.ParquetFileReader(conf,
-                      path,
-                      new org.apache.parquet.hadoop.metadata.ParquetMetadata(
-                        meta, blocks), opts)
-                  } else new org.apache.parquet.hadoop.ParquetFileReader(
-                    conf, meta, path, blocks, projected.getColumns)
-                r.setRequestedSchema(projected)
-                r
-              }
-              rowsExpected = {
-                var t = 0L; val it = toRead.iterator()
-                while (it.hasNext) t += it.next().getRowCount
-                t
-              }
-              rowsSeen = 0L
-              // block-list reader over the cached metadata: opens the
-              // DATA stream only, never re-reads the footer
-              reader = mkReader(toRead)
-              // DICTIONARY/BLOOM pruning (round-12): stats can't kill a
-              // point probe whose value sits INSIDE a group's min/max
-              // but never occurs — the dictionary (or bloom filter) can.
-              // parquet's own record reader applies these levels by
-              // default on the row lane; this brings the columnar lane
-              // to parity. The dictionary-page read costs one page per
-              // filter column per candidate group against skipping the
-              // group's whole decode — the trade every parquet engine
-              // makes. Survivor shrink ⇒ rebuild the block-list reader
-              // (footer cached; only pays when groups actually drop).
-              if (inFile.nonEmpty) {
-                val pred = inFile
-                  .map(GraftIndexFilters.toParquet(_, tableSchema))
-                  .reduce(FilterApi.and)
-                val lv = java.util.Arrays.asList(
-                  org.apache.parquet.filter2.compat.RowGroupFilter.FilterLevel.DICTIONARY,
-                  org.apache.parquet.filter2.compat.RowGroupFilter.FilterLevel.BLOOMFILTER)
-                val kept = org.apache.parquet.filter2.compat.RowGroupFilter
-                  .filterRowGroups(lv, FilterCompat.get(pred), toRead, reader)
-                if (kept.size() < toRead.size()) {
-                  GraftIndexColumnarReader.dictPruned
-                    .addAndGet(toRead.size() - kept.size())
-                  reader.close()
-                  reader = if (kept.isEmpty) null else mkReader(kept)
-                  rowsExpected = {
-                    var t = 0L; val it = kept.iterator()
-                    while (it.hasNext) t += it.next().getRowCount
-                    t
-                  }
-                }
-              }
-            }
-            // else: stats exclude every row group — skip the file
-          }
-        }
-        // else: some conjunct is constant FALSE for this file — skip it
-      }
-    }
-    false // unreachable
-  }
-
-  private def bind(pages: org.apache.parquet.column.page.PageReadStore): Unit = {
-    rowsLeftInGroup = pages.getRowCount
-    val store = new ColumnReadStoreImpl(pages,
-      new DummyRecordConverter(projected).getRootConverter, projected, createdBy)
-    // each table column maps to exactly ONE leaf (flat primitives and
-    // single-element lists), so the leaf whose path head matches the
-    // field name is its descriptor
-    val byHead = projected.getColumns
-      .asInstanceOf[java.util.List[org.apache.parquet.column.ColumnDescriptor]]
-    crs = new Array[ColumnReader](decodeFields.length)
-    valuesLeft = new Array[Long](decodeFields.length)
-    var i = 0
-    while (i < decodeFields.length) {
-      var j = 0
-      while (j < byHead.size()) {
-        val d = byHead.get(j)
-        if (d.getPath()(0) == decodeFields(i).name) {
-          crs(i) = store.getColumnReader(d)
-          valuesLeft(i) = crs(i).getTotalValueCount
-        }
-        j += 1
-      }
-      i += 1
-    }
-  }
-
-  /** "Row group" of n all-null rows for a file carrying none of the
-    * decode columns (every crs slot null ⇒ the decode fills nulls).
-    */
-  private def bindAllNull(n: Long): Unit = {
-    rowsLeftInGroup = n
-    crs = new Array[ColumnReader](decodeFields.length)
-    valuesLeft = new Array[Long](decodeFields.length)
-  }
-
-  // ---- vectorized residue evaluation ----------------------------------
-  private def decodeIdx(n: String): Int = decodeFields.indexWhere(_.name == n)
-
-  /** Claimed-shape filter → row predicate over the decode vectors.
-    * Null semantics are SQL's: a null value matches nothing except
-    * IsNull — identical to parquet's record-level assembly, which
-    * enforces the same filters on the row lane.
-    */
-  private def compile(f: Filter): Int => Boolean = {
-    def cmp(name: String, v: Any): Int => Int = {
-      val i = decodeIdx(name)
-      decodeFields(i).dataType match {
-        case LongType =>
-          val x = v.asInstanceOf[Number].longValue
-          r => java.lang.Long.compare(decodeVecs(i).getLong(r), x)
-        case IntegerType =>
-          val x = v.asInstanceOf[Number].longValue
-          r => java.lang.Long.compare(decodeVecs(i).getInt(r).toLong, x)
-        case DateType =>
-          val x = GraftIndexDate.toDays(v).toLong
-          r => java.lang.Long.compare(decodeVecs(i).getInt(r).toLong, x)
-        case ShortType =>
-          val x = v.asInstanceOf[Number].longValue
-          r => java.lang.Long.compare(decodeVecs(i).getShort(r).toLong, x)
-        case ByteType =>
-          val x = v.asInstanceOf[Number].longValue
-          r => java.lang.Long.compare(decodeVecs(i).getByte(r).toLong, x)
-        case DoubleType =>
-          val x = v.asInstanceOf[Number].doubleValue
-          r => java.lang.Double.compare(decodeVecs(i).getDouble(r), x)
-        case FloatType =>
-          val x = v.asInstanceOf[Number].doubleValue
-          r => java.lang.Double.compare(decodeVecs(i).getFloat(r).toDouble, x)
-        case StringType =>
-          val x = UTF8String.fromString(v.toString)
-          r => decodeVecs(i).getUTF8String(r).compareTo(x)
-        case BooleanType =>
-          val x = v.asInstanceOf[Boolean]
-          r => java.lang.Boolean.compare(decodeVecs(i).getBoolean(r), x)
-        case other => throw new IllegalStateException(
-          s"graft-index: vectorized filter over $other")
-      }
-    }
-    def nn(name: String): Int => Boolean = {
-      val i = decodeIdx(name)
-      r => !decodeVecs(i).isNullAt(r)
-    }
-    f match {
-      case EqualTo(a, v) =>
-        val c = cmp(a, v); val p = nn(a); r => p(r) && c(r) == 0
-      case Not(EqualTo(a, v)) =>
-        val c = cmp(a, v); val p = nn(a); r => p(r) && c(r) != 0
-      case Not(In(a, vs)) =>
-        val cs = vs.map(cmp(a, _)); val p = nn(a)
-        r => p(r) && cs.forall(_(r) != 0)
-      case StringStartsWith(a, v) =>
-        val i = decodeIdx(a); val x = UTF8String.fromString(v)
-        r => !decodeVecs(i).isNullAt(r) &&
-          decodeVecs(i).getUTF8String(r).startsWith(x)
-      case StringEndsWith(a, v) =>
-        val i = decodeIdx(a); val x = UTF8String.fromString(v)
-        r => !decodeVecs(i).isNullAt(r) &&
-          decodeVecs(i).getUTF8String(r).endsWith(x)
-      case StringContains(a, v) =>
-        val i = decodeIdx(a); val x = UTF8String.fromString(v)
-        r => !decodeVecs(i).isNullAt(r) &&
-          decodeVecs(i).getUTF8String(r).contains(x)
-      case In(a, vs) =>
-        val cs = vs.map(cmp(a, _)); val p = nn(a)
-        r => p(r) && cs.exists(_(r) == 0)
-      case GreaterThan(a, v) =>
-        val c = cmp(a, v); val p = nn(a); r => p(r) && c(r) > 0
-      case GreaterThanOrEqual(a, v) =>
-        val c = cmp(a, v); val p = nn(a); r => p(r) && c(r) >= 0
-      case LessThan(a, v) =>
-        val c = cmp(a, v); val p = nn(a); r => p(r) && c(r) < 0
-      case LessThanOrEqual(a, v) =>
-        val c = cmp(a, v); val p = nn(a); r => p(r) && c(r) <= 0
-      case IsNull(a) =>
-        val p = nn(a); r => !p(r)
-      case IsNotNull(a) => nn(a)
-      // negation-free compounds: unknown→false per leg, exact through
-      // the monotone lattice (see dataPushable)
-      case Or(l, r) =>
-        val cl = compile(l); val cr = compile(r); r => cl(r) || cr(r)
-      case And(l, r) =>
-        val cl = compile(l); val cr = compile(r); r => cl(r) && cr(r)
-      case other => throw new IllegalStateException(
-        s"graft-index: unpushable filter claimed on the columnar lane: $other")
-    }
-  }
-
-  private val residue: Array[Int => Boolean] = pushedData.map(compile)
-  private val selection = new Array[Int](BatchRows)
-
-  override def next(): Boolean = {
-    if (rowsRemaining <= 0) return false
-    while (true) {
-      if (rowsLeftInGroup == 0 && !advance()) return false
-      val n = math.min(BatchRows.toLong, rowsLeftInGroup).toInt
-      decodeVecs.foreach(_.reset())
-      var di = 0
-      while (di < decodeFields.length) {
-        decodeFields(di).dataType match {
-          case at: ArrayType => fillArray(decodeVecs(di), at.elementType, di, n)
-          case dt => fillFlat(decodeVecs(di), dt, di, n)
-        }
-        di += 1
-      }
-      rowsLeftInGroup -= n
-      if (residue.isEmpty) {
-        // zero-copy path: decodeVecs ARE the output data vectors
-        val emit = math.min(n.toLong, rowsRemaining).toInt
-        var i = 0
-        while (i < readSchema.length) {
-          if (isPart(i)) {
-            vectors(i).reset()
-            fillConst(vectors(i), readSchema(i).dataType, partConst(i), emit)
-          }
-          i += 1
-        }
-        rowsRemaining -= emit
-        batch.setNumRows(emit)
-        return true
-      } else {
-        var m = 0
-        var r = 0
-        while (r < n && m < rowsRemaining) {
-          var ok = true
-          var k = 0
-          while (ok && k < residue.length) { ok = residue(k)(r); k += 1 }
-          if (ok) { selection(m) = r; m += 1 }
-          r += 1
-        }
-        if (m > 0) {
-          var i = 0
-          var di2 = 0
-          while (i < readSchema.length) {
-            vectors(i).reset()
-            if (isPart(i))
-              fillConst(vectors(i), readSchema(i).dataType, partConst(i), m)
-            else {
-              copySelected(decodeVecs(di2), vectors(i),
-                readSchema(i).dataType, m)
-              di2 += 1
-            }
-            i += 1
-          }
-          rowsRemaining -= m
-          batch.setNumRows(m)
-          return true
-        }
-        // zero survivors in this chunk: decode the next one
-      }
-    }
-    false // unreachable
-  }
-
-  /** Compact the `m` selected rows of `src` into `dst[0, m)`. */
-  private def copySelected(src: OnHeapColumnVector, dst: OnHeapColumnVector,
-      dt: DataType, m: Int): Unit = {
-    var r = 0
-    dt match {
-      case ArrayType(elem, _) =>
-        val child = dst.arrayData()
-        while (r < m) {
-          val s = selection(r)
-          if (src.isNullAt(s)) dst.putNull(r)
-          else {
-            val arr = src.getArray(s)
-            val start = child.getElementsAppended
-            var j = 0
-            while (j < arr.numElements()) {
-              if (arr.isNullAt(j)) child.appendNull()
-              else elem match {
-                case LongType => child.appendLong(arr.getLong(j))
-                case IntegerType => child.appendInt(arr.getInt(j))
-                case DoubleType => child.appendDouble(arr.getDouble(j))
-                case StringType =>
-                  val b = arr.getUTF8String(j).getBytes
-                  child.appendByteArray(b, 0, b.length)
-                case _ => child.appendFloat(arr.getFloat(j))
-              }
-              j += 1
-            }
-            dst.putArray(r, start, arr.numElements())
-          }
-          r += 1
-        }
-      case _ =>
-        while (r < m) {
-          val s = selection(r)
-          if (src.isNullAt(s)) dst.putNull(r)
-          else dt match {
-            case LongType | TimestampType | TimestampNTZType =>
-              dst.putLong(r, src.getLong(s))
-            case IntegerType | DateType => dst.putInt(r, src.getInt(s))
-            case ShortType => dst.putShort(r, src.getShort(s))
-            case ByteType => dst.putByte(r, src.getByte(s))
-            case DoubleType => dst.putDouble(r, src.getDouble(s))
-            case FloatType => dst.putFloat(r, src.getFloat(s))
-            case BooleanType => dst.putBoolean(r, src.getBoolean(s))
-            case BinaryType => dst.putByteArray(r, src.getBinary(s))
-            case _ => dst.putByteArray(r, src.getUTF8String(s).getBytes)
-          }
-          r += 1
-        }
-    }
-  }
-
-  private def fillConst(v: OnHeapColumnVector, dt: DataType, c: Any,
-      n: Int): Unit = {
-    if (c == null) { v.putNulls(0, n); return }
-    var r = 0
-    while (r < n) {
-      dt match {
-        case LongType => v.putLong(r, c.asInstanceOf[Long])
-        case IntegerType | DateType => v.putInt(r, c.asInstanceOf[Int])
-        case DoubleType => v.putDouble(r, c.asInstanceOf[Double])
-        case FloatType => v.putFloat(r, c.asInstanceOf[Float])
-        case BooleanType => v.putBoolean(r, c.asInstanceOf[Boolean])
-        case _ => v.putByteArray(r, c.asInstanceOf[UTF8String].getBytes)
-      }
-      r += 1
-    }
-  }
-
-  private def fillFlat(v: OnHeapColumnVector, dt: DataType, di: Int,
-      n: Int): Unit = {
-    val cr = crs(di)
-    if (cr == null) { v.putNulls(0, n); return } // column absent from file
-    val maxDef = cr.getDescriptor.getMaxDefinitionLevel
-    // the type dispatch is hoisted OUT of the row loop (a per-row match
-    // was a visible cost on wide scans); timestamp physical resolved
-    // once per row group, not per row
-    val put: Int => Unit = dt match {
-      case LongType => r => v.putLong(r, cr.getLong)
-      // DATE decodes as its INT32 epoch-day physical — already Spark's
-      // internal form, zero conversion (round-12)
-      case IntegerType | DateType => r => v.putInt(r, cr.getInteger)
-      case ShortType => r => v.putShort(r, cr.getInteger.toShort)
-      case ByteType => r => v.putByte(r, cr.getInteger.toByte)
-      // NTZ: micros long, no zone math by definition
-      case TimestampNTZType =>
-        val pt = cr.getDescriptor.getPrimitiveType
-        r => v.putLong(r, GraftIndexTs.adjustToMicros(pt, cr.getLong))
-      case DoubleType => r => v.putDouble(r, cr.getDouble)
-      case FloatType => r => v.putFloat(r, cr.getFloat)
-      case BooleanType => r => v.putBoolean(r, cr.getBoolean)
-      case TimestampType =>
-        val pt = cr.getDescriptor.getPrimitiveType
-        if (pt.getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96)
-          r => v.putLong(r, GraftIndexTs.int96ToMicros(cr.getBinary))
-        else r => v.putLong(r, GraftIndexTs.adjustToMicros(pt, cr.getLong))
-      case _ => r => v.putByteArray(r, cr.getBinary.getBytesUnsafe)
-    }
-    var r = 0
-    while (r < n) {
-      if (cr.getCurrentDefinitionLevel < maxDef) v.putNull(r)
-      else put(r)
-      cr.consume()
-      valuesLeft(di) -= 1
-      r += 1
-    }
-  }
-
-  /** Standard 3-level list decode. Definition levels against the leaf:
-    * maxDef = value present; maxDef-1 = null ELEMENT (only when the
-    * element is optional); below that, the list itself is empty or null
-    * (empty at the repeated group's level, null below it). Repetition
-    * level 0 opens a new row; entries keep within-row order.
-    */
-  private def fillArray(v: OnHeapColumnVector, elem: DataType, di: Int,
-      n: Int): Unit = {
-    val cr = crs(di)
-    if (cr == null) { v.putNulls(0, n); return }
-    val child = v.arrayData()
-    val maxDef = cr.getDescriptor.getMaxDefinitionLevel
-    // element optionality read off the leaf type itself
-    val elemOptional = cr.getDescriptor.getPrimitiveType.getRepetition ==
-      org.apache.parquet.schema.Type.Repetition.OPTIONAL
-    val valueDef = maxDef
-    val emptyDef = maxDef - (if (elemOptional) 2 else 1)
-    // type dispatch hoisted out of the element loop (per-element match
-    // dominated wide-embedding decodes)
-    val append: () => Unit = elem match {
-      case LongType => () => child.appendLong(cr.getLong)
-      case IntegerType => () => child.appendInt(cr.getInteger)
-      case DoubleType => () => child.appendDouble(cr.getDouble)
-      case StringType => () => {
-        val b = cr.getBinary.getBytesUnsafe
-        child.appendByteArray(b, 0, b.length)
-      }
-      case _ => () => child.appendFloat(cr.getFloat)
-    }
-    var r = 0
-    while (r < n) {
-      val start = child.getElementsAppended
-      var count = 0
-      var nullList = false
-      var emptyList = false
-      var first = true
-      var rowDone = false
-      while (!rowDone) {
-        val dl = cr.getCurrentDefinitionLevel
-        if (dl == valueDef) {
-          append()
-          count += 1
-        } else if (elemOptional && dl == valueDef - 1) {
-          child.appendNull()
-          count += 1
-        } else if (first) {
-          if (dl == emptyDef) emptyList = true else nullList = true
-        }
-        cr.consume()
-        valuesLeft(di) -= 1
-        first = false
-        // the value after the row's last entry belongs to the next row
-        // (rep 0) — or the column is exhausted
-        rowDone = valuesLeft(di) == 0 || cr.getCurrentRepetitionLevel == 0
-      }
-      if (nullList) v.putNull(r)
-      else v.putArray(r, start, if (emptyList) 0 else count)
-      r += 1
-    }
-  }
-
-  override def get(): ColumnarBatch = batch
-
-  override def close(): Unit = {
-    if (reader != null) { reader.close(); reader = null }
-    if (scratchLane) decodeVecs.foreach(_.close()) // separate allocation
-    batch.close()
-  }
-}
-
-object GraftIndexColumnarReader {
-  /** Row groups killed by dictionary/bloom pruning that statistics
-    * could not kill — the spec's observable for the round-12 pass.
-    */
-  private[graft] val dictPruned = new java.util.concurrent.atomic.AtomicLong
-
-  /** Rows inside SURVIVING row groups that the column index proved
-    * can't match — pages never decoded (round-13). The page-pruning
-    * spec's observable.
-    */
-  private[graft] val pageFilteredRows = new java.util.concurrent.atomic.AtomicLong
 }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * (sources/GraftIndexSource.scala): schema/row parity with the raw
   * parquet read, static partition-filter pushdown (directory pruning
   * visible as input-partition counts), V2 runtime filtering (the DPP
-  * form a broadcast probe join plants), post-pruning statistics, and
-  * the zero-data-IO count path.
+  * form a broadcast probe join plants), post-pruning statistics, the
+  * zero-data-IO count path, and data filters as parquet pruning hints
+  * under Spark's own vectorized reader (the one decode path).
   */
 class GraftIndexSourceSpec extends SparkSpec {
 
@@ -130,7 +131,7 @@ class GraftIndexSourceSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
-  test("data-filter pushdown: claimed filters vanish from the plan, rows exact, arrays survive") {
+  test("data filters are pruning hints: Spark re-filters above, rows exact") {
     val dir = writeIndex()
     val raw = spark.read.parquet(s"$dir/cells")
     val someId = raw.select(min(col("vec_b"))).collect().head.getLong(0)
@@ -138,20 +139,37 @@ class GraftIndexSourceSpec extends SparkSpec {
     val ref = raw.where(col("vec_b") === someId)
     assert(got.count() == ref.count() && got.count() > 0)
     assert(got.select("vec_b", "vb", "nb").exceptAll(ref.select("vec_b", "vb", "nb")).count() == 0)
+    // pushFilters claims PARTITION filters only: the data leg goes back
+    // to Spark, and pushedFilters() reports the partition leg alone
+    import org.apache.spark.sql.sources.{EqualTo => SEq, IsNotNull => SIsNotNull}
+    def builder() = new graft.sources.GraftIndexTable(s"$dir/cells", raw.schema)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .asInstanceOf[graft.sources.GraftIndexScanBuilder]
+    val cellF = SEq("cell", 0)
+    val dataF = SEq("vec_b", someId)
+    val b = builder()
+    assert(b.pushFilters(Array(cellF, dataF)).toSeq == Seq(dataF))
+    assert(b.pushedFilters().toSeq == Seq(cellF))
+    assert(b.build().description().contains(s"dataFilterHints=[$dataF]"))
+    // a bare IS NOT NULL (the constraint Spark infers beside every
+    // comparison) goes back to Spark without becoming a hint
+    val nn = builder()
+    assert(nn.pushFilters(Array(SIsNotNull("vec_b"))).toSeq == Seq(SIsNotNull("vec_b")))
+    assert(nn.build().description().contains("dataFilterHints=[]"))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val plan = got.queryExecution.executedPlan
-      // the equality is claimed exactly by the parquet record filter:
-      // no post-scan Filter on vec_b remains (IsNotNull is claimed too)
+      // Spark evaluates the equality above the scan
       val filters = plan.collect {
         case f: org.apache.spark.sql.execution.FilterExec => f
       }
-      assert(filters.isEmpty,
-        s"claimed data filter must not be re-evaluated:\n$plan")
+      assert(filters.exists(_.condition.references.exists(_.name == "vec_b")),
+        s"data filters must stay with Spark:\n$plan")
+      // ...and the scan still receives it as a pruning hint
       val scan = plan.collectFirst { case b: BatchScanExec => b }.get
-      assert(scan.scan.description().contains("pushedDataFilters=[") &&
+      assert(scan.scan.description().contains("dataFilterHints=[") &&
         scan.scan.description().contains("vec_b"),
-        s"pushed data filter must be visible: ${scan.scan.description()}")
+        s"data filter hint must be visible: ${scan.scan.description()}")
       // range shape too
       val rng = v2(s"$dir/cells").where(col("nb") > 0.0)
       assert(rng.count() == raw.where(col("nb") > 0.0).count())
@@ -168,20 +186,17 @@ class GraftIndexSourceSpec extends SparkSpec {
     // SQL semantics: `g <> 2` drops BOTH the 2s and the NULLs
     val ref = raw.where(col("g") =!= 2L)
     assert(ref.count() > 0 && ref.count() < raw.count())
-    for (rowlane <- Seq("false", "true")) {
-      val got = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).where(col("g") =!= 2L)
-      assert(got.count() == ref.count(), s"rowlane=$rowlane")
-      assert(got.where(col("g").isNull).count() == 0,
-        s"parquet's null-keeping notEq leaked through (rowlane=$rowlane)")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0)
-      // string comparand + compound: (s <> '1' AND g <> 2) claimed whole
-      val refC = raw.where(col("s") =!= "1" && col("g") =!= 2L)
-      val gotC = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).where(col("s") =!= "1" && col("g") =!= 2L)
-      assert(gotC.count() == refC.count() &&
-        gotC.exceptAll(refC).count() == 0 && refC.exceptAll(gotC).count() == 0)
-    }
+    val got = spark.read.format("graft-index").load(dir).where(col("g") =!= 2L)
+    assert(got.count() == ref.count())
+    assert(got.where(col("g").isNull).count() == 0,
+      "parquet's null-keeping notEq leaked through")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0)
+    // string comparand + compound: (s <> '1' AND g <> 2)
+    val refC = raw.where(col("s") =!= "1" && col("g") =!= 2L)
+    val gotC = spark.read.format("graft-index")
+      .load(dir).where(col("s") =!= "1" && col("g") =!= 2L)
+    assert(gotC.count() == refC.count() &&
+      gotC.exceptAll(refC).count() == 0 && refC.exceptAll(gotC).count() == 0)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val got = spark.read.format("graft-index").load(dir)
@@ -189,20 +204,20 @@ class GraftIndexSourceSpec extends SparkSpec {
       val plan = got.queryExecution.executedPlan
       assert(plan.collect {
         case f: org.apache.spark.sql.execution.FilterExec => f
-      }.isEmpty, s"claimed <> must not be re-evaluated:\n$plan")
+      }.nonEmpty, s"<> must stay with Spark:\n$plan")
       val scan = plan.collectFirst { case b: BatchScanExec => b }.get
       assert(scan.scan.description().contains("Not(EqualTo(g,2"),
-        s"<> must be visibly claimed: ${scan.scan.description()}")
+        s"<> must reach the scan as a hint: ${scan.scan.description()}")
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
     // per-file folding: a `<>` over a column some files LACK is constant
     // FALSE there (all-null column) — the evolved-set file is skipped
-    // wholesale, present files enforce the claim
+    // wholesale, and Spark's filter drops nothing else it shouldn't
     spark.range(0, 10).selectExpr("id + 10000 AS id")
       .write.mode("append").parquet(dir)
     val merged = spark.read.format("graft-index")
       .option("mergeSchema", "true").load(dir).where(col("g") =!= 2L)
     assert(merged.count() == ref.count(),
-      "rows from the g-less file must NOT survive a g <> 2 claim")
+      "rows from the g-less file must NOT survive g <> 2")
   }
 
   test("NOT IN + string predicates (round-12): startsWith/endsWith/contains claimed on both lanes, nulls dropped") {
@@ -222,16 +237,15 @@ class GraftIndexSourceSpec extends SparkSpec {
       ("notIn", df => df.where(!col("g").isin(1L, 4L))),
       ("prefix+notIn", df => df.where(col("et").startsWith("view") &&
         !col("g").isin(2L))))
-    for ((label, q) <- shapes; rowlane <- Seq("false", "true")) {
+    for ((label, q) <- shapes) {
       val ref = q(raw)
-      val got = q(spark.read.format("graft-index")
-        .option("rowlane", rowlane).load(dir))
+      val got = q(spark.read.format("graft-index").load(dir))
       assert(ref.count() > 0 && got.count() == ref.count(),
-        s"$label rowlane=$rowlane: ${got.count()} vs ${ref.count()}")
+        s"$label: ${got.count()} vs ${ref.count()}")
       assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"$label rowlane=$rowlane rows diverge")
+        s"$label rows diverge")
     }
-    // the claims are total: no Spark-side re-filter remains
+    // Spark keeps the filters; the scan gets them as parquet hints
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val got = spark.read.format("graft-index").load(dir)
@@ -239,7 +253,7 @@ class GraftIndexSourceSpec extends SparkSpec {
       val plan = got.queryExecution.executedPlan
       assert(plan.collect {
         case f: org.apache.spark.sql.execution.FilterExec => f
-      }.isEmpty, s"claimed string/NOT-IN filters re-evaluated:\n$plan")
+      }.nonEmpty, s"string/NOT-IN filters must stay with Spark:\n$plan")
       val scan = plan.collectFirst { case b: BatchScanExec => b }.get
       assert(scan.scan.description().contains("StringStartsWith") &&
         scan.scan.description().contains("Not(In(g"),
@@ -556,18 +570,13 @@ class GraftIndexSourceSpec extends SparkSpec {
       assert(scanExec(v2(s"$dir/cells").where(col("cell") === 0)
           .select("vec_b")).supportsColumnar,
         "partition-pruned pure projections stay vectorized")
-      // round-11: a pushed DATA filter rides the vectorized lane too —
-      // row groups prune on footer stats, the residue re-evaluates
-      // vectorized over the decoded batch (EXACT claim semantics)
+      // a DATA filter rides the vectorized lane too — its hint prunes
+      // row groups, Spark's filter above keeps the rows exact
       assert(scanExec(v2(s"$dir/cells").where(col("vec_b") > 10L))
-        .supportsColumnar, "claimed data filters must stay vectorized")
+        .supportsColumnar, "filtered scans must stay vectorized")
       // ...and so does the limit wrapper (emission truncation)
       assert(scanExec(v2(s"$dir/cells").select("vec_b").limit(5))
         .supportsColumnar, "limit pushdown must stay vectorized")
-      // the diagnostic escape hatch pins the row lane for parity runs
-      assert(!scanExec(spark.read.format("graft-index")
-          .option("rowlane", "true").load(s"$dir/cells").select("vec_b"))
-        .supportsColumnar, "rowlane option must force the row path")
       // a pushed footer aggregate decodes nothing → its own lane
       assert(!scanExec(v2(s"$dir/cells").groupBy().agg(count(lit(1)).as("n")))
         .supportsColumnar, "footer aggregates must not claim columnar")
@@ -581,13 +590,11 @@ class GraftIndexSourceSpec extends SparkSpec {
     val dir = writeIndex()
     val raw = spark.read.parquet(s"$dir/cells")
     val mid = raw.select(avg(col("vec_b"))).collect().head.getDouble(0).toLong
-    def rowLane(sub: String) = spark.read.format("graft-index")
-      .option("rowlane", "true").load(s"$dir/$sub")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       def scanExec(df: org.apache.spark.sql.DataFrame) =
         df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
-      // every claimed shape over every pushed type, vectorized ≡ row lane
+      // every hinted shape, vectorized ≡ spark.read.parquet
       val shapes = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
         _ > mid, _ <= mid, _ === mid, c => c.isin(mid, mid + 1, mid + 7),
         _.isNotNull)
@@ -595,14 +602,13 @@ class GraftIndexSourceSpec extends SparkSpec {
         val gotDf = v2(s"$dir/cells").where(mk(col("vec_b")))
         assert(scanExec(gotDf).supportsColumnar, "filtered scan must be columnar")
         val got = gotDf.collect()
-        val ref = rowLane("cells").where(mk(col("vec_b"))).collect()
         val refRaw = raw.where(mk(col("vec_b"))).collect()
-        assert(got.length == ref.length && got.length == refRaw.length,
-          s"row counts diverge for $mk: ${got.length}/${ref.length}/${refRaw.length}")
+        assert(got.length == refRaw.length,
+          s"row counts diverge for $mk: ${got.length}/${refRaw.length}")
         assert(gotDf.exceptAll(raw.where(mk(col("vec_b")))).count() == 0)
       }
-      // a filter column OUTSIDE the projection decodes into a scratch
-      // vector: projected rows exact, filter column absent from output
+      // a filter column OUTSIDE the projection is read for Spark's
+      // filter and projected away: rows exact, column absent from output
       val proj = v2(s"$dir/cells").where(col("vec_b") > mid).select("vb", "nb")
       assert(scanExec(proj).supportsColumnar)
       assert(proj.columns.toSeq == Seq("vb", "nb"))
@@ -617,8 +623,8 @@ class GraftIndexSourceSpec extends SparkSpec {
       assert(scanExec(f2).supportsColumnar)
       assert(f2.count() ==
         cents.where(col("cent_id") >= someCent && col("cn") > 0.0).count())
-      // count(*) under a pushed filter: agg refused, scan still columnar
-      // with an EMPTY output projection (scratch-only decode)
+      // count(*) under a data filter: no agg pushdown, the scan reads
+      // just the filter column
       val cnt = v2(s"$dir/cells").where(col("nb") > 0.0)
         .agg(count(lit(1)).as("n"))
       assert(cnt.collect().head.getLong(0) == raw.where(col("nb") > 0.0).count())
@@ -672,14 +678,11 @@ class GraftIndexSourceSpec extends SparkSpec {
     // whatever physical the session default writes (INT96 or INT64
     // micros) must round-trip; then pin the other physicals explicitly
     df.repartition(1).write.parquet(dir)
-    for (rowlane <- Seq("false", "true")) {
-      val got = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).select("id", "ts")
-      val ref = spark.read.parquet(dir).select("id", "ts")
-      assert(got.schema == ref.schema, s"ts schema diverges (rowlane=$rowlane)")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"ts rows diverge (rowlane=$rowlane)")
-    }
+    val got = spark.read.format("graft-index").load(dir).select("id", "ts")
+    val ref = spark.read.parquet(dir).select("id", "ts")
+    assert(got.schema == ref.schema, "ts schema diverges")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+      "ts rows diverge")
     for (outType <- Seq("INT96", "TIMESTAMP_MICROS", "TIMESTAMP_MILLIS")) {
       val d2 = java.nio.file.Files.createTempDirectory(s"graft_ts_$outType")
         .toString + "/t"
@@ -737,11 +740,11 @@ class GraftIndexSourceSpec extends SparkSpec {
     assert(evo.count() == 4)
     assert(evo.exceptAll(merged).count() == 0 &&
       merged.exceptAll(evo).count() == 0)
-    // pushed x > 5 is a per-file CONSTANT FALSE where x is absent: the
-    // claimed filter must stay exact, not throw on the x-less footer
+    // the x > 5 hint is a per-file CONSTANT FALSE where x is absent: the
+    // filter must stay exact, not throw on the x-less footer
     assert(evo.where(col("x") > 5L).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-    // pushed x IS NULL keeps exactly the x-less file's rows
+    // x IS NULL keeps exactly the x-less file's rows
     assert(evo.where(col("x").isNull).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
     assert(evo.where(col("x").isNotNull).count() == 2)
@@ -1109,20 +1112,19 @@ class GraftIndexSourceSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val got = v2(dir).where(pred(col)).select("id", "v", "w")
-      // the compound is CLAIMED: no Filter node survives above the scan
+      // the compound stays with Spark and reaches the scan as ONE hint
       assert(got.queryExecution.executedPlan
-        .collectFirst { case f: FilterExec => f }.isEmpty,
-        "an OR of claimed legs must vanish from the plan")
+        .collectFirst { case f: FilterExec => f }.nonEmpty,
+        "an OR of data legs must stay with Spark")
+      assert(got.queryExecution.executedPlan
+        .collectFirst { case b: BatchScanExec => b }.get
+        .scan.description().contains("Or("),
+        "the OR must reach the scan as a hint")
       val expect = raw.where(pred(col)).select("id", "v", "w")
       assert(got.count() == expect.count() && got.count() > 0)
       assert(got.exceptAll(expect).count() == 0 &&
         expect.exceptAll(got).count() == 0,
         "compound-filtered rows must equal spark.read.parquet (null v drops)")
-      // row-lane parity via the escape hatch
-      val rowlane = spark.read.format("graft-index").option("rowlane", "true")
-        .load(dir).where(pred(col)).select("id", "v", "w")
-      assert(rowlane.exceptAll(expect).count() == 0 &&
-        expect.exceptAll(rowlane).count() == 0)
       // OR over PARTITION columns prunes directories
       val pdir = java.nio.file.Files.createTempDirectory("graft_orpart").toString + "/t"
       (0 until 40).map(i => (i.toLong, i % 4)).toDF("v", "cell")
@@ -1582,7 +1584,7 @@ class GraftIndexSourceSpec extends SparkSpec {
   }
 
   test("large IN lists (round-12): set-predicate IN and hash-set NOT IN stay exact at 5000 elements on both lanes") {
-    // this lane caught TWO real failure modes before they shipped:
+    // this spec caught TWO real failure modes before they shipped:
     // FilterApi.notIn's record-level inspector keeps any value that
     // differs from ANY set element (broken for ≥2-value sets in
     // parquet-mr 1.16), and the And-of-notEq chain fallback overflows
@@ -1596,26 +1598,21 @@ class GraftIndexSourceSpec extends SparkSpec {
       .write.parquet(dir)
     val raw = spark.read.parquet(dir)
     val vals = (0 until 5000).map(i => (i * 2).toLong) // evens < 10000
-    for (rowlane <- Seq("false", "true")) {
-      val t = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir)
-      val in = t.where(col("g").isin(vals: _*))
-      val rin = raw.where(col("g").isin(vals: _*))
-      assert(in.count() == rin.count() && in.count() > 0,
-        s"IN rowlane=$rowlane")
-      assert(in.exceptAll(rin).count() == 0 && rin.exceptAll(in).count() == 0)
-      // NOT IN drops nulls (the not-null leg of the set claim)
-      val ni = t.where(!col("g").isin(vals: _*))
-      val rni = raw.where(!col("g").isin(vals: _*))
-      assert(ni.count() == rni.count() && ni.count() > 0,
-        s"NOT IN rowlane=$rowlane")
-      assert(ni.where(col("g").isNull).count() == 0)
-      assert(ni.exceptAll(rni).count() == 0 && rni.exceptAll(ni).count() == 0)
-    }
+    val t = spark.read.format("graft-index").load(dir)
+    val in = t.where(col("g").isin(vals: _*))
+    val rin = raw.where(col("g").isin(vals: _*))
+    assert(in.count() == rin.count() && in.count() > 0, "IN")
+    assert(in.exceptAll(rin).count() == 0 && rin.exceptAll(in).count() == 0)
+    // NOT IN drops nulls (the not-null leg of the set hint)
+    val ni = t.where(!col("g").isin(vals: _*))
+    val rni = raw.where(!col("g").isin(vals: _*))
+    assert(ni.count() == rni.count() && ni.count() > 0, "NOT IN")
+    assert(ni.where(col("g").isNull).count() == 0)
+    assert(ni.exceptAll(rni).count() == 0 && rni.exceptAll(ni).count() == 0)
   }
 
   test("dictionary row-group pruning (round-12): a point probe inside min/max but absent from the dictionary skips the group") {
-    import graft.sources.GraftIndexColumnarReader
+    import graft.sources.GraftIndexSparkVectorReader
     val dir = java.nio.file.Files.createTempDirectory("graft_dict").toString + "/t"
     // g = even values 0..98: low cardinality ⇒ dictionary-encoded;
     // stats span [0, 98] so an odd probe survives min/max everywhere
@@ -1623,12 +1620,21 @@ class GraftIndexSourceSpec extends SparkSpec {
       "CAST((id % 50) * 2 AS LONG) AS g", "concat('v', id % 7) AS s")
       .coalesce(1).write.parquet(dir)
     val raw = spark.read.parquet(dir)
-    val before = GraftIndexColumnarReader.dictPruned.get
-    val miss = spark.read.format("graft-index").load(dir)
-      .where(col("g") === 51L)
-    assert(miss.count() == 0)
-    assert(GraftIndexColumnarReader.dictPruned.get > before,
-      "the dictionary must kill the stats-surviving group")
+    def rowsReadBy(run: => Long): (Long, Long) = {
+      val before = GraftIndexSparkVectorReader.rowsRead.get
+      val n = run
+      (n, GraftIndexSparkVectorReader.rowsRead.get - before)
+    }
+    val (missN, missRead) = rowsReadBy(spark.read.format("graft-index")
+      .load(dir).where(col("g") === 51L).count())
+    assert(missN == 0)
+    // unpruned baseline: the same probe through an expression parquet
+    // can't take as a hint decodes the whole group
+    val (baseN, baseRead) = rowsReadBy(spark.read.format("graft-index")
+      .load(dir).where(abs(col("g")) === 51L).count())
+    assert(baseN == 0 && baseRead == 50000L, s"baseline read $baseRead")
+    assert(missRead == 0L,
+      s"the dictionary must kill the stats-surviving group (read $missRead)")
     // positive control: a present value decodes normally and exactly
     val hit = spark.read.format("graft-index").load(dir)
       .where(col("g") === 50L)
@@ -1651,22 +1657,14 @@ class GraftIndexSourceSpec extends SparkSpec {
         df.queryExecution.executedPlan.collectFirst {
           case b: BatchScanExec => b
         }.get.inputRDD.getNumPartitions
-      val lanes = Seq(
-        "delegated" -> spark.read.format("graft-index").load(dir),
-        "graftlane" -> spark.read.format("graft-index")
-          .option("graftlane", "true").load(dir),
-        "rowlane" -> spark.read.format("graft-index")
-          .option("rowlane", "true").load(dir))
-      for ((label, df) <- lanes) {
-        val got = df.select("id", "g", "s")
-        assert(parts(got) > 1,
-          s"$label: one big file must plan multiple range slices (got ${parts(got)})")
-        val ref = raw.select("id", "g", "s")
-        assert(got.count() == 120000L, s"$label count")
-        assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-          s"$label: slices must partition the file's rows exactly")
-      }
-      // claimed filter across slices: stats pruning composes with ranges
+      val got = spark.read.format("graft-index").load(dir).select("id", "g", "s")
+      assert(parts(got) > 1,
+        s"one big file must plan multiple range slices (got ${parts(got)})")
+      val ref = raw.select("id", "g", "s")
+      assert(got.count() == 120000L)
+      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+        "slices must partition the file's rows exactly")
+      // filter across slices: stats pruning composes with ranges
       val f = spark.read.format("graft-index").load(dir)
         .where(col("g") === 5L)
       val rf = raw.where(col("g") === 5L)
@@ -1682,32 +1680,39 @@ class GraftIndexSourceSpec extends SparkSpec {
     }
   }
 
-  test("delegated vectorized lane (round-12): unfiltered reads ride Spark's own decoder, filtered/graftlane reads don't, rows identical") {
+  test("one decode path: every data-column scan opens Spark's vectorized reader") {
     import graft.sources.GraftIndexSparkVectorReader
     val dir = writeIndex()
-    // unfiltered projection: the delegated reader opens files
-    val before = GraftIndexSparkVectorReader.opens.get
-    val del = v2(s"$dir/cells").select("vec_b", "nb")
-    val delRows = del.collect()
-    assert(GraftIndexSparkVectorReader.opens.get > before,
-      "unfiltered projection must route to the delegated Spark reader")
-    // graftlane pin: in-house decoder, zero delegated opens, same rows
-    // (parity over the COLLECTED arrays — a DataFrame exceptAll would
-    // re-execute the delegated frame and bump the counter)
-    val pinBefore = GraftIndexSparkVectorReader.opens.get
-    val pinnedRows = spark.read.format("graft-index").option("graftlane", "true")
-      .load(s"$dir/cells").select("vec_b", "nb").collect()
-    assert(GraftIndexSparkVectorReader.opens.get == pinBefore,
-      "graftlane must pin the in-house decoder")
-    assert(pinnedRows.map(_.toString).sorted.toSeq ==
-      delRows.map(_.toString).sorted.toSeq,
-      "decoder twins must produce identical rows")
-    // pushed data filter: stays on the in-house scratch-residue reader
-    // (the delegated lane never sees a claimed filter)
-    val fBefore = GraftIndexSparkVectorReader.opens.get
-    v2(s"$dir/cells").where(col("vec_b") > 100L).collect()
-    assert(GraftIndexSparkVectorReader.opens.get == fBefore,
-      "filtered scans must not route to the delegated reader")
+    val raw = spark.read.parquet(s"$dir/cells")
+    val someCell = raw.select(min(col("cell"))).collect().head.get(0)
+    // rows are compared as COLLECTED arrays — a DataFrame exceptAll
+    // would re-execute the frame and bump the counter
+    def opensBy(run: => Array[org.apache.spark.sql.Row])
+        : (Array[org.apache.spark.sql.Row], Long) = {
+      val before = GraftIndexSparkVectorReader.opens.get
+      val rows = run
+      (rows, GraftIndexSparkVectorReader.opens.get - before)
+    }
+    def same(a: Array[org.apache.spark.sql.Row],
+        b: Array[org.apache.spark.sql.Row]): Boolean =
+      a.map(_.toString).sorted.toSeq == b.map(_.toString).sorted.toSeq
+    val shapes: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      ("projection", _.select("vec_b", "nb")),
+      ("filtered", _.where(col("vec_b") > 100L).select("vec_b", "nb")),
+      ("filter column outside the projection",
+        _.where(col("nb") > 0.0).select("vec_b")),
+      ("partition-pruned", _.where(col("cell") === lit(someCell)).select("vec_b")),
+      ("limited", _.select("vec_b").limit(5)))
+    for ((label, q) <- shapes) {
+      val (rows, opened) = opensBy(q(v2(s"$dir/cells")).collect())
+      assert(opened > 0, s"$label scan must open the delegated Spark reader")
+      if (label == "limited") assert(rows.length == 5)
+      else assert(same(rows, q(raw).collect()), s"$label rows diverge")
+    }
+    // a partition-only projection keeps the footer-counting reader
+    val (cellRows, cellOpens) = opensBy(v2(s"$dir/cells").select("cell").collect())
+    assert(cellOpens == 0, "partition-only projections must not decode")
+    assert(same(cellRows, raw.select("cell").collect()))
   }
 
   test("DATE columns (round-12): both lanes decode epoch days; eq/range/<> claims stay pushed with nulls dropped; footer min/max") {
@@ -1729,25 +1734,21 @@ class GraftIndexSourceSpec extends SparkSpec {
       ("eq", _.where(col("d") === lit(java.sql.Date.valueOf("2024-03-05")))),
       ("ne", _.where(col("d") =!= lit(java.sql.Date.valueOf("2024-03-05")))),
       ("isnull", _.where(col("d").isNull)))
-    for ((label, q) <- shapes; rowlane <- Seq("false", "true")) {
+    for ((label, q) <- shapes) {
       val ref = q(raw)
-      val got = q(spark.read.format("graft-index")
-        .option("rowlane", rowlane).load(dir))
-      assert(got.schema == ref.schema, s"$label rowlane=$rowlane schema")
-      assert(got.count() == ref.count(), s"$label rowlane=$rowlane count")
+      val got = q(spark.read.format("graft-index").load(dir))
+      assert(got.schema == ref.schema, s"$label schema")
+      assert(got.count() == ref.count(), s"$label count")
       assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"$label rowlane=$rowlane rows diverge")
+        s"$label rows diverge")
     }
-    // the date claims are total (no Spark re-filter) and visible
+    // the date range reaches the scan as a visible hint
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val got = spark.read.format("graft-index").load(dir)
         .where(col("d") >= lit(lo))
-      val plan = got.queryExecution.executedPlan
-      assert(plan.collect {
-        case f: org.apache.spark.sql.execution.FilterExec => f
-      }.isEmpty, s"claimed date range re-evaluated:\n$plan")
-      val scan = plan.collectFirst { case b: BatchScanExec => b }.get
+      val scan = got.queryExecution.executedPlan
+        .collectFirst { case b: BatchScanExec => b }.get
       assert(scan.scan.description().contains("GreaterThanOrEqual(d"),
         scan.scan.description())
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
@@ -1756,6 +1757,32 @@ class GraftIndexSourceSpec extends SparkSpec {
       .agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
     val refMm = raw.agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
     assert(gotMm.collect().toSeq == refMm.collect().toSeq)
+    // files written under the LEGACY calendar: the reader rebases from
+    // the file's own metadata, and DATE hints are rebased to the Julian
+    // day counts such a file stores — a modern range and an ancient
+    // point probe (whose Julian and Gregorian day counts differ, so an
+    // unrebased hint would prune the only matching group) both match
+    // spark.read.parquet
+    val legacy = java.nio.file.Files.createTempDirectory("graft_dlegacy")
+      .toString + "/t"
+    spark.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY")
+    try {
+      spark.range(0, 100)
+        .selectExpr("id", "date_add(DATE'2020-01-01', CAST(id AS INT)) AS d")
+        .repartition(1).write.parquet(legacy)
+      spark.range(100, 110).selectExpr("id", "DATE'1000-01-01' AS d")
+        .repartition(1).write.mode("append").parquet(legacy)
+    } finally spark.conf.unset("spark.sql.parquet.datetimeRebaseModeInWrite")
+    val legacyRaw = spark.read.parquet(legacy)
+    for (pred <- Seq("d > DATE'2020-02-01'", "d = DATE'1000-01-01'")) {
+      val got = spark.read.format("graft-index").load(legacy).where(pred)
+      val ref = legacyRaw.where(pred)
+      assert(got.count() == ref.count() && got.count() > 0, pred)
+      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+        s"$pred rows diverge on the LEGACY-calendar files")
+    }
+    assert(spark.read.format("graft-index").load(legacy)
+      .where("d > DATE'2020-02-01'").count() == 68)
   }
 
   test("DATE partition directories (round-12): dt=YYYY-MM-DD infers DateType, date predicates prune directories") {
@@ -1801,23 +1828,20 @@ class GraftIndexSourceSpec extends SparkSpec {
       "CAST((id - 250) * 123456789.0001 AS DECIMAL(24,4)) AS dbig")
       .write.parquet(dir)
     val raw = spark.read.parquet(dir)
-    for (rowlane <- Seq("false", "true")) {
-      val got = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).select("id", "d32", "d64", "dbig")
-      val ref = raw.select("id", "d32", "d64", "dbig")
-      assert(got.schema == ref.schema, s"decimal schema (rowlane=$rowlane)")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"decimal rows diverge (rowlane=$rowlane)")
-    }
-    // a pushed filter on a LONG column with decimals projected: the
-    // in-house columnar lane refuses decimal, so the scan must fall
-    // back to the row lane's annotation-driven convert — and stay exact
+    val got = spark.read.format("graft-index").load(dir)
+      .select("id", "d32", "d64", "dbig")
+    val ref = raw.select("id", "d32", "d64", "dbig")
+    assert(got.schema == ref.schema, "decimal schema")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+      "decimal rows diverge")
+    // a filter on a LONG column with decimals projected decodes on the
+    // same reader — and stays exact
     val f = spark.read.format("graft-index").load(dir)
       .where(col("id") > 250L)
     val rf = raw.where(col("id") > 250L)
     assert(f.count() == rf.count() && f.count() > 0)
     assert(f.exceptAll(rf).count() == 0 && rf.exceptAll(f).count() == 0,
-      "filtered decimal scan must fall back exactly")
+      "filtered decimal scan diverges")
   }
 
   test("SHORT/BYTE columns (round-12): both lanes, claimed range filters, footer min/max narrow to the output type") {
@@ -1828,29 +1852,27 @@ class GraftIndexSourceSpec extends SparkSpec {
       "CAST(id % 250 - 125 AS TINYINT) AS i8")
       .write.parquet(dir)
     val raw = spark.read.parquet(dir)
-    for (rowlane <- Seq("false", "true")) {
-      val got = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).select("id", "s16", "i8")
-      val ref = raw.select("id", "s16", "i8")
-      assert(got.schema == ref.schema, s"short/byte schema (rowlane=$rowlane)")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"short/byte rows diverge (rowlane=$rowlane)")
-      // claimed range + eq over the narrow types (INT32 comparators)
-      val q = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).where(col("s16") > 40 && col("i8") =!= lit(3.toByte))
-      val qr = raw.where(col("s16") > 40 && col("i8") =!= lit(3.toByte))
-      assert(q.count() == qr.count() && q.count() > 0,
-        s"short/byte claims (rowlane=$rowlane)")
-    }
-    // claim totality + footer min/max parity (stats arrive as Integer,
-    // the agg reader narrows to Short/Byte)
+    val got = spark.read.format("graft-index").load(dir).select("id", "s16", "i8")
+    val ref = raw.select("id", "s16", "i8")
+    assert(got.schema == ref.schema, "short/byte schema")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+      "short/byte rows diverge")
+    // range + `<>` hints over the narrow types (INT32 comparators)
+    val q = spark.read.format("graft-index")
+      .load(dir).where(col("s16") > 40 && col("i8") =!= lit(3.toByte))
+    val qr = raw.where(col("s16") > 40 && col("i8") =!= lit(3.toByte))
+    assert(q.count() == qr.count() && q.count() > 0, "short/byte filters")
+    assert(q.exceptAll(qr).count() == 0 && qr.exceptAll(q).count() == 0)
+    // the short range reaches the scan as a hint; footer min/max parity
+    // (stats arrive as Integer, the agg reader narrows to Short/Byte)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val got = spark.read.format("graft-index").load(dir)
         .where(col("s16") > 40)
-      assert(got.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FilterExec => f
-      }.isEmpty, "claimed short range must not be re-evaluated")
+      assert(got.queryExecution.executedPlan.collectFirst {
+        case b: BatchScanExec => b
+      }.get.scan.description().contains("GreaterThan(s16"),
+        "the short range must reach the scan as a hint")
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
     val gotMm = spark.read.format("graft-index").load(dir)
       .agg(min(col("s16")).as("a"), max(col("s16")).as("b"),
@@ -1869,14 +1891,17 @@ class GraftIndexSourceSpec extends SparkSpec {
         "TIMESTAMP_NTZ '2024-03-01 10:30:00.123456') END AS tn")
       .write.parquet(dir)
     val raw = spark.read.parquet(dir)
-    for (rowlane <- Seq("false", "true")) {
-      val got = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).select("id", "tn")
-      val ref = raw.select("id", "tn")
-      assert(got.schema == ref.schema, s"ntz schema (rowlane=$rowlane)")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"ntz rows diverge (rowlane=$rowlane)")
-    }
+    val got = spark.read.format("graft-index").load(dir).select("id", "tn")
+    val ref = raw.select("id", "tn")
+    assert(got.schema == ref.schema, "ntz schema")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+      "ntz rows diverge")
+    // a timestamp range gives no hint; Spark's filter does the work
+    val f = spark.read.format("graft-index").load(dir)
+      .where("tn > TIMESTAMP_NTZ '2024-03-01 10:30:50'")
+    val rf = raw.where("tn > TIMESTAMP_NTZ '2024-03-01 10:30:50'")
+    assert(f.count() == rf.count() && f.count() > 0)
+    assert(f.exceptAll(rf).count() == 0 && rf.exceptAll(f).count() == 0)
   }
 
   test("array<string> columns (round-12): tags/token lists decode exactly on all three decoders") {
@@ -1893,23 +1918,12 @@ class GraftIndexSourceSpec extends SparkSpec {
         Seq((4L, Seq[Option[String]](Some("last")))).toDF("id", "tags"))
     crafted.repartition(1).write.parquet(dir)
     val ref = spark.read.parquet(dir).select("id", "tags")
-    // delegated (default unfiltered), in-house columnar (graftlane),
-    // and the Group row lane
-    val lanes = Seq(
-      "delegated" -> spark.read.format("graft-index").load(dir),
-      "graftlane" -> spark.read.format("graft-index")
-        .option("graftlane", "true").load(dir),
-      "rowlane" -> spark.read.format("graft-index")
-        .option("rowlane", "true").load(dir))
-    for ((label, df) <- lanes) {
-      val got = df.select("id", "tags")
-      assert(got.schema == ref.schema, s"$label schema")
-      assert(got.count() == 4, label)
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"$label array<string> rows diverge")
-    }
-    // filtered scan (claimed id filter, tags projected): the in-house
-    // scratch-residue reader decodes the string list
+    val got = spark.read.format("graft-index").load(dir).select("id", "tags")
+    assert(got.schema == ref.schema, "schema")
+    assert(got.count() == 4)
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+      "array<string> rows diverge")
+    // filtered scan (id hint, tags projected)
     val f = spark.read.format("graft-index").load(dir).where(col("id") > 1L)
     val rf = ref.where(col("id") > 1L)
     assert(f.count() == 3)
@@ -1927,20 +1941,17 @@ class GraftIndexSourceSpec extends SparkSpec {
       .toDF("id", "payload")
     df.repartition(1).write.parquet(dir)
     val raw = spark.read.parquet(dir)
-    for (rowlane <- Seq("false", "true")) {
-      val got = spark.read.format("graft-index").option("rowlane", rowlane)
-        .load(dir).select("id", "payload")
-      val ref = raw.select("id", "payload")
-      assert(got.schema == ref.schema, s"binary schema (rowlane=$rowlane)")
-      assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
-        s"binary payloads diverge (rowlane=$rowlane)")
-      // content check that doesn't ride exceptAll's hashing: md5 + length
-      val gm = got.select(md5(col("payload")).as("h"),
-        length(col("payload")).as("n")).orderBy("h")
-      val rm = ref.select(md5(col("payload")).as("h"),
-        length(col("payload")).as("n")).orderBy("h")
-      assert(gm.collect().toSeq == rm.collect().toSeq)
-    }
+    val got = spark.read.format("graft-index").load(dir).select("id", "payload")
+    val ref = raw.select("id", "payload")
+    assert(got.schema == ref.schema, "binary schema")
+    assert(got.exceptAll(ref).count() == 0 && ref.exceptAll(got).count() == 0,
+      "binary payloads diverge")
+    // content check that doesn't ride exceptAll's hashing: md5 + length
+    val gm = got.select(md5(col("payload")).as("h"),
+      length(col("payload")).as("n")).orderBy("h")
+    val rm = ref.select(md5(col("payload")).as("h"),
+      length(col("payload")).as("n")).orderBy("h")
+    assert(gm.collect().toSeq == rm.collect().toSeq)
     // the plain projection rides the vectorized lane
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -1976,21 +1987,24 @@ class GraftIndexSourceSpec extends SparkSpec {
       .selectExpr("ts", "s").collect()
     assert(got.map(_.toString).sorted.toSeq == want.map(_.toString).sorted.toSeq)
     assert(got.length == 1000)
-    // claims remain REFUSED (the hint is conf-level, not a claim)
+    // the hint is conf-level, not a claim: Spark keeps the filter
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val scan = idx.where(col("ts") >= 23000L)
-        .queryExecution.executedPlan.collectFirst {
-          case b: BatchScanExec => b
-        }.get
-      assert(scan.scan.description().contains("pushedDataFilters=[]"))
+      val plan = idx.where(col("ts") >= 23000L).queryExecution.executedPlan
+      val scan = plan.collectFirst { case b: BatchScanExec => b }.get
+      assert(scan.scan.description().contains("dataFilterHints=[") &&
+        scan.scan.description().contains("GreaterThanOrEqual(ts"),
+        scan.scan.description())
+      assert(plan.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f
+      }.nonEmpty, s"hinted filters must stay with Spark:\n$plan")
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
     // a filter over the struct FIELD is not hintable — full decode,
     // still exact (Spark's filter does all the work)
     val gotS = idx.where(col("s.uid") === 7L).count()
     assert(gotS == raw.where(col("s.uid") === 7L).count() && gotS > 0)
     // evolved set: a file MISSING the hinted column folds per the
-    // claim lanes' all-null rule — a range hint over the absent column
+    // all-null rule — a range hint over the absent column
     // is constant FALSE there, so the file skips with zero IO; rows
     // stay exact against spark.read.parquet on the merged schema
     spark.range(0, 100)
@@ -2055,7 +2069,7 @@ class GraftIndexSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("unfiltered DECIMAL projections ride the delegated vectorized lane (round-13 ADVICE); filtered ones keep the row lane") {
+  test("DECIMAL projections decode on Spark's reader, filtered or not") {
     import graft.sources.GraftIndexSparkVectorReader
     val dir = java.nio.file.Files.createTempDirectory("graft_declane").toString + "/t"
     spark.range(0, 1000)
@@ -2064,36 +2078,27 @@ class GraftIndexSourceSpec extends SparkSpec {
     def idx = spark.read.format("graft-index").load(dir)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = idx.select("id", "amt")
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b
-      }.get
-      assert(scan.supportsColumnar,
-        "unfiltered decimal projection must be columnar (delegated)")
-      val before = GraftIndexSparkVectorReader.opens.get
-      val got = df.agg(sum("amt")).collect().head.getDecimal(0)
-      assert(GraftIndexSparkVectorReader.opens.get > before,
-        "unfiltered decimal decode must ride the delegated lane")
-      val want = spark.read.parquet(dir).agg(sum("amt"))
-        .collect().head.getDecimal(0)
-      assert(got == want, s"decimal fold diverges: $got vs $want")
-      // filtered decimal projections stay on the row lane (the in-house
-      // columnar set excludes DECIMAL) — and stay exact
-      val f = idx.where(col("id") > 500L).select("id", "amt")
-      val fscan = f.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b
-      }.get
-      assert(!fscan.supportsColumnar,
-        "filtered decimal projection must fall back to the row lane")
-      val gotF = f.agg(sum("amt")).collect().head.getDecimal(0)
-      val wantF = spark.read.parquet(dir).where(col("id") > 500L)
-        .agg(sum("amt")).collect().head.getDecimal(0)
-      assert(gotF == wantF)
+      for ((label, df, ref) <- Seq(
+          ("unfiltered", idx.select("id", "amt"),
+            spark.read.parquet(dir).select("id", "amt")),
+          ("filtered", idx.where(col("id") > 500L).select("id", "amt"),
+            spark.read.parquet(dir).where(col("id") > 500L).select("id", "amt")))) {
+        val scan = df.queryExecution.executedPlan.collectFirst {
+          case b: BatchScanExec => b
+        }.get
+        assert(scan.supportsColumnar, s"$label decimal projection must be columnar")
+        val before = GraftIndexSparkVectorReader.opens.get
+        val got = df.agg(sum("amt")).collect().head.getDecimal(0)
+        assert(GraftIndexSparkVectorReader.opens.get > before,
+          s"$label decimal decode must ride the delegated reader")
+        val want = ref.agg(sum("amt")).collect().head.getDecimal(0)
+        assert(got == want, s"$label decimal fold diverges: $got vs $want")
+      }
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
   test("page-level pruning (round-13): a sorted-column range probe decodes fewer pages than group pruning alone; claims stay exact") {
-    import graft.sources.GraftIndexColumnarReader
+    import graft.sources.GraftIndexSparkVectorReader
     val dir = java.nio.file.Files.createTempDirectory("graft_pagep").toString + "/t"
     // ONE row group, many small pages, ts sorted — group-level stats
     // can't prune anything for a range inside [0, 100k), but the column
@@ -2109,44 +2114,43 @@ class GraftIndexSourceSpec extends SparkSpec {
       .parquet(dir)
     def idx = spark.read.format("graft-index").load(dir)
     val raw = spark.read.parquet(dir)
+    def rowsReadBy[T](run: => T): (T, Long) = {
+      val before = GraftIndexSparkVectorReader.rowsRead.get
+      val out = run
+      (out, GraftIndexSparkVectorReader.rowsRead.get - before)
+    }
     // POSITIVE control: a narrow event-time cutoff probe — the column
     // index sheds the pages outside [60000, 61000)
-    val before = GraftIndexColumnarReader.pageFilteredRows.get
-    val got = idx.where(col("ts") >= 60000L && col("ts") < 61000L)
-      .selectExpr("ts", "v", "payload").collect()
-    val shed = GraftIndexColumnarReader.pageFilteredRows.get - before
-    assert(shed > 50000L,
-      s"column index must shed most of the sorted group's rows, shed=$shed")
+    val (got, read) = rowsReadBy(idx.where(col("ts") >= 60000L && col("ts") < 61000L)
+      .selectExpr("ts", "v", "payload").collect())
+    assert(read < 50000L,
+      s"column index must shed most of the sorted group's rows, read=$read")
     val want = raw.where(col("ts") >= 60000L && col("ts") < 61000L)
       .selectExpr("ts", "v", "payload").collect()
     assert(got.map(_.toString).sorted.toSeq == want.map(_.toString).sorted.toSeq,
       "page-pruned probe must match spark.read.parquet exactly")
     assert(got.length == 1000)
-    // the residue still enforces the claim row-by-row on page-boundary
-    // survivors: an UNSORTED column probe keeps ranges wide but stays
-    // exact (pages hold matching and non-matching rows)
+    // Spark's filter still enforces the predicate row-by-row on
+    // page-boundary survivors: an UNSORTED column probe keeps ranges
+    // wide but stays exact (pages hold matching and non-matching rows)
     val gotV = idx.where(col("v") === 13L).agg(sum("ts")).collect()
     val wantV = raw.where(col("v") === 13L).agg(sum("ts")).collect()
     assert(gotV.head.getLong(0) == wantV.head.getLong(0))
-    // NEGATIVE control: a predicate every page can satisfy sheds nothing
-    val b2 = GraftIndexColumnarReader.pageFilteredRows.get
-    assert(idx.where(col("ts") >= 0L).count() == 100000L)
-    assert(GraftIndexColumnarReader.pageFilteredRows.get == b2,
-      "an all-pass predicate must not shed pages")
-    // ARRAY projections keep whole-group reads (the list decode walks
-    // repetition levels with its own accounting) — and stay exact
+    // NEGATIVE control (the unpruned scan): a predicate every page can
+    // satisfy sheds nothing
+    val (all, allRead) = rowsReadBy(idx.where(col("ts") >= 0L).count())
+    assert(all == 100000L)
+    assert(allRead == 100000L, s"an all-pass predicate must not shed pages: $allRead")
+    // ARRAY projections under the same kind of probe stay exact
     val adir = java.nio.file.Files.createTempDirectory("graft_pagea").toString + "/t"
     spark.range(0, 20000).orderBy("id")
       .selectExpr("id AS ts", "array(id, id + 1, id + 2) AS arr")
       .coalesce(1)
       .write.option("parquet.page.size", "2048")
       .option("parquet.page.row.count.limit", "500").parquet(adir)
-    val b3 = GraftIndexColumnarReader.pageFilteredRows.get
     val gotA = spark.read.format("graft-index").load(adir)
       .where(col("ts") >= 5000L && col("ts") < 5100L)
       .selectExpr("ts", "arr").collect()
-    assert(GraftIndexColumnarReader.pageFilteredRows.get == b3,
-      "array projections must keep whole-group reads")
     val wantA = spark.read.parquet(adir)
       .where(col("ts") >= 5000L && col("ts") < 5100L)
       .selectExpr("ts", "arr").collect()
@@ -2181,18 +2185,17 @@ class GraftIndexSourceSpec extends SparkSpec {
     assert(canon(nested).exceptAll(canon(raw)).count() == 0 &&
       canon(raw).exceptAll(canon(nested)).count() == 0,
       "nested rows diverge from spark.read.parquet")
-    // FILTERED scan on a nested-bearing table: claims refused wholesale
-    // — the flat id predicate would have been claimable, but a claim
-    // could strand the struct projection with no decoder; Spark
-    // re-filters over delegated decode instead
+    // FILTERED scan on a nested-bearing table: the flat id predicate
+    // becomes a hint, the struct-field one stays Spark-only, and Spark
+    // re-filters over the delegated decode
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val f = nested.where(col("s.k") === 3 && col("id") =!= 11L)
       val scan = f.queryExecution.executedPlan.collectFirst {
         case b: BatchScanExec => b
       }.get
-      assert(scan.scan.description().contains("pushedDataFilters=[]"),
-        s"nested-bearing tables must refuse data claims: ${scan.scan.description()}")
+      assert(scan.scan.description().contains("Not(EqualTo(id,11"),
+        s"the flat id filter must reach the scan as a hint: ${scan.scan.description()}")
       val rf = raw.where(col("s.k") === 3 && col("id") =!= 11L)
       assert(f.count() == rf.count() && f.count() > 0)
       assert(canon(f).exceptAll(canon(rf)).count() == 0 &&
@@ -2211,8 +2214,7 @@ class GraftIndexSourceSpec extends SparkSpec {
       assert(plannedFiles(nested.where(col("bucket") === 2)) <
         plannedFiles(nested),
         "partition filters must still prune directories")
-      // the delegated Spark reader serves the decode (filtered or not —
-      // pushedData is always empty here)
+      // the delegated Spark reader serves the decode
       val before = GraftIndexSparkVectorReader.opens.get
       nested.where(col("s.k") === 3).select("s", "m").collect()
       assert(GraftIndexSparkVectorReader.opens.get > before,
@@ -2220,15 +2222,5 @@ class GraftIndexSourceSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
     // count(*) still rides the zero-decode footer counter
     assert(nested.count() == 500)
-    // the force-knob row lane has no struct decode — refuse loudly, not
-    // silently misread
-    val e = intercept[Exception] {
-      spark.read.format("graft-index").option("rowlane", "true")
-        .load(dir).select("s").collect()
-    }
-    def chain(t: Throwable): Seq[String] =
-      if (t == null) Nil else t.getMessage +: chain(t.getCause)
-    assert(chain(e).exists(m => m != null && m.contains("unsupported")),
-      s"row lane must refuse nested decode loudly: ${chain(e)}")
   }
 }
