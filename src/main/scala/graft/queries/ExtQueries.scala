@@ -4000,14 +4000,16 @@ object ExtQueries extends QueryGroup {
     * (deletes), value-change expire+open, no-op suppression
     * (customers whose latest priority equals... none here — mktsegment
     * ≠ priority, so every U is a change), and untouched keys
-    * (customers with no orders). The oracle restates the fold verbatim
-    * — latest window, null-safe change guard, closing union,
-    * NOT EXISTS untouched.
+    * (customers with no orders). The oracle restates the same rules in
+    * a different shape — latest window, null-safe change guard, closing
+    * union, NOT EXISTS untouched — an independent check of the
+    * single-pass fold.
     *
     * Scale shape: one orders aggregate (the latest-per-key window over
     * the changefeed — at 100 TB the feed is a day's delta, not
-    * history), then key-equi joins against the current slice only;
-    * history rows pass through untouched.
+    * history), broadcast into ONE pass over the dimension that matches
+    * only open rows (history rows pass the join unmatched), plus an
+    * anti-join of the changes against the open keys for first opens.
     */
   private def scd2Cdc(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.customer(s, d).select(

@@ -2011,7 +2011,29 @@ case class GraftSessionSql(tz: String, caseSensitive: Boolean,
     dtRebaseRead: String = "EXCEPTION", i96RebaseRead: String = "EXCEPTION",
     int96TsConversion: Boolean = false)
     extends Serializable {
+  import org.apache.parquet.hadoop.metadata.ParquetMetadata
   import org.apache.spark.sql.internal.SQLConf
+
+  /** A file's calendar rebase mode — DataSourceUtils' exact spec:
+    * legacy-stamped files rebase LEGACY; files carrying a Spark 3+
+    * version stamp decode verbatim (CORRECTED); files with NO Spark
+    * version metadata (non-Spark or pre-3.0 writers) fall back to the
+    * session's *RebaseModeInRead — default EXCEPTION, i.e. refuse
+    * ancient values rather than guess a calendar.
+    */
+  private def rebaseMode(footer: ParquetMetadata, legacyKey: String,
+      fallback: String): String = {
+    val kv = Option(footer.getFileMetaData.getKeyValueMetaData)
+      .getOrElse(java.util.Collections.emptyMap[String, String]())
+    if (kv.containsKey(legacyKey)) "LEGACY"
+    else if (kv.containsKey("org.apache.spark.version")) "CORRECTED"
+    else fallback
+  }
+  def dateTimeRebase(footer: ParquetMetadata): String =
+    rebaseMode(footer, "org.apache.spark.legacyDateTime", dtRebaseRead)
+  def int96Rebase(footer: ParquetMetadata): String =
+    rebaseMode(footer, "org.apache.spark.legacyINT96", i96RebaseRead)
+
   def stamp(conf: Configuration): Unit = {
     conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, tz)
     conf.setBoolean(SQLConf.CASE_SENSITIVE.key, caseSensitive)
@@ -2137,20 +2159,8 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     val (file, start, sliceLen, const) = fileQueue.dequeue()
     val p = new Path(file)
     val (footer0, fileLen) = GraftFooterCache.footerWithLen(file, fc)
-    // rebase modes — DataSourceUtils' exact spec (round-13, was
-    // two-state): legacy-stamped files rebase LEGACY; files carrying a
-    // Spark 3+ version stamp decode verbatim (CORRECTED); files with NO
-    // Spark version metadata (non-Spark or pre-3.0 writers) fall back
-    // to the session's *RebaseModeInRead — default EXCEPTION, i.e.
-    // refuse ancient values rather than guess a calendar
-    val kv = Option(footer0.getFileMetaData.getKeyValueMetaData)
-      .getOrElse(java.util.Collections.emptyMap[String, String]())
-    def rebase(legacyKey: String, fallback: String): String =
-      if (kv.containsKey(legacyKey)) "LEGACY"
-      else if (kv.containsKey("org.apache.spark.version")) "CORRECTED"
-      else fallback
-    val dtMode = rebase("org.apache.spark.legacyDateTime", sql.dtRebaseRead)
-    val i96Mode = rebase("org.apache.spark.legacyINT96", sql.i96RebaseRead)
+    val dtMode = sql.dateTimeRebase(footer0)
+    val i96Mode = sql.int96Rebase(footer0)
     // data-filter HINTS: fold them against THIS file's columns (absent
     // column = all-null) and stamp the residual on a per-file conf —
     // Spark's own reader then prunes row groups by stats/dictionary and
@@ -2304,7 +2314,8 @@ class GraftIndexCountingReader(fileParts: Seq[(String, Long, Long, Array[Any])],
   */
 class GraftIndexAggReaderFactory(agg: Aggregation, aggSchema: StructType,
     isPart: Array[Boolean],
-    private[graft] val conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration])
+    private[graft] val conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
+    sql: GraftSessionSql = GraftSessionSql.capture())
     extends PartitionReaderFactory {
   // serializable spec: (kind, colName) per aggregate, kinds C/MIN/MAX
   private val spec: Array[(String, String)] = agg.aggregateExpressions.map {
@@ -2365,7 +2376,7 @@ class GraftIndexAggReaderFactory(agg: Aggregation, aggSchema: StructType,
                       .findFirst()
                     if (cc.isPresent) Option(cc.get.getStatistics) else None
                   }
-                  val fileBest: Any =
+                  val stored: Any =
                     if (stats.exists(s => s.isEmpty || s.get.isEmpty))
                       // stats missing: decode just this column
                       GraftIndexAggReaderFactory.scanMinMax(file, col, isMin,
@@ -2377,6 +2388,17 @@ class GraftIndexAggReaderFactory(agg: Aggregation, aggSchema: StructType,
                         (if (isMin) s.genericGetMin else s.genericGetMax): Any)
                         .reduce(pick(_, _, isMin))
                     }
+                  // both sources hold the file's raw day counts: a
+                  // LEGACY-calendar file stores Julian days, rebased here
+                  // (monotone, so the extreme stays the extreme)
+                  val fileBest: Any = stored match {
+                    case d: java.lang.Integer
+                        if aggSchema.fields(i).dataType == DateType &&
+                          sql.dateTimeRebase(footer) == "LEGACY" =>
+                      java.lang.Integer.valueOf(org.apache.spark.sql.catalyst
+                        .util.RebaseDateTime.rebaseJulianToGregorianDays(d.intValue))
+                    case v => v
+                  }
                   if (fileBest != null)
                     bests(k) = if (bests(k) == null) fileBest
                       else pick(bests(k), fileBest, isMin)

@@ -17,8 +17,8 @@ import org.apache.spark.sql.DataFrame
   * index lives on disk and each batch reads it like any other parquet
   * source; mutable state is only the accumulated pair set (tiny
   * relative to the corpus), checkpointed per batch with the superseded
-  * snapshot's blocks released deterministically (the Scd2Stream.DimState
-  * discipline).
+  * snapshot's blocks released deterministically (the
+  * Scd2Stream.KeyedCdcState discipline).
   *
   * foreachBatch delivers at-least-once: a REPLAYED batch re-derives the
   * identical pairs (the probe is deterministic in (index, batch)), and

@@ -15,12 +15,12 @@ import org.apache.spark.sql.DataFrame
   * invisible — StreamingSpec asserts the folded state equals the
   * one-shot batch aggregate of all rows.
   *
-  * State mechanics follow Scd2Stream.DimState: localCheckpoint per fold
+  * State mechanics follow Scd2Stream.KeyedCdcState: localCheckpoint per fold
   * keeps the state's plan O(1) instead of accreting every batch's
   * lineage; the superseded snapshot's blocks are released only after the
   * new one has materialized. At production scale the state side would be
   * a bucketed table co-partitioned on the key (see
-  * operators/Incremental.scala) or Scd2Stream.KeyedDimState's sliced
+  * operators/Incremental.scala) or Scd2Stream.KeyedCdcState's sliced
   * layout; the fold logic is unchanged.
   */
 object MetricsStream {

@@ -1,108 +1,75 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SCD2 maintenance as a STREAM: the reference's flagship composite
   * (expire superseded rows, insert new current rows — dm:185-232) applied
-  * per micro-batch of arriving updates via foreachBatch.
+  * per micro-batch of a changefeed via foreachBatch.
   *
-  * Shape: the dimension snapshot is the fold state; each micro-batch's
-  * JOIN work touches only the CURRENT slice (history rows pass through
-  * untouched), so the comparison cost scales with |batch| + |current
-  * keys|. Two state backends share the identical per-batch logic:
-  * `DimState` (one snapshot DataFrame, O(|dimension|) rewrite per batch
-  * — fine while the dimension is modest) and `KeyedDimState` (the
-  * production shape: snapshot hash-partitioned on the business key into
-  * N slices, a batch rewrites ONLY the slices whose partitions contain
-  * batch keys — per-batch cost O(|dimension|/N x touched partitions),
-  * the keyed merge/partition-overwrite pattern of table formats).
-  * foreachBatch delivers at-least-once; `applyBatch` is deterministic in
-  * (dim, batch), so a replayed batch folds to the identical snapshot —
-  * production sinks additionally key writes on batchId for idempotence.
+  * One fold and one state backend. [[applyCdc]] folds an I/U/D
+  * changefeed into the dimension snapshot in a single pass over it; an
+  * update-only feed passes `lit("U").as(opCol)`. [[KeyedCdcState]] holds
+  * the snapshot hash-partitioned on the business key into N slices and
+  * rewrites ONLY the slices whose keys a batch touches — per-batch cost
+  * O(|batch| + |dimension|/N x touched slices), the keyed merge /
+  * partition-overwrite pattern of table formats; `numPartitions = 1` is
+  * the full rewrite. foreachBatch delivers at-least-once; `applyCdc` is
+  * deterministic in (dim, batch), so a replayed batch folds to the
+  * identical snapshot — production sinks additionally key writes on
+  * batchId for idempotence.
   *
   * Dimension schema: (keyCol, valueCol, effective_from, effective_to,
   * is_current) with Long event-time stamps (`effective_to` null on the
-  * open row). Update schema: (keyCol, valueCol, tsCol).
+  * open row). Changefeed schema: (keyCol, valueCol, tsCol, opCol).
   */
 object Scd2Stream {
 
-  /** Fold ONE batch of updates into the dimension snapshot:
-    *  - several updates for a key in one batch collapse to the latest
-    *    (by ts, value tiebreak — a total order, G6 discipline);
-    *  - LATE data is dropped: an update at-or-before the current row's
-    *    effective_from would regress the dimension and mint an inverted
-    *    validity interval — the batch-side analog of a watermark;
+  /** Fold ONE changefeed batch into the dimension snapshot. The op column
+    * carries I/U/D with upsert semantics (I ≡ U) — the shape a
+    * Debezium/warehouse CDC stream delivers, including the delete lane
+    * the reference's SCD2 proc never exercises (warehouses rarely
+    * hard-delete; CDC feeds do).
+    *
     *  - null business keys are dropped (the reference's groupBy G2 rule:
     *    a dimension row needs a key);
-    *  - a no-op update (value null-safely equal to current) leaves the
-    *    dimension untouched — no spurious version churn; transitions TO
-    *    and FROM null values are real changes and are recorded;
-    *  - a changed/new value expires the open row at the update's ts and
-    *    opens a new current row from it.
+    *  - several changes for a key in one batch collapse to the latest by
+    *    (ts desc, op desc, value desc) — a total order (G6 discipline); at
+    *    one ts an update outranks a delete ('U' > 'D'), a deterministic
+    *    documented policy rather than an engine accident;
+    *  - LATE data is dropped: a change at-or-before the open row's
+    *    effective_from would regress the dimension and mint an inverted
+    *    validity interval — the batch-side analog of a watermark;
+    *  - a no-op update (value null-safely equal to the open row's) leaves
+    *    the dimension untouched — no spurious version churn; transitions
+    *    TO and FROM null values are real changes and are recorded;
+    *  - a changed value expires the open row at the change's ts and opens
+    *    a new current row from it; a key with no open row just opens one;
+    *  - a winning DELETE expires the open row at its ts (soft delete:
+    *    history keeps every closed interval — the SCD2 reading of
+    *    deletion; GDPR hard erasure is ext_privacy_erasure's job, not a
+    *    dimension fold) and opens nothing. A delete for a key with no
+    *    open row is dropped, which is what makes replaying it a no-op;
+    *  - a re-insert after a delete is just a newer update: it opens a
+    *    fresh current row; the deleted interval stays closed history.
     *
-    * Same-ts collision: an update whose ts EQUALS the open row's
+    * Same-ts collision: a change whose ts EQUALS the open row's
     * effective_from is treated as late and dropped even if it carries a
     * different value — the strictly-newer guard is what makes replaying
     * a batch idempotent (the batch's own winner re-arrives at the same
     * ts and must fold to a no-op). Sources that can emit two distinct
     * values at one timestamp need a monotonic sequence column folded
     * into ts (e.g. ts*2^k + seq) before calling this.
-    */
-  def applyBatch(dim: DataFrame, updates: DataFrame, keyCol: String,
-      valueCol: String, tsCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCol)
-      .orderBy(col(tsCol).desc, col(valueCol).desc)
-    val latest = updates
-      .where(col(keyCol).isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    val cur = dim.where(col("is_current") === 1)
-    val hist = dim.where(col("is_current") === 0)
-    val changed = latest
-      .join(cur.select(col(keyCol), col(valueCol).as("__cur_v"),
-        col("effective_from").as("__cur_from"), lit(1).as("__has_cur")),
-        Seq(keyCol), "left")
-      // new key, or value changed under null-safe equality; stale
-      // updates (not strictly newer than the open row) are dropped
-      .where((col("__has_cur").isNull || !(col("__cur_v") <=> col(valueCol)))
-        && (col("__cur_from").isNull || col(tsCol) > col("__cur_from")))
-      .select(col(keyCol), col(valueCol), col(tsCol))
-    val newCurrent = changed.select(col(keyCol), col(valueCol),
-      col(tsCol).as("effective_from"),
-      lit(null).cast("long").as("effective_to"),
-      lit(1).as("is_current"))
-    val expired = cur
-      .join(changed.select(col(keyCol), col(tsCol).as("__new_from")), Seq(keyCol))
-      .select(col(keyCol), col(valueCol), col("effective_from"),
-        col("__new_from").as("effective_to"), lit(0).as("is_current"))
-    val untouched = cur.join(changed.select(keyCol), Seq(keyCol), "left_anti")
-    hist.unionByName(expired).unionByName(untouched).unionByName(newCurrent)
-  }
-
-  /** CDC fold WITH THE DELETE LANE — [[applyBatch]] generalized to a
-    * changefeed carrying an op column (I/U/D; I ≡ U, upsert semantics):
-    * the shape a Debezium/warehouse CDC stream actually delivers, and
-    * the one lane the reference's SCD2 proc never exercises (warehouses
-    * rarely hard-delete; CDC feeds do).
     *
-    *  - several changes for a key in one batch collapse to the latest
-    *    by (ts desc, op desc, value desc) — a total order; at one ts an
-    *    update outranks a delete ('U' > 'D'), a deterministic documented
-    *    policy rather than an engine accident;
-    *  - a winning DELETE expires the key's open row at its ts (soft
-    *    delete: history keeps every closed interval — the SCD2 reading
-    *    of deletion; GDPR hard erasure is ext_privacy_erasure's job,
-    *    not a dimension fold) and opens nothing. A delete for a key
-    *    with no open row, or not strictly newer than the open row's
-    *    effective_from, is dropped — the same late-data watermark as
-    *    updates, and what makes replaying a batch a no-op (after the
-    *    delete lands there is no current row to expire);
-    *  - a winning UPDATE follows applyBatch exactly (late drop, no-op
-    *    suppression, expire + open);
-    *  - a re-insert after a delete is just a newer update: it opens a
-    *    fresh current row; the deleted interval stays closed history.
+    * Shape: ONE pass over the snapshot, left-joined to the broadcast
+    * latest-change-per-key on its open rows; each row emits itself
+    * (closed when superseded) plus, on a value change, the new open row.
+    * Keys with no open row take their non-delete winner from an anti-join
+    * of the batch against the open keys. The output derives from the
+    * snapshot through that one branch only, so a checkpointed result
+    * does not inherit (and, fold after fold, compound) its input's plan
+    * constraints.
     */
   def applyCdc(dim: DataFrame, changes: DataFrame, keyCol: String,
       valueCol: String, tsCol: String, opCol: String): DataFrame = {
@@ -111,43 +78,39 @@ object Scd2Stream {
     val latest = changes
       .where(col(keyCol).isNotNull)
       .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    val cur = dim.where(col("is_current") === 1)
-    val hist = dim.where(col("is_current") === 0)
-    val j = latest.join(cur.select(col(keyCol), col(valueCol).as("__cur_v"),
-        col("effective_from").as("__cur_from"), lit(1).as("__has_cur")),
-      Seq(keyCol), "left")
-    val dels = j.where(col(opCol) === "D" && col("__has_cur") === 1
-        && col(tsCol) > col("__cur_from"))
-      .select(col(keyCol), col(tsCol))
-    val ups = j.where(col(opCol) =!= "D"
-        && (col("__has_cur").isNull || !(col("__cur_v") <=> col(valueCol)))
-        && (col("__cur_from").isNull || col(tsCol) > col("__cur_from")))
-      .select(col(keyCol), col(valueCol), col(tsCol))
-    val newCurrent = ups.select(col(keyCol), col(valueCol),
-      col(tsCol).as("effective_from"),
-      lit(null).cast("long").as("effective_to"),
-      lit(1).as("is_current"))
-    val closing = ups.select(col(keyCol), col(tsCol).as("__new_from"))
-      .unionByName(dels.select(col(keyCol), col(tsCol).as("__new_from")))
-    val expired = cur.join(closing, Seq(keyCol))
-      .select(col(keyCol), col(valueCol), col("effective_from"),
-        col("__new_from").as("effective_to"), lit(0).as("is_current"))
-    val untouched = cur.join(closing.select(keyCol), Seq(keyCol), "left_anti")
-    hist.unionByName(expired).unionByName(untouched).unionByName(newCurrent)
-  }
-
-  /** foreachBatch fold state over [[applyCdc]] — the delete-capable twin
-    * of [[DimState]], same snapshot/release discipline. */
-  final class CdcState(initial: DataFrame, keyCol: String,
-      valueCol: String, tsCol: String, opCol: String) {
-    @volatile var dim: DataFrame = initial.localCheckpoint()
-    def sink(batch: DataFrame, batchId: Long): Unit = {
-      val old = dim
-      dim = applyCdc(old, batch, keyCol, valueCol, tsCol, opCol)
-        .localCheckpoint()
-      releaseSnapshot(old)
+      .where(col("__rn") === 1)
+      .select(col(keyCol).as("__k"), col(valueCol).as("__v"),
+        col(tsCol).as("__ts"), col(opCol).as("__op"))
+    val isDel = col("__op") === "D"
+    val from = col("effective_from")
+    // strictly newer than the open row (an update also supersedes an open
+    // row without a stamp), and a delete or a null-safe value change
+    val closes = (isDel && col("__ts") > from) ||
+      (!isDel && !(col(valueCol) <=> col("__v")) &&
+        (col("__ts") > from || from.isNull))
+    // a dimension row in the snapshot's column order, some columns replaced
+    def row(over: (String, Column)*): Seq[Column] = {
+      val m = over.toMap
+      dim.columns.toSeq.map(c => m.getOrElse(c, col(c)).as(c))
     }
+    val self = row(
+      "effective_to" -> when(closes, col("__ts")).otherwise(col("effective_to")),
+      "is_current" -> when(closes, lit(0)).otherwise(col("is_current")))
+    val opened = row(keyCol -> col("__k"), valueCol -> col("__v"),
+      "effective_from" -> col("__ts"),
+      "effective_to" -> lit(null).cast("long"), "is_current" -> lit(1))
+    val folded = dim
+      .join(broadcast(latest),
+        col(keyCol) === col("__k") && col("is_current") === 1, "left")
+      .select(explode(
+        when(closes && !isDel, array(struct(self: _*), struct(opened: _*)))
+          .otherwise(array(struct(self: _*)))).as("__r"))
+      .select("__r.*")
+    val openKeys = dim.where(col("is_current") === 1).select(col(keyCol).as("__k"))
+    val firstOpen = latest.where(!isDel)
+      .join(openKeys, Seq("__k"), "left_anti")
+      .select(opened: _*)
+    folded.unionByName(firstOpen)
   }
 
   /** Release the block set behind a localCheckpoint'd snapshot. Dataset
@@ -164,96 +127,33 @@ object Scd2Stream {
       case _ => ()
     }
 
-  /** foreachBatch fold state: each batch replaces the snapshot with the
-    * folded one. localCheckpoint per batch keeps the snapshot's plan O(1)
-    * instead of embedding every prior batch's lineage (the same
-    * iterative-algorithm rule as connectedComponents); the superseded
-    * snapshot's blocks are released deterministically once the new one
-    * has materialized, bounding state to one snapshot (plus the one in
-    * flight).
-    */
-  final class DimState(initial: DataFrame, keyCol: String,
-      valueCol: String, tsCol: String) {
-    @volatile var dim: DataFrame = initial.localCheckpoint()
-    def sink(batch: DataFrame, batchId: Long): Unit = {
-      val old = dim
-      // eager checkpoint: the new snapshot is fully materialized before
-      // the old one's blocks are released
-      dim = applyBatch(old, batch, keyCol, valueCol, tsCol).localCheckpoint()
-      releaseSnapshot(old)
-    }
-  }
-
-  /** Keyed-merge fold state — the production backend. The snapshot is
-    * held as `numPartitions` independently-checkpointed slices, slice p
-    * owning the keys with `pmod(hash(key), numPartitions) == p`
-    * (Murmur3 via the `hash` expression, so batch rows and state rows
-    * route identically). Each batch:
+  /** foreachBatch fold state. The snapshot is held as `numPartitions`
+    * independently-checkpointed slices, slice p owning the keys with
+    * `pmod(hash(key), numPartitions) == p` (Murmur3 via the `hash`
+    * expression, so batch rows and state rows route identically). Each
+    * batch:
     *
-    *   1. derives the touched partition ids from the batch's keys (a
+    *   1. derives the touched slice ids from the batch's keys (a
     *      driver-side set of at most numPartitions ints — bounded
     *      metadata, not data);
-    *   2. folds `applyBatch` over ONLY those slices, each against its
-    *      key-slice of the batch (partitioning by key makes the fold
-    *      per-slice decomposable: every key's rows live in exactly one
-    *      slice);
+    *   2. folds [[applyCdc]] over ONLY those slices, each against its
+    *      key-slice of the batch. The fold is per-key throughout
+    *      (latest-per-key window, key-equi joins, key anti-join), and
+    *      every key's rows — dimension and changefeed alike — live in
+    *      exactly one slice, so folding slice by slice is the same
+    *      computation as folding whole frames;
     *   3. leaves untouched slices' checkpointed RDDs untouched — they
     *      are not referenced by any new plan, so nothing about them is
     *      recomputed, rewritten, or even scanned.
     *
-    * This is the keyed merge / partition-overwrite shape a lakehouse
-    * table format gives you, modeled on checkpointed DataFrames: batch
-    * cost is O(|batch| + |dim|/N x touchedPartitions) instead of
-    * O(|dim|). `partitionVersions` exposes per-slice rewrite counts so
-    * tests (and ops dashboards) can assert the untouched-slice
-    * guarantee. Reading `dim` unions the live slices lazily — no copy.
-    */
-  final class KeyedDimState(initial: DataFrame, keyCol: String,
-      valueCol: String, tsCol: String, numPartitions: Int = 16) {
-    require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
-    private def pidExpr = pmod(hash(col(keyCol)), lit(numPartitions))
-    private val parts: Array[DataFrame] = {
-      val keyed = initial.withColumn("__pid", pidExpr)
-      Array.tabulate(numPartitions) { p =>
-        keyed.where(col("__pid") === p).drop("__pid").localCheckpoint()
-      }
-    }
-    private val versions = Array.fill(numPartitions)(0L)
-
-    /** Per-slice rewrite counts since construction (slice p rewritten
-      * versions(p) times). Untouched-partition assertions key off this. */
-    def partitionVersions: Seq[Long] = versions.toSeq
-
-    def sink(batch: DataFrame, batchId: Long): Unit = {
-      val keyedBatch = batch.where(col(keyCol).isNotNull)
-        .withColumn("__pid", pidExpr)
-        .localCheckpoint() // one batch materialization, reused per slice
-      val touched = keyedBatch.select("__pid").distinct()
-        .collect().map(_.getInt(0)).sorted
-      touched.foreach { p =>
-        val old = parts(p)
-        parts(p) = applyBatch(old,
-          keyedBatch.where(col("__pid") === p).drop("__pid"),
-          keyCol, valueCol, tsCol).localCheckpoint()
-        versions(p) += 1
-        releaseSnapshot(old)
-      }
-      releaseSnapshot(keyedBatch)
-    }
-
-    /** The full dimension: lazy union of the slices. */
-    def dim: DataFrame = parts.reduce(_ unionByName _)
-  }
-
-  /** [[KeyedDimState]] with the DELETE lane — [[applyCdc]] folded over
-    * ONLY the touched slices. The slice decomposition carries over
-    * unchanged because applyCdc, like applyBatch, is per-key throughout
-    * (latest-per-key window, key-equi joins, key anti-join): every
-    * key's rows — dimension and changefeed alike — live in exactly one
-    * hash slice, so folding slice-by-slice is the same computation as
-    * folding whole frames. StreamingSpec asserts keyed-CDC ≡ the
-    * full-rewrite [[CdcState]] and pins the untouched-slice guarantee
-    * via the per-slice version counters.
+    * localCheckpoint per fold keeps each slice's plan O(1) instead of
+    * embedding every prior batch's lineage (the same iterative-algorithm
+    * rule as connectedComponents); it is eager, so a superseded slice's
+    * blocks are released only once its successor has materialized,
+    * bounding state to one snapshot plus the slice in flight.
+    * `partitionVersions` exposes per-slice rewrite counts so tests (and
+    * ops dashboards) can assert the untouched-slice guarantee. Reading
+    * `dim` unions the live slices lazily — no copy.
     */
   final class KeyedCdcState(initial: DataFrame, keyCol: String,
       valueCol: String, tsCol: String, opCol: String,
@@ -268,12 +168,14 @@ object Scd2Stream {
     }
     private val versions = Array.fill(numPartitions)(0L)
 
+    /** Per-slice rewrite counts since construction (slice p rewritten
+      * versions(p) times). Untouched-slice assertions key off this. */
     def partitionVersions: Seq[Long] = versions.toSeq
 
     def sink(batch: DataFrame, batchId: Long): Unit = {
       val keyedBatch = batch.where(col(keyCol).isNotNull)
         .withColumn("__pid", pidExpr)
-        .localCheckpoint()
+        .localCheckpoint() // one batch materialization, reused per slice
       val touched = keyedBatch.select("__pid").distinct()
         .collect().map(_.getInt(0)).sorted
       touched.foreach { p =>

@@ -1783,6 +1783,42 @@ class GraftIndexSourceSpec extends SparkSpec {
     }
     assert(spark.read.format("graft-index").load(legacy)
       .where("d > DATE'2020-02-01'").count() == 68)
+    // footer MIN/MAX over LEGACY-calendar files: the stats hold Julian
+    // day counts and are rebased per file, both when they come from the
+    // footer and when a stats-less file is decoded for them
+    for (stats <- Seq("true", "false")) {
+      val ancient = java.nio.file.Files.createTempDirectory("graft_dancient")
+        .toString + "/t"
+      spark.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY")
+      try {
+        spark.range(0, 10)
+          .selectExpr("date_add(DATE'1000-01-01', CAST(id AS INT)) AS d")
+          .repartition(1).write
+          .option("parquet.column.statistics.enabled", stats).parquet(ancient)
+      } finally spark.conf.unset("spark.sql.parquet.datetimeRebaseModeInWrite")
+      val file = new java.io.File(ancient).listFiles()
+        .map(_.getPath).filter(_.endsWith(".parquet")).head
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file), new org.apache.hadoop.conf.Configuration()))
+      try assert(r.getFooter.getBlocks.get(0).getColumns.get(0)
+        .getStatistics.isEmpty == (stats == "false"), s"statistics.enabled=$stats")
+      finally r.close()
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val got = spark.read.format("graft-index").load(ancient)
+          .agg(min(col("d")).as("mn"), max(col("d")).as("mx"))
+        val scan = got.queryExecution.executedPlan
+          .collectFirst { case b: BatchScanExec => b }.get
+        assert(scan.scan.description().contains("pushedAggregation=["),
+          scan.scan.description())
+        val want = Seq(org.apache.spark.sql.Row(
+          java.sql.Date.valueOf("1000-01-01"), java.sql.Date.valueOf("1000-01-10")))
+        assert(got.collect().toSeq == want, s"statistics.enabled=$stats")
+        assert(spark.read.parquet(ancient)
+          .agg(min(col("d")), max(col("d"))).collect().toSeq == want)
+      } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 
   test("DATE partition directories (round-12): dt=YYYY-MM-DD infers DateType, date predicates prune directories") {

@@ -294,10 +294,13 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val empty = Seq.empty[(Long, String, Long, Option[Long], Int)]
       .toDF("k", "v", "effective_from", "effective_to", "is_current")
-    val state = new graft.streaming.Scd2Stream.DimState(empty, "k", "v", "ts")
+    // numPartitions = 1: the full-rewrite fold; an update-only feed
+    // carries op = 'U'
+    val state = new graft.streaming.Scd2Stream.KeyedCdcState(
+      empty, "k", "v", "ts", "op", numPartitions = 1)
     val input = MemoryStream[(Long, String, Long)]
-    val q = input.toDF().toDF("k", "v", "ts").writeStream
-      .foreachBatch(state.sink _).outputMode("append").start()
+    val q = input.toDF().toDF("k", "v", "ts").withColumn("op", lit("U"))
+      .writeStream.foreachBatch(state.sink _).outputMode("append").start()
     try {
       input.addData((1L, "a", 10L), (2L, "b", 10L))
       q.processAllAvailable()
@@ -433,10 +436,11 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val empty = Seq.empty[(Long, String, Long, Option[Long], Int)]
       .toDF("k", "v", "effective_from", "effective_to", "is_current")
-    val state = new graft.streaming.Scd2Stream.KeyedDimState(empty, "k", "v", "ts", 4)
+    val state = new graft.streaming.Scd2Stream.KeyedCdcState(
+      empty, "k", "v", "ts", "op", numPartitions = 4)
     val input = MemoryStream[(Long, String, Long)]
-    val q = input.toDF().toDF("k", "v", "ts").writeStream
-      .foreachBatch(state.sink _).outputMode("append").start()
+    val q = input.toDF().toDF("k", "v", "ts").withColumn("op", lit("U"))
+      .writeStream.foreachBatch(state.sink _).outputMode("append").start()
     try {
       input.addData((1L, "a", 10L), (2L, "b", 10L))
       q.processAllAvailable()
@@ -454,19 +458,20 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("SCD2 KeyedDimState: batches rewrite only touched partitions, output ≡ full-rewrite backend") {
+  test("SCD2 KeyedCdcState on updates: batches rewrite only touched slices, 4 slices ≡ 1 slice") {
     import spark.implicits._
     import graft.streaming.Scd2Stream
     val empty = Seq.empty[(Long, String, Long, Option[Long], Int)]
       .toDF("k", "v", "effective_from", "effective_to", "is_current")
-    val keyed = new Scd2Stream.KeyedDimState(empty, "k", "v", "ts", numPartitions = 4)
-    val full = new Scd2Stream.DimState(empty, "k", "v", "ts")
-    val b1 = (1L to 8L).map(k => (k, s"v$k", 10L)).toDF("k", "v", "ts")
+    val keyed = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op", numPartitions = 4)
+    val full = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op", numPartitions = 1)
+    def ups(rows: (Long, String, Long)*) =
+      rows.toDF("k", "v", "ts").withColumn("op", lit("U"))
+    val b1 = ups((1L to 8L).map(k => (k, s"v$k", 10L)): _*)
     // batch 2 touches ONE key: only that key's partition may be rewritten
-    val b2 = Seq((1L, "v1b", 20L)).toDF("k", "v", "ts")
+    val b2 = ups((1L, "v1b", 20L))
     // batch 3: change + new key + late row, exercising the fold per-slice
-    val b3 = Seq((2L, "v2b", 30L), (9L, "v9", 30L), (1L, "stale", 5L))
-      .toDF("k", "v", "ts")
+    val b3 = ups((2L, "v2b", 30L), (9L, "v9", 30L), (1L, "stale", 5L))
     keyed.sink(b1, 0L); full.sink(b1, 0L)
     val afterSeed = keyed.partitionVersions
     keyed.sink(b2, 1L); full.sink(b2, 1L)
@@ -482,19 +487,20 @@ class StreamingSpec extends SparkSpec {
     assert(rewrittenByB3 >= 1 && rewrittenByB3 <= 3)
     val got = keyed.dim.as[(Long, String, Long, Option[Long], Int)].collect().toSet
     val want = full.dim.as[(Long, String, Long, Option[Long], Int)].collect().toSet
-    assert(got == want, "keyed-merge backend diverged from full-rewrite backend")
+    assert(got == want, "4-slice backend diverged from the 1-slice full rewrite")
     assert(got.exists { case (k, v, _, _, cur) => k == 1L && v == "v1b" && cur == 1 })
     assert(got.exists { case (k, _, _, to, cur) => k == 1L && cur == 0 && to.contains(20L) })
   }
 
-  test("KeyedCdcState: sliced CDC folds with deletes ≡ full-rewrite CdcState, untouched slices pinned") {
+  test("KeyedCdcState: sliced CDC folds with deletes, 4 slices ≡ 1 slice, untouched slices pinned") {
     import spark.implicits._
     import graft.streaming.Scd2Stream
     val empty = Seq.empty[(Long, Option[String], Long, Option[Long], Int)]
       .toDF("k", "v", "effective_from", "effective_to", "is_current")
     val keyed = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op",
       numPartitions = 4)
-    val full = new Scd2Stream.CdcState(empty, "k", "v", "ts", "op")
+    val full = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op",
+      numPartitions = 1)
     val b1 = (1L to 8L).map(k => (k, s"v$k", 10L, "I")).toDF("k", "v", "ts", "op")
     // a single-key DELETE batch must rewrite exactly one slice
     val b2 = Seq((3L, "x", 20L, "D")).toDF("k", "v", "ts", "op")
@@ -513,7 +519,7 @@ class StreamingSpec extends SparkSpec {
       .collect().toSet
     val want = full.dim.as[(Long, Option[String], Long, Option[Long], Int)]
       .collect().toSet
-    assert(got == want, "sliced CDC backend diverged from full-rewrite CDC")
+    assert(got == want, "4-slice CDC backend diverged from the 1-slice full rewrite")
     // deleted-then-reinserted key 3: closed interval + fresh current
     assert(got.exists { case (k, _, _, to, cur) => k == 3L && cur == 0 && to.contains(20L) })
     assert(got.exists { case (k, v, from, _, cur) =>
@@ -523,30 +529,32 @@ class StreamingSpec extends SparkSpec {
     assert(got.exists { case (k, _, _, to, cur) => k == 5L && cur == 0 && to.contains(30L) })
   }
 
-  test("SCD2 applyBatch: null values transition null-safely, null keys drop") {
+  test("SCD2 applyCdc: null values transition null-safely, null keys drop") {
     import spark.implicits._
     import graft.streaming.Scd2Stream
     val dim = Seq((1L, Option("a"), 10L, Option.empty[Long], 1))
       .toDF("k", "v", "effective_from", "effective_to", "is_current")
+    def ups(rows: (Option[Long], Option[String], Long)*) =
+      rows.toDF("k", "v", "ts").withColumn("op", lit("U"))
     // transition TO null is a real change; null-key update is dropped
-    val up1 = Seq((Option(1L), Option.empty[String], 20L),
-      (Option.empty[Long], Option("x"), 20L)).toDF("k", "v", "ts")
-    val d1 = Scd2Stream.applyBatch(dim, up1, "k", "v", "ts")
+    val up1 = ups((Option(1L), Option.empty[String], 20L),
+      (Option.empty[Long], Option("x"), 20L))
+    val d1 = Scd2Stream.applyCdc(dim, up1, "k", "v", "ts", "op")
     assert(d1.count() == 2)
     assert(d1.where(col("is_current") === 1 && col("v").isNull).count() == 1)
     // null -> null is a NO-OP (null-safe equality), not version churn
-    val up2 = Seq((Option(1L), Option.empty[String], 30L)).toDF("k", "v", "ts")
-    val d2 = Scd2Stream.applyBatch(d1, up2, "k", "v", "ts")
+    val up2 = ups((Option(1L), Option.empty[String], 30L))
+    val d2 = Scd2Stream.applyCdc(d1, up2, "k", "v", "ts", "op")
     assert(d2.count() == 2)
     // null -> "b" is again a real change
-    val up3 = Seq((Option(1L), Option("b"), 40L)).toDF("k", "v", "ts")
-    val d3 = Scd2Stream.applyBatch(d2, up3, "k", "v", "ts")
+    val up3 = ups((Option(1L), Option("b"), 40L))
+    val d3 = Scd2Stream.applyCdc(d2, up3, "k", "v", "ts", "op")
     assert(d3.count() == 3)
     assert(d3.where(col("is_current") === 1).as[(Long, String, Long, Option[Long], Int)]
       .collect().toSeq == Seq((1L, "b", 40L, None, 1)))
   }
 
-  test("SCD2 applyCdc: delete lane expires without opening; re-insert; replay no-op; U-only ≡ applyBatch") {
+  test("SCD2 applyCdc: delete lane expires without opening; re-insert; replay no-op") {
     import spark.implicits._
     import graft.streaming.Scd2Stream
     val dim = Seq(
@@ -557,9 +565,9 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq((1L, Option.empty[String], 20L, "D"),
       (2L, Option("b2"), 20L, "U"),
       (3L, Option("c"), 20L, "I")).toDF("k", "v", "ts", "op")
-    // localCheckpoint per fold: applyCdc references its input dim four
-    // times (cur/hist/expired/untouched), so an unchecked 5-fold chain
-    // grows the plan 4^n — the CdcState per-batch checkpoint discipline
+    // localCheckpoint per fold: applyCdc references its input dim twice
+    // (the pass and the open-key anti-join), so an unchecked fold chain
+    // grows the plan 2^n — KeyedCdcState's per-batch checkpoint discipline
     val d1 = Scd2Stream.applyCdc(dim, b1, "k", "v", "ts", "op").localCheckpoint()
     // key 1: expired at 20, NO current row; key 2: expired + new; key 3: new
     val cur1 = d1.where(col("is_current") === 1)
@@ -593,14 +601,6 @@ class StreamingSpec extends SparkSpec {
     val d4 = Scd2Stream.applyCdc(d3, b4, "k", "v", "ts", "op").localCheckpoint()
     assert(d4.where(col("k") === 3 && col("is_current") === 1)
       .select("v").as[String].collect().toSeq == Seq("c3"))
-    // a U-only feed degenerates to applyBatch exactly
-    val ups = Seq((2L, Option("b3"), 60L, "U"), (4L, Option("d"), 60L, "U"))
-      .toDF("k", "v", "ts", "op")
-    val viaCdc = Scd2Stream.applyCdc(d4, ups, "k", "v", "ts", "op")
-    val viaBatch = Scd2Stream.applyBatch(d4, ups.drop("op"), "k", "v", "ts")
-    assert(viaCdc.exceptAll(viaBatch).count() == 0 &&
-      viaBatch.exceptAll(viaCdc).count() == 0,
-      "U-only CDC must equal applyBatch")
   }
 
   test("streaming CDC fold: live foreachBatch with deletes ≡ sequential applyCdc") {
@@ -610,7 +610,8 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val empty = Seq.empty[(Long, Option[String], Long, Option[Long], Int)]
       .toDF("k", "v", "effective_from", "effective_to", "is_current")
-    val state = new Scd2Stream.CdcState(empty, "k", "v", "ts", "op")
+    val state = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op",
+      numPartitions = 1)
     val input = MemoryStream[(Long, String, Long, String)]
     val q = input.toDF().toDF("k", "v", "ts", "op").writeStream
       .foreachBatch(state.sink _).outputMode("append").start()
@@ -629,6 +630,57 @@ class StreamingSpec extends SparkSpec {
         "delete must close the interval without a ghost current row")
       assert(state.dim.count() == 4)
     } finally q.stop()
+  }
+
+  test("KeyedCdcState: 12 mixed CDC folds keep plan constraints flat; 4 slices ≡ 1 slice") {
+    import spark.implicits._
+    import graft.streaming.Scd2Stream
+    val empty = Seq.empty[(Long, Option[String], Long, Option[Long], Int)]
+      .toDF("k", "v", "effective_from", "effective_to", "is_current")
+    val rnd = new scala.util.Random(7)
+    // each batch: I/U/D over 60 keys (some values null), a hot key
+    // changing many times, late rows older than every earlier batch, and
+    // null keys
+    val batches = (0 until 12).map { b =>
+      val base = 1000L * (b + 1)
+      def op() = Seq("I", "U", "U", "D")(rnd.nextInt(4))
+      def value() = if (rnd.nextInt(10) == 0) None else Some(s"v${rnd.nextInt(4)}")
+      val mixed = Seq.fill(40)((Option(rnd.nextInt(60).toLong), value(),
+        base + rnd.nextInt(500), op()))
+      val hot = (0 until 8).map(i => (Option(0L), value(), base + i, op()))
+      val late = Seq.fill(5)((Option(rnd.nextInt(60).toLong), value(),
+        rnd.nextInt(500).toLong, op()))
+      val nullKeys = Seq.fill(3)((Option.empty[Long], value(), base, "U"))
+      (mixed ++ hot ++ late ++ nullKeys).toDF("k", "v", "ts", "op")
+    }
+    // summed constraint text, expression ids stripped: ids grow over the
+    // session, and their digit count is not plan size
+    def constraintChars(s: Scd2Stream.KeyedCdcState): Int =
+      s.dim.queryExecution.optimizedPlan.constraints.toSeq
+        .map(_.toString.replaceAll("#\\d+", "").length).sum
+    val states = Seq(1, 4).map { n =>
+      val s = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op",
+        numPartitions = n)
+      var afterTwo = 0
+      batches.zipWithIndex.foreach { case (b, i) =>
+        s.sink(b, i.toLong)
+        if (i == 1) afterTwo = constraintChars(s)
+      }
+      // the snapshot is checkpointed per fold: a fold must not carry its
+      // input's constraints into the next snapshot (they compound)
+      val afterAll = constraintChars(s)
+      info(s"$n slice(s): constraint chars $afterTwo after 2 folds, $afterAll after 12")
+      assert(afterAll <= afterTwo,
+        s"$n slice(s): constraints grew from $afterTwo to $afterAll chars")
+      s
+    }
+    def rows(s: Scd2Stream.KeyedCdcState) =
+      s.dim.as[(Long, Option[String], Long, Option[Long], Int)].collect().toSet
+    val (one, four) = (rows(states(0)), rows(states(1)))
+    assert(one == four, s"4 slices diverged from 1: ${one.diff(four)} vs ${four.diff(one)}")
+    // non-vacuous: closed history, open rows, at most one open row per key
+    assert(one.exists(_._5 == 0) && one.exists(_._5 == 1))
+    assert(one.filter(_._5 == 1).groupBy(_._1).forall(_._2.size == 1))
   }
 
   test("flatMapGroupsWithState sessions: timeout emits completed sessions") {
