@@ -1037,7 +1037,8 @@ object Similarity {
     * directory, so the full-precision corpus is never re-scanned at
     * query time. [[probeIvfIndex]] is the read side; SimilaritySpec
     * asserts probe ≡ the in-plan [[ivfTopK]] and that the probe's scan
-    * carries a dynamic-partition-pruning filter on `cell`.
+    * carries the probed cells' `cell IN (...)` partition filter and reads
+    * only their rows.
     */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       centroidEvery: Int, path: String): Unit = {
@@ -1065,8 +1066,8 @@ object Similarity {
     * admission, so serving geometry stays stable and the append is a
     * pure partitioned parquet append touching only the cells the batch
     * lands in — O(batch), not O(index). Probing after an append finds
-    * old and new vectors through exactly the same dynamic-partition-
-    * pruned scan ([[probeIvfIndex]]). Retraining (re-picking centroids
+    * old and new vectors through exactly the same cell-pruned scan
+    * ([[probeIvfIndex]]). Retraining (re-picking centroids
     * over the grown corpus) is the offline rebuild, the same split as
     * the delete lane's no-retrain policy.
     */
@@ -1074,7 +1075,7 @@ object Similarity {
       path: String): Unit = {
     val s = newVecs.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val cents = s.read.parquet(s"$path/cents")
+    val cents = s.read.parquet(s"$path/cents").coalesce(1) // one-job centroid array
     val vecD = transform(col(vecCol), x => x.cast("double"))
     newVecs.select(col(idCol).as("vec_b"), vecD.as("vb"),
         VectorOps.normSq(vecD).as("nb"))
@@ -1134,10 +1135,11 @@ object Similarity {
 
   /** PROBE the persisted IVF index ([[writeIvfIndex]]): queries assign
     * to their cell via the broadcast centroid table (the shuffle-free
-    * argmax fold), then join the partitioned corpus on the PARTITION
-    * column — the broadcast join plants a dynamic-partition-pruning
-    * subquery on the scan, so only the probed cells' directories are
-    * read. Same top-k contract as [[ivfTopK]].
+    * argmax fold) in one eager action, then join the partitioned corpus
+    * on the PARTITION column. The probed cell ids become a static
+    * `cell IN (...)` partition filter, so only their directories are
+    * read — pruned at planning time for any query frame, in-memory
+    * batches included. Same top-k contract as [[ivfTopK]].
     */
   def probeIvfIndex(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
@@ -1146,9 +1148,9 @@ object Similarity {
 
   /** [[probeIvfIndex]] through the `graft-index` DataSourceV2 serving
     * table (sources/GraftIndexSource.scala) — identical results
-    * (spec-pinned); the per-query cell pruning arrives as an ordinary V2
-    * runtime filter instead of parquet DPP, and the scan's reported
-    * stats cover only the probed cells.
+    * (spec-pinned); the connector claims the probed cells' `In(cell, …)`
+    * as a pushed partition filter, lists only their directories, and
+    * reports stats covering only them.
     */
   def probeIvfIndexV2(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
@@ -1185,28 +1187,45 @@ object Similarity {
 
   /** `reader` maps a sub-table NAME ("cents" / "cells") to its frame —
     * each route closes over its own prefix (path or catalog identifier).
+    *
+    * The query batch is assigned to cells in ONE action that collects
+    * its Q assigned rows — the rows the broadcast collects anyway — and
+    * the probed cell ids become a static `cell IN (...)` predicate on
+    * the cells scan, so every route prunes directories at PLANNING time
+    * whatever the query frame is. Dynamic
+    * partition pruning cannot do this: Spark plants its subquery only
+    * when the query side carries a likely-selective Filter, and an
+    * in-memory serving batch carries none (the scan then read the whole
+    * index). Results are unchanged by construction: a row outside every
+    * probed cell never joins.
     */
   private def probeIvfIndexVia(queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       reader: String => DataFrame): DataFrame = {
     val s = queries.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val cents = reader("cents")
+    // one partition: the centroid array is then one job, not a
+    // shuffle-map job plus a result job
+    val cents = reader("cents").coalesce(1)
     val corp = reader("cells")
     val vecD = transform(col(vecCol), x => x.cast("double"))
     // the probe's cell key is cast to the STORED side's partition type
     // (always safe: probe cells come from the same stored centroid ids
-    // that named the directories) — a type mismatch would put a Cast on
-    // the SCAN side of the join, which the V2 runtime-filter translation
-    // cannot push, silently losing the dynamic cell pruning
-    val q = queries.select(col(idCol).as("q_id"), vecD.as("va"),
+    // that named the directories), so the `cell IN (...)` literals carry
+    // the stored type — a mismatch would put a Cast on the scan's column,
+    // which the V2 filter translation cannot push
+    val assigned = queries.select(col(idCol).as("q_id"), vecD.as("va"),
         VectorOps.normSq(vecD).as("na"))
       .crossJoin(broadcast(centArray(cents)))
       .withColumn("cell",
         argmaxCell(col("va"), col("na")).cast(corp.schema("cell").dataType))
       .drop("__cents")
+    val rows = assigned.collect()
+    val q = s.createDataFrame(java.util.Arrays.asList(rows: _*), assigned.schema)
+    val probedCells = rows.map(_.getAs[Any]("cell")).filter(_ != null).distinct
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    corp.join(broadcast(q), Seq("cell"))
+    corp.where(col("cell").isin(probedCells: _*))
+      .join(broadcast(q), Seq("cell"))
       .where(col("q_id") =!= col("vec_b"))
       .withColumn("cosine",
         VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))

@@ -2750,10 +2750,11 @@ object ExtQueries extends QueryGroup {
   }
 
   /** The SAME persisted-index probe served through the `graft-index`
-    * DataSourceV2 table (sources/GraftIndexSource.scala): the per-query
-    * cell pruning arrives as a V2 runtime filter (the production DPP
-    * face) and the scan's stats cover only the probed cells. Identical
-    * results by contract — same oracle as the in-plan IVF.
+    * DataSourceV2 table (sources/GraftIndexSource.scala): the probed
+    * cells arrive as a claimed `In(cell, …)` partition filter, so only
+    * their directories are listed and read, and the scan's stats cover
+    * only them. Identical results by contract — same oracle as the
+    * in-plan IVF.
     */
   private def annIvfV2(s: SparkSession, d: String): DataFrame = {
     val path = scratchPath(s, "ivf_v2idx", d)
@@ -9627,8 +9628,8 @@ object ExtQueries extends QueryGroup {
     GQuery("ext_ann_hnsw_append", annHnswAppend, Some(annHnswAppendSql), "graph-index admission: stored-centroid assignment + leaderboard edge merge ≡ rebuild, surgical partition rewrite"),
     GQuery("ext_ann_hnsw_delete", annHnswDelete, Some(annHnswDeleteSql), "tombstone-masked graph probe: erasure on the graph serving structure, never returned nor scored"),
     GQuery("ext_ann_hnsw_compact", annHnswCompact, Some(annHnswDeleteSql), "tombstone compaction baked into storage: touched pcell partitions rewrite, side tables shed masked rows, probe runs UNMASKED — same oracle as the masked probe"),
-    GQuery("ext_ann_ivf_persist", annIvfPersist, Some(annIvfSql), "persisted cell-partitioned IVF index probe (DPP-pruned directories), ≡ in-plan IVF"),
-    GQuery("ext_ann_ivf_v2", annIvfV2, Some(annIvfSql), "persisted IVF probe through the graft-index DataSourceV2 table (runtime-filtered cells, post-pruning stats)"),
+    GQuery("ext_ann_ivf_persist", annIvfPersist, Some(annIvfSql), "persisted cell-partitioned IVF index probe (probed cells pruned at planning time), ≡ in-plan IVF"),
+    GQuery("ext_ann_ivf_v2", annIvfV2, Some(annIvfSql), "persisted IVF probe through the graft-index DataSourceV2 table (claimed cell partition filter, post-pruning stats)"),
     GQuery("ext_ann_ivf_v2_filtered", annIvfV2Filtered, Some(annIvfV2FilteredSql), "filtered serving slice through the V2 table: pushed data filters (one on a non-projected scratch column) decoded on the vectorized lane, per-cell integer aggregates"),
     GQuery("ext_events_index_ts", eventsIndexTs, Some(eventsIndexTsSql), "event-time serving table: TIMESTAMP column decoded through the graft-index connector under a pushed filter, epoch-micros aggregates per bucket"),
     GQuery("ext_events_index_or", eventsIndexOr, Some(eventsIndexOrSql), "two-level Hive layout through the connector (depth-ordered (bucket, event_type) chain) under a claimed OR-of-ranges on value; exact-cents aggregates per chain"),

@@ -32,10 +32,12 @@ import org.apache.spark.util.SerializableConfiguration
   *
   *  - **Partition-filter pushdown as a first-class contract**: static
   *    `cell = k` / `cell IN (...)` predicates prune directories at
-  *    PLANNING time and are claimed exactly (never re-evaluated) — and
-  *    [[SupportsRuntimeFiltering]] accepts the dynamic-partition-pruning
-  *    subquery a broadcast probe join plants, so the per-query cell
-  *    pruning that probeIvfIndex hand-rolled via DPP-on-parquet is an
+  *    PLANNING time — the walk never lists a directory they exclude —
+  *    and are claimed exactly (never re-evaluated). The IVF probe reads
+  *    only its queries' cells this way: it hands the probed cell ids to
+  *    the scan as `cell IN (...)`. [[SupportsRuntimeFiltering]] also
+  *    accepts the dynamic-partition-pruning subquery a broadcast join
+  *    plants when its other side carries a selective filter, as an
   *    ordinary V2 runtime filter.
   *  - **Data filters as pruning hints**: predicates on primitive data
   *    columns are NOT claimed — Spark keeps its Filter above the scan —
@@ -347,15 +349,22 @@ object GraftIndexTable {
     SparkSession.active.sparkContext.hadoopConfiguration
 
   /** All data files with their partition values: (file path, size,
-    * partition value map).
+    * partition value map). `admitDir` sees the raw partition values
+    * bound down to each `name=value` directory; a directory it rejects
+    * is never listed — on an object store with thousands of cells the
+    * listing of excluded partitions would cost more than the probe.
     */
-  def listFiles(path: String): Seq[(String, Long, Map[String, String])] = {
+  def listFiles(path: String,
+      admitDir: Map[String, String] => Boolean = _ => true)
+      : Seq[(String, Long, Map[String, String])] = {
     val root = new Path(path)
     val fs = root.getFileSystem(activeHadoopConf())
     def walk(p: Path, parts: Map[String, String]): Seq[(String, Long, Map[String, String])] =
       fs.listStatus(p).toSeq.flatMap {
         case d if d.isDirectory => d.getPath.getName match {
-          case PartDir(name, value) => walk(d.getPath, parts + (name -> value))
+          case PartDir(name, value) =>
+            val bound = parts + (name -> value)
+            if (admitDir(bound)) walk(d.getPath, bound) else Nil
           case _ => Nil // _temporary etc.
         }
         case f if f.getPath.getName.endsWith(".parquet") =>
@@ -729,24 +738,37 @@ class GraftIndexScan(path: String, tableSchema: StructType,
     }
   }
 
+  private def typed(raw: Map[String, String]): Map[String, Any] =
+    raw.map { case (k, v) => k -> parse(v, partType(k)) }
+
+  /** Whether the pushed partition filters admit a directory, judged by
+    * the filters whose columns are all bound at its depth (a filter
+    * over a deeper column can only be judged further down). Every data
+    * file sits under the full column chain, so each admitted file has
+    * passed every pushed filter.
+    */
+  private def admitsDir(raw: Map[String, String]): Boolean = {
+    val parts = typed(raw)
+    pushedPart.forall(f => !f.references.forall(parts.contains) || eval(f, parts))
+  }
+
   /** ONE directory walk for the life of the scan: the optimizer asks
     * for statistics repeatedly during join planning and a multi-job
     * query (localCheckpoint rounds) re-plans input partitions per
     * materialization — re-walking a many-hundred-directory index each
     * time dominated the probe's driver time (measured ~40% of the whole
     * graph probe before caching). Spark's own InMemoryFileIndex makes
-    * the same listing-snapshot-per-scan assumption. Runtime filters
-    * arrive AFTER the walk and only re-filter the cached listing.
+    * the same listing-snapshot-per-scan assumption. The walk descends
+    * only into directories the pushed partition filters admit; runtime
+    * filters arrive AFTER it and only re-filter the cached listing.
     */
   private lazy val listedFiles: Seq[(String, Long, Map[String, Any])] =
-    GraftIndexTable.listFiles(path).map { case (f, len, raw) =>
-      (f, len, raw.map { case (k, v) => k -> parse(v, partType(k)) })
+    GraftIndexTable.listFiles(path, admitsDir).map { case (f, len, raw) =>
+      (f, len, typed(raw))
     }
 
-  private def selectedFiles: Seq[(String, Long, Map[String, Any])] = {
-    val filters = pushedPart ++ runtime
-    listedFiles.filter { case (_, _, parts) => filters.forall(eval(_, parts)) }
-  }
+  private def selectedFiles: Seq[(String, Long, Map[String, Any])] =
+    listedFiles.filter { case (_, _, parts) => runtime.forall(eval(_, parts)) }
 
   // ---- runtime filtering (the V2 form of dynamic partition pruning) --
   // only partition columns surviving column pruning are advertised:
@@ -892,12 +914,8 @@ class GraftIndexScan(path: String, tableSchema: StructType,
       * order and log-entry contents stable.
       */
     def admitted(): Seq[(String, Long)] = {
-      val filters = pushedPart // partition filters gate admission
-      GraftIndexTable.listFiles(path)
-        .map { case (f, len, raw) =>
-          (f, len, raw.map { case (k, v) => k -> parse(v, partType(k)) })
-        }
-        .filter { case (_, _, parts) => filters.forall(eval(_, parts)) }
+      // partition filters gate admission: the walk skips what they exclude
+      GraftIndexTable.listFiles(path, admitsDir)
         .map(t => (t._1, t._2)).sortBy(_._1)
     }
     /** Partition values re-derived from the file PATH (its name=value

@@ -166,6 +166,11 @@ object Scd2Stream {
         keyed.where(col("__pid") === p).drop("__pid").localCheckpoint()
       }
     }
+    // each fold's output is (snapshot ∪ first opens): coalescing it back
+    // to the slice's initial width (no shuffle) keeps a long-running
+    // stream from adding one partition per fold (an empty initial slice
+    // has no partitions; its folds keep one)
+    private val widths = parts.map(p => math.max(1, p.rdd.getNumPartitions))
     private val versions = Array.fill(numPartitions)(0L)
 
     /** Per-slice rewrite counts since construction (slice p rewritten
@@ -182,7 +187,7 @@ object Scd2Stream {
         val old = parts(p)
         parts(p) = applyCdc(old,
           keyedBatch.where(col("__pid") === p).drop("__pid"),
-          keyCol, valueCol, tsCol, opCol).localCheckpoint()
+          keyCol, valueCol, tsCol, opCol).coalesce(widths(p)).localCheckpoint()
         versions(p) += 1
         releaseSnapshot(old)
       }

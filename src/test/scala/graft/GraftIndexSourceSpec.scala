@@ -1077,6 +1077,42 @@ class GraftIndexSourceSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("listing skips excluded partition directories: only admitted name=value dirs are listed") {
+    val local = java.nio.file.Files.createTempDirectory("graft_listing").toString + "/t"
+    spark.range(240).select(
+      (col("id") % 3).as("a"), (col("id") % 4).as("b"), col("id").as("v"))
+      .write.partitionBy("a", "b").parquet(local)
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftcount.impl", classOf[ListCountingFileSystem].getName)
+    try {
+      val dir = s"graftcount://$local"
+      val raw = spark.read.parquet(local)
+      val t = v2(dir) // schema inference walks the whole layout, once
+      // directories below the root listed while planning and running a
+      // filtered read; its rows must still match spark.read.parquet
+      def listedFor(cond: org.apache.spark.sql.Column): Set[String] = {
+        import scala.jdk.CollectionConverters._
+        ListCountingFileSystem.listed.clear()
+        val got = t.where(cond).select(raw.columns.map(col): _*).collect().toSet
+        assert(got == raw.where(cond).collect().toSet, s"rows diverge under $cond")
+        ListCountingFileSystem.listed.asScala.toSet
+          .filter(_.startsWith(local + "/")).map(_.stripPrefix(local + "/"))
+      }
+      // a filter on the first level never opens an excluded a= directory
+      val top = listedFor(col("a") === 1)
+      assert(top.nonEmpty && top.forall(_.startsWith("a=1")), s"listed $top")
+      // a second-level filter cannot judge a= directories (b is unbound
+      // there): every a= is listed, but only its b=2 child
+      val deep = listedFor(col("b") === 2)
+      assert(deep.count(!_.contains("/")) == 3, s"listed $deep")
+      assert(deep.filter(_.contains("/")) == Set("a=0/b=2", "a=1/b=2", "a=2/b=2"),
+        s"listed $deep")
+      // both levels bound: only the admitted leaves under the admitted a=
+      assert(listedFor(col("a") === 2 && col("b").isin(1, 3)) ==
+        Set("a=2", "a=2/b=1", "a=2/b=3"))
+    } finally conf.unset("fs.graftcount.impl")
+  }
+
   test("streaming by NAME: readStream.table over the catalog face drains the admissions") {
     val root = java.nio.file.Files.createTempDirectory("graft_snam").toString
     Similarity.writeIvfIndex(Tables.embeddings(spark, sf0001),
@@ -2259,4 +2295,20 @@ class GraftIndexSourceSpec extends SparkSpec {
     // count(*) still rides the zero-decode footer counter
     assert(nested.count() == 500)
   }
+}
+
+/** The local filesystem under the `graftcount` scheme, recording every
+  * path it lists — lets a spec see which partition directories a scan
+  * walks. Register with `fs.graftcount.impl`.
+  */
+class ListCountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftcount:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListCountingFileSystem.listed.add(f.toUri.getPath.stripSuffix("/"))
+    super.listStatus(f)
+  }
+}
+
+object ListCountingFileSystem {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -3,6 +3,11 @@ package graft
 import graft.operators.{Dedup, Similarity}
 import graft.operators.TextAnalysis
 import graft.operators.Multimodal
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
 import org.apache.spark.sql.functions._
 
 /** ANN, text-analysis, and multimodal-plumbing unit tests. */
@@ -497,7 +502,40 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("persisted IVF index: probe ≡ in-plan ivfTopK; scan is DPP-pruned on cell") {
+  /** Every node of an executed plan, through AQE's final plan, its query
+    * stages and subqueries.
+    */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case o => o +: (o.children ++ o.subqueries).flatMap(planNodes)
+  }
+
+  /** The probe's scans of the index's cell table. */
+  private def cellScans(probe: DataFrame): Seq[SparkPlan] =
+    planNodes(probe.queryExecution.executedPlan).collect {
+      case s @ (_: FileSourceScanExec | _: DataSourceV2ScanExecBase)
+          if s.output.exists(_.name == "vec_b") => s
+    }
+
+  /** Cell ids of the static `cell IN (...)` partition filter on a cells
+    * scan: the parquet scan's partition filters or the graft-index
+    * scan's pushed partition filters.
+    */
+  private def prunedCells(scan: SparkPlan): Set[Long] = scan match {
+    case f: FileSourceScanExec =>
+      f.partitionFilters.flatMap(_.collect {
+        case In(a: AttributeReference, list) if a.name == "cell" =>
+          list.map(_.eval().toString.toLong)
+        case InSet(a: AttributeReference, set) if a.name == "cell" =>
+          set.map(_.toString.toLong)
+      }.flatten).toSet
+    case v: DataSourceV2ScanExecBase =>
+      """In\(cell, \[([^\]]*)\]\)""".r.findAllMatchIn(v.scan.description())
+        .flatMap(_.group(1).split(",").map(_.trim.toLong)).toSet
+  }
+
+  test("persisted IVF index: probe ≡ in-plan ivfTopK; scan is pruned to the probed cells") {
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = corpus.where(col("vec_id") % 50 === 0)
     val path = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
@@ -507,11 +545,47 @@ class SimilaritySpec extends SparkSpec {
       val inPlan = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 5, 25)
         .as[(Long, Int, Long)].collect().toSet
       assert(probe.as[(Long, Int, Long)].collect().toSet == inPlan)
-      // the broadcast join on the partition column plants a dynamic
-      // partition pruning filter — probing reads only the probed cells
-      val plan = probe.queryExecution.executedPlan.toString
-      assert(plan.toLowerCase.contains("dynamicpruning"),
-        s"no DPP filter on the cell scan:\n$plan")
+      // the probed cells become a static partition filter on the scan
+      val scans = cellScans(probe)
+      assert(scans.nonEmpty && scans.forall(prunedCells(_).nonEmpty),
+        s"no cell partition filter on the scan:\n${probe.queryExecution.executedPlan}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
+  }
+
+  test("persisted IVF index: an in-memory query batch reads only its own cells, on both routes") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    // what a serving caller sends: a local frame, no filter for dynamic
+    // partition pruning to key off
+    val batch = corpus.where(col("vec_id") % 50 === 0).orderBy("vec_id").limit(10).collect()
+    assert(batch.length == 10)
+    val queries = spark.createDataFrame(java.util.Arrays.asList(batch: _*), corpus.schema)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_mem").toString
+    try {
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 25, path)
+      val cells = spark.read.parquet(s"$path/cells")
+      // a query drawn from the corpus probes the cell it is stored in
+      val probed = cells.where(col("vec_b").isin(batch.map(_.getAs[Long]("vec_id")): _*))
+        .select(col("cell").cast("long")).distinct().as[Long].collect().toSet
+      val cellRows = cells.where(col("cell").cast("long").isin(probed.toSeq: _*)).count()
+      val indexRows = cells.count()
+      assert(cellRows < indexRows, s"fixture: probed cells hold all $indexRows rows")
+      val inPlan = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 5, 25)
+        .as[(Long, Int, Long)].collect().toSet
+      Seq("parquet" -> (Similarity.probeIvfIndex _),
+          "graft-index" -> (Similarity.probeIvfIndexV2 _)).foreach { case (route, probeOf) =>
+        val probe = probeOf(path, queries, "vec_id", "embedding", 5)
+        val got = probe.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+        assert(got == inPlan, s"$route: probe diverged from ivfTopK")
+        val scans = cellScans(probe)
+        assert(scans.size == 1, s"$route: ${scans.size} cell scans")
+        assert(prunedCells(scans.head) == probed,
+          s"$route: scan filter cells ${prunedCells(scans.head)} != probed $probed")
+        val read = scans.head.metrics("numOutputRows").value
+        assert(read == cellRows,
+          s"$route: scan read $read rows; the probed cells hold $cellRows of $indexRows")
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     }

@@ -658,13 +658,15 @@ class StreamingSpec extends SparkSpec {
     def constraintChars(s: Scd2Stream.KeyedCdcState): Int =
       s.dim.queryExecution.optimizedPlan.constraints.toSeq
         .map(_.toString.replaceAll("#\\d+", "").length).sum
+    // the snapshot's partitions summed over its slices
+    def partitions(s: Scd2Stream.KeyedCdcState): Int = s.dim.rdd.getNumPartitions
     val states = Seq(1, 4).map { n =>
       val s = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op",
         numPartitions = n)
-      var afterTwo = 0
+      var (afterTwo, partsAfterTwo) = (0, 0)
       batches.zipWithIndex.foreach { case (b, i) =>
         s.sink(b, i.toLong)
-        if (i == 1) afterTwo = constraintChars(s)
+        if (i == 1) { afterTwo = constraintChars(s); partsAfterTwo = partitions(s) }
       }
       // the snapshot is checkpointed per fold: a fold must not carry its
       // input's constraints into the next snapshot (they compound)
@@ -672,6 +674,11 @@ class StreamingSpec extends SparkSpec {
       info(s"$n slice(s): constraint chars $afterTwo after 2 folds, $afterAll after 12")
       assert(afterAll <= afterTwo,
         s"$n slice(s): constraints grew from $afterTwo to $afterAll chars")
+      // nor may a fold add a partition to every slice it rewrites
+      val partsAfterAll = partitions(s)
+      info(s"$n slice(s): $partsAfterTwo partitions after 2 folds, $partsAfterAll after 12")
+      assert(partsAfterAll <= partsAfterTwo,
+        s"$n slice(s): partitions grew from $partsAfterTwo to $partsAfterAll")
       s
     }
     def rows(s: Scd2Stream.KeyedCdcState) =
