@@ -2769,8 +2769,8 @@ object ExtQueries extends QueryGroup {
     * pushed range filter on a PROJECTED column (vec_b > 100) plus one
     * on a column OUTSIDE the projection (nb > 1.0 decodes into a
     * scratch vector that never reaches the output), grouped per cell.
-    * Both filters are claimed by the connector (no Spark re-filter) and
-    * decode on the columnar lane; the oracle restates the stored cell
+    * Both filters reach Spark's vectorized reader as pruning hints and
+    * Spark re-filters above the scan; the oracle restates the stored cell
     * assignment and the same predicates over the raw embeddings. The
     * filter constants are structural (fixed literals valid at every
     * SF), and the aggregates are integer-only (count/min/max of ids) so
@@ -2839,13 +2839,13 @@ object ExtQueries extends QueryGroup {
        FROM events WHERE user_id > 50
        GROUP BY 1"""
 
-  /** TWO-LEVEL partition layout + COMPOUND OR claim through the serving
+  /** TWO-LEVEL partition layout + COMPOUND OR hint through the serving
     * connector (round-11, oracle-gating both late-round features): the
     * events stream re-materialized partitioned by (bucket, event_type)
     * — a NESTED Hive layout the connector discovers as a depth-ordered
-    * column chain — read back with a claimed OR-of-ranges on `value`
-    * (both tails of the amount distribution; parquet record filter +
-    * row-group pruning + vectorized residue, no Spark re-filter). The
+    * column chain — read back with an OR-of-ranges on `value` (both
+    * tails of the amount distribution) as a row-group pruning hint,
+    * re-filtered by Spark above the scan. The
     * value column rides the fixture's cent grid, so the amount
     * aggregate sums EXACT cents as BIGINT — immune to float fold order
     * on both engines. Filter constants are structural literals, valid
@@ -2871,14 +2871,12 @@ object ExtQueries extends QueryGroup {
        FROM events WHERE value < 10 OR value > 90
        GROUP BY 1, 2"""
 
-  /** `<>` CLAIM through the serving connector (round-12): a
-    * Not(EqualTo) predicate on a string data column, claimed by the
-    * connector as `and(notEq(c, null), notEq(c, v))` — the explicit
-    * not-null leg restores SQL's unknown→false over parquet's
-    * null-keeping notEq, so the filter rides the claimed lattice
-    * (row-group pruning + vectorized residue, no Spark re-filter)
-    * where it previously fell to full decode. Exact-cents aggregates;
-    * the excluded literal is structural, valid at every SF.
+  /** `<>` through the serving connector (round-12): a Not(EqualTo)
+    * predicate on a string data column reaches the scan as a pruning
+    * hint — Spark's ParquetFilters makes it a parquet notEq, which
+    * keeps nulls, and Spark's Filter above the scan applies SQL's
+    * unknown→false. Exact-cents aggregates; the excluded literal is
+    * structural, valid at every SF.
     */
   private def eventsIndexNe(s: SparkSession, d: String): DataFrame = {
     val path = scratchPath(s, "events_v2ne", d)
@@ -2899,13 +2897,13 @@ object ExtQueries extends QueryGroup {
        FROM events WHERE event_type <> 'view'
        GROUP BY 1, 2"""
 
-  /** STRING-PREDICATE + NOT-IN claims through the serving connector
-    * (round-12): `event_type LIKE 'c%'` rides the claimed lattice as a
-    * parquet UserDefinedPredicate (exact record-level keep, min/max
-    * row-group pruning for the prefix), and `user_id NOT IN (…)`
-    * desugars to And(IsNotNull, ≠ each) — both previously fell to full
-    * decode + Spark re-filter. Exact-cents aggregates; structural
-    * literals, valid at every SF.
+  /** STRING-PREDICATE + NOT-IN hints through the serving connector
+    * (round-12): `event_type LIKE 'c%'` and `user_id NOT IN (…)` reach
+    * the scan as pruning hints — Spark's ParquetFilters makes the
+    * prefix its string-prefix predicate (min/max row-group pruning) and
+    * the short NOT IN parquet notEq legs — while Spark's Filter above
+    * the scan keeps the result exact. Exact-cents aggregates;
+    * structural literals, valid at every SF.
     */
   private def eventsIndexPrefix(s: SparkSession, d: String): DataFrame = {
     val path = scratchPath(s, "events_v2pf", d)
@@ -3036,10 +3034,10 @@ object ExtQueries extends QueryGroup {
     * fourth sitting): amounts land as DECIMAL(24,2) — the
     * FIXED_LEN_BYTE_ARRAY physical, i.e. the money type a 100 TB
     * ledger actually uses — next to a SMALLINT bucket, and the audit
-    * reads them back with a claimed `<>` on the SHORT column (INT32
-    * comparators; the in-house columnar lane refuses decimal, so this
-    * shape exercises the row lane's annotation-driven decimal
-    * convert under a real claim). The decimal is BUILT from exact
+    * reads them back with a `<>` on the SHORT column (a pruning hint;
+    * Spark's vectorized reader decodes the decimal from the file's own
+    * scale annotation, and Spark's Filter keeps the result exact). The
+    * decimal is BUILT from exact
     * cents (cents × 0.01 at scale 2 — no float fold anywhere), and
     * the aggregate folds it back to BIGINT cents on both engines.
     */
@@ -3146,11 +3144,11 @@ object ExtQueries extends QueryGroup {
 
   /** PAGE-pruned range probe (round-13): the event-time-cutoff shape —
     * a table sorted by its probe column, written with small pages, hit
-    * with a claimed range predicate. Group-level stats can't prune
-    * inside the sorted run's covering row groups; the column index
-    * sheds the non-matching pages on the in-house columnar lane
-    * (readNextFilteredRowGroup + SynchronizingColumnReaders), and the
-    * vectorized residue keeps the claim exact at page granularity.
+    * with a range predicate handed to the scan as a pruning hint.
+    * Group-level stats can't prune inside the sorted run's covering row
+    * groups; the column index sheds the non-matching pages in Spark's
+    * vectorized reader (readNextFilteredRowGroup), and Spark's Filter
+    * above the scan keeps the result exact at row granularity.
     * Cutoffs derive from max(event_id) on BOTH sides (floor division),
     * so the oracle is scale-factor-free.
     */
@@ -9632,16 +9630,16 @@ object ExtQueries extends QueryGroup {
     GQuery("ext_ann_ivf_v2", annIvfV2, Some(annIvfSql), "persisted IVF probe through the graft-index DataSourceV2 table (claimed cell partition filter, post-pruning stats)"),
     GQuery("ext_ann_ivf_v2_filtered", annIvfV2Filtered, Some(annIvfV2FilteredSql), "filtered serving slice through the V2 table: pushed data filters (one on a non-projected scratch column) decoded on the vectorized lane, per-cell integer aggregates"),
     GQuery("ext_events_index_ts", eventsIndexTs, Some(eventsIndexTsSql), "event-time serving table: TIMESTAMP column decoded through the graft-index connector under a pushed filter, epoch-micros aggregates per bucket"),
-    GQuery("ext_events_index_or", eventsIndexOr, Some(eventsIndexOrSql), "two-level Hive layout through the connector (depth-ordered (bucket, event_type) chain) under a claimed OR-of-ranges on value; exact-cents aggregates per chain"),
-    GQuery("ext_events_index_ne", eventsIndexNe, Some(eventsIndexNeSql), "`<>` claim through the connector: Not(EqualTo) pushed as and(notEq(c,null), notEq(c,v)) — SQL null semantics exact, no Spark re-filter; exact-cents aggregates"),
+    GQuery("ext_events_index_or", eventsIndexOr, Some(eventsIndexOrSql), "two-level Hive layout through the connector (depth-ordered (bucket, event_type) chain) under an OR-of-ranges pruning hint on value, re-filtered by Spark; exact-cents aggregates per chain"),
+    GQuery("ext_events_index_ne", eventsIndexNe, Some(eventsIndexNeSql), "`<>` through the connector: Not(EqualTo) as a pruning hint (Spark's ParquetFilters notEq), Spark re-filters above for SQL null semantics; exact-cents aggregates"),
     GQuery("ext_layout_lineage", layoutLineage, Some(layoutLineageSql), "provenance audit via the _file lineage metadata column: per-file rows/cents folded to the bucket parsed from the path; oracle pins one file per bucket"),
-    GQuery("ext_events_index_prefix", eventsIndexPrefix, Some(eventsIndexPrefixSql), "LIKE-prefix + NOT IN claims through the connector: UserDefinedPredicate keep/canDrop for the prefix, And(IsNotNull, all-neq) for NOT IN; exact-cents aggregates"),
+    GQuery("ext_events_index_prefix", eventsIndexPrefix, Some(eventsIndexPrefixSql), "LIKE-prefix + NOT IN hints through the connector: Spark's ParquetFilters prefix predicate and notEq legs prune, Spark re-filters above; exact-cents aggregates"),
     GQuery("ext_events_index_date", eventsIndexDate, Some(eventsIndexDateSql), "DATE data column through the connector: range + `<>` claims as INT32 epoch-day compares with row-group pruning, day-number aggregates, exact cents"),
     GQuery("ext_events_index_datepart", eventsIndexDatePart, Some(eventsIndexDatePartSql), "DATE partition directories (ed=YYYY-MM-DD) through the connector: DateType inference + planning-time directory pruning on a date predicate"),
     GQuery("ext_docs_index_binary", docsIndexBinary, Some(docsIndexBinarySql), "BINARY payloads through the connector: multimodal-shape blobs decoded byte-exact on the vectorized lane, md5 fingerprints + byte totals per bucket"),
-    GQuery("ext_events_index_decimal", eventsIndexDecimal, Some(eventsIndexDecimalSql), "DECIMAL(24,2) money column (FLBA physical) + SMALLINT bucket through the connector: claimed short `<>`, row-lane decimal decode, exact-cents fold"),
+    GQuery("ext_events_index_decimal", eventsIndexDecimal, Some(eventsIndexDecimalSql), "DECIMAL(24,2) money column (FLBA physical) + SMALLINT bucket through the connector: short `<>` as a pruning hint, decimal decode on Spark's vectorized reader, exact-cents fold"),
     GQuery("ext_events_index_nested", eventsIndexNested, Some(eventsIndexNestedSql), "nested struct + map columns through the connector (mounted-lake-table shape): claims refused wholesale, delegated-lane nested decode, Spark re-filter; cents folded from the struct field and the map value independently"),
-    GQuery("ext_events_index_tsrange", eventsIndexTsRange, Some(eventsIndexTsRangeSql), "page-pruned range probe: sorted column, small pages, claimed range — the column index sheds non-matching pages inside surviving row groups on the in-house columnar lane; exact-cents fold"),
+    GQuery("ext_events_index_tsrange", eventsIndexTsRange, Some(eventsIndexTsRangeSql), "page-pruned range probe: sorted column, small pages, range as a pruning hint — the column index sheds non-matching pages inside surviving row groups in Spark's vectorized reader; exact-cents fold"),
     GQuery("ext_ann_ivf_cat", annIvfCat, Some(annIvfSql), "catalog-routed IVF probe: the index resolves by NAME through the read-only GraftIndexCatalog (no paths in the query)"),
     GQuery("ext_ann_hnsw_cat", annHnswCat, Some(annHnswSql), "catalog-routed graph probe: vecs + edges resolved by NAME through the GraftIndexCatalog"),
     GQuery("ext_ann_hnsw_v2", annHnswV2, Some(annHnswSql), "persisted graph probe through the graft-index DataSourceV2 table (projection-pruned edge scan)"),

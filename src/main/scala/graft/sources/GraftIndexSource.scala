@@ -4,19 +4,20 @@ import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.internal.LegacyBehaviorPolicy
 import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,13 +40,14 @@ import org.apache.spark.util.SerializableConfiguration
   *    accepts the dynamic-partition-pruning subquery a broadcast join
   *    plants when its other side carries a selective filter, as an
   *    ordinary V2 runtime filter.
-  *  - **Data filters as pruning hints**: predicates on primitive data
-  *    columns are NOT claimed — Spark keeps its Filter above the scan —
-  *    but they reach the reader as parquet `FilterPredicate`s, so row
-  *    groups whose statistics or dictionaries exclude the predicate and
-  *    pages the column index rules out are never decoded. Pruning is
-  *    conservative by parquet's contract, so the re-filter above keeps
-  *    results exact.
+  *  - **Data filters as pruning hints**: predicates on data columns are
+  *    NOT claimed — Spark keeps its Filter above the scan — but they
+  *    reach the reader as parquet `FilterPredicate`s, built per file by
+  *    Spark's own `ParquetFilters` under the session's
+  *    `spark.sql.parquet.filterPushdown*` settings, so row groups whose
+  *    statistics or dictionaries exclude the predicate and pages the
+  *    column index rules out are never decoded. Pruning is conservative
+  *    by parquet's contract, so the re-filter above keeps results exact.
   *  - **Aggregate pushdown from footer statistics**
   *    ([[SupportsPushDownAggregates]]): ungrouped COUNT(*) / MIN / MAX
   *    over numeric columns answer from row-group metadata — one row per
@@ -456,9 +458,9 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
 
   /** Partition-column filters prune directories; see the pruner for the
     * evaluated shapes. Null comparands are rejected (they stay with
-    * Spark, which evaluates them to unknown/false) — the same guard
-    * [[hintable]] applies, so a legal `cell IN (1, NULL)` never
-    * reaches the pruner's comparator. EqualNullSafe and IsNull ARE
+    * Spark, which evaluates them to unknown/false), so a legal
+    * `cell IN (1, NULL)` never reaches the pruner's comparator (data
+    * hints, [[hintable]], refuse them too). EqualNullSafe and IsNull ARE
     * claimed: null partition values exist (Hive default-partition
     * directories) and the pruner matches them exactly.
     */
@@ -490,56 +492,46 @@ class GraftIndexScanBuilder(path: String, tableSchema: StructType,
       case _ => false
     })
 
-  /** Data-column filters that translate to parquet FilterPredicates
-    * ([[GraftIndexFilters.toParquet]]) — used as PRUNING HINTS only,
-    * never claimed. A hint may keep rows the filter drops (Spark's
-    * Filter above removes them) but must never drop a row the filter
-    * keeps, so only shapes whose parquet null semantics are at least as
-    * permissive as SQL's translate: a bare parquet notEq keeps nulls
-    * where SQL `!=` drops them, so `Not(EqualTo)` becomes
-    * `and(notEq(c, null), notEq(c, v))` and general Not-shapes stay
-    * out. Every leaf maps SQL unknown→false, so negation-free OR/AND
-    * compounds of them compose (false and unknown are
+  /** Data-column filters handed to the reader as PRUNING HINTS, never
+    * claimed. This is a shape check only: per file, Spark's own
+    * `ParquetFilters` decides which leaves its column types can carry
+    * (and drops the rest), exactly as in `spark.read.parquet`. A hint
+    * may keep rows the filter drops (Spark's Filter above removes them)
+    * but must never drop a row the filter keeps. The shapes: leaves with
+    * non-null comparands, negation-free OR/AND compounds of them (every
+    * leaf maps SQL unknown→false, and false and unknown are
     * indistinguishable through a monotone AND/OR lattice for WHERE's
-    * keep-iff-TRUE decision).
+    * keep-iff-TRUE decision), and `Not` only over EqualTo/In, whose
+    * parquet inverses keep nulls and so only widen. Every referenced
+    * name must be a top-level data column: [[GraftIndexFilters.forFile]]
+    * reads any name missing from a footer's top-level fields as an
+    * absent (all-null) column, so a struct-field hint would fold to
+    * FALSE and skip every file.
     */
-  private def hintable(f: Filter): Boolean = f match {
-    case EqualTo(a, v) => v != null && primitive(a)
-    case Not(EqualTo(a, v)) => v != null && primitive(a)
-    case In(a, vs) => vs.nonEmpty && vs.forall(_ != null) && primitive(a)
-    // NOT IN desugars like `<>`: And(IsNotNull, ≠v1, ≠v2, …)
-    case Not(In(a, vs)) => vs.nonEmpty && vs.forall(_ != null) && primitive(a)
-    // string predicates (round-12): parquet UserDefinedPredicates; none
-    // matches NULL. startsWith also prunes row groups off min/max stats.
-    case StringStartsWith(a, v) => v != null && stringCol(a)
-    case StringEndsWith(a, v) => v != null && stringCol(a)
-    case StringContains(a, v) => v != null && stringCol(a)
-    case GreaterThan(a, v) => v != null && comparable(a)
-    case GreaterThanOrEqual(a, v) => v != null && comparable(a)
-    case LessThan(a, v) => v != null && comparable(a)
-    case LessThanOrEqual(a, v) => v != null && comparable(a)
-    case IsNull(a) => primitive(a)
-    case IsNotNull(a) => primitive(a)
-    case Or(l, r) => hintable(l) && hintable(r)
-    case And(l, r) => hintable(l) && hintable(r)
+  private def hintable(f: Filter): Boolean =
+    f.references.forall(dataColType(_).isDefined) && hintShape(f)
+
+  private def hintShape(f: Filter): Boolean = f match {
+    case EqualTo(_, v) => v != null
+    case Not(EqualTo(_, v)) => v != null
+    case In(_, vs) => vs.nonEmpty && vs.forall(_ != null)
+    case Not(In(_, vs)) => vs.nonEmpty && vs.forall(_ != null)
+    case StringStartsWith(_, v) => v != null
+    case StringEndsWith(_, v) => v != null
+    case StringContains(_, v) => v != null
+    case GreaterThan(_, v) => v != null
+    case GreaterThanOrEqual(_, v) => v != null
+    case LessThan(_, v) => v != null
+    case LessThanOrEqual(_, v) => v != null
+    case _: IsNull | _: IsNotNull => true
+    case Or(l, r) => hintShape(l) && hintShape(r)
+    case And(l, r) => hintShape(l) && hintShape(r)
     case _ => false
   }
 
-  private def primitive(name: String): Boolean = dataColType(name).exists {
-    case LongType | IntegerType | DoubleType | FloatType | StringType |
-         DateType | ShortType | ByteType => true
-    case _ => false
-  }
-  private def stringCol(name: String): Boolean =
-    dataColType(name).contains(StringType)
-  // DATE joins the comparable set (round-12): the comparand arrives as
-  // java.sql.Date / LocalDate and converts losslessly to the INT32
-  // epoch-day count parquet stores, so eq/range hints prune row groups
-  // — a date-range scan over a 100 TB event table is the single most
-  // common serving predicate there is. SHORT/BYTE (same sitting) are
-  // INT32-annotated physicals — the same intColumn comparators. The
-  // comparable set doubles as the footer MIN/MAX aggregate set.
-  // DECIMAL, BINARY and timestamps give no hints.
+  // the footer MIN/MAX aggregate set: types whose parquet statistics
+  // compare as their Spark values (INT32-annotated DATE, SHORT and BYTE
+  // fold as Integer and are narrowed or rebased after the fold)
   private def comparable(name: String): Boolean = dataColType(name).exists {
     case LongType | IntegerType | DoubleType | FloatType | DateType |
          ShortType | ByteType => true
@@ -687,7 +679,7 @@ class GraftIndexScan(path: String, tableSchema: StructType,
     // DATE comparands arrive as java.sql.Date or LocalDate depending on
     // the session's java8API setting; the stored side is epoch-day Int
     case (x: Int, y: java.sql.Date) =>
-      java.lang.Long.compare(x.toLong, GraftIndexDate.toDays(y).toLong)
+      java.lang.Long.compare(x.toLong, y.toLocalDate.toEpochDay)
     case (x: Int, y: java.time.LocalDate) =>
       java.lang.Long.compare(x.toLong, y.toEpochDay)
     case (x: Long, y: Number) => java.lang.Long.compare(x, y.longValue)
@@ -936,7 +928,7 @@ class GraftIndexScan(path: String, tableSchema: StructType,
           new SerializableConfiguration(GraftIndexTable.activeHadoopConf()))
         new GraftIndexReaderFactory(readSchema(),
           readSchema().fields.map(f => constCol(f.name)),
-          hintData, tableSchema, limit, conf)
+          hintData, limit, conf)
       })
   }
 
@@ -968,7 +960,7 @@ class GraftIndexScan(path: String, tableSchema: StructType,
         aggSchema.get.fields.map(f => partCols.contains(f.name)), conf)
       case None => new GraftIndexReaderFactory(schema,
         schema.fields.map(f => constCol(f.name)),
-        hintData, tableSchema, limit, conf)
+        hintData, limit, conf)
     }
   }
 }
@@ -1532,6 +1524,25 @@ object GraftIndexStreamOffset {
 
 object GraftIndexFilters {
 
+  /** The name `file` stores Spark column `name` under, matched as
+    * Spark's parquet reader and `ParquetFilters` match it: ignoring case
+    * unless `spark.sql.caseSensitive`, so a file column `X` read under a
+    * declared `x` is `x`'s data, not an absent column.
+    */
+  def fileColumn(file: org.apache.parquet.schema.MessageType, name: String,
+      caseSensitive: Boolean): Option[String] = {
+    import scala.jdk.CollectionConverters._
+    val key = if (caseSensitive) name else name.toLowerCase(java.util.Locale.ROOT)
+    file.getFields.asScala.map(_.getName).find(n =>
+      (if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)) == key)
+  }
+
+  /** The filters' referenced names that `file` has: [[forFile]]'s set. */
+  def present(file: org.apache.parquet.schema.MessageType,
+      filters: Array[Filter], caseSensitive: Boolean): Set[String] =
+    filters.flatMap(_.references)
+      .filter(fileColumn(file, _, caseSensitive).isDefined).toSet
+
   /** Partially evaluate a hint filter for ONE file of an evolved set,
     * under the rule "a column the file lacks is NULL for every row":
     * Left(true) = the filter passes every row (drop the conjunct),
@@ -1540,7 +1551,9 @@ object GraftIndexFilters {
     * leaves reproduce the historical behavior (IsNull over an absent
     * column passes, anything else skips); compounds fold leg by leg —
     * without this, `Or(v > 5, IsNull(w))` with `w` absent would skip
-    * rows whose `v > 5` leg matches.
+    * rows whose `v > 5` leg matches. Spark's ParquetFilters cannot do
+    * this skip: it gives no predicate for a column missing from the
+    * file's schema.
     */
   def forFile(f: Filter, present: Set[String]): Either[Boolean, Filter] =
     f match {
@@ -1563,303 +1576,6 @@ object GraftIndexFilters {
       // IsNotNull fails
       case _ => Left(false)
     }
-
-  /** Spark source Filter → parquet FilterPredicate for the hintable
-    * shapes; types resolved from the table schema. `days` turns a DATE
-    * comparand into the day count the file stores (a LEGACY-rebased
-    * file stores Julian days).
-    */
-  def toParquet(f: Filter, schema: StructType,
-      days: Any => Int = GraftIndexDate.toDays): FilterPredicate = {
-    def dt(n: String) = schema.find(_.name == n).get.dataType
-    def eq(n: String, v: Any): FilterPredicate = dt(n) match {
-      case LongType => FilterApi.eq(FilterApi.longColumn(n),
-        if (v == null) null else java.lang.Long.valueOf(v.asInstanceOf[Number].longValue))
-      case IntegerType | ShortType | ByteType => FilterApi.eq(FilterApi.intColumn(n),
-        if (v == null) null else java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue))
-      case DoubleType => FilterApi.eq(FilterApi.doubleColumn(n),
-        if (v == null) null else java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue))
-      case FloatType => FilterApi.eq(FilterApi.floatColumn(n),
-        if (v == null) null else java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue))
-      case StringType => FilterApi.eq(FilterApi.binaryColumn(n),
-        if (v == null) null else Binary.fromString(v.toString))
-      // DATE is INT32 epoch days on both sides (round-12)
-      case DateType => FilterApi.eq(FilterApi.intColumn(n),
-        if (v == null) null
-        else java.lang.Integer.valueOf(days(v)))
-      case other => throw new IllegalStateException(s"eq over $other")
-    }
-    def notEqNull(n: String): FilterPredicate = dt(n) match {
-      case LongType => FilterApi.notEq(FilterApi.longColumn(n), null.asInstanceOf[java.lang.Long])
-      case IntegerType | ShortType | ByteType => FilterApi.notEq(FilterApi.intColumn(n), null.asInstanceOf[java.lang.Integer])
-      case DoubleType => FilterApi.notEq(FilterApi.doubleColumn(n), null.asInstanceOf[java.lang.Double])
-      case FloatType => FilterApi.notEq(FilterApi.floatColumn(n), null.asInstanceOf[java.lang.Float])
-      case StringType => FilterApi.notEq(FilterApi.binaryColumn(n),
-        null.asInstanceOf[Binary])
-      case DateType => FilterApi.notEq(FilterApi.intColumn(n),
-        null.asInstanceOf[java.lang.Integer])
-      case other => throw new IllegalStateException(s"notEq over $other")
-    }
-    def notEq(n: String, v: Any): FilterPredicate = dt(n) match {
-      case LongType => FilterApi.notEq(FilterApi.longColumn(n),
-        java.lang.Long.valueOf(v.asInstanceOf[Number].longValue))
-      case IntegerType | ShortType | ByteType => FilterApi.notEq(FilterApi.intColumn(n),
-        java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue))
-      case DoubleType => FilterApi.notEq(FilterApi.doubleColumn(n),
-        java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue))
-      case FloatType => FilterApi.notEq(FilterApi.floatColumn(n),
-        java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue))
-      case StringType => FilterApi.notEq(FilterApi.binaryColumn(n),
-        Binary.fromString(v.toString))
-      case DateType => FilterApi.notEq(FilterApi.intColumn(n),
-        java.lang.Integer.valueOf(days(v)))
-      case other => throw new IllegalStateException(s"notEq over $other")
-    }
-    def rel(n: String, v: Any,
-        op: String): FilterPredicate = dt(n) match {
-      case LongType =>
-        val c = FilterApi.longColumn(n)
-        val x = java.lang.Long.valueOf(v.asInstanceOf[Number].longValue)
-        op match {
-          case ">" => FilterApi.gt(c, x); case ">=" => FilterApi.gtEq(c, x)
-          case "<" => FilterApi.lt(c, x); case _ => FilterApi.ltEq(c, x)
-        }
-      case IntegerType | ShortType | ByteType =>
-        val c = FilterApi.intColumn(n)
-        val x = java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue)
-        op match {
-          case ">" => FilterApi.gt(c, x); case ">=" => FilterApi.gtEq(c, x)
-          case "<" => FilterApi.lt(c, x); case _ => FilterApi.ltEq(c, x)
-        }
-      case DoubleType =>
-        val c = FilterApi.doubleColumn(n)
-        val x = java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue)
-        op match {
-          case ">" => FilterApi.gt(c, x); case ">=" => FilterApi.gtEq(c, x)
-          case "<" => FilterApi.lt(c, x); case _ => FilterApi.ltEq(c, x)
-        }
-      case FloatType =>
-        val c = FilterApi.floatColumn(n)
-        val x = java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue)
-        op match {
-          case ">" => FilterApi.gt(c, x); case ">=" => FilterApi.gtEq(c, x)
-          case "<" => FilterApi.lt(c, x); case _ => FilterApi.ltEq(c, x)
-        }
-      case DateType =>
-        val c = FilterApi.intColumn(n)
-        val x = java.lang.Integer.valueOf(days(v))
-        op match {
-          case ">" => FilterApi.gt(c, x); case ">=" => FilterApi.gtEq(c, x)
-          case "<" => FilterApi.lt(c, x); case _ => FilterApi.ltEq(c, x)
-        }
-      case other => throw new IllegalStateException(s"$op over $other")
-    }
-    // IN as parquet's native SET predicate (round-12): one hash-set
-    // membership per record instead of an OR tree one node deep per
-    // list element — a 10k-id serving IN list used to build a 10k-node
-    // predicate tree (per-record visitor recursion AND stack depth
-    // both O(list)); the set form is also what parquet's dictionary
-    // pruning matches directly. Null semantics unchanged: in() never
-    // matches null (eq-like).
-    //
-    // NOT IN deliberately does NOT use FilterApi.notIn: parquet-mr
-    // 1.16's RECORD-LEVEL NotIn inspector is broken for sets with ≥2
-    // values — its update() returns keep=true as soon as the value
-    // differs from ANY set element (correct only for singletons), so a
-    // notIn predicate would silently keep every non-null row (caught by
-    // this repo's large-NOT-IN spec before it shipped). The old
-    // And-of-notEq chain is no better at scale: a 5000-element NOT IN
-    // builds a 5000-deep And tree and the record-level visitor
-    // recursion overflows the task stack (also caught by the spec).
-    // NOT IN instead rides [[GraftNotInSet]] — a UserDefinedPredicate
-    // over the same hash set: exact keep (null never matches, SQL's
-    // unknown→false by construction), one set lookup per record,
-    // depth 1 however long the list.
-    def inSet(n: String, vs: Array[Any]): FilterPredicate = dt(n) match {
-      case LongType =>
-        val s = new java.util.HashSet[java.lang.Long]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].longValue))
-        FilterApi.in(FilterApi.longColumn(n), s)
-      case IntegerType | ShortType | ByteType =>
-        val s = new java.util.HashSet[java.lang.Integer]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].intValue))
-        FilterApi.in(FilterApi.intColumn(n), s)
-      case DoubleType =>
-        val s = new java.util.HashSet[java.lang.Double]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].doubleValue))
-        FilterApi.in(FilterApi.doubleColumn(n), s)
-      case FloatType =>
-        val s = new java.util.HashSet[java.lang.Float]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].floatValue))
-        FilterApi.in(FilterApi.floatColumn(n), s)
-      case StringType =>
-        val s = new java.util.HashSet[Binary]()
-        vs.foreach(v => s.add(Binary.fromString(v.toString)))
-        FilterApi.in(FilterApi.binaryColumn(n), s)
-      case DateType =>
-        val s = new java.util.HashSet[java.lang.Integer]()
-        vs.foreach(v => s.add(days(v)))
-        FilterApi.in(FilterApi.intColumn(n), s)
-      case other => throw new IllegalStateException(s"in over $other")
-    }
-    def notInSet(n: String, vs: Array[Any]): FilterPredicate = dt(n) match {
-      case LongType =>
-        val s = new java.util.HashSet[java.lang.Long]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].longValue))
-        FilterApi.userDefined(FilterApi.longColumn(n),
-          new GraftNotInSet[java.lang.Long](s))
-      case IntegerType | ShortType | ByteType =>
-        val s = new java.util.HashSet[java.lang.Integer]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].intValue))
-        FilterApi.userDefined(FilterApi.intColumn(n),
-          new GraftNotInSet[java.lang.Integer](s))
-      case DoubleType =>
-        val s = new java.util.HashSet[java.lang.Double]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].doubleValue))
-        FilterApi.userDefined(FilterApi.doubleColumn(n),
-          new GraftNotInSet[java.lang.Double](s))
-      case FloatType =>
-        val s = new java.util.HashSet[java.lang.Float]()
-        vs.foreach(v => s.add(v.asInstanceOf[Number].floatValue))
-        FilterApi.userDefined(FilterApi.floatColumn(n),
-          new GraftNotInSet[java.lang.Float](s))
-      case StringType =>
-        val s = new java.util.HashSet[Binary]()
-        vs.foreach(v => s.add(Binary.fromString(v.toString)))
-        FilterApi.userDefined(FilterApi.binaryColumn(n),
-          new GraftNotInSet[Binary](s))
-      case DateType =>
-        val s = new java.util.HashSet[java.lang.Integer]()
-        vs.foreach(v => s.add(days(v)))
-        FilterApi.userDefined(FilterApi.intColumn(n),
-          new GraftNotInSet[java.lang.Integer](s))
-      case other => throw new IllegalStateException(s"notIn over $other")
-    }
-    f match {
-      case EqualTo(a, v) => eq(a, v)
-      // `<>` / NOT IN under SQL semantics: parquet's bare notEq KEEPS
-      // nulls, so the explicit not-null leg is mandatory
-      case Not(EqualTo(a, v)) => FilterApi.and(notEqNull(a), notEq(a, v))
-      case Not(In(a, vs)) =>
-        FilterApi.and(notEqNull(a), notInSet(a, vs))
-      // string predicates: user-defined parquet predicates — exact
-      // record-level keep() (null never matches), min/max row-group
-      // pruning for the prefix shape
-      case StringStartsWith(a, v) => FilterApi.userDefined(
-        FilterApi.binaryColumn(a), new GraftStartsWith(v))
-      case StringEndsWith(a, v) => FilterApi.userDefined(
-        FilterApi.binaryColumn(a), new GraftSubstring(v, atEnd = true))
-      case StringContains(a, v) => FilterApi.userDefined(
-        FilterApi.binaryColumn(a), new GraftSubstring(v, atEnd = false))
-      case In(a, vs) => inSet(a, vs)
-      case IsNull(a) => eq(a, null)
-      case IsNotNull(a) => notEqNull(a)
-      case GreaterThan(a, v) => rel(a, v, ">")
-      case GreaterThanOrEqual(a, v) => rel(a, v, ">=")
-      case LessThan(a, v) => rel(a, v, "<")
-      case LessThanOrEqual(a, v) => rel(a, v, "<=")
-      // negation-free compounds compose exactly (unknown→false per leg
-      // on both engines; see GraftIndexScanBuilder.hintable)
-      case Or(l, r) =>
-        FilterApi.or(toParquet(l, schema, days), toParquet(r, schema, days))
-      case And(l, r) =>
-        FilterApi.and(toParquet(l, schema, days), toParquet(r, schema, days))
-      case other => throw new IllegalStateException(
-        s"graft-index: filter has no parquet translation: $other")
-    }
-  }
-}
-
-/** Parquet user-defined predicate for `startsWith` (round-12): exact
-  * record-level keep (a NULL value never matches — SQL's unknown→false
-  * by construction) plus min/max row-group pruning — a value starting
-  * with `prefix` is ≥ prefix and shares its first bytes, so a group
-  * whose max (truncated to prefix length) sorts below the prefix, or
-  * whose min (truncated) sorts above it, holds no match under the
-  * unsigned lexicographic order parquet's binary stats use.
-  */
-private[sources] class GraftStartsWith(prefix: String)
-    extends org.apache.parquet.filter2.predicate.UserDefinedPredicate[Binary]
-    with Serializable {
-  private val p = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  override def keep(value: Binary): Boolean = value != null && {
-    val v = value.getBytesUnsafe
-    v.length >= p.length && {
-      var i = 0
-      while (i < p.length && v(i) == p(i)) i += 1
-      i == p.length
-    }
-  }
-  override def canDrop(
-      stat: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean = {
-    val cmp = org.apache.parquet.schema.PrimitiveComparator
-      .UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR
-    val pb = Binary.fromReusedByteArray(p)
-    val max = stat.getMax
-    val min = stat.getMin
-    cmp.compare(max.slice(0, math.min(p.length, max.length)), pb) < 0 ||
-      cmp.compare(min.slice(0, math.min(p.length, min.length)), pb) > 0
-  }
-  // only consulted under a pushed NOT(this) — never built; keep all
-  override def inverseCanDrop(
-      stat: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean =
-    false
-}
-
-/** NOT IN as a parquet user-defined predicate (round-12): one hash-set
-  * lookup per record at predicate depth 1, however long the exclusion
-  * list. Exists because BOTH built-in routes fail at scale:
-  * FilterApi.notIn's record-level inspector is broken for ≥2-value
-  * sets in parquet-mr 1.16 (keeps any value differing from ANY
-  * element), and an And-of-notEq chain overflows the visitor's
-  * recursion at a few thousand elements. keep(null) = false — SQL's
-  * unknown→false — matching the surrounding And(IsNotNull, …). No
-  * stats pruning: an exclusion list says nothing useful
-  * about a group's min/max.
-  */
-private[sources] class GraftNotInSet[T <: Comparable[T]](
-    target: java.util.HashSet[T])
-    extends org.apache.parquet.filter2.predicate.UserDefinedPredicate[T]
-    with Serializable {
-  override def keep(value: T): Boolean =
-    value != null && !target.contains(value)
-  override def canDrop(
-      stat: org.apache.parquet.filter2.predicate.Statistics[T]): Boolean = false
-  override def inverseCanDrop(
-      stat: org.apache.parquet.filter2.predicate.Statistics[T]): Boolean = false
-}
-
-/** `endsWith` / `contains` twin: exact keep, no stats pruning (suffix
-  * and substring membership say nothing about a group's min/max).
-  */
-private[sources] class GraftSubstring(needle: String, atEnd: Boolean)
-    extends org.apache.parquet.filter2.predicate.UserDefinedPredicate[Binary]
-    with Serializable {
-  private val n = needle.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  private def matchAt(v: Array[Byte], off: Int): Boolean = {
-    var i = 0
-    while (i < n.length && v(off + i) == n(i)) i += 1
-    i == n.length
-  }
-  override def keep(value: Binary): Boolean = value != null && {
-    val v = value.getBytesUnsafe
-    if (v.length < n.length) false
-    else if (atEnd) matchAt(v, v.length - n.length)
-    else {
-      var off = 0
-      var found = false
-      while (!found && off <= v.length - n.length) {
-        found = matchAt(v, off); off += 1
-      }
-      found
-    }
-  }
-  override def canDrop(
-      stat: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean =
-    false
-  override def inverseCanDrop(
-      stat: org.apache.parquet.filter2.predicate.Statistics[Binary]): Boolean =
-    false
 }
 
 /** EXECUTOR-SIDE footer cache (round-12): a serving index is probed
@@ -1933,7 +1649,7 @@ class GraftIndexReaderFactory(readSchema: StructType, isPart: Array[Boolean],
     // data-filter PRUNING HINTS: parquet predicates for row-group/page
     // pruning only — Spark re-filters above, so they carry no
     // exactness weight
-    hintData: Array[Filter], tableSchema: StructType,
+    hintData: Array[Filter],
     limit: Option[Int] = None,
     private[graft] val conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
     // session-SQL knobs captured at PLANNING time (the executor has no
@@ -1977,7 +1693,7 @@ class GraftIndexReaderFactory(readSchema: StructType, isPart: Array[Boolean],
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftIndexSparkVectorReader(fileParts(p), readSchema, isPart,
-      dataFields, limit, sql, conf.value.value, hintData, tableSchema)
+      dataFields, limit, sql, conf.value.value, hintData)
 
   /** Row reads only ever carry constant columns (data-column scans are
     * columnar, see supportColumnarReads).
@@ -2014,43 +1730,45 @@ object GraftIndexReaderFactory {
   * before constructing its vectorized reader) — captured once at
   * planning, shipped in the reader factory, stamped onto the per-file
   * conf executor-side. Without them ParquetToSparkSchemaConverter's
-  * Configuration constructor has nothing to read.
+  * Configuration constructor has nothing to read. The filter-pushdown
+  * flags and rebase modes are the ones `ParquetScan` reads to build its
+  * per-file `ParquetFilters` and rebase specs.
   */
 case class GraftSessionSql(tz: String, caseSensitive: Boolean,
     binaryAsString: Boolean, int96AsTimestamp: Boolean,
     inferTimestampNtz: Boolean, nanosAsLong: Boolean,
     fieldIdRead: Boolean, ignoreMissingFieldId: Boolean,
-    // rebase-mode session fallbacks + INT96 zone conversion (round-13):
-    // files with NO Spark version metadata (non-Spark or pre-3.0
-    // writers) honor spark.sql.parquet.*RebaseModeInRead exactly as
-    // DataSourceUtils does (default EXCEPTION — refuse, don't guess);
-    // int96TimestampConversion mirrors ParquetFileFormat's
-    // Impala-compat zone shift for non-parquet-mr-created files
-    dtRebaseRead: String = "EXCEPTION", i96RebaseRead: String = "EXCEPTION",
-    int96TsConversion: Boolean = false)
+    // spark.sql.parquet.*RebaseModeInRead: the mode for files that carry
+    // no Spark version stamp
+    dtRebaseRead: String, i96RebaseRead: String,
+    // ParquetFileFormat's Impala-compat INT96 zone shift
+    int96TsConversion: Boolean,
+    // spark.sql.parquet.filterPushdown*
+    filterPushdown: Boolean, pushDownDate: Boolean,
+    pushDownTimestamp: Boolean, pushDownDecimal: Boolean,
+    pushDownStringPredicate: Boolean, pushDownInFilterThreshold: Int)
     extends Serializable {
   import org.apache.parquet.hadoop.metadata.ParquetMetadata
+  import org.apache.spark.sql.execution.datasources.DataSourceUtils
   import org.apache.spark.sql.internal.SQLConf
 
-  /** A file's calendar rebase mode — DataSourceUtils' exact spec:
-    * legacy-stamped files rebase LEGACY; files carrying a Spark 3+
-    * version stamp decode verbatim (CORRECTED); files with NO Spark
-    * version metadata (non-Spark or pre-3.0 writers) fall back to the
-    * session's *RebaseModeInRead — default EXCEPTION, i.e. refuse
-    * ancient values rather than guess a calendar.
+  /** A file's calendar rebase specs, decided by Spark from the footer's
+    * writer metadata exactly as its own parquet reads decide them: a
+    * file from a pre-3.0 Spark (pre-3.1 for INT96) or stamped legacy is
+    * LEGACY in the writer's time zone, any other Spark file CORRECTED,
+    * and an unstamped file takes the session's *RebaseModeInRead. A
+    * file that names no writer zone (a Spark 2.4 file) gets the session
+    * zone captured here at planning: Spark's own fallback reads the
+    * executor's SQLConf, which a graft task does not carry.
     */
-  private def rebaseMode(footer: ParquetMetadata, legacyKey: String,
-      fallback: String): String = {
-    val kv = Option(footer.getFileMetaData.getKeyValueMetaData)
-      .getOrElse(java.util.Collections.emptyMap[String, String]())
-    if (kv.containsKey(legacyKey)) "LEGACY"
-    else if (kv.containsKey("org.apache.spark.version")) "CORRECTED"
-    else fallback
-  }
-  def dateTimeRebase(footer: ParquetMetadata): String =
-    rebaseMode(footer, "org.apache.spark.legacyDateTime", dtRebaseRead)
-  def int96Rebase(footer: ParquetMetadata): String =
-    rebaseMode(footer, "org.apache.spark.legacyINT96", i96RebaseRead)
+  def dateTimeRebase(footer: ParquetMetadata): RebaseSpec = withZone(
+    DataSourceUtils.datetimeRebaseSpec(
+      footer.getFileMetaData.getKeyValueMetaData.get, dtRebaseRead))
+  def int96Rebase(footer: ParquetMetadata): RebaseSpec = withZone(
+    DataSourceUtils.int96RebaseSpec(
+      footer.getFileMetaData.getKeyValueMetaData.get, i96RebaseRead))
+  private def withZone(s: RebaseSpec) =
+    s.copy(originTimeZone = s.originTimeZone.orElse(Some(tz)))
 
   def stamp(conf: Configuration): Unit = {
     conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, tz)
@@ -2076,7 +1794,13 @@ object GraftSessionSql {
       c.parquetFieldIdReadEnabled, c.ignoreMissingParquetFieldId,
       dtRebaseRead = c.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString,
       i96RebaseRead = c.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString,
-      int96TsConversion = c.isParquetINT96TimestampConversion)
+      int96TsConversion = c.isParquetINT96TimestampConversion,
+      filterPushdown = c.parquetFilterPushDown,
+      pushDownDate = c.parquetFilterPushDownDate,
+      pushDownTimestamp = c.parquetFilterPushDownTimestamp,
+      pushDownDecimal = c.parquetFilterPushDownDecimal,
+      pushDownStringPredicate = c.parquetFilterPushDownStringPredicate,
+      pushDownInFilterThreshold = c.parquetFilterPushDownInFilterThreshold)
   }
 }
 
@@ -2093,18 +1817,19 @@ object GraftSessionSql {
   * semantics (missing columns → null vectors, timestamp rebase from
   * the file's own writer metadata, type widening under mergeSchema)
   * are spark.read.parquet's by construction — it IS that reader.
-  * Data-filter hints become the reader's parquet filter predicate, so
-  * row groups and pages they rule out are never decoded; Spark's Filter
-  * above the scan keeps the result exact.
+  * Data-filter hints become the reader's parquet filter predicate
+  * through Spark's `ParquetFilters`, built per file as Spark's own
+  * parquet scan builds it, so row groups and pages they rule out are
+  * never decoded; Spark's Filter above the scan keeps the result exact.
   */
 class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any])],
     readSchema: StructType, isPart: Array[Boolean],
     dataFields: Array[StructField], limit: Option[Int],
     sql: GraftSessionSql, baseConf: Configuration,
-    hintFilters: Array[Filter], tableSchema: StructType)
+    hintFilters: Array[Filter])
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, VectorizedParquetRecordReader}
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val BatchRows = 4096
@@ -2152,9 +1877,11 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       c, new org.apache.hadoop.mapreduce.TaskAttemptID())
   private lazy val plainContext = newContext(fc)
-  // keyed by the file's folded hints and whether its dates are LEGACY
+  // keyed by everything a file's predicate depends on: its folded hints,
+  // its parquet schema and its calendar rebase spec
   private val hintContexts = scala.collection.mutable.HashMap[
-    (Seq[Filter], Boolean), org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl]()
+    (Seq[Filter], org.apache.parquet.schema.MessageType, RebaseSpec),
+    org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl]()
 
   private def openNext(): Boolean = {
     // loop, not recursion: a constant-false hint fold skips a file, and
@@ -2177,38 +1904,40 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     val (file, start, sliceLen, const) = fileQueue.dequeue()
     val p = new Path(file)
     val (footer0, fileLen) = GraftFooterCache.footerWithLen(file, fc)
-    val dtMode = sql.dateTimeRebase(footer0)
-    val i96Mode = sql.int96Rebase(footer0)
+    val dtSpec = sql.dateTimeRebase(footer0)
+    val i96Spec = sql.int96Rebase(footer0)
     // data-filter HINTS: fold them against THIS file's columns (absent
-    // column = all-null) and stamp the residual on a per-file conf —
-    // Spark's own reader then prunes row groups by stats/dictionary and
-    // pages by the column index (ParquetRowGroupReaderImpl reads via
-    // readNextFilteredRowGroup). A conjunct that folds to constant FALSE
-    // skips the file with zero IO. Spark still runs the full Filter
-    // above: the hints only shed work, never rows that could match.
-    // DATE comparands follow the file's calendar exactly like Spark's
-    // ParquetFilters: a LEGACY-rebased file stores Julian day counts.
+    // column = all-null); a conjunct that folds to constant FALSE skips
+    // the file with zero IO. The residual becomes the file's parquet
+    // predicate the way Spark's ParquetPartitionReaderFactory builds it:
+    // Spark's ParquetFilters over the file's own schema and rebase spec
+    // translates what that file's column types can carry and drops the
+    // rest, and none at all under spark.sql.parquet.filterPushdown=false
+    // (the skip stays: it is exact). Spark's own reader then prunes row
+    // groups by stats/dictionary and pages by the column index; Spark
+    // still runs the full Filter above, so the hints only shed work.
     val ctx =
       if (hintFilters.isEmpty) plainContext
       else {
-        val present = footer0.getFileMetaData.getSchema.getFields
-          .asInstanceOf[java.util.List[org.apache.parquet.schema.Type]]
-          .stream().map[String](_.getName).toArray.map(_.toString).toSet
+        val schema = footer0.getFileMetaData.getSchema
+        val present =
+          GraftIndexFilters.present(schema, hintFilters, sql.caseSensitive)
         val folded = hintFilters.map(GraftIndexFilters.forFile(_, present))
         if (folded.contains(Left(false))) return 0
         val inFile = folded.collect { case Right(f) => f }.toSeq
-        if (inFile.isEmpty) plainContext
-        else hintContexts.getOrElseUpdate((inFile, dtMode == "LEGACY"), {
-          val days: Any => Int =
-            if (dtMode == "LEGACY") v =>
-              org.apache.spark.sql.catalyst.util.RebaseDateTime
-                .rebaseGregorianToJulianDays(GraftIndexDate.toDays(v))
-            else GraftIndexDate.toDays
-          val c = new Configuration(fc)
-          org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(c,
-            inFile.map(GraftIndexFilters.toParquet(_, tableSchema, days))
-              .reduce(FilterApi.and))
-          newContext(c)
+        if (inFile.isEmpty || !sql.filterPushdown) plainContext
+        else hintContexts.getOrElseUpdate((inFile, schema, dtSpec), {
+          val pf = new ParquetFilters(schema, sql.pushDownDate,
+            sql.pushDownTimestamp, sql.pushDownDecimal,
+            sql.pushDownStringPredicate, sql.pushDownInFilterThreshold,
+            sql.caseSensitive, dtSpec)
+          inFile.flatMap(pf.createFilter).reduceOption(FilterApi.and) match {
+            case None => plainContext
+            case Some(pred) =>
+              val c = new Configuration(fc)
+              org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(c, pred)
+              newContext(c)
+          }
         })
       }
     // range slice: hand the reader a footer holding ONLY the slice's
@@ -2242,8 +1971,9 @@ class GraftIndexSparkVectorReader(fileParts: Seq[(String, Long, Long, Array[Any]
     // measurable share of small-file scans
     var sliceRows = 0L
     footer.getBlocks.forEach(b => sliceRows += b.getRowCount)
-    val r = new VectorizedParquetRecordReader(convertTz, dtMode, sql.tz,
-      i96Mode, sql.tz, false, math.max(1L, math.min(BatchRows, sliceRows)).toInt)
+    val r = new VectorizedParquetRecordReader(convertTz,
+      dtSpec.mode.toString, dtSpec.timeZone, i96Spec.mode.toString,
+      i96Spec.timeZone, false, math.max(1L, math.min(BatchRows, sliceRows)).toInt)
     // the reader takes the cached footer only together with an open
     // stream; without one it re-reads the footer from the file
     val input = HadoopInputFile.fromPath(p, fc)
@@ -2381,7 +2111,11 @@ class GraftIndexAggReaderFactory(agg: Aggregation, aggSchema: StructType,
           val footer = GraftFooterCache.footer(file, conf.value.value)
           locally {
             val blocks = footer.getBlocks
-            slots.zipWithIndex.foreach { case (((kind, col), i), k) =>
+            slots.zipWithIndex.foreach { case (((kind, scol), i), k) =>
+              // the file's own spelling of the column (case may differ)
+              val col = GraftIndexFilters.fileColumn(
+                footer.getFileMetaData.getSchema, scol, sql.caseSensitive)
+                .getOrElse(scol)
               kind match {
                 case "C" =>
                   counts(k) += GraftFooterCache.recordCount(file, conf.value.value)
@@ -2412,7 +2146,8 @@ class GraftIndexAggReaderFactory(agg: Aggregation, aggSchema: StructType,
                   val fileBest: Any = stored match {
                     case d: java.lang.Integer
                         if aggSchema.fields(i).dataType == DateType &&
-                          sql.dateTimeRebase(footer) == "LEGACY" =>
+                          sql.dateTimeRebase(footer).mode ==
+                            LegacyBehaviorPolicy.LEGACY =>
                       java.lang.Integer.valueOf(org.apache.spark.sql.catalyst
                         .util.RebaseDateTime.rebaseJulianToGregorianDays(d.intValue))
                     case v => v
@@ -2496,22 +2231,5 @@ object GraftIndexAggReaderFactory {
       }
       best
     } finally reader.close()
-  }
-}
-
-/** DATE comparand normalization (round-12): Spark's v1 Filters carry
-  * java.sql.Date or java.time.LocalDate depending on
-  * spark.sql.datetime.java8API.enabled; parquet DATE and Spark's
-  * internal DateType are both the epoch-day Int, so every date
-  * predicate reduces to integer compares once the comparand is
-  * converted here.
-  */
-object GraftIndexDate {
-  def toDays(v: Any): Int = v match {
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-    case d: java.time.LocalDate => d.toEpochDay.toInt
-    case n: Number => n.intValue // already an epoch-day count
-    case other => throw new IllegalStateException(
-      s"graft-index: not a DATE comparand: $other (${other.getClass})")
   }
 }

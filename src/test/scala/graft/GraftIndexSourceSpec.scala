@@ -741,9 +741,22 @@ class GraftIndexSourceSpec extends SparkSpec {
     assert(evo.exceptAll(merged).count() == 0 &&
       merged.exceptAll(evo).count() == 0)
     // the x > 5 hint is a per-file CONSTANT FALSE where x is absent: the
-    // filter must stay exact, not throw on the x-less footer
+    // filter must stay exact, not throw on the x-less footer, and the
+    // x-less file is skipped unopened
+    val opensBefore = graft.sources.GraftIndexSparkVectorReader.opens.get
     assert(evo.where(col("x") > 5L).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    assert(graft.sources.GraftIndexSparkVectorReader.opens.get - opensBefore == 1L,
+      "x > 5 must open only the file that has x")
+    // the skip is exact, not a parquet hint: it stays with Spark's
+    // parquet filter pushdown off
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    try {
+      val opensOff = graft.sources.GraftIndexSparkVectorReader.opens.get
+      assert(evo.where(col("x") > 5L).count() == 2L)
+      assert(graft.sources.GraftIndexSparkVectorReader.opens.get - opensOff == 1L,
+        "without pushdown x > 5 must still open only the file that has x")
+    } finally spark.conf.unset("spark.sql.parquet.filterPushdown")
     // x IS NULL keeps exactly the x-less file's rows
     assert(evo.where(col("x").isNull).select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
@@ -1620,14 +1633,13 @@ class GraftIndexSourceSpec extends SparkSpec {
   }
 
   test("large IN lists (round-12): set-predicate IN and hash-set NOT IN stay exact at 5000 elements on both lanes") {
-    // this spec caught TWO real failure modes before they shipped:
-    // FilterApi.notIn's record-level inspector keeps any value that
-    // differs from ANY set element (broken for ≥2-value sets in
-    // parquet-mr 1.16), and the And-of-notEq chain fallback overflows
-    // the record-level visitor's recursion at 5000 elements — NOT IN
-    // therefore rides the GraftNotInSet UserDefinedPredicate (one
-    // hash lookup per record, depth 1) while IN uses the native set
-    // predicate
+    // this spec once caught two record-level failure modes: parquet-mr
+    // 1.16's NotIn inspector keeps any value that differs from ANY set
+    // element, and a 5000-deep And-of-notEq chain overflows the visitor.
+    // Neither can reach the hints now: Spark's ParquetFilters makes a
+    // long IN parquet's set predicate and gives a NOT IN longer than
+    // spark.sql.parquet.pushdown.inFilterThreshold no hint at all, and
+    // Spark's vectorized reader applies no record-level filter
     val dir = java.nio.file.Files.createTempDirectory("graft_inset").toString + "/t"
     spark.range(0, 20000).selectExpr("id",
       "CASE WHEN id % 13 = 0 THEN CAST(NULL AS LONG) ELSE id % 9999 END AS g")
@@ -1855,6 +1867,104 @@ class GraftIndexSourceSpec extends SparkSpec {
           .agg(min(col("d")), max(col("d"))).collect().toSeq == want)
       } finally spark.conf.unset("spark.sql.adaptive.enabled")
     }
+  }
+
+  test("DATE files from a Spark 2.4 writer: calendar rebase follows the writer version, like spark.read.parquet") {
+    // a pre-3.0 Spark stamped only its version (no legacyDateTime key)
+    // and stored Julian day counts; Spark reads any such file LEGACY
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft_spark24").toString + "/t"
+    val schema = MessageTypeParser.parseMessageType(
+      "message spark_schema { required int64 id; required int32 d (DATE); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
+      .withType(schema)
+      .withExtraMetaData(java.util.Map.of("org.apache.spark.version", "2.4.8"))
+      .build()
+    try {
+      val groups = new SimpleGroupFactory(schema)
+      val first = java.time.LocalDate.of(1000, 1, 1).toEpochDay.toInt
+      (0 until 10).foreach { i =>
+        w.write(groups.newGroup().append("id", i.toLong).append("d",
+          org.apache.spark.sql.catalyst.util.RebaseDateTime
+            .rebaseGregorianToJulianDays(first + i)))
+      }
+    } finally w.close()
+    val raw = spark.read.parquet(dir)
+    def idx = spark.read.format("graft-index").load(dir)
+    assert(raw.orderBy("id").select("d").head().getDate(0) ==
+      java.sql.Date.valueOf("1000-01-01"))
+    assert(idx.collect().map(_.toString).sorted.toSeq ==
+      raw.collect().map(_.toString).sorted.toSeq)
+    assert(idx.where("d = DATE'1000-01-01'").count() == 1L)
+    assert(idx.where("d = DATE'1000-01-01'").count() ==
+      raw.where("d = DATE'1000-01-01'").count())
+    // footer MIN/MAX rebase from the same decision
+    assert(idx.agg(min("d"), max("d")).collect().toSeq ==
+      raw.agg(min("d"), max("d")).collect().toSeq)
+  }
+
+  test("TIMESTAMP and DECIMAL range hints skip row groups, rows exact; filterPushdown=false reads the whole file") {
+    import graft.sources.GraftIndexSparkVectorReader
+    val dir = java.nio.file.Files.createTempDirectory("graft_tsdec").toString + "/t"
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      spark.range(0, 200000)
+        .selectExpr("id", "timestamp_seconds(id) AS ts",
+          "CAST(id / 100 AS DECIMAL(12,2)) AS amt")
+        .coalesce(1).write.option("parquet.block.size", "65536").parquet(dir)
+    } finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    val raw = spark.read.parquet(dir)
+    def probe(pred: String): (Long, Long) = {
+      val before = GraftIndexSparkVectorReader.rowsRead.get
+      val got = spark.read.format("graft-index").load(dir).where(pred).count()
+      (got, GraftIndexSparkVectorReader.rowsRead.get - before)
+    }
+    for (pred <- Seq("ts > timestamp_seconds(190000)", "amt > 1900.00")) {
+      val (got, read) = probe(pred)
+      assert(got == raw.where(pred).count() && got == 9999L, s"$pred: $got")
+      assert(read < 100000L, s"$pred must skip row groups, read $read of 200000")
+      // Spark's own switch turns the parquet hints off, as it does for
+      // spark.read.parquet; rows stay exact
+      spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+      try {
+        val (off, readOff) = probe(pred)
+        assert(off == 9999L, s"$pred without pushdown: $off")
+        assert(readOff == 200000L, s"$pred without pushdown read $readOff of 200000")
+      } finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+    }
+  }
+
+  test("file column names match case-insensitively unless spark.sql.caseSensitive, like spark.read.parquet") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_case").toString + "/t"
+    // an evolved set: one file spells the column x, the other X (and TS)
+    spark.range(0, 10).selectExpr("id", "id AS x", "timestamp_seconds(id) AS ts")
+      .coalesce(1).write.parquet(dir)
+    spark.range(10, 20).selectExpr("id", "id AS X", "timestamp_seconds(id) AS TS")
+      .coalesce(1).write.mode("append").parquet(dir)
+    val schema = "id long, x long, ts timestamp"
+    def idx = spark.read.format("graft-index").schema(schema).load(dir)
+    def raw = spark.read.schema(schema).parquet(dir)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    def same(): Unit = {
+      assert(idx.collect().map(_.toString).sorted.toSeq ==
+        raw.collect().map(_.toString).sorted.toSeq)
+      for (pred <- Seq("x > 5", "ts > timestamp_seconds(5)", "x IS NULL"))
+        assert(ids(idx.where(pred)) == ids(raw.where(pred)), pred)
+      // footer MIN/MAX finds the column under the file's own spelling
+      assert(idx.agg(min("x"), max("x")).collect().toSeq ==
+        raw.agg(min("x"), max("x")).collect().toSeq)
+    }
+    same()
+    assert(ids(idx.where("x > 5")) == (6L until 20L))
+    assert(idx.agg(max("x")).head().getLong(0) == 19L)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      same()
+      assert(ids(idx.where("x > 5")) == (6L until 10L))
+    } finally spark.conf.unset("spark.sql.caseSensitive")
   }
 
   test("DATE partition directories (round-12): dt=YYYY-MM-DD infers DateType, date predicates prune directories") {
