@@ -41,8 +41,9 @@ import org.apache.spark.sql.types._
   * order instead (DotProductSpec pins both behaviors).
   *
   * `cents` is array<struct<cent_id: long, cvec: array<float|double>,
-  * cn: double>> — the collect_list build in Similarity.centArray. Field
-  * ORDER is positional. Returns null only for an empty centroid array.
+  * cn: double>> — the collect_list build in Similarity.centArray, or a
+  * stored index's literal from IvfCentroidCache. Field ORDER is
+  * positional. Returns null only for an empty centroid array.
   */
 case class NearestCentroid(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {

@@ -4,6 +4,7 @@ import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -57,14 +58,17 @@ object Similarity {
     cents.agg(collect_list(struct(col("cent_id"), col("cvec"), col("cn"))).as("__cents"))
 
   /** Nearest-centroid id for one row — the codegen'd
-    * [[graft.functions.NearestCentroid]] loop over `__cents` (see its
-    * scaladoc for why neither a window, an aggregate, nor an `aggregate()`
-    * HOF is the right plan shape for this). No shuffle, no sort, numCells
-    * fused dot products per row, tie-break (cos DESC, cent_id ASC).
+    * [[graft.functions.NearestCentroid]] loop (see its scaladoc for why
+    * neither a window, an aggregate, nor an `aggregate()` HOF is the
+    * right plan shape for this) over `cents`: the broadcast `__cents`
+    * column, or a stored index's centroid literal from
+    * [[IvfCentroidCache]]. No shuffle, no sort, numCells fused dot
+    * products per row, tie-break (cos DESC, cent_id ASC).
     */
-  private def argmaxCell(vec: Column, nsq: Column): Column =
+  private def argmaxCell(vec: Column, nsq: Column,
+      cents: Column = col("__cents")): Column =
     call_function(graft.functions.GraftFunctions.NearestCentroidName,
-      col("__cents"), vec, nsq)
+      cents, vec, nsq)
 
   /** The p nearest cells for one row as an ordered array — the top-p
     * generalization of [[argmaxCell]] ([[graft.functions.NearestCells]]).
@@ -1070,18 +1074,21 @@ object Similarity {
     * ([[probeIvfIndex]]). Retraining (re-picking centroids
     * over the grown corpus) is the offline rebuild, the same split as
     * the delete lane's no-retrain policy.
+    *
+    * The stored centroids come from [[IvfCentroidCache]] as a literal,
+    * the same one the probe assigns its queries with: an admission
+    * launches no centroid job once the cache is warm, only the write.
     */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
     val s = newVecs.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val cents = s.read.parquet(s"$path/cents").coalesce(1) // one-job centroid array
+    val cents = IvfCentroidCache.literal(s, Some(s"$path/cents"),
+      s.read.parquet(s"$path/cents"))
     val vecD = transform(col(vecCol), x => x.cast("double"))
     newVecs.select(col(idCol).as("vec_b"), vecD.as("vb"),
         VectorOps.normSq(vecD).as("nb"))
-      .crossJoin(broadcast(centArray(cents)))
-      .withColumn("cell", argmaxCell(col("vb"), col("nb")))
-      .drop("__cents")
+      .withColumn("cell", argmaxCell(col("vb"), col("nb"), cents))
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
 
@@ -1134,27 +1141,29 @@ object Similarity {
   }
 
   /** PROBE the persisted IVF index ([[writeIvfIndex]]): queries assign
-    * to their cell via the broadcast centroid table (the shuffle-free
-    * argmax fold) in one eager action, then join the partitioned corpus
-    * on the PARTITION column. The probed cell ids become a static
-    * `cell IN (...)` partition filter, so only their directories are
-    * read — pruned at planning time for any query frame, in-memory
-    * batches included. Same top-k contract as [[ivfTopK]].
+    * to their cell against the stored centroids, cached on the driver
+    * ([[IvfCentroidCache]]) — no job for a local batch — then each cell's
+    * queries are looked up per scanned row of the partitioned corpus.
+    * The probed cell ids become a static `cell IN (...)` partition
+    * filter, so only their directories are read — pruned at planning
+    * time for any query frame, in-memory batches included. Same top-k
+    * contract as [[ivfTopK]].
     */
   def probeIvfIndex(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
-    probeIvfIndexVia(queries, idCol, vecCol, k,
+    probeIvfIndexVia(queries, idCol, vecCol, k, Some(s"$path/cents"),
       sub => queries.sparkSession.read.parquet(s"$path/$sub"))
 
   /** [[probeIvfIndex]] through the `graft-index` DataSourceV2 serving
     * table (sources/GraftIndexSource.scala) — identical results
     * (spec-pinned); the connector claims the probed cells' `In(cell, …)`
     * as a pushed partition filter, lists only their directories, and
-    * reports stats covering only them.
+    * reports stats covering only them. No job for a local batch before
+    * the probe itself.
     */
   def probeIvfIndexV2(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
-    probeIvfIndexVia(queries, idCol, vecCol, k,
+    probeIvfIndexVia(queries, idCol, vecCol, k, Some(s"$path/cents"),
       sub => queries.sparkSession.read.format("graft-index").load(s"$path/$sub"))
 
   /** Catalog-routed probe — identical to [[probeIvfIndexV2]], but the
@@ -1166,66 +1175,89 @@ object Similarity {
     * serving story with no filesystem paths in the query. The reader
     * receives the SUB-TABLE name directly (never a slash-joined
     * pseudo-path: an index name containing '/' inside its backticks
-    * would mis-split — round-10 ADVICE).
+    * would mis-split — round-10 ADVICE). The centroid cache keys by the
+    * directory the catalog maps `catalogIndex.cents` to.
     */
   def probeIvfIndexCatalog(catalogIndex: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame =
+      idCol: String, vecCol: String, k: Int): DataFrame = {
+    val s = queries.sparkSession
     probeIvfIndexVia(queries, idCol, vecCol, k,
-      sub => queries.sparkSession.table(s"$catalogIndex.$sub"))
+      graft.sources.GraftIndexCatalog.dirOf(s, s"$catalogIndex.cents"),
+      sub => s.table(s"$catalogIndex.$sub"))
+  }
 
   /** Probe from ALREADY-LOADED index frames — the STREAMING serving
     * shape: `cells` is the accumulated admissions stream (the
     * connector's MicroBatchStream over `$path/cells`), `cents` any
     * batch read of the stored centroids. Identical results to the
     * path-routed probe over the same state (spec-pinned), so a probe
-    * over replayed admissions IS the batch probe.
+    * over replayed admissions IS the batch probe. A frame carries no
+    * cache key, so `cents` is collected once per call.
     */
   def probeIvfIndexFrames(cents: DataFrame, cells: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
-    probeIvfIndexVia(queries, idCol, vecCol, k,
+    probeIvfIndexVia(queries, idCol, vecCol, k, None,
       sub => if (sub == "cents") cents else cells)
 
+  /** The probe's one assignment path: (q_id, va, na, cell), `cell` the
+    * [[argmaxCell]] kernel over the stored centroid literal `cents`.
+    * Collecting it launches no job over a local batch (Spark's
+    * ConvertToLocalRelation evaluates the projection on the driver) and
+    * one map-only job over any other frame. The cell is cast to the
+    * STORED side's partition type `cellType` (always safe: probe cells
+    * come from the same stored centroid ids that named the
+    * directories), so the `cell IN (...)` literals carry the stored
+    * type — a mismatch would put a Cast on the scan's column, which the
+    * V2 filter translation cannot push.
+    */
+  private[graft] def assignQueries(queries: DataFrame, idCol: String,
+      vecCol: String, cents: Column, cellType: DataType): DataFrame = {
+    val vecD = transform(col(vecCol), x => x.cast("double"))
+    queries.select(col(idCol).as("q_id"), vecD.as("va"),
+        VectorOps.normSq(vecD).as("na"))
+      .withColumn("cell", argmaxCell(col("va"), col("na"), cents).cast(cellType))
+  }
+
   /** `reader` maps a sub-table NAME ("cents" / "cells") to its frame —
-    * each route closes over its own prefix (path or catalog identifier).
+    * each route closes over its own prefix (path or catalog identifier);
+    * `centsDir` is the stored centroids' directory, the
+    * [[IvfCentroidCache]] key (None: collect them every call).
     *
-    * The query batch is assigned to cells in ONE action that collects
-    * its Q assigned rows — the rows the broadcast collects anyway — and
-    * the probed cell ids become a static `cell IN (...)` predicate on
-    * the cells scan, so every route prunes directories at PLANNING time
-    * whatever the query frame is. Dynamic
-    * partition pruning cannot do this: Spark plants its subquery only
+    * Work: the query batch is assigned to cells ([[assignQueries]]) and
+    * collected — no job for a local batch, one map-only job for any
+    * other frame. The probed cell ids become a
+    * static `cell IN (...)` predicate on the cells scan, so every route
+    * prunes directories at PLANNING time whatever the query frame is
+    * (dynamic partition pruning cannot: Spark plants its subquery only
     * when the query side carries a likely-selective Filter, and an
-    * in-memory serving batch carries none (the scan then read the whole
-    * index). Results are unchanged by construction: a row outside every
-    * probed cell never joins.
+    * in-memory serving batch carries none). Each scanned row then finds
+    * its cell's queries in a literal map cell → queries, so the probe
+    * itself is the scan's shuffle-map job and the top-k window's result
+    * job — no broadcast, whose build over a local relation would cost a
+    * job of its own. Results are unchanged by construction: a row outside
+    * every probed cell has no queries to pair with.
     */
   private def probeIvfIndexVia(queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
+      idCol: String, vecCol: String, k: Int, centsDir: Option[String],
       reader: String => DataFrame): DataFrame = {
     val s = queries.sparkSession
     graft.functions.GraftFunctions.register(s)
-    // one partition: the centroid array is then one job, not a
-    // shuffle-map job plus a result job
-    val cents = reader("cents").coalesce(1)
+    val cents = IvfCentroidCache.literal(s, centsDir, reader("cents"))
     val corp = reader("cells")
-    val vecD = transform(col(vecCol), x => x.cast("double"))
-    // the probe's cell key is cast to the STORED side's partition type
-    // (always safe: probe cells come from the same stored centroid ids
-    // that named the directories), so the `cell IN (...)` literals carry
-    // the stored type — a mismatch would put a Cast on the scan's column,
-    // which the V2 filter translation cannot push
-    val assigned = queries.select(col(idCol).as("q_id"), vecD.as("va"),
-        VectorOps.normSq(vecD).as("na"))
-      .crossJoin(broadcast(centArray(cents)))
-      .withColumn("cell",
-        argmaxCell(col("va"), col("na")).cast(corp.schema("cell").dataType))
-      .drop("__cents")
-    val rows = assigned.collect()
-    val q = s.createDataFrame(java.util.Arrays.asList(rows: _*), assigned.schema)
-    val probedCells = rows.map(_.getAs[Any]("cell")).filter(_ != null).distinct
+    val cellType = corp.schema("cell").dataType
+    val assigned = assignQueries(queries, idCol, vecCol, cents, cellType)
+    val byCell = assigned.collect().toSeq.filter(!_.isNullAt(3)).groupBy(_.get(3))
+    // cell → array<struct<q_id, va, na>>; typed by cast so an empty
+    // batch still resolves
+    val lookupType = MapType(cellType, ArrayType(StructType(
+      assigned.schema.fields.take(3).map(_.copy(nullable = true)))))
+    val lookup = map(byCell.toSeq.flatMap { case (cell, rs) =>
+      Seq(lit(cell), array(rs.map(r => struct(lit(r.get(0)).as("q_id"),
+        typedLit(r.getSeq[Double](1)).as("va"), lit(r.getDouble(2)).as("na"))): _*))
+    }: _*).cast(lookupType)
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    corp.where(col("cell").isin(probedCells: _*))
-      .join(broadcast(q), Seq("cell"))
+    corp.where(col("cell").isin(byCell.keys.toSeq: _*))
+      .select(col("vec_b"), col("vb"), col("nb"), inline(element_at(lookup, col("cell"))))
       .where(col("q_id") =!= col("vec_b"))
       .withColumn("cosine",
         VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
@@ -1741,4 +1773,68 @@ object Similarity {
         round(col("num") / col("den"), 6).as("rayleigh"),
         round(col("num") * 1000.0 / col("den") / col("tr"), 6).as("ev_share"))
   }
+}
+
+/** DRIVER cache of stored IVF centroid sets, as the literal
+  * array<struct<cent_id, cvec, cn>> that [[graft.functions.NearestCentroid]]
+  * folds over. A serving index's centroids change only on a
+  * [[Similarity.writeIvfIndex]] rebuild (admission and erasure rewrite
+  * `cells`, never `cents`), so each probe and admission re-listing the
+  * `cents` directory and comparing its files' (path, length, mtime) —
+  * the [[graft.sources.GraftFooterCache]] key — is exact: a rebuild
+  * writes new part files and misses by itself. One entry per directory,
+  * replaced on a miss, bounded by entry count with random eviction like
+  * the footer cache; an entry is numCells × dim doubles.
+  */
+private[graft] object IvfCentroidCache {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.SparkSession
+  private val MaxEntries = 64
+  private val m = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], Column)]()
+  /** Hit/miss counters for the spec (a warm probe must not re-read). */
+  private[graft] val hits = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val misses = new java.util.concurrent.atomic.AtomicLong
+
+  /** The centroid literal for the index whose `cents` live in `dir`;
+    * `read` is only planned on a miss, and always when `dir` is None.
+    */
+  def literal(s: SparkSession, dir: Option[String], read: => DataFrame): Column =
+    dir.flatMap(d => files(s, d).map(d -> _)) match {
+      case None => decode(read)
+      case Some((d, key)) =>
+        val cached = m.get(d)
+        if (cached != null && cached._1 == key) { hits.incrementAndGet(); cached._2 }
+        else {
+          misses.incrementAndGet()
+          val fresh = decode(read)
+          if (cached == null && m.size >= MaxEntries) {
+            val it = m.keySet().iterator()
+            if (it.hasNext) { it.next(); it.remove() }
+          }
+          m.put(d, (key, fresh))
+          fresh
+        }
+    }
+
+  /** (path, length, mtime) of the directory's data files, sorted; None
+    * when it does not exist (the reader then reports it).
+    */
+  private def files(s: SparkSession, dir: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else Some(fs.listStatus(p).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
+  }
+
+  /** One collect of the centroid rows. Array order does not matter:
+    * the kernel's (cos DESC, cent_id ASC) tie-break is total.
+    */
+  private def decode(cents: DataFrame): Column =
+    typedLit(cents.select(col("cent_id").cast("long"),
+        col("cvec").cast("array<double>"), col("cn").cast("double"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))))
 }

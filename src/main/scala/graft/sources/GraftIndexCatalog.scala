@@ -44,7 +44,7 @@ class GraftIndexCatalog extends TableCatalog with SupportsNamespaces {
 
   override def name(): String = catalogName
 
-  private def dirOf(segments: Seq[String]): Path =
+  private[graft] def dirOf(segments: Seq[String]): Path =
     segments.foldLeft(root)((p, s) => new Path(p, s))
 
   private def fs = root.getFileSystem(GraftIndexTable.activeHadoopConf())
@@ -121,4 +121,19 @@ class GraftIndexCatalog extends TableCatalog with SupportsNamespaces {
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
     throw new UnsupportedOperationException(
       s"graft-index catalog '$catalogName' is read-only")
+}
+
+object GraftIndexCatalog {
+  /** Directory behind a catalog-qualified table name
+    * (`catalog.index.sub`), when its first part names a registered
+    * [[GraftIndexCatalog]]; None for any other catalog. Resolves the
+    * name only: no table is loaded and nothing is read.
+    */
+  private[graft] def dirOf(s: org.apache.spark.sql.SparkSession,
+      name: String): Option[String] = {
+    val parts = s.sessionState.sqlParser.parseMultipartIdentifier(name)
+    scala.util.Try(s.sessionState.catalogManager.catalog(parts.head)).toOption
+      .collect { case c: GraftIndexCatalog if parts.size > 1 =>
+        c.dirOf(parts.tail).toString }
+  }
 }

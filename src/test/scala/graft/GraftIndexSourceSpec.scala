@@ -845,6 +845,11 @@ class GraftIndexSourceSpec extends SparkSpec {
     assert(viaCat.count() > 0)
     assert(viaCat.exceptAll(viaPath).count() == 0 &&
       viaPath.exceptAll(viaCat).count() == 0)
+    // both routes key the driver centroid cache by the same directory
+    val misses = graft.operators.IvfCentroidCache.misses.get
+    Similarity.probeIvfIndexCatalog("graft_cat_t.ivf_a", q, "vec_id", "embedding", 5)
+    assert(graft.operators.IvfCentroidCache.misses.get == misses,
+      "the catalog route missed the centroid entry the path route filled")
   }
 
   test("streaming read face: ordered replay of admissions ≡ batch state; streamed probe ≡ batch probe") {

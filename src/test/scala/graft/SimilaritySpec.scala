@@ -591,6 +591,148 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** `body`'s result and the Spark jobs it launched, counted by an
+    * `onJobStart` listener over a job group of its own. Listener events
+    * arrive asynchronously, so a marker job in a second group runs after
+    * `body` and the count is read once the marker's start is seen.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-counted", "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("graft-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("graft-marker"), "listener never saw the marker job")
+      (out, groups.toArray.count(_ == "graft-counted"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // `spark.read.parquet` infers the cells schema with a Spark job of its
+  // own on every call; graft-index infers it on the driver. The probe's
+  // budget is two jobs on top of what its route's reader costs.
+  test("persisted IVF index: a warm probe of a 10-query local batch runs two Spark jobs on both routes") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    val batch = corpus.where(col("vec_id") % 50 === 0).orderBy("vec_id").limit(10).collect()
+    val queries = spark.createDataFrame(java.util.Arrays.asList(batch: _*), corpus.schema)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_jobs").toString
+    try {
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 25, path)
+      val probed = spark.read.parquet(s"$path/cells")
+        .where(col("vec_b").isin(batch.map(_.getAs[Long]("vec_id")): _*))
+        .select(col("cell").cast("long")).distinct().as[Long].collect().toSet
+      val inPlan = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 5, 25)
+        .as[(Long, Int, Long)].collect().toSet
+      Seq(("parquet", Similarity.probeIvfIndex _, () => spark.read.parquet(s"$path/cells")),
+          ("graft-index", Similarity.probeIvfIndexV2 _,
+            () => spark.read.format("graft-index").load(s"$path/cells"))).foreach {
+        case (route, probeOf, readCells) =>
+        val readJobs = jobsOf(readCells())._2
+        assert(readJobs == (if (route == "parquet") 1 else 0), s"$route: reader costs $readJobs jobs")
+        probeOf(path, queries, "vec_id", "embedding", 5).collect() // warms the centroid cache
+        val ((probe, got), jobs) = jobsOf {
+          val p = probeOf(path, queries, "vec_id", "embedding", 5)
+          (p, p.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
+        }
+        assert(jobs - readJobs <= 2, s"$route: a warm probe launched $jobs Spark jobs")
+        assert(got == inPlan, s"$route: probe diverged from ivfTopK")
+        val scans = cellScans(probe)
+        assert(scans.size == 1 && prunedCells(scans.head) == probed,
+          s"$route: scan filter cells ${scans.map(prunedCells)} != probed $probed")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
+  }
+
+  test("persisted IVF index: a rebuild invalidates the cached centroids; admission and erasure keep them") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    val queries = corpus.where(col("vec_id") % 50 === 0)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_cache").toString
+    def probe = Similarity.probeIvfIndexV2(path, queries, "vec_id", "embedding", 5)
+      .as[(Long, Int, Long)].collect().toSet
+    def ivf(every: Int) = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", 5, every)
+      .as[(Long, Int, Long)].collect().toSet
+    val cache = graft.operators.IvfCentroidCache
+    try {
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 25, path)
+      assert(probe == ivf(25))
+      assert(probe == ivf(25))
+      // same path, other centroids: a stale entry would assign the old cells
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 20, path)
+      val misses = cache.misses.get
+      val rebuilt = probe
+      assert(ivf(20) != ivf(25), "fixture: both builds probe alike")
+      assert(rebuilt == ivf(20), "probe after a rebuild must use the new centroids")
+      assert(cache.misses.get == misses + 1, "the rebuild must miss the cache")
+      // admission and erasure rewrite cells, never cents: the entry stays valid
+      Similarity.deleteFromIvfIndex(path, queries.select("vec_id").limit(3))
+      Similarity.appendToIvfIndex(queries.limit(3), "vec_id", "embedding", path)
+      val (hits, missesBefore) = (cache.hits.get, cache.misses.get)
+      val afterWrites = probe
+      assert(cache.hits.get == hits + 1 && cache.misses.get == missesBefore,
+        "admission or erasure invalidated the centroid entry")
+      val uncached = Similarity.probeIvfIndexFrames(spark.read.parquet(s"$path/cents"),
+          spark.read.format("graft-index").load(s"$path/cells"), queries, "vec_id", "embedding", 5)
+        .as[(Long, Int, Long)].collect().toSet
+      assert(afterWrites == uncached)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
+  }
+
+  test("IVF probe assignment: local batch (no job) and scanned frame (one job) probe the stored cell; ties go to the smaller cent_id") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_assign").toString
+    try {
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 25, path)
+      val cells = spark.read.parquet(s"$path/cells")
+      val stored = cells.select(col("vec_b"), col("cell").cast("long"))
+        .as[(Long, Long)].collect().toMap
+      val cents = graft.operators.IvfCentroidCache.literal(spark, Some(s"$path/cents"),
+        spark.read.parquet(s"$path/cents"))
+      val cellType = cells.schema("cell").dataType
+      val local = spark.createDataFrame(java.util.Arrays.asList(corpus.collect(): _*), corpus.schema)
+      Seq("local batch" -> (local, 0), "parquet frame" -> (corpus, 1)).foreach {
+        case (mode, (frame, expectJobs)) =>
+          val assigned = Similarity.assignQueries(frame, "vec_id", "embedding", cents, cellType)
+          val (rows, jobs) = jobsOf(assigned.collect())
+          assert(jobs == expectJobs, s"$mode: assignment launched $jobs jobs")
+          val got = rows.map(r => r.getLong(0) -> r.get(3).toString.toLong).toMap
+          assert(got == stored, s"$mode: a query probed a cell other than its stored one")
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
+    // (1, 1) is equidistant from the centroids (1, 0) and (0, 1), bit for bit
+    val tiny = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.9f, 0.2f)), (2L, Seq(0.8f, 0.3f)),
+      (3L, Seq(0.0f, 1.0f)), (4L, Seq(0.2f, 0.9f)), (5L, Seq(0.3f, 0.8f))).toDF("vec_id", "embedding")
+    val tie = Seq((100L, Seq(1.0f, 1.0f))).toDF("vec_id", "embedding")
+    val tinyPath = java.nio.file.Files.createTempDirectory("graft_ivf_tie").toString
+    try {
+      Similarity.writeIvfIndex(tiny, "vec_id", "embedding", 3, tinyPath)
+      val got = Similarity.probeIvfIndex(tinyPath, tie, "vec_id", "embedding", 3)
+        .as[(Long, Int, Long)].collect().toSet
+      assert(got.map(_._3) == Set(0L, 1L, 2L), s"the tie must probe cent 0's cell: $got")
+      assert(got == Similarity.ivfTopK(tiny, tie, "vec_id", "embedding", 3, 3)
+        .as[(Long, Int, Long)].collect().toSet)
+      // an empty batch probes no cell and returns no rows
+      assert(Similarity.probeIvfIndex(tinyPath, tie.limit(0), "vec_id", "embedding", 3)
+        .count() == 0)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tinyPath))
+    }
+  }
+
   test("dsirScores: self-target is identically zero; target slice scores higher") {
     import graft.operators.Sampling
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
