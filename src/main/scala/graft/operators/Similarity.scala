@@ -1100,31 +1100,39 @@ object Similarity {
     * deliberately NOT retrained: a serving index keeps its cell
     * geometry stable under deletes and retrains offline.
     *
-    * The touched-cell id list is a driver-side collect of a
-    * distinct-cell frame — bounded by the number of cells, the same
-    * documented tiny-collect as Scd2Stream's touched-slice ids. The
-    * remaining rows are localCheckpointed BEFORE the overwrite (Spark
-    * refuses to overwrite a path its plan still reads). A cell fully
-    * emptied by the tombstones writes no partition under dynamic
-    * overwrite, so its directory is removed explicitly.
+    * One aggregate pass over `cells` (read through `graft-index`, so
+    * no schema-inference job) yields each touched cell with the number
+    * of rows it keeps: a driver-side collect bounded by the number of
+    * cells, the same documented tiny-collect as Scd2Stream's
+    * touched-slice ids. The tombstones are localCheckpointed first, so
+    * that pass and the rewrite see one tombstone set. The rewrite reads
+    * the touched cells it overwrites; dynamic overwrite stages its
+    * output and replaces each cell's directory only at job commit,
+    * after every read. A cell fully emptied by the tombstones writes no
+    * partition under dynamic overwrite, so its directory is removed
+    * explicitly.
     */
   def deleteFromIvfIndex(path: String, tombstones: DataFrame): Unit = {
     val s = tombstones.sparkSession
-    val corp = s.read.parquet(s"$path/cells")
+    val corp = s.read.format("graft-index").load(s"$path/cells")
     val tomb = tombstones
       .select(col(tombstones.columns.head).as("vec_b")).distinct()
       .localCheckpoint()
-    val touched = corp.join(broadcast(tomb), Seq("vec_b"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0))
-    if (touched.isEmpty) return
-    val remain = corp.where(col("cell").isin(touched: _*))
-      .join(broadcast(tomb), Seq("vec_b"), "left_anti")
-      .localCheckpoint()
+    val census = corp
+      .join(broadcast(tomb.withColumn("__t", lit(1))), Seq("vec_b"), "left")
+      .groupBy("cell")
+      .agg(count(col("__t")).as("gone"), count(lit(1)).as("n"))
+      .where(col("gone") > 0)
+      .collect()
+    if (census.isEmpty) return
+    val touched = census.map(_.get(0))
+    val kept = census.filter(r => r.getLong(2) > r.getLong(1)).map(_.get(0)).toSet
     // per-write dynamic overwrite (r14) — no session-global conf window
-    remain.write.mode("overwrite")
+    corp.where(col("cell").isin(touched: _*))
+      .join(broadcast(tomb), Seq("vec_b"), "left_anti")
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cell").parquet(s"$path/cells")
-    val kept = remain.select("cell").distinct().collect().map(_.get(0)).toSet
     // Resolve the filesystem OF THE INDEX PATH, not fs.defaultFS: with an
     // s3a:// or hdfs:// index under a file:// default, FileSystem.get would
     // target the wrong FS and the emptied-cell cleanup would silently no-op,

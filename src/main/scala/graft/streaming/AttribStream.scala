@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   * expired click can never attribute again), and the attribution
   * side folds each batch's scored purchases into an ADDITIVE
   * (day, counts, latency-sum) frame — ≤ |days| rows forever, never a
-  * growing per-purchase history. The batchId ledger makes the
-  * additive fold replay-safe (the HistState discipline).
+  * growing per-purchase history. Both frames fold under one
+  * [[FoldState]] replay guard, which makes the additive fold
+  * replay-safe.
   *
   * `initial` seeds the CLICK state only (the pre-stream picture a
   * dimension load provides); attribution accounting starts at the
@@ -33,20 +34,20 @@ import org.apache.spark.sql.functions._
 object AttribStream {
 
   final class AttribState(initial: DataFrame, lookbackNs: Long,
-      dayNs: Long) {
-    /** (user_id, click_ts): the latest click seen per user. */
-    @volatile var lastClick: DataFrame = initial
+      dayNs: Long) extends FoldState {
+    private val clicks = snapshot(initial
       .where(col("event_type") === "click")
-      .groupBy("user_id").agg(max(col("ts")).as("click_ts"))
-      .localCheckpoint()
+      .groupBy("user_id").agg(max(col("ts")).as("click_ts")))
+    private val days =
+      snapshot(dailyOf(scoreAgainst(initial.where(lit(false)), clicks.get)))
+
+    /** (user_id, click_ts): the latest click seen per user. */
+    def lastClick: DataFrame = clicks.get
     /** Additive per-day attribution state: purchases, attributed,
       * exact latency-ns sum. Seeded schema-correct and empty so a
       * probe before the first batch returns zero rows, not an error.
       */
-    @volatile var daily: DataFrame =
-      dailyOf(scoreAgainst(initial.where(lit(false)), lastClick))
-        .localCheckpoint()
-    private val applied = scala.collection.mutable.Set.empty[Long]
+    def daily: DataFrame = days.get
 
     /** The batch query's own union-and-window pass over batch ∪ the
       * carried state as synthetic clicks → per-purchase attribution.
@@ -85,25 +86,17 @@ object AttribStream {
         sum(when(col("__attr") === 1, col("ts") - col("__click_ts"))
           .otherwise(0L)).as("lat_ns"))
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch (additive state)
-      val scored = scoreAgainst(batch, lastClick)
-      val oldD = daily
-      daily = oldD.unionByName(dailyOf(scored))
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      days.advance(daily.unionByName(dailyOf(scoreAgainst(batch, lastClick)))
         .groupBy("day")
         .agg(sum("n_purchases").as("n_purchases"),
           sum("n_attributed").as("n_attributed"),
-          sum("lat_ns").as("lat_ns"))
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(oldD)
-      val clicks = batch
+          sum("lat_ns").as("lat_ns")))
+      val batchClicks = batch
         .where(col("event_type") === "click")
         .groupBy("user_id").agg(max(col("ts")).as("click_ts"))
-      val oldC = lastClick
-      lastClick = oldC.unionByName(clicks)
-        .groupBy("user_id").agg(max(col("click_ts")).as("click_ts"))
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(oldC)
+      clicks.advance(lastClick.unionByName(batchClicks)
+        .groupBy("user_id").agg(max(col("click_ts")).as("click_ts")))
     }
 
     /** Daily rollup off the folded state — the same output columns as

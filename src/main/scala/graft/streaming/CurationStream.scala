@@ -47,7 +47,10 @@ import org.apache.spark.sql.functions._
   * never re-shuffles in the bucketed form) + an append + a ≤ 2·quota
   * per-lang merge. Carried state: the on-disk index (O(corpus) — but
   * disk, not executor memory), the quota-bounded sample state, and a
-  * per-language additive funnel frame. batchId ledger = replay-safe.
+  * per-language additive funnel frame, both [[FoldState]] snapshots
+  * under one replay guard. The batch's scored frame, its checkpointed
+  * near-dup pair sets and its removed-id set are released before the
+  * sink returns.
   */
 object CurationStream {
 
@@ -56,55 +59,51 @@ object CurationStream {
       minQuality: Double, langs: Seq[String],
       numPerm: Int, rowsPerBand: Int, tau: Double, mode: Dedup.HashMode,
       quota: Int, sampleSalt: String,
-      unitsCol: String, budget: Long, packSalt: String) {
+      unitsCol: String, budget: Long, packSalt: String) extends FoldState {
 
     /** Per-lang top-`quota` survivors with their sample rank key. */
-    @volatile private var sampleState: DataFrame = _
+    private val sample = emptySnapshot()
     /** Per-lang additive (scored, prefiltered, removed) doc/char masses. */
-    @volatile private var funnelState: DataFrame = _
-    private val applied = scala.collection.mutable.Set.empty[Long]
+    private val funnel = emptySnapshot()
     private var indexInitialized = false
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch: no-op
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
       graft.functions.GraftFunctions.register(batch.sparkSession)
       val t = col(textCol)
-      val scored = batch
-        .withColumn("quality", TextAnalysis.qualityScore(t))
-        .withColumn("pred_lang", TextAnalysis.langId(t))
-        .localCheckpoint()
-      val pre = scored.where(col("quality") >= minQuality &&
-        col("pred_lang").isin(langs.map(x => x: Any): _*))
-      val intra = Dedup.minhashLshPairs(pre, idCol, textCol,
-          numPerm, rowsPerBand, tau, mode)
-        .select(col("doc_b").as(idCol))
-      val cross =
-        if (!indexInitialized) intra.limit(0)
-        else Dedup.probeMinhashIndex(indexPath, pre, idCol, textCol,
+      FoldState.scratch(batch
+          .withColumn("quality", TextAnalysis.qualityScore(t))
+          .withColumn("pred_lang", TextAnalysis.langId(t))) { scored =>
+        val pre = scored.where(col("quality") >= minQuality &&
+          col("pred_lang").isin(langs.map(x => x: Any): _*))
+        val intra = Dedup.minhashLshPairs(pre, idCol, textCol,
             numPerm, rowsPerBand, tau, mode)
-          .select(col("new_id").as(idCol))
-      val removedIds = intra.unionByName(cross).distinct().localCheckpoint()
-      val survivors = pre.join(broadcast(removedIds), Seq(idCol), "left_anti")
-      if (!indexInitialized) {
-        Dedup.writeMinhashIndex(pre, idCol, textCol, numPerm, rowsPerBand,
-          mode, indexPath)
-        indexInitialized = true
-      } else
-        Dedup.appendMinhashIndex(pre, idCol, textCol, numPerm, rowsPerBand,
-          mode, indexPath)
-      val batchTop = topQuota(survivors.select(col(idCol), col("pred_lang"),
-        col("quality"), col(unitsCol),
-        Dedup.polyHash(concat(lit(sampleSalt), t)).as("__srank")))
-      val oldS = sampleState
-      sampleState = (if (oldS == null) batchTop
-        else topQuota(oldS.unionByName(batchTop))).localCheckpoint()
-      if (oldS != null) Scd2Stream.releaseSnapshot(oldS)
-      val removedRows = pre.join(broadcast(removedIds), Seq(idCol), "left_semi")
-      val fb = funnelOf(scored, pre, removedRows)
-      val oldF = funnelState
-      funnelState = (if (oldF == null) fb else mergeFunnel(oldF, fb))
-        .localCheckpoint()
-      if (oldF != null) Scd2Stream.releaseSnapshot(oldF)
+          .select(col("doc_b").as(idCol))
+        val cross =
+          if (!indexInitialized) intra.limit(0)
+          else Dedup.probeMinhashIndex(indexPath, pre, idCol, textCol,
+              numPerm, rowsPerBand, tau, mode)
+            .select(col("new_id").as(idCol))
+        val found = intra.unionByName(cross)
+        // checkpointed before this batch's signatures are admitted, so
+        // the probe never sees them
+        FoldState.scratch(found.distinct()) { removedIds =>
+          FoldState.release(found) // Dedup's checkpointed pair sets
+          val survivors = pre.join(broadcast(removedIds), Seq(idCol), "left_anti")
+          if (!indexInitialized) {
+            Dedup.writeMinhashIndex(pre, idCol, textCol, numPerm, rowsPerBand,
+              mode, indexPath)
+            indexInitialized = true
+          } else
+            Dedup.appendMinhashIndex(pre, idCol, textCol, numPerm, rowsPerBand,
+              mode, indexPath)
+          sample.accumulate(topQuota(survivors.select(col(idCol),
+            col("pred_lang"), col("quality"), col(unitsCol),
+            Dedup.polyHash(concat(lit(sampleSalt), t)).as("__srank"))))(
+            (s, b) => topQuota(s.unionByName(b)))
+          val removedRows = pre.join(broadcast(removedIds), Seq(idCol), "left_semi")
+          funnel.accumulate(funnelOf(scored, pre, removedRows))(mergeFunnel)
+        }
+      }
     }
 
     /** Union + re-cut of the per-lang sample (the LeaderboardStream
@@ -134,16 +133,14 @@ object CurationStream {
 
     /** The packed-corpus rollup ≡ ext_corpus_curate's one-shot result
       * (pack is a read-time function of the folded sample set). */
-    def curated: DataFrame = {
-      require(sampleState != null, "no micro-batch folded yet")
-      Sampling.packSequences(sampleState, Seq("pred_lang"), idCol, unitsCol,
+    def curated: DataFrame =
+      Sampling.packSequences(sample.get, Seq("pred_lang"), idCol, unitsCol,
           budget, packSalt)
         .groupBy("pred_lang", "pack_id")
         .agg(count(lit(1)).as("n_docs"),
           sum(col(unitsCol)).as("total_chars"),
           sum(col("spans_next")).cast("long").as("n_spanning"),
           min(col("quality")).as("min_quality"))
-    }
 
     /** Per-(pred_lang, lineage-bitmask) funnel ≡ ext_corpus_lineage's
       * rollup: masks 0/1/3 read off the additive funnel state, 7/15 off
@@ -151,15 +148,14 @@ object CurationStream {
       * CorpusPipeline.lineage).
       */
     def lineageRollup: DataFrame = {
-      require(funnelState != null, "no micro-batch folded yet")
-      val packed = Sampling.packSequences(sampleState, Seq("pred_lang"),
+      val packed = Sampling.packSequences(sample.get, Seq("pred_lang"),
         idCol, unitsCol, budget, packSalt)
       val smp = packed.groupBy("pred_lang").agg(
         count(lit(1)).as("n_smp"), sum(col(unitsCol)).as("c_smp"),
         sum(when(col("spans_next") === 1, 1L).otherwise(0L)).as("n_span"),
         sum(when(col("spans_next") === 1, col(unitsCol)).otherwise(0L))
           .as("c_span"))
-      val masks = funnelState.join(smp, Seq("pred_lang"), "left").na.fill(0L)
+      val masks = funnel.get.join(smp, Seq("pred_lang"), "left").na.fill(0L)
         .select(col("pred_lang"), explode(array(
           struct(lit(0).as("lineage"),
             (col("n_scored") - col("n_pre")).as("n_docs"),

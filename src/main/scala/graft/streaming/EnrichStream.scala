@@ -21,36 +21,22 @@ import org.apache.spark.sql.DataFrame
   *
   * foreachBatch delivers at-least-once: enrichment output is NOT
   * row-identity-deduplicable in general (two legitimate identical fact
-  * rows must both survive), so replays are folded away by the batchId
-  * LEDGER, the GraphIngestStream discipline. The ledger is
-  * per-incarnation; across driver restarts the sink's own streaming
-  * checkpoint is what prevents epoch re-delivery.
+  * rows must both survive), so replays are folded away by
+  * [[FoldState]]'s replay guard.
   */
 object EnrichStream {
 
   final class EnrichState(dim: DataFrame, key: String, tsCol: String,
-      tiebreak: String, payloadCols: Seq[String]) {
-    @volatile private var acc: DataFrame = _
-    private val applied = scala.collection.mutable.Set.empty[Long]
+      tiebreak: String, payloadCols: Seq[String]) extends FoldState {
+    private val acc = emptySnapshot()
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch: already enriched
-      val got = AsofJoin.asofJoinExec(batch, dim, key, tsCol, tiebreak,
-        payloadCols)
-      val old = acc
-      // eager checkpoint: the new snapshot is fully materialized before
-      // the superseded one's blocks are released
-      acc = (if (old == null) got else old.unionByName(got)).localCheckpoint()
-      if (old != null) Scd2Stream.releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      acc.accumulate(AsofJoin.asofJoinExec(batch, dim, key, tsCol, tiebreak,
+        payloadCols))(_ unionByName _)
     }
 
     /** All enriched fact rows so far; at least one batch must have been
-      * folded (there is no session to make an empty frame from before
-      * that).
-      */
-    def enriched: DataFrame = {
-      require(acc != null, "no micro-batch folded yet")
-      acc
-    }
+      * folded. */
+    def enriched: DataFrame = acc.get
   }
 }

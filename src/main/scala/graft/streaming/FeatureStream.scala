@@ -16,46 +16,38 @@ import org.apache.spark.sql.functions._
   * static sides, the [[EnrichStream]]/[[IntervalStream]] argument
   * composed), so aggregate-at-read ≡ the one-shot batch composite.
   *
-  * foreachBatch is at-least-once; replays fold away via the batchId
-  * ledger. The ledger is per-incarnation; across restarts the sink's
-  * streaming checkpoint prevents epoch re-delivery.
+  * foreachBatch is at-least-once; replays fold away via
+  * [[FoldState]]'s replay guard.
   */
 object FeatureStream {
 
   final class FeatureState(clicks: DataFrame, views: DataFrame,
-      key: String, tsCol: String, tiebreak: String) {
-    @volatile private var acc: DataFrame = _
-    private val applied = scala.collection.mutable.Set.empty[Long]
+      key: String, tsCol: String, tiebreak: String) extends FoldState {
+    private val acc = emptySnapshot()
 
     /** `batch` is (key, ts, tiebreak) purchase rows; `clicks` is
       * (key, ts, tiebreak, click_id, click_value); `views` is the
       * stamped validity chain (key, vfrom, vto, view_id).
       */
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
       val enriched = AsofJoin.asofJoinExec(batch, clicks, key, tsCol,
         tiebreak, Seq("click_id", "click_value"))
       val aligned = IntervalJoin.intervalJoinExec(
         enriched.withColumn("vfrom", col(tsCol))
           .withColumn("vto", col(tsCol) + lit(1L)),
         views, key, "vfrom", "vto", Seq("view_id"))
-      val old = acc
-      acc = (if (old == null) aligned else old.unionByName(aligned))
-        .localCheckpoint()
-      if (old != null) Scd2Stream.releaseSnapshot(old)
+      acc.accumulate(aligned)(_ unionByName _)
     }
 
     /** The per-user feature frame over everything aligned so far —
       * identical to the one-shot composite's aggregate over the same
       * purchases.
       */
-    def features: DataFrame = {
-      require(acc != null, "no micro-batch folded yet")
-      acc.groupBy(col(key))
+    def features: DataFrame =
+      acc.get.groupBy(col(key))
         .agg(count(lit(1)).as("n_purchases"),
           count(col("click_id")).as("n_clicked"),
           round(sum(col("click_value")), 3).as("sum_click_value"),
           countDistinct(col("view_id")).as("n_view_versions"))
-    }
   }
 }

@@ -13,25 +13,23 @@ import org.apache.spark.sql.DataFrame
   * every append ranks against the same stored quantizer and the edge
   * merge is a semilattice fold under immutable pair scores) is exactly
   * what makes the stream correct under any micro-batch boundary
-  * placement; the batchId ledger makes a replayed epoch a no-op.
+  * placement; [[FoldState]]'s replay guard makes a replayed epoch a
+  * no-op.
   *
   * State is the ON-DISK index — the stream carries no in-memory frame
   * at all, so a driver restart resumes from the persisted files plus
-  * the sink's own checkpointed ledger (the IVF/minhash incremental
+  * the query's own streaming checkpoint (the IVF/minhash incremental
   * index discipline, on the graph structure).
   */
 object GraphIngestStream {
 
   final class GraphState(idCol: String, vecCol: String,
-      centroidEvery: Int, m: Int, val path: String) {
-    private val applied = scala.collection.mutable.Set.empty[Long]
+      centroidEvery: Int, m: Int, val path: String) extends FoldState {
     // resume-aware: after a driver restart a FRESH GraphState must not
     // rebuild-and-overwrite (that would re-pick the quantizer from one
     // arbitrary batch and drop everything admitted so far) — an index
-    // already on disk means every future batch is an admission. The
-    // in-memory ledger is per-incarnation; across restarts the sink's
-    // own streaming checkpoint is what prevents epoch re-delivery.
-    @volatile private var built = false
+    // already on disk means every future batch is an admission
+    private var built = false
 
     private def indexOnDisk(batch: DataFrame): Boolean = {
       val p = new org.apache.hadoop.fs.Path(s"$path/cents")
@@ -39,16 +37,14 @@ object GraphIngestStream {
         .exists(p)
     }
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch: already admitted
-      if (batch.isEmpty) return
-      if (!built && !indexOnDisk(batch)) {
-        Similarity.writeGraphIndex(batch, idCol, vecCol,
-          centroidEvery, m, path)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      if (!batch.isEmpty) {
+        if (!built && !indexOnDisk(batch))
+          Similarity.writeGraphIndex(batch, idCol, vecCol,
+            centroidEvery, m, path)
+        else
+          Similarity.appendToGraphIndex(batch, idCol, vecCol, m, path)
         built = true
-      } else {
-        built = true
-        Similarity.appendToGraphIndex(batch, idCol, vecCol, m, path)
       }
     }
 

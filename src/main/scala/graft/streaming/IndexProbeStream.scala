@@ -16,40 +16,32 @@ import org.apache.spark.sql.DataFrame
   * probe of the union. No watermark or state store is needed: the
   * index lives on disk and each batch reads it like any other parquet
   * source; mutable state is only the accumulated pair set (tiny
-  * relative to the corpus), checkpointed per batch with the superseded
-  * snapshot's blocks released deterministically (the
-  * Scd2Stream.KeyedCdcState discipline).
+  * relative to the corpus), a [[FoldState]] snapshot.
   *
-  * foreachBatch delivers at-least-once: a REPLAYED batch re-derives the
-  * identical pairs (the probe is deterministic in (index, batch)), and
-  * the per-fold dropDuplicates on (new_id, old_id) folds them away — so
-  * replays leave the accumulated set unchanged.
+  * foreachBatch delivers at-least-once: a re-delivered batchId is a
+  * no-op under the replay guard, and the same rows arriving under a
+  * fresh batchId re-derive the identical pairs (the probe is
+  * deterministic in (index, batch)), which the per-fold dropDuplicates
+  * on (new_id, old_id) folds away — so replays leave the accumulated set
+  * unchanged.
   */
 object IndexProbeStream {
 
   final class ProbeState(indexPath: String, idCol: String, textCol: String,
-      numPerm: Int, rowsPerBand: Int, tau: Double, mode: Dedup.HashMode) {
-    @volatile private var acc: DataFrame = _
+      numPerm: Int, rowsPerBand: Int, tau: Double, mode: Dedup.HashMode)
+      extends FoldState {
+    private val acc = emptySnapshot()
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      // the probe hands back its pairs checkpointed: a per-batch scratch
       val got = Dedup.probeMinhashIndex(indexPath, batch, idCol, textCol,
         numPerm, rowsPerBand, tau, mode)
-      val old = acc
-      // eager checkpoint: the new snapshot is fully materialized before
-      // the superseded one's blocks are released
-      acc = (if (old == null) got
-             else old.unionByName(got).dropDuplicates("new_id", "old_id"))
-        .localCheckpoint()
-      if (old != null) Scd2Stream.releaseSnapshot(old)
+      acc.accumulate(got)(_.unionByName(_).dropDuplicates("new_id", "old_id"))
+      FoldState.release(got)
     }
 
     /** All pairs accumulated so far; at least one batch must have been
-      * folded (there is no session to make an empty frame from before
-      * that).
-      */
-    def pairs: DataFrame = {
-      require(acc != null, "no micro-batch folded yet")
-      acc
-    }
+      * folded. */
+    def pairs: DataFrame = acc.get
   }
 }

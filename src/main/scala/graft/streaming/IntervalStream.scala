@@ -25,33 +25,22 @@ import org.apache.spark.sql.DataFrame
   *
   * foreachBatch delivers at-least-once; overlap pairs are not
   * row-identity-deduplicable in general (two identical left versions
-  * must both fan out), so replays fold away via the batchId LEDGER —
-  * the GraphIngestStream discipline. The ledger is per-incarnation;
-  * across driver restarts the sink's streaming checkpoint prevents
-  * epoch re-delivery.
+  * must both fan out), so replays fold away via [[FoldState]]'s replay
+  * guard.
   */
 object IntervalStream {
 
   final class IntervalState(staticHistory: DataFrame, key: String,
-      startCol: String, endCol: String, payloadCols: Seq[String]) {
-    @volatile private var acc: DataFrame = _
-    private val applied = scala.collection.mutable.Set.empty[Long]
+      startCol: String, endCol: String, payloadCols: Seq[String])
+      extends FoldState {
+    private val acc = emptySnapshot()
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch: already aligned
-      val got = IntervalJoin.intervalJoinExec(batch, staticHistory, key,
-        startCol, endCol, payloadCols)
-      val old = acc
-      // eager checkpoint: the new snapshot is fully materialized before
-      // the superseded one's blocks are released
-      acc = (if (old == null) got else old.unionByName(got)).localCheckpoint()
-      if (old != null) Scd2Stream.releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      acc.accumulate(IntervalJoin.intervalJoinExec(batch, staticHistory, key,
+        startCol, endCol, payloadCols))(_ unionByName _)
     }
 
     /** All overlap pairs so far; at least one batch must have folded. */
-    def aligned: DataFrame = {
-      require(acc != null, "no micro-batch folded yet")
-      acc
-    }
+    def aligned: DataFrame = acc.get
   }
 }

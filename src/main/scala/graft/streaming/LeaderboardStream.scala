@@ -9,23 +9,18 @@ import org.apache.spark.sql.DataFrame
   * union + re-cut. The bounded-semilattice law proved by
   * IncrementalSpec (merge of any split ≡ one-shot cut, precondition:
   * immutable per-item scores) is exactly what makes the stream correct
-  * under any batch boundary placement; the batchId ledger makes the
-  * fold replay-safe. State is K·|groups| rows forever.
+  * under any batch boundary placement; [[FoldState]]'s replay guard
+  * makes the fold replay-safe. State is K·|groups| rows forever.
   */
 object LeaderboardStream {
 
-  final class TopKState(initial: DataFrame, k: Int) {
-    @volatile var state: DataFrame =
-      graft.operators.Incremental.topKState(initial, k).localCheckpoint()
-    private val applied = scala.collection.mutable.Set.empty[Long]
+  final class TopKState(initial: DataFrame, k: Int) extends FoldState {
+    private val cell = snapshot(graft.operators.Incremental.topKState(initial, k))
+    def state: DataFrame = cell.get
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch: already folded
-      val old = state
-      state = graft.operators.Incremental.mergeTopK(old,
-          graft.operators.Incremental.topKState(batch, k), k)
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      cell.advance(graft.operators.Incremental.mergeTopK(cell.get,
+        graft.operators.Incremental.topKState(batch, k), k))
     }
   }
 }

@@ -15,23 +15,20 @@ import org.apache.spark.sql.DataFrame
   * invisible — StreamingSpec asserts the folded state equals the
   * one-shot batch aggregate of all rows.
   *
-  * State mechanics follow Scd2Stream.KeyedCdcState: localCheckpoint per fold
-  * keeps the state's plan O(1) instead of accreting every batch's
-  * lineage; the superseded snapshot's blocks are released only after the
-  * new one has materialized. At production scale the state side would be
-  * a bucketed table co-partitioned on the key (see
-  * operators/Incremental.scala) or Scd2Stream.KeyedCdcState's sliced
-  * layout; the fold logic is unchanged.
+  * The sums are additive, so a replayed batch would double-count; the
+  * state folds through [[FoldState]], whose replay guard makes it a
+  * no-op. At production scale the state side would be a bucketed table
+  * co-partitioned on the key (see operators/Incremental.scala) or
+  * Scd2Stream.KeyedCdcState's sliced layout; the fold logic is
+  * unchanged.
   */
 object MetricsStream {
 
-  final class MetricsState(initial: DataFrame) {
-    @volatile var state: DataFrame = initial.localCheckpoint()
-    def sink(batch: DataFrame, batchId: Long): Unit = {
-      val old = state
-      state = Incremental.mergeStates(old, Incremental.eventState(batch))
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(old)
+  final class MetricsState(initial: DataFrame) extends FoldState {
+    private val cell = snapshot(initial)
+    def state: DataFrame = cell.get
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      cell.advance(Incremental.mergeStates(cell.get, Incremental.eventState(batch)))
     }
   }
 }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * never off the event history.
   *
   * Exactly-once: counts are additive state, so a replayed micro-batch
-  * would double-count; the batchId ledger (the HistState discipline)
-  * turns at-least-once delivery into exactly-once state. Parity with
+  * would double-count; [[FoldState]]'s replay guard turns at-least-once
+  * delivery into exactly-once state. Parity with
   * the batch query is exact by construction: the state after folding
   * batches B1..Bk EQUALS the one-shot daily aggregate of B1 ∪ .. ∪ Bk
   * (monoid law), and [[graft.operators.Monitoring.cusumFromDaily]] is
@@ -21,21 +21,17 @@ import org.apache.spark.sql.functions._
   */
 object MonitorStream {
 
-  final class CusumState(initial: DataFrame, dayNs: Long) {
+  final class CusumState(initial: DataFrame, dayNs: Long) extends FoldState {
     private def dailyOf(batch: DataFrame): DataFrame = batch
       .groupBy(col("event_type"), expr(s"ts div $dayNs").as("day"))
       .agg(count(lit(1)).as("y"))
 
-    @volatile var daily: DataFrame = dailyOf(initial).localCheckpoint()
-    private val applied = scala.collection.mutable.Set.empty[Long]
+    private val cell = snapshot(dailyOf(initial))
+    def daily: DataFrame = cell.get
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch (additive state)
-      val old = daily
-      daily = old.unionByName(dailyOf(batch))
-        .groupBy("event_type", "day").agg(sum("y").as("y"))
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      cell.advance(cell.get.unionByName(dailyOf(batch))
+        .groupBy("event_type", "day").agg(sum("y").as("y")))
     }
 
     /** The changepoint read off the folded state — identical code to

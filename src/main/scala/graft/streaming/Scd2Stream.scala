@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * partition-overwrite pattern of table formats; `numPartitions = 1` is
   * the full rewrite. foreachBatch delivers at-least-once; `applyCdc` is
   * deterministic in (dim, batch), so a replayed batch folds to the
-  * identical snapshot — production sinks additionally key writes on
-  * batchId for idempotence.
+  * identical snapshot, and `KeyedCdcState.sink` keys on batchId besides:
+  * it folds through [[FoldState]], whose replay guard makes a batchId at
+  * or below the last one folded a no-op.
   *
   * Dimension schema: (keyCol, valueCol, effective_from, effective_to,
   * is_current) with Long event-time stamps (`effective_to` null on the
@@ -113,22 +114,8 @@ object Scd2Stream {
     folded.unionByName(firstOpen)
   }
 
-  /** Release the block set behind a localCheckpoint'd snapshot. Dataset
-    * .unpersist only knows cache() entries, so reach the checkpoint RDD
-    * through the LogicalRDD node — without this, every superseded
-    * snapshot's blocks linger until the ContextCleaner notices the
-    * dropped reference (the cache-lifetime hazard Dedup.materializePairs
-    * documents).
-    */
-  private[streaming] def releaseSnapshot(df: DataFrame): Unit =
-    df.queryExecution.optimizedPlan.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** foreachBatch fold state. The snapshot is held as `numPartitions`
-    * independently-checkpointed slices, slice p owning the keys with
+    * [[FoldState]] snapshots, slice p owning the keys with
     * `pmod(hash(key), numPartitions) == p` (Murmur3 via the `hash`
     * expression, so batch rows and state rows route identically). Each
     * batch:
@@ -146,55 +133,48 @@ object Scd2Stream {
     *      are not referenced by any new plan, so nothing about them is
     *      recomputed, rewritten, or even scanned.
     *
-    * localCheckpoint per fold keeps each slice's plan O(1) instead of
-    * embedding every prior batch's lineage (the same iterative-algorithm
-    * rule as connectedComponents); it is eager, so a superseded slice's
-    * blocks are released only once its successor has materialized,
-    * bounding state to one snapshot plus the slice in flight.
     * `partitionVersions` exposes per-slice rewrite counts so tests (and
     * ops dashboards) can assert the untouched-slice guarantee. Reading
     * `dim` unions the live slices lazily — no copy.
     */
   final class KeyedCdcState(initial: DataFrame, keyCol: String,
       valueCol: String, tsCol: String, opCol: String,
-      numPartitions: Int = 16) {
+      numPartitions: Int = 16) extends FoldState {
     require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
     private def pidExpr = pmod(hash(col(keyCol)), lit(numPartitions))
-    private val parts: Array[DataFrame] = {
+    private val parts: Array[Snapshot] = {
       val keyed = initial.withColumn("__pid", pidExpr)
       Array.tabulate(numPartitions) { p =>
-        keyed.where(col("__pid") === p).drop("__pid").localCheckpoint()
+        snapshot(keyed.where(col("__pid") === p).drop("__pid"))
       }
     }
     // each fold's output is (snapshot ∪ first opens): coalescing it back
     // to the slice's initial width (no shuffle) keeps a long-running
     // stream from adding one partition per fold (an empty initial slice
     // has no partitions; its folds keep one)
-    private val widths = parts.map(p => math.max(1, p.rdd.getNumPartitions))
+    private val widths = parts.map(p => math.max(1, p.get.rdd.getNumPartitions))
     private val versions = Array.fill(numPartitions)(0L)
 
     /** Per-slice rewrite counts since construction (slice p rewritten
       * versions(p) times). Untouched-slice assertions key off this. */
     def partitionVersions: Seq[Long] = versions.toSeq
 
-    def sink(batch: DataFrame, batchId: Long): Unit = {
-      val keyedBatch = batch.where(col(keyCol).isNotNull)
-        .withColumn("__pid", pidExpr)
-        .localCheckpoint() // one batch materialization, reused per slice
-      val touched = keyedBatch.select("__pid").distinct()
-        .collect().map(_.getInt(0)).sorted
-      touched.foreach { p =>
-        val old = parts(p)
-        parts(p) = applyCdc(old,
-          keyedBatch.where(col("__pid") === p).drop("__pid"),
-          keyCol, valueCol, tsCol, opCol).coalesce(widths(p)).localCheckpoint()
-        versions(p) += 1
-        releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      // one batch materialization, reused per slice
+      FoldState.scratch(batch.where(col(keyCol).isNotNull)
+          .withColumn("__pid", pidExpr)) { keyedBatch =>
+        val touched = keyedBatch.select("__pid").distinct()
+          .collect().map(_.getInt(0)).sorted
+        touched.foreach { p =>
+          parts(p).advance(applyCdc(parts(p).get,
+            keyedBatch.where(col("__pid") === p).drop("__pid"),
+            keyCol, valueCol, tsCol, opCol).coalesce(widths(p)))
+          versions(p) += 1
+        }
       }
-      releaseSnapshot(keyedBatch)
     }
 
     /** The full dimension: lazy union of the slices. */
-    def dim: DataFrame = parts.reduce(_ unionByName _)
+    def dim: DataFrame = parts.map(_.get).reduce(_ unionByName _)
   }
 }

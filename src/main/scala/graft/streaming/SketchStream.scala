@@ -18,24 +18,19 @@ import org.apache.spark.sql.DataFrame
   *
   * State is fixed-cardinality (≤ groups × buckets rows) — the reason a
   * 100 TB pipeline keeps THIS and drops the exact distinct: the state
-  * never grows with the key universe. Mechanics follow
-  * MetricsStream.MetricsState (localCheckpoint per fold, superseded
-  * snapshot released after the new one materializes).
+  * never grows with the key universe.
   */
 object SketchStream {
 
   final class LincountState(initial: DataFrame, keyCol: String,
-      groupCol: String, buckets: Int) {
-    @volatile var state: DataFrame =
-      Sketches.lincountState(initial, keyCol, groupCol, buckets)
-        .localCheckpoint()
+      groupCol: String, buckets: Int) extends FoldState {
+    private val cell =
+      snapshot(Sketches.lincountState(initial, keyCol, groupCol, buckets))
+    def state: DataFrame = cell.get
 
-    def sink(batch: DataFrame, batchId: Long): Unit = {
-      val old = state
-      state = Sketches.mergeLincountStates(old,
-          Sketches.lincountState(batch, keyCol, groupCol, buckets))
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      cell.advance(Sketches.mergeLincountStates(cell.get,
+        Sketches.lincountState(batch, keyCol, groupCol, buckets)))
     }
 
     /** Current estimate per group off the folded occupancy state. */
@@ -58,30 +53,24 @@ object SketchStream {
     * but double-counts a replay (SketchSpec proves it), and Structured
     * Streaming's foreachBatch contract is AT-LEAST-once per batchId —
     * the same (batchId, data) pair may be re-delivered after a failure.
-    * The canonical fix is the batchId ledger: a sink that records which
-    * epochs it has applied and no-ops on re-delivery, turning
-    * at-least-once delivery into exactly-once STATE. (In a durable
-    * deployment the ledger is a transactional write of state + max
-    * batchId together; here it is the in-memory set the spec attacks by
-    * calling the sink twice with the same id.) This is the half of the
-    * exactly-once story the OR-bitmap never needed — pairing the two
-    * states makes the merge-algebra distinction operational, not just
-    * documented.
+    * The fix is [[FoldState]]'s replay guard: a re-delivered batchId
+    * no-ops, turning at-least-once delivery into exactly-once STATE. (In
+    * a durable deployment the guard's high-water id is written with the
+    * state in one transaction; here it is the in-memory id the spec
+    * attacks by calling the sink twice with the same id.) This is the
+    * half of the exactly-once story the OR-bitmap never needed — pairing
+    * the two states makes the merge-algebra distinction operational, not
+    * just documented.
     */
   final class HistState(initial: DataFrame, valCol: String,
-      groupCol: String, lo: Double, hi: Double, bins: Int) {
-    @volatile var state: DataFrame =
-      Sketches.fixedHistState(initial, valCol, groupCol, lo, hi, bins)
-        .localCheckpoint()
-    private val applied = scala.collection.mutable.Set.empty[Long]
+      groupCol: String, lo: Double, hi: Double, bins: Int) extends FoldState {
+    private val cell =
+      snapshot(Sketches.fixedHistState(initial, valCol, groupCol, lo, hi, bins))
+    def state: DataFrame = cell.get
 
-    def sink(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!applied.add(batchId)) return // replayed epoch: already folded
-      val old = state
-      state = Sketches.mergeHistStates(old,
-          Sketches.fixedHistState(batch, valCol, groupCol, lo, hi, bins))
-        .localCheckpoint()
-      Scd2Stream.releaseSnapshot(old)
+    def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
+      cell.advance(Sketches.mergeHistStates(cell.get,
+        Sketches.fixedHistState(batch, valCol, groupCol, lo, hi, bins)))
     }
 
     /** Quantile estimates off the folded histogram state. */

@@ -1139,7 +1139,11 @@ class SimilaritySpec extends SparkSpec {
     val partialMembers = before.filter(_._2 == partial).map(_._1).sorted
     val tomb = before.filter(_._2 == victim).map(_._1).toSeq :+
       partialMembers.head
-    Similarity.deleteFromIvfIndex(path, tomb.toDF("vec_id"))
+    val tombstones = tomb.toDF("vec_id")
+    // tombstone checkpoint, one census pass and the rewrite, each with
+    // its broadcast; no schema-inference or second census job
+    val jobs = jobsOf(Similarity.deleteFromIvfIndex(path, tombstones))._2
+    assert(jobs <= 7, s"an erasure launched $jobs Spark jobs")
     val after = spark.read.parquet(s"$path/cells")
       .select("vec_b", "cell").as[(Long, Long)].collect()
     assert(!after.exists(r => tomb.contains(r._1)),

@@ -350,7 +350,15 @@ class StreamingSpec extends SparkSpec {
         // three uneven micro-batches covering the whole incoming set
         val (b1, rest) = incoming.splitAt(incoming.length / 3)
         val (b2, b3) = rest.splitAt(rest.length / 2)
-        for (b <- Seq(b1, b2, b3)) { input.addData(b.toSeq); q.processAllAvailable() }
+        // checkpoints a fold leaves live: the pair snapshot alone, never
+        // the probe's own per-batch pair checkpoint
+        val sc = spark.sparkContext
+        val preexisting = sc.getPersistentRDDs.keySet
+        val liveAfter = Seq(b1, b2, b3).map { b =>
+          input.addData(b.toSeq); q.processAllAvailable()
+          (sc.getPersistentRDDs.keySet -- preexisting).size
+        }
+        assert(liveAfter.forall(_ == 1), s"live checkpoints after each fold: $liveAfter")
         val streamed = state.pairs.as[(Long, Long, Double)].collect().toSet
         val oneShot = operators.Dedup.probeMinhashIndex(path,
             d.where(bucket >= 80 && bucket < 90), "doc_id", "text",
@@ -363,6 +371,11 @@ class StreamingSpec extends SparkSpec {
         input.addData(b1.toSeq); q.processAllAvailable()
         val replayed = state.pairs.as[(Long, Long, Double)].collect().toSet
         assert(replayed == oneShot, "replayed batch must fold to a no-op")
+        // the same epoch re-delivered under its own batchId: no fold at all
+        val folded = state.pairs
+        state.sink(b1.toSeq.toDF("doc_id", "text"), 0L)
+        assert(state.pairs eq folded, "a replayed batchId must not fold")
+        assert(state.lastFolded == 3L)
       } finally q.stop()
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
@@ -393,7 +406,16 @@ class StreamingSpec extends SparkSpec {
         .foreachBatch(state.sink _).outputMode("append").start()
       try {
         val batches = docs.grouped(math.max(1, docs.length / 4)).toSeq
-        for (b <- batches) { input.addData(b.toSeq); q.processAllAvailable() }
+        // checkpoints a fold leaves live: its two snapshots, never the
+        // per-batch scored frame, near-dup pair sets or removed-id set
+        val sc = spark.sparkContext
+        val preexisting = sc.getPersistentRDDs.keySet
+        def live = (sc.getPersistentRDDs.keySet -- preexisting).size
+        val liveAfter = batches.map { b =>
+          input.addData(b.toSeq); q.processAllAvailable(); live
+        }
+        assert(batches.length >= 4 && liveAfter.forall(_ == 2),
+          s"live checkpoints after each fold: $liveAfter")
         val batchCurate = SparkEntry.queries("ext_corpus_curate")(spark, sf0001)
         val streamCurate = state.curated
           .select(batchCurate.columns.map(col): _*)
@@ -515,6 +537,10 @@ class StreamingSpec extends SparkSpec {
     assert(rewritten == 1,
       s"single-key delete must rewrite exactly 1 of 4 slices, rewrote $rewritten")
     keyed.sink(b3, 2L); full.sink(b3, 2L)
+    // re-delivered epochs, the latest and an older one: no slice rewritten
+    val folded = keyed.partitionVersions
+    keyed.sink(b3, 2L); keyed.sink(b2, 1L)
+    assert(keyed.partitionVersions == folded, "a replayed batchId rewrote slices")
     val got = keyed.dim.as[(Long, Option[String], Long, Option[Long], Int)]
       .collect().toSet
     val want = full.dim.as[(Long, Option[String], Long, Option[Long], Int)]
@@ -791,6 +817,14 @@ class StreamingSpec extends SparkSpec {
           batchPareto.exceptAll(streamedPareto).isEmpty,
           s"streamed Pareto readout diverged at grid step $step")
       }
+      // at-least-once delivery: batch 1 re-arrives under its own id
+      // after batch 2; the sums must not count it twice
+      val direct = new graft.streaming.MetricsStream.MetricsState(empty)
+      Seq(0, 1, 2, 1).foreach(i =>
+        direct.sink(rows(i).toDF("user_id", "value"), i.toLong))
+      assert(direct.state.exceptAll(oneShot).isEmpty &&
+        oneShot.exceptAll(direct.state).isEmpty,
+        "a replayed batchId double-counted the metrics state")
     } finally q.stop()
   }
 
@@ -864,6 +898,10 @@ class StreamingSpec extends SparkSpec {
           batches.flatten.toDF("grp", "k"), "k", "grp", 1024)
         .select("grp", "n_occupied", "est")
       assert(audit.exceptAll(folded).isEmpty && folded.exceptAll(audit).isEmpty)
+      // the last epoch re-delivered under its own batchId: no fold at all
+      val snapshot = state.state
+      state.sink(batches.last.toDF("grp", "k"), state.lastFolded)
+      assert(state.state eq snapshot, "a replayed batchId must not fold")
     } finally q.stop()
   }
 
@@ -1128,6 +1166,15 @@ class StreamingSpec extends SparkSpec {
       // the serve path works off the folded on-disk state
       val served = state.probe(emb.where(col("vec_id") % 50 === 0), 5, 8, 8, 3)
       assert(served.count() > 0)
+      // the guard's state is one high-water id however many batches fold:
+      // 200 empty epochs, then a replay of one of them builds nothing
+      val long = new graft.streaming.GraphIngestStream.GraphState(
+        "vec_id", "embedding", 25, 8, s"$dir/long")
+      (0L until 200L).foreach(i => long.sink(emb.where(lit(false)), i))
+      assert(long.lastFolded == 199L)
+      long.sink(batches(0), 7L)
+      assert(!new java.io.File(s"$dir/long").exists,
+        "a replayed batchId must not fold")
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(dir))
   }
