@@ -1,22 +1,36 @@
 package graft.operators
 
 import graft.functions.VectorOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two paths:
-  *  - `bruteForceTopK`: exact cosine top-k — the baseline. The query set
-  *    is broadcast against the corpus, so the corpus is never shuffled;
-  *    cost is |Q| x |corpus| dot products, each a codegen'd ordered fold.
-  *  - `lshTopK`: random-hyperplane LSH — the 100 TB path. Corpus and
-  *    queries hash to sign-pattern buckets; candidates come from an
-  *    equi-join on the bucket id, so per-query work drops from |corpus|
-  *    to the bucket occupancy (recall < 1, deterministic given the seeded
-  *    hyperplanes).
+  * Families:
+  *  - exact: `bruteForceTopK` (the query set broadcast against the
+  *    corpus, which never shuffles), with `filteredTopK`, `rerankTopK`,
+  *    `mmrTopK` and the label probes built on it;
+  *  - partition (IVF): `ivfTopK`, `ivfKmeansTopK`, `semanticDedupPairs`,
+  *    and the persisted index `writeIvfIndex` / `appendToIvfIndex` /
+  *    `deleteFromIvfIndex` / `probeIvfIndex*`;
+  *  - quantization: `pqTopK`, `ivfPqTopK`, `quantizeInt8`;
+  *  - graph (HNSW-lite): `graphTopK` and the persisted `writeGraphIndex` /
+  *    `appendToGraphIndex` / `compactGraphIndex` / `probeGraphIndex`;
+  *  - hashing: `lshTopK`, random-hyperplane LSH — candidates from an
+  *    equi-join on the bucket id.
+  *
+  * Four shared steps serve every ANN operator, in-plan and persisted:
+  *  - [[centroidSeed]]: the every-Nth-id coarse quantizer;
+  *  - [[cellAssignment]]: nearest cell(s) per row, a map-only fold over
+  *    the broadcast centroid array;
+  *  - [[rankByCosine]] and [[cosineTopK]] on it: the per-query
+  *    (cosine desc, vec_b asc) top-n cut;
+  *  - [[eraseRows]] over [[overwriteParts]]: the touched-partition
+  *    rewrite behind every erasure.
+  * Persisted indexes are read through one [[IndexRoute]].
   *
   * Hyperplanes are PSEUDO-RANDOM FROM INTEGER ARITHMETIC (LCG over
   * (plane, dim)), not an RNG: reproducible in any engine, including the
@@ -32,14 +46,31 @@ object Similarity {
       VectorOps.normSq(col(vecCol)).as("nb"))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("va"),
       VectorOps.normSq(col(vecCol)).as("na"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    broadcast(q).crossJoin(c)
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine", VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(broadcast(q).crossJoin(c), k)
   }
+
+  /** Candidate pairs (q_id, va, na, vec_b, vb, nb) scored: a query never
+    * pairs with itself, and `cosine` is the ordered-fold cosine.
+    */
+  private def scoreCosine(pairs: DataFrame): DataFrame =
+    pairs.where(col("q_id") =!= col("vec_b"))
+      .withColumn("cosine", VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
+
+  /** The one top-n cut: per q_id, the first `n` rows of `scored` by
+    * (cosine desc, vec_b asc), numbered `rnk` from 1 — a total order, so
+    * the cut is the same under any partitioning and in the oracle.
+    */
+  private def rankByCosine(scored: DataFrame, n: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)))
+      .where(col("rnk") <= n)
+
+  /** Top-k neighbors of each query among candidate `pairs`
+    * ([[scoreCosine]]'s input): (q_id, rnk, neighbor_id).
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    rankByCosine(scoreCosine(pairs), k)
+      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
 
   /** LCG hyperplane coefficient for (plane j, dim d), in [-0.5, 0.5):
     * ((1103515245 * (j * dim + d) + 12345) mod 2048) / 2048 - 0.5.
@@ -48,6 +79,15 @@ object Similarity {
     */
   def planeCoef(j: Int, d: Int, dim: Int): Double =
     ((1103515245L * (j * dim + d) + 12345L) % 2048L).toDouble / 2048.0 - 0.5
+
+  /** The seeded coarse quantizer, the deterministic stand-in for a
+    * k-means training step: every `centroidEvery`-th id of `corpus` is a
+    * centroid, (cent_id, cvec, cn) with `vec` as its vector.
+    */
+  private def centroidSeed(corpus: DataFrame, idCol: String, vec: Column,
+      centroidEvery: Int): DataFrame =
+    corpus.where(col(idCol) % centroidEvery === 0)
+      .select(col(idCol).as("cent_id"), vec.as("cvec"), VectorOps.normSq(vec).as("cn"))
 
   /** The centroid set as ONE row holding an array<struct<cent_id,cvec,cn>>
     * — the broadcast build for [[argmaxCell]]'s per-row fold. Array order
@@ -71,37 +111,36 @@ object Similarity {
       cents, vec, nsq)
 
   /** The p nearest cells for one row as an ordered array — the top-p
-    * generalization of [[argmaxCell]] ([[graft.functions.NearestCells]]).
-    * `explode` of this array replaces the `row_number() <= p` window
-    * over the crossJoin, which hash-shuffled the |rows| × |cents|
-    * product (O(n²/centroidEvery) at scale since |cents| grows with the
-    * corpus); the fold keeps multi-cell assignment MAP-ONLY over the
-    * broadcast centroid array — zero exchange, zero sort, same
-    * (cos DESC, cent_id ASC) order bit-for-bit.
+    * generalization of [[argmaxCell]] ([[graft.functions.NearestCells]]),
+    * same (cos DESC, cent_id ASC) order bit-for-bit.
     */
   private def topCellsArr(vec: Column, nsq: Column, p: Int): Column =
     call_function(graft.functions.GraftFunctions.NearestCellsName,
       col("__cents"), vec, nsq, lit(p))
 
-  /** The p-nearest-cell assignment shared by the graph-ANN build,
-    * admission, and persisted-index write: `base` is (vid, vec, nsq),
-    * `cents` is (cent_id, cvec, cn); returns (vid, vec, nsq, cell, rn)
-    * with rn the 1-based closeness rank. MAP-ONLY by construction —
-    * package-private so ScaleSpec can pin the zero-exchange plan.
+  /** The one nearest-cell assignment: each row of `df` against the
+    * centroids `cents` (cent_id, cvec, cn) by the cosine of `vec`
+    * (squared norm `nsq`), ties to the smaller cent_id. MAP-ONLY by
+    * construction — a per-row fold over the broadcast centroid array, no
+    * exchange, no window, no sort (DotProductSpec pins the plan). p = 1
+    * adds the nearest cell as column `out` ([[argmaxCell]]); p > 1
+    * emits one row per cell among the p nearest ([[topCellsArr]]), with
+    * its 1-based closeness rank `rn`.
     */
-  private[graft] def cellAssignment(base: DataFrame, cents: DataFrame,
-      p: Int): DataFrame =
-    base.crossJoin(broadcast(centArray(cents)))
-      .select(col("vid"), col("vec"), col("nsq"),
-        posexplode(topCellsArr(col("vec"), col("nsq"), p)).as(Seq("__pos", "cell")))
-      .withColumn("rn", col("__pos") + lit(1))
-      .drop("__pos")
+  private[graft] def cellAssignment(df: DataFrame, cents: DataFrame,
+      vec: Column, nsq: Column, p: Int, out: String = "cell"): DataFrame = {
+    val withCents = df.crossJoin(broadcast(centArray(cents)))
+    if (p == 1) withCents.withColumn(out, argmaxCell(vec, nsq)).drop("__cents")
+    else withCents.select(df.columns.map(col) :+
+        posexplode(topCellsArr(vec, nsq, p)).as(Seq("rn", out)): _*)
+      .withColumn("rn", col("rn") + 1)
+  }
 
   /** IVF-style ANN (nprobe=1): a small deterministic coarse quantizer —
-    * `numCells` "centroids" drawn from the corpus itself (every
-    * `centroidEvery`-th id, the seeded stand-in for a k-means training
-    * step) — assigns each vector to its nearest centroid by cosine
-    * (ties broken by centroid id); queries search only their own cell.
+    * `numCells` "centroids" drawn from the corpus itself
+    * ([[centroidSeed]]) — assigns each vector to its nearest centroid by
+    * cosine (ties broken by centroid id); queries search only their own
+    * cell.
     *
     * Scale shape: assignment is |corpus| x numCells dot products against
     * a BROADCAST centroid set (numCells is small by construction), then
@@ -116,43 +155,14 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroidEvery: Int, nprobe: Int = 1): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val cents = corpus.where(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"),
-        VectorOps.normSq(col(vecCol)).as("cn"))
+    val cents = centroidSeed(corpus, idCol, col(vecCol), centroidEvery)
     def assign(df: DataFrame, idAs: String, vecAs: String, nAs: String,
-        cells: Int): DataFrame = {
-      val base = df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
-        VectorOps.normSq(col(vecCol)).as(nAs))
-      if (cells == 1)
-        // single-cell assignment as a SHUFFLE-FREE per-row fold over the
-        // centroid set collected into ONE broadcast array row: inside
-        // whole-stage codegen the broadcast row is read by reference, so
-        // the corpus streams through map-only — no exchange, no sort (the
-        // window form shuffles |corpus| x numCells rows; a max(struct)
-        // agg plans as SortAggregate, same sort again). The fold's
-        // explicit tie-break (greater cos, then smaller cent_id) makes
-        // the result independent of centroid array order — identical to
-        // the oracle's ORDER BY cos DESC, cent_id ASC.
-        base.crossJoin(broadcast(centArray(cents)))
-          .withColumn("cell", argmaxCell(col(vecAs), col(nAs)))
-          .drop("__cents")
-      else
-        // nprobe fan-out rides the same shuffle-free fold: the top-p
-        // array explodes to (row, cell) pairs map-side — no window, no
-        // |rows| × |cents| exchange
-        base.crossJoin(broadcast(centArray(cents)))
-          .select(col(idAs), col(vecAs), col(nAs),
-            explode(topCellsArr(col(vecAs), col(nAs), cells)).as("cell"))
-    }
+        cells: Int): DataFrame =
+      cellAssignment(df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
+        VectorOps.normSq(col(vecCol)).as(nAs)), cents, col(vecAs), col(nAs), cells)
     val c = assign(corpus, "vec_b", "vb", "nb", 1)
     val q = assign(queries, "q_id", "va", "na", nprobe)
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    q.join(c, Seq("cell"))
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine", VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(q.join(c, Seq("cell")), k)
   }
 
   /** GRAPH-BASED ANN (HNSW-lite) — the third member of the ANN family
@@ -199,16 +209,11 @@ object Similarity {
       vecCol: String, k: Int, centroidEvery: Int, entryEvery: Int,
       m: Int, beam: Int, rounds: Int, levels: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val cents = corpus.where(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"),
-        VectorOps.normSq(col(vecCol)).as("cn"))
+    val cents = centroidSeed(corpus, idCol, col(vecCol), centroidEvery)
     val base = corpus.select(col(idCol).as("vid"), col(vecCol).as("vec"),
       VectorOps.normSq(col(vecCol)).as("nsq"))
-    // 2-nearest-cell assignment: border-crossing edge candidates. The
-    // top-2 fold + explode keeps this MAP-ONLY over the broadcast
-    // centroid array (the former window-over-crossJoin shuffled the
-    // |corpus| × |cents| product — O(n²/centroidEvery) at scale)
-    val ranked2 = cellAssignment(base, cents, 2).drop("rn")
+    // 2-nearest-cell assignment: border-crossing edge candidates
+    val ranked2 = cellAssignment(base, cents, col("vec"), col("nsq"), 2).drop("rn")
     val edges = edgeList(ranked2, m)
       .localCheckpoint(false) // one build, read once per round; LAZY —
       // a plain plan here recomputes the top-m window (over the full
@@ -223,13 +228,12 @@ object Similarity {
     * build shared by [[graphTopK]] and [[writeGraphIndex]]. `ranked2`
     * is (vid, vec, nsq, cell) with ≤2 rows per vid.
     *
-    * dense_rank BEFORE the dedupe (r13 opt): a pair sharing both cells
-    * appears twice with the SAME ecos, so dense_rank over (ecos desc,
-    * dst asc) ranks distinct neighbors exactly like the former
-    * row_number-after-distinct — but the candidate-pair stream now
-    * crosses ONE exchange (the window's hash(src)) instead of two (the
-    * old 3-column distinct's plus the window's), and the residual
-    * dedupe runs on the top-m output (n·m rows), not the pair stream.
+    * dense_rank BEFORE the dedupe: a pair sharing both cells appears
+    * twice with the SAME ecos, so dense_rank over (ecos desc, dst asc)
+    * ranks distinct neighbors exactly like row_number after a distinct
+    * — but the candidate-pair stream crosses ONE exchange (the window's
+    * hash(src)), and the residual dedupe runs on the top-m output (n·m
+    * rows), not the pair stream.
     */
   private[graft] def edgeList(ranked2: DataFrame, m: Int): DataFrame = {
     val aSide = ranked2.select(col("vid").as("src"), col("vec").as("sv"),
@@ -247,29 +251,6 @@ object Similarity {
       .distinct() // both-cell pairs kept twice by the window, same rank
   }
 
-  /** The fixed-round beam-expansion search core shared by [[graphTopK]]
-    * (in-plan build) and [[probeGraphIndex]] (persisted build): a
-    * `levels`-deep descent to the entry frontier, then `rounds` rounds
-    * of expand-score-pool-recut. `vecs` is (vid, vec, nsq); `edges` is
-    * (src, dst); `qF` is (q_id, qv, qn).
-    *
-    * The descent (the level trick that lifts the former
-    * |Q| × n/entryEvery brute-force entry ceiling): level l holds every
-    * entryEvery^l-th id; the TOP level (l = levels−1) is scored
-    * brute-force (|Q| × n/entryEvery^(levels−1) rows), each query keeps
-    * its top-`beam` as ROUTES (self allowed — routing, not results),
-    * and each lower level scores only the nodes ASSIGNED to the routed
-    * parents (each node's single nearest level-(l+1) node, the
-    * shuffle-free [[cellAssignment]] fold — avg bucket = entryEvery
-    * nodes, so each descent step scores beam·entryEvery rows). The
-    * default `levels = 3` is the round-9 shape (one super level at
-    * entryEvery²); `levels = 4` is the production recipe for corpora
-    * where n/entryEvery² itself outgrows a brute-force scan — entry
-    * cost |Q|·(n/e³ + 2·beam·e) instead of |Q|·(n/e² + beam·e). A
-    * corpus with NO top-level id (all % entryEvery^(levels−1) ids
-    * deleted) returns zero rows — the oracle restates the same
-    * algorithm and agrees.
-    */
   /** The `levels`-deep entry descent on its own: (entry frontier, the
     * per-stage SCORED frames — stage 0 is the top-level brute force,
     * then one per descended level). [[beamSearch]] consumes only the
@@ -284,33 +265,29 @@ object Similarity {
     require(levels >= 3, s"beamSearch needs levels >= 3, got $levels")
     val cvecs = vecs.select(col("vid").as("vec_b"), col("vec").as("vb"),
       col("nsq").as("nb"))
-    def topB(pool: DataFrame, n: Int): DataFrame =
-      pool.withColumn("rnk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)))
-        .where(col("rnk") <= n)
     def levelMod(l: Int): Long = BigInt(entryEvery).pow(l).toLong
     def levelNodes(l: Int): DataFrame =
       vecs.where(col("vid") % levelMod(l) === 0)
         .select(col("vid").as("cent_id"), col("vec").as("cvec"),
           col("nsq").as("cn"))
     // route: top-`beam` TOP-level nodes per query, brute force, by the
-    // same (cos desc, id asc) total order as every other cut
+    // same (cos desc, id asc) total order as every other cut; routing
+    // allows self, so no self-exclusion
     val topScores = broadcast(qF)
       .crossJoin(levelNodes(levels - 1).select(col("cent_id").as("vec_b"),
         col("cvec").as("vb"), col("cn").as("nb")))
       .withColumn("cosine",
         VectorOps.cosine(col("qv"), col("vb"), col("qn"), col("nb")))
       .select("q_id", "vec_b", "cosine")
-    var routed = topB(topScores, beam)
+    var routed = rankByCosine(topScores, beam)
       .select(col("q_id"), col("vec_b").as("cell"))
     var frontier: DataFrame = null
     val stages = scala.collection.mutable.ArrayBuffer[DataFrame](topScores)
     // descend level by level: nodes of level l bucketed by their single
-    // nearest level-(l+1) node (map-only fold over the broadcast parent
-    // array), scored only inside the routed buckets
+    // nearest level-(l+1) node, scored only inside the routed buckets
     for (l <- (levels - 2) to 1 by -1) {
-      val asn = cellAssignment(
-          vecs.where(col("vid") % levelMod(l) === 0), levelNodes(l + 1), 1)
+      val asn = cellAssignment(vecs.where(col("vid") % levelMod(l) === 0),
+          levelNodes(l + 1), col("vec"), col("nsq"), 1)
         .select(col("vid").as("vec_b"), col("cell"))
       val scored = broadcast(routed.join(asn, Seq("cell"))
           .select("q_id", "vec_b")
@@ -322,48 +299,63 @@ object Similarity {
         .select("q_id", "vec_b", "cosine")
       stages += scored
       if (l == 1) frontier = scored
-      else routed = topB(scored, beam).select(col("q_id"), col("vec_b").as("cell"))
+      else routed = rankByCosine(scored, beam).select(col("q_id"), col("vec_b").as("cell"))
     }
     (frontier, stages.toSeq)
   }
 
+  /** The fixed-round beam-expansion search core shared by [[graphTopK]]
+    * (in-plan build) and [[probeGraphIndex]] (persisted build): a
+    * `levels`-deep descent to the entry frontier, then `rounds` rounds
+    * of expand-score-pool-recut. `vecs` is (vid, vec, nsq); `edges` is
+    * (src, dst); `qF` is (q_id, qv, qn).
+    *
+    * The descent ([[entryDescent]]) lifts the |Q| × n/entryEvery
+    * brute-force entry ceiling: level l holds every entryEvery^l-th id;
+    * the TOP level (l = levels−1) is scored brute-force
+    * (|Q| × n/entryEvery^(levels−1) rows), each query keeps its
+    * top-`beam` as ROUTES (self allowed — routing, not results), and
+    * each lower level scores only the nodes ASSIGNED to the routed
+    * parents (each node's single nearest level-(l+1) node, the
+    * shuffle-free [[cellAssignment]] fold — avg bucket = entryEvery
+    * nodes, so each descent step scores beam·entryEvery rows). The
+    * default `levels = 3` has one super level at entryEvery²;
+    * `levels = 4` is the production recipe for corpora where
+    * n/entryEvery² itself outgrows a brute-force scan — entry cost
+    * |Q|·(n/e³ + 2·beam·e) instead of |Q|·(n/e² + beam·e). A corpus with
+    * NO top-level id (all % entryEvery^(levels−1) ids deleted) returns
+    * zero rows — the oracle restates the same algorithm and agrees.
+    */
   private def beamSearch(vecs: DataFrame, edges: DataFrame, qF: DataFrame,
       entryEvery: Int, k: Int, beam: Int, rounds: Int,
       levels: Int = 3): DataFrame = {
     val cvecs = vecs.select(col("vid").as("vec_b"), col("vec").as("vb"),
       col("nsq").as("nb"))
-    def topB(pool: DataFrame, n: Int): DataFrame =
-      pool.withColumn("rnk", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)))
-        .where(col("rnk") <= n)
     val (frontier, _) = entryDescent(vecs, qF, entryEvery, beam, levels)
     // visited pool starts as the entry frontier (the descent result),
     // not the whole entry level — matching HNSW, where upper-layer
     // nodes only seed layer 0, they don't pad the result candidates.
     // ONE lazy lineage cut at the descent/rounds boundary, and NONE
-    // inside the round loop (r14 opt — supersedes r13's eager→lazy
-    // move): the rounds then chain as one lazy plan and the whole
-    // expansion executes as a single adaptive query — measured
-    // 25 jobs / 1.8 s → 1 job / 0.26 s for the 3-round loop in
-    // isolation (Probe beamab). The double consumption of each round's
-    // pool (next frontier + union) does NOT recompute it: every pool
-    // ends at the repartition(q_id) exchange below, and ReuseExchange
-    // dedupes the two reads of that identical subtree within the one
-    // executed plan. The pool_0 cut stays because the plan tree doubles
-    // per round — 2^rounds copies of a checkpoint LEAF are free, while
-    // 2^rounds copies of the full entry-descent subtree measurably blow
-    // up optimizer/AQE time (probe 2.6 → 3.7 s when it was tried).
+    // inside the round loop: the rounds then chain as one lazy plan and
+    // the whole expansion executes as a single adaptive query —
+    // measured 25 jobs / 1.8 s → 1 job / 0.26 s for the 3-round loop in
+    // isolation. The double consumption of each round's pool (next
+    // frontier + union) does NOT recompute it: every pool ends at the
+    // repartition(q_id) exchange below, and ReuseExchange dedupes the
+    // two reads of that identical subtree within the one executed plan.
+    // The pool_0 cut stays because the plan tree doubles per round —
+    // 2^rounds copies of a checkpoint LEAF are free, while 2^rounds
+    // copies of the full entry-descent subtree measurably blow up
+    // optimizer/AQE time (probe 2.6 → 3.7 s when it was tried).
     // rounds = 3 everywhere; truncate per round again if a caller ever
     // passes rounds ≳ 8.
-    var pool = topB(frontier, beam).drop("rnk").localCheckpoint(false)
+    var pool = rankByCosine(frontier, beam).drop("rnk").localCheckpoint(false)
     for (_ <- 1 to rounds) {
-      val frontier = topB(pool, beam).drop("rnk")
-      // no per-round cand.distinct() (r14 opt): a dst reachable from
-      // several frontier srcs scores the identical cosine, and the pool
-      // union's distinct dedupes it anyway — the 3-column distinct paid
-      // one exchange+stage per round to dedupe rows the next operator
-      // re-dedupes; duplicate candidates only repeat bounded map-side
-      // scoring (≤ beam copies of a dst per query)
+      val frontier = rankByCosine(pool, beam).drop("rnk")
+      // no per-round cand.distinct(): a dst reachable from several
+      // frontier srcs scores the identical cosine, and the pool union's
+      // distinct dedupes it anyway; duplicate candidates only repeat
+      // bounded map-side scoring (≤ beam copies of a dst per query)
       val cand = frontier.select(col("q_id"), col("vec_b").as("src"))
         .join(edges, Seq("src"))
         .select(col("q_id"), col("dst").as("vec_b"))
@@ -373,17 +365,17 @@ object Similarity {
         .withColumn("cosine",
           VectorOps.cosine(col("qv"), col("vb"), col("qn"), col("nb")))
         .select("q_id", "vec_b", "cosine")
-      // repartition(q_id) BEFORE the pool distinct (r14 opt, §2.4 "two
+      // repartition(q_id) BEFORE the pool distinct (§2.4 "two
       // operations keyed the same way share one exchange"): hash(q_id)
       // satisfies the distinct's (q_id, vec_b) clustering AND the next
-      // round's topB window, so each round pays ONE exchange where the
+      // round's cut, so each round pays ONE exchange where the
       // bare distinct's hash(q_id, vec_b) forced the window to
       // re-shuffle — and that exchange is also the ReuseExchange point
       // that lets the un-truncated plan read each pool twice while
       // computing it once. Same rows, same results.
       pool = pool.unionByName(nb).repartition(col("q_id")).distinct()
     }
-    topB(pool, k).select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    rankByCosine(pool, k).select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
   }
 
   /** PERSIST the graph-ANN serving structure ([[graphTopK]]'s build
@@ -396,18 +388,11 @@ object Similarity {
   def writeGraphIndex(corpus: DataFrame, idCol: String, vecCol: String,
       centroidEvery: Int, m: Int, path: String): Unit = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val cents = corpus.where(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"),
-        VectorOps.normSq(col(vecCol)).as("cn"))
+    val cents = centroidSeed(corpus, idCol, col(vecCol), centroidEvery)
     val base = corpus.select(col(idCol).as("vid"), col(vecCol).as("vec"),
       VectorOps.normSq(col(vecCol)).as("nsq"))
-    // top-2 fold + posexplode: map-only assignment, rn = position + 1
-    // reproduces the ranked window's 1-based rank (same total order)
-    val ranked2 = cellAssignment(base, cents, 2)
-    // dense_rank-then-dedupe, the [[edgeList]] build shared with
-    // [[graphTopK]] (r13 opt): one exchange over the candidate-pair
-    // stream instead of two, and the dedupe shrinks from the pair
-    // stream to the n·m top-m output.
+    // (vid, vec, nsq, rn, cell): the two nearest cells, rn their rank
+    val ranked2 = cellAssignment(base, cents, col("vec"), col("nsq"), 2)
     val edges = edgeList(ranked2, m)
     // edges land in the src's PRIMARY cell partition: admission
     // ([[appendToGraphIndex]]) then rewrites only the partitions whose
@@ -422,23 +407,14 @@ object Similarity {
     // after it (guide §2.6; FIFO scheduling gives the edge job priority)
     // (cell assignments + centroids persist so admission never re-ranks
     // the stored corpus and never retrains the quantizer)
-    parallelJobs(
+    ParallelJobs.run(Seq(
       () => edges.join(prim, Seq("src"))
         .write.mode("overwrite").partitionBy("pcell").parquet(s"$path/edges"),
       () => base.write.mode("overwrite").parquet(s"$path/vecs"),
       () => ranked2.select("vid", "cell", "rn")
         .write.mode("overwrite").parquet(s"$path/cells"),
-      () => cents.write.mode("overwrite").parquet(s"$path/cents"))
+      () => cents.write.mode("overwrite").parquet(s"$path/cents")))
   }
-
-  /** Run independent Spark actions concurrently and propagate the first
-    * failure. Spark's scheduler runs jobs from several driver threads at
-    * once (FIFO: earlier submissions get resources first, later ones
-    * back-fill the tail) — the standard move for a write fan-out whose
-    * jobs touch disjoint outputs.
-    */
-  private def parallelJobs(jobs: (() => Unit)*): Unit =
-    ParallelJobs.run(jobs)
 
   /** PROBE a [[writeGraphIndex]]-persisted graph index — identical
     * results to the in-plan [[graphTopK]] (the build round-trips
@@ -454,42 +430,30 @@ object Similarity {
     * offline rebuild — and strict edge removal can orphan graph
     * regions, which the rebuild (production HNSW repair) also heals.
     * The recall the mask costs is measured, not guessed: the delete
-    * query's oracle computes truth over the SURVIVING corpus.
+    * query's oracle computes truth over the SURVIVING corpus. The
+    * tombstones are collected once into a literal set
+    * ([[tombstoneTest]]) that every masked frame filters on.
+    *
+    * `route` names where the index's `vecs` and `edges` are read from
+    * (parquet files, the `graft-index` table, or a catalog name) — the
+    * same [[IndexRoute]] the IVF probes read through; every route
+    * returns identical rows.
     */
-  def probeGraphIndex(path: String, queries: DataFrame, idCol: String,
+  def probeGraphIndex(route: IndexRoute, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, entryEvery: Int, beam: Int, rounds: Int,
-      tombstones: Option[DataFrame] = None,
-      viaV2: Boolean = false, levels: Int = 3,
-      catalog: Option[String] = None): DataFrame = {
+      tombstones: Option[DataFrame] = None, levels: Int = 3): DataFrame = {
     val s = queries.sparkSession
     graft.functions.GraftFunctions.register(s)
-    // viaV2: the graft-index DataSourceV2 serving table (see
-    // sources/GraftIndexSource.scala) — identical rows by contract; the
-    // edge read prunes to (src, dst) at the parquet projection layer.
-    // catalog = Some("cat.`index`"): the same V2 table resolved by NAME
-    // through a registered GraftIndexCatalog — no path in the probe.
-    def rd(sub: String) = catalog match {
-      case Some(prefix) => s.table(s"$prefix.$sub")
-      case None if viaV2 => s.read.format("graft-index").load(s"$path/$sub")
-      case None => s.read.parquet(s"$path/$sub")
-    }
-    val vecs0 = rd("vecs")
-    val edges0 = rd("edges").select("src", "dst")
+    val vecs0 = route.read(s, "vecs")
+    val edges0 = route.read(s, "edges").select("src", "dst")
     val qF0 = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"),
       VectorOps.normSq(col(vecCol)).as("qn"))
-    val (vecs, edges, qF) = tombstones match {
+    val (vecs, edges, qF) = tombstones.flatMap(tombstoneTest) match {
       case None => (vecs0, edges0, qF0)
-      case Some(t) =>
-        // no checkpoint (r13 opt): the four anti-joins share one
-        // identical broadcast subtree, so ReuseExchange builds the
-        // tombstone broadcast once per executed plan — a separate
-        // eager materialization job bought nothing
-        val tomb = t.select(col(t.columns.head).as("__tid")).distinct()
-        (vecs0.join(broadcast(tomb), col("vid") === col("__tid"), "left_anti"),
-          edges0
-            .join(broadcast(tomb), col("src") === col("__tid"), "left_anti")
-            .join(broadcast(tomb), col("dst") === col("__tid"), "left_anti"),
-          qF0.join(broadcast(tomb), col("q_id") === col("__tid"), "left_anti"))
+      case Some(dead) =>
+        (vecs0.where(!dead(col("vid"))),
+          edges0.where(!dead(col("src")) && !dead(col("dst"))),
+          qF0.where(!dead(col("q_id"))))
     }
     // the stored edge table is already materialized (it IS parquet) —
     // checkpointing the scan into block-manager blocks was a full extra
@@ -535,7 +499,7 @@ object Similarity {
     // same once-only compute, two fewer barrier jobs per admission
     val newBase = newVecs.select(col(idCol).as("vid"), col(vecCol).as("vec"),
       VectorOps.normSq(col(vecCol)).as("nsq")).localCheckpoint(eager = false)
-    val newCells = cellAssignment(newBase, cents, 2)
+    val newCells = cellAssignment(newBase, cents, col("vec"), col("nsq"), 2)
       .select(col("vid"), col("cell"), col("rn"))
       .localCheckpoint(eager = false)
     val allVecs = storedVecs.unionByName(newBase)
@@ -614,32 +578,25 @@ object Similarity {
         .select("src", "dst", "pcell"))
       .localCheckpoint() // the overwrite target is still in this plan
     // the three writes touch disjoint outputs (edges overwrite, two
-    // appends of already-checkpointed frames) — overlap them (§2.6).
-    // dynamic partition overwrite is a PER-WRITE DataFrameWriter option
-    // (r14 — replaces the session-global conf window, which was safe
-    // only because the concurrent appends ignore it, and brittle the
-    // moment another partitioned write joined the pool)
-    parallelJobs(
-      () => out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pcell").parquet(s"$path/edges"),
+    // appends of already-checkpointed frames) — overlap them (§2.6)
+    ParallelJobs.run(Seq(
+      () => overwriteParts(out, s"$path/edges", "pcell", Nil),
       () => newBase.write.mode("append").parquet(s"$path/vecs"),
-      () => newCells.write.mode("append").parquet(s"$path/cells"))
+      () => newCells.write.mode("append").parquet(s"$path/cells")))
   }
 
   /** TOMBSTONE COMPACTION of a [[writeGraphIndex]]-persisted graph
-    * index (round-12): bake a tombstone set into storage so probes stop
-    * paying for it. [[probeGraphIndex]]'s mask is the right
-    * delete-time move (O(0) write cost), but a long-lived index pays
-    * the mask on EVERY probe forever — masked rows still decode, the
-    * broadcast anti-joins still run, and storage never shrinks. This op
-    * rewrites ONLY the edge partitions a tombstone touches (the
-    * hnsw_append dynamic-overwrite shape: untouched pcell directories'
-    * files stay byte-identical, spec-pinned) dropping edges with a
-    * masked endpoint, and drops masked rows from the per-node side
-    * tables (vecs/cells — O(n) frames next to the O(n·m) edge
-    * structure; at 100 TB the selective rewrite is on the table that
-    * matters). Centroids are untouched: compaction, like delete and
+    * index: bake a tombstone set into storage so probes stop paying for
+    * it. [[probeGraphIndex]]'s mask is the right delete-time move (O(0)
+    * write cost), but a long-lived index pays the mask on EVERY probe
+    * forever — masked rows still decode, the mask filters still run,
+    * and storage never shrinks. This op rewrites ONLY the edge
+    * partitions a tombstone touches ([[eraseRows]]: untouched pcell
+    * directories' files stay byte-identical, spec-pinned) dropping
+    * edges with a masked endpoint, and drops masked rows from the
+    * per-node side tables (vecs/cells — O(n) frames next to the O(n·m)
+    * edge structure; at 100 TB the selective rewrite is on the table
+    * that matters). Centroids are untouched: compaction, like delete and
     * append, never retrains the quantizer.
     *
     * Contract (SimilaritySpec): an unmasked probe of the compacted
@@ -647,118 +604,105 @@ object Similarity {
     * the rewrite implement the SAME erasure semantics (edges cut at
     * both endpoints AFTER the stored rank cut, entry level and pool
     * over survivors) — and storage bytes strictly shrink. The
-    * touched-pcell id list is a driver-side collect bounded by the
-    * partition count, the same documented tiny-collect as
-    * [[deleteFromIvfIndex]]'s.
+    * tombstones are collected once ([[tombstoneTest]]); the three
+    * rewrites touch disjoint outputs and run concurrently (§2.6).
     */
   def compactGraphIndex(path: String, tombstones: DataFrame): Unit = {
     val s = tombstones.sparkSession
-    val tomb = tombstones
-      .select(col(tombstones.columns.head).as("__tid")).distinct()
-      .localCheckpoint()
-    val edges = s.read.parquet(s"$path/edges")
-    // partitions holding a tombstoned endpoint — two broadcast-hash
-    // semi-joins (an OR-condition join would plan a nested loop over
-    // the whole edge table)
-    val touched = edges
-      .join(broadcast(tomb), col("src") === col("__tid"), "left_semi")
-      .select("pcell")
-      .unionByName(edges
-        .join(broadcast(tomb), col("dst") === col("__tid"), "left_semi")
-        .select("pcell"))
-      .distinct().collect().map(_.get(0))
-    if (touched.nonEmpty) {
-      val remain = edges.where(col("pcell").isin(touched: _*))
-        .join(broadcast(tomb), col("src") === col("__tid"), "left_anti")
-        .join(broadcast(tomb), col("dst") === col("__tid"), "left_anti")
-        .localCheckpoint() // the overwrite target is still in this plan
-      // per-write dynamic overwrite (r14) — no session-global conf window
-      remain.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pcell").parquet(s"$path/edges")
-      // a pcell fully emptied writes no partition under dynamic
-      // overwrite — remove its directory explicitly (the erasure must
-      // not leave servable bytes behind)
-      val kept = remain.select("pcell").distinct().collect().map(_.get(0)).toSet
-      val edgesRoot = new org.apache.hadoop.fs.Path(s"$path/edges")
-      val fs = edgesRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      touched.filterNot(kept).foreach { c =>
-        val dir = new org.apache.hadoop.fs.Path(edgesRoot, s"pcell=$c")
-        fs.delete(dir, true)
-        require(!fs.exists(dir),
-          s"graph compaction failed to remove emptied partition $dir")
-      }
+    // read through graft-index: no schema-inference job per table
+    def table(sub: String) = IndexRoute.GraftIndex(path).read(s, sub)
+    tombstoneTest(tombstones).foreach { dead =>
+      // per-node side tables: a whole-table overwrite, so each frame
+      // checkpoints BEFORE its own overwrite (the target is in the plan)
+      def sideTable(sub: String): () => Unit = () =>
+        table(sub).where(!dead(col("vid")))
+          .localCheckpoint().write.mode("overwrite").parquet(s"$path/$sub")
+      ParallelJobs.run(Seq(
+        () => eraseRows(table("edges"), s"$path/edges", "pcell",
+          dead(col("src")) || dead(col("dst"))),
+        sideTable("vecs"), sideTable("cells")))
     }
-    // per-node side tables: masked rows drop, surviving rows rewrite
-    // (flat O(n) frames — vecs carries one row per node, not per edge).
-    // The two rewrites are independent — overlap them (§2.6); each
-    // frame still checkpoints eagerly BEFORE its own overwrite (the
-    // overwrite target is in the plan)
-    parallelJobs(Seq("vecs" -> "vid", "cells" -> "vid").map {
-      case (sub, idc) => () => {
-        val remain = s.read.parquet(s"$path/$sub")
-          .join(broadcast(tomb), col(idc) === col("__tid"), "left_anti")
-          .localCheckpoint()
-        remain.write.mode("overwrite").parquet(s"$path/$sub")
-      }
-    }: _*)
   }
 
-  /** Integer grid for cross-engine-exact centroid means: 2^20. A float
+  /** A tombstone set collected ONCE: the distinct non-null ids of
+    * `tombstones`' first column as a literal set, shipped inside every
+    * plan that tests them — as the IVF probe ships its cell → queries
+    * map — so no pass checkpoints or broadcasts them (each broadcast of
+    * a frame is a Spark job of its own; collecting a local batch is
+    * none). `dead(c)` is true exactly where `c` is a tombstoned id
+    * (false on a null `c`, as an anti-join keeps it); None when there
+    * are no tombstones.
+    */
+  private def tombstoneTest(tombstones: DataFrame): Option[Column => Column] = {
+    val ids = tombstones.select(tombstones.columns.head).collect()
+      .map(_.get(0)).filter(_ != null).distinct.toSeq
+    if (ids.isEmpty) None
+    else Some(c => coalesce(c.isin(ids: _*), lit(false)))
+  }
+
+  /** Erase the rows `dead` selects from the table at `root`, partitioned
+    * by `partCol` and read as `table`. One aggregate pass finds each
+    * partition holding a dead row and whether any row survives there
+    * (a driver-side collect bounded by the partition count); only those
+    * partitions are rewritten, and an emptied one's directory is removed
+    * ([[overwriteParts]]). The rewrite reads the partitions it
+    * overwrites: dynamic overwrite stages its output and replaces each
+    * partition's directory only at job commit, after every read.
+    */
+  private def eraseRows(table: DataFrame, root: String, partCol: String,
+      dead: Column): Unit = {
+    val census = table.groupBy(partCol)
+      .agg(count(when(dead, 1)).as("gone"), count(lit(1)).as("n"))
+      .where(col("gone") > 0)
+      .collect()
+    if (census.nonEmpty)
+      overwriteParts(table.where(col(partCol).isin(census.map(_.get(0)): _*) && !dead),
+        root, partCol, census.filter(r => r.getLong(1) == r.getLong(2)).map(_.get(0)))
+  }
+
+  /** The one touched-partition rewrite: `rows` replace the `partCol`
+    * partitions they hold under `root` (dynamic overwrite — every other
+    * partition's files stay as they are), then each `emptied` partition,
+    * which the overwrite never visits because it writes no row there,
+    * has its directory removed — an erasure must not leave servable
+    * bytes behind.
+    */
+  private def overwriteParts(rows: DataFrame, root: String, partCol: String,
+      emptied: Seq[Any]): Unit = {
+    rows.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(root)
+    // the filesystem OF THE INDEX PATH, not fs.defaultFS: with an s3a://
+    // or hdfs:// index under a file:// default, FileSystem.get would
+    // target the wrong FS and the cleanup would silently no-op, leaving
+    // deleted vectors servable
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    emptied.foreach { v =>
+      val dir = new Path(rootPath, s"$partCol=$v")
+      fs.delete(dir, true)
+      require(!fs.exists(dir), s"erasure failed to remove emptied partition $dir")
+    }
+  }
+
+  /** Integer grid for cross-engine-exact centroid sums: 2^20.
+    * Components quantize to multiples of 2^-20 BEFORE summing: a float
     * times a power of two is EXACT in double (exponent shift only), so
     * `round(vec[d] * Grid)` is the same integer in any IEEE engine, and
-    * integer sums are order-independent — the whole Lloyd update becomes
-    * deterministic without ordered float folds.
+    * the per-group BIGINT sums are order-free under any partitioning —
+    * the Lloyd update ([[ivfKmeansTopK]]) and the label centroids
+    * ([[centroidCosines]]) stay deterministic without ordered float folds.
     */
-  val KmeansGrid = 1048576L
+  val CentroidGrid: Long = 1L << 20
 
-  /** IVF with a K-MEANS-REFINED coarse quantizer: the seeded every-Nth-id
-    * pick of [[ivfTopK]] becomes the Lloyd INIT, then `lloydIters`
-    * assign/update rounds tighten the cells before the final search.
-    * Tighter cells put true neighbors in the query's cell more often —
-    * the standard recall lift at identical search cost (same nprobe,
-    * same expected occupancy).
-    *
-    * Determinism across engines (the oracle-parity contract): the mean
-    * is the ONE step where float fold order could diverge, so it runs on
-    * the [[KmeansGrid]] integer image of the vectors — exact per-dim
-    * BIGINT sums (order-free), then a single exact-integer division
-    * `sum / (n * Grid)` to double. Assignment/search cosines fold
-    * ascending-dim like everything else. Cells keep their seed centroid
-    * id as a stable label (argmax tie-break); cells that lose all
-    * members drop out, identically in SQL's GROUP BY.
-    *
-    * Scale shape: centroids stay a broadcast set (numCells rows); each
-    * Lloyd round is one broadcast crossJoin + argmax (no corpus shuffle
-    * beyond the per-cell-dim aggregation, which AQE-combines map-side);
-    * rounds are a fixed small count, not data-dependent.
-    */
   /** Corpus image for the Lloyd machinery: double vec + squared norm +
-    * the [[KmeansGrid]] integer image (exact, order-free sums). */
+    * the [[CentroidGrid]] integer image (exact, order-free sums). */
   private def kmBase(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol).as("vid"),
       transform(col(vecCol), x => x.cast("double")).as("vec"),
       VectorOps.normSq(col(vecCol)).as("nsq"),
       transform(col(vecCol),
-        x => round(x.cast("double") * KmeansGrid).cast("long")).as("si"))
-
-  /** Nearest cell(s) by cosine, ties to the smaller centroid label.
-    * Both arms are the shuffle-free per-row fold over the broadcast
-    * centroid array: cells == 1 (every Lloyd round + the corpus side of
-    * the search) via [[argmaxCell]], cells > 1 via the top-p
-    * [[topCellsArr]] + explode.
-    */
-  private def kmAssign(df: DataFrame, cents: DataFrame, cells: Int): DataFrame =
-    if (cells == 1)
-      df.crossJoin(broadcast(centArray(cents)))
-        .withColumn("cell", argmaxCell(col("vec"), col("nsq")))
-        .drop("__cents")
-    else
-      // multi-cell fan-out through the same fold: top-p array + explode,
-      // map-only (the former ranked window shuffled |rows| × |cents|)
-      df.crossJoin(broadcast(centArray(cents)))
-        .select(df.columns.map(col) :+
-          explode(topCellsArr(col("vec"), col("nsq"), cells)).as("cell"): _*)
+        x => round(x.cast("double") * CentroidGrid).cast("long")).as("si"))
 
   /** `lloydIters` assign/update rounds from the seeded every-Nth-id
     * init; the mean runs on the integer grid image (see ivfKmeansTopK's
@@ -766,16 +710,15 @@ object Similarity {
     */
   private def kmRefine(base: DataFrame, centroidEvery: Int,
       lloydIters: Int): DataFrame = {
-    val init = base.where(col("vid") % centroidEvery === 0)
-      .select(col("vid").as("cent_id"), col("vec").as("cvec"), col("nsq").as("cn"))
+    val init = centroidSeed(base, "vid", col("vec"), centroidEvery)
     (1 to lloydIters).foldLeft(init) { (cents, _) =>
-      val sums = kmAssign(base, cents, 1)
+      val sums = cellAssignment(base, cents, col("vec"), col("nsq"), 1)
         .select(col("cell"), posexplode(col("si")).as(Seq("d", "v")))
         .groupBy("cell", "d")
         .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
         // exact-integer division straight to double, then rebuild the
         // array in dim order (sort on d — deterministic)
-        .withColumn("m", col("s") / (col("n") * KmeansGrid))
+        .withColumn("m", col("s") / (col("n") * CentroidGrid))
         .groupBy("cell")
         .agg(array_sort(collect_list(struct(col("d"), col("m")))).as("dm"))
       sums.select(col("cell").as("cent_id"),
@@ -811,7 +754,7 @@ object Similarity {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val base = kmBase(corpus, idCol, vecCol)
     val refined = kmRefine(base, centroidEvery, lloydIters)
-    val assigned = kmAssign(base, refined, 1)
+    val assigned = cellAssignment(base, refined, col("vec"), col("nsq"), 1)
     val a = assigned.select(col("vid").as("vec_a"), col("vec").as("va"),
       col("nsq").as("na"), col("cell"))
     val b = assigned.select(col("vid").as("vec_b"), col("vec").as("vb"),
@@ -824,26 +767,73 @@ object Similarity {
         round(col("cosine"), 6).as("cos_r"))
   }
 
+  /** IVF with a K-MEANS-REFINED coarse quantizer: the seeded every-Nth-id
+    * pick of [[ivfTopK]] becomes the Lloyd INIT, then `lloydIters`
+    * assign/update rounds tighten the cells before the final search.
+    * Tighter cells put true neighbors in the query's cell more often —
+    * the standard recall lift at identical search cost (same nprobe,
+    * same expected occupancy).
+    *
+    * Determinism across engines (the oracle-parity contract): the mean
+    * is the ONE step where float fold order could diverge, so it runs on
+    * the [[CentroidGrid]] integer image of the vectors — exact per-dim
+    * BIGINT sums (order-free), then a single exact-integer division
+    * `sum / (n * Grid)` to double. Assignment/search cosines fold
+    * ascending-dim like everything else. Cells keep their seed centroid
+    * id as a stable label (argmax tie-break); cells that lose all
+    * members drop out, identically in SQL's GROUP BY.
+    *
+    * Scale shape: centroids stay a broadcast set (numCells rows); each
+    * Lloyd round is one [[cellAssignment]] fold (no corpus shuffle
+    * beyond the per-cell-dim aggregation, which AQE-combines map-side);
+    * rounds are a fixed small count, not data-dependent.
+    */
   def ivfKmeansTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroidEvery: Int, lloydIters: Int,
       nprobe: Int = 1): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val base = kmBase(corpus, idCol, vecCol)
     val refined = kmRefine(base, centroidEvery, lloydIters)
-    val c = kmAssign(base, refined, 1)
+    val c = cellAssignment(base, refined, col("vec"), col("nsq"), 1)
       .select(col("vid").as("vec_b"), col("vec").as("vb"), col("nsq").as("nb"), col("cell"))
     val qbase = queries.select(col(idCol).as("vid"),
       transform(col(vecCol), x => x.cast("double")).as("vec"),
       VectorOps.normSq(col(vecCol)).as("nsq"))
-    val q = kmAssign(qbase, refined, nprobe)
+    val q = cellAssignment(qbase, refined, col("vec"), col("nsq"), nprobe)
       .select(col("vid").as("q_id"), col("vec").as("va"), col("nsq").as("na"), col("cell"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    q.join(c, Seq("cell"))
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine", VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(q.join(c, Seq("cell")), k)
+  }
+
+  /** PQ encode + reconstruct: `df` (carrying the double vector in
+    * `__v`) gains `vb` (concatenated nearest codewords per subspace)
+    * and its squared norm `nb`. Codebooks are seeded from `corpus`
+    * ([[centroidSeed]] on per-subspace slices); encoding is a
+    * [[cellAssignment]] fold per subspace, reconstruction a chain of
+    * broadcast codebook joins. `keep` lists the columns to carry
+    * through.
+    */
+  private def pqReconstruct(df: DataFrame, corpus: DataFrame, idCol: String,
+      vecCol: String, numSub: Int, centroidEvery: Int, dim: Int,
+      keep: Seq[String]): DataFrame = {
+    require(dim % numSub == 0, s"dim $dim must split into $numSub subspaces")
+    val subLen = dim / numSub
+    val vecD = transform(col(vecCol), x => x.cast("double"))
+    def subCents(m: Int): DataFrame =
+      centroidSeed(corpus, idCol, slice(vecD, m * subLen + 1, subLen), centroidEvery)
+    val encoded = (0 until numSub).foldLeft(df) { (d, m) =>
+      val sv = slice(col("__v"), m * subLen + 1, subLen)
+      cellAssignment(d, subCents(m), sv, VectorOps.normSq(sv), 1, s"code_$m")
+    }
+    // reconstruct from the codes (broadcast codebook joins — the codes,
+    // not __v or the reconstruction, are what a PQ index persists)
+    val withRec = (0 until numSub).foldLeft(encoded) { (d, m) =>
+      d.join(broadcast(subCents(m).select(col("cent_id").as(s"code_$m"),
+        col("cvec").as(s"__rv_$m"))), Seq(s"code_$m"))
+    }
+    withRec
+      .withColumn("__vrec", concat((0 until numSub).map(m => col(s"__rv_$m")): _*))
+      .select(keep.map(col) :+ col("__vrec").as("vb") :+
+        VectorOps.normSq(col("__vrec")).as("nb"): _*)
   }
 
   /** ANGULAR PRODUCT QUANTIZATION ANN — the memory-side counterpart of
@@ -858,7 +848,7 @@ object Similarity {
     *
     * Scale shape: codebooks are `numSub` broadcast arrays (corpus-seeded
     * like ivfTopK's quantizer); encoding is the same shuffle-free
-    * per-row [[argmaxCell]] fold per subspace — the corpus is NEVER
+    * per-row [[cellAssignment]] fold per subspace — the corpus is NEVER
     * hash-partitioned; scoring reconstructs each row's vector from the
     * broadcast codebook inside the projection (the reconstruction is
     * never materialized to storage — only the codes are the "stored"
@@ -870,43 +860,6 @@ object Similarity {
     * reconstructions, so score ties collapse to the vec_b ASC
     * tie-break — engine-independent.
     */
-  /** PQ encode + reconstruct: `df` (carrying the double vector in
-    * `__v`) gains `__vrec` (concatenated nearest codewords per
-    * subspace) and `__nrec`. Codebooks are seeded from `corpus`
-    * (every-`centroidEvery`-th id, per-subspace slices); encoding is a
-    * shuffle-free [[argmaxCell]] fold per subspace, reconstruction a
-    * chain of broadcast codebook joins. `keep` lists the columns to
-    * carry through.
-    */
-  private def pqReconstruct(df: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, numSub: Int, centroidEvery: Int, dim: Int,
-      keep: Seq[String]): DataFrame = {
-    require(dim % numSub == 0, s"dim $dim must split into $numSub subspaces")
-    val subLen = dim / numSub
-    val vecD = transform(col(vecCol), x => x.cast("double"))
-    def subCents(m: Int): DataFrame =
-      corpus.where(col(idCol) % centroidEvery === 0)
-        .select(col(idCol).as("cent_id"),
-          slice(vecD, m * subLen + 1, subLen).as("cvec"))
-        .withColumn("cn", VectorOps.normSq(col("cvec")))
-    val encoded = (0 until numSub).foldLeft(df) { (d, m) =>
-      val sv = slice(col("__v"), m * subLen + 1, subLen)
-      d.crossJoin(broadcast(centArray(subCents(m))))
-        .withColumn(s"code_$m", argmaxCell(sv, VectorOps.normSq(sv)))
-        .drop("__cents")
-    }
-    // reconstruct from the codes (broadcast codebook joins — the codes,
-    // not __v or the reconstruction, are what a PQ index persists)
-    val withRec = (0 until numSub).foldLeft(encoded) { (d, m) =>
-      d.join(broadcast(subCents(m).select(col("cent_id").as(s"code_$m"),
-        col("cvec").as(s"__rv_$m"))), Seq(s"code_$m"))
-    }
-    withRec
-      .withColumn("__vrec", concat((0 until numSub).map(m => col(s"__rv_$m")): _*))
-      .select(keep.map(col) :+ col("__vrec") :+
-        VectorOps.normSq(col("__vrec")).as("__nrec"): _*)
-  }
-
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, numSub: Int, centroidEvery: Int,
       dim: Int): DataFrame = {
@@ -917,14 +870,7 @@ object Similarity {
       corpus, idCol, vecCol, numSub, centroidEvery, dim, Seq("vec_b"))
     val q = queries.select(col(idCol).as("q_id"), vecD.as("va"),
       VectorOps.normSq(vecD).as("na"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    broadcast(q).crossJoin(rec)
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine",
-        VectorOps.cosine(col("va"), col("__vrec"), col("na"), col("__nrec")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(broadcast(q).crossJoin(rec), k)
   }
 
   /** IVF-PQ — the production ANN composite: IVF's coarse quantizer
@@ -943,27 +889,16 @@ object Similarity {
       dim: Int): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val vecD = transform(col(vecCol), x => x.cast("double"))
-    val cents = corpus.where(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), vecD.as("cvec"),
-        VectorOps.normSq(vecD).as("cn"))
+    val cents = centroidSeed(corpus, idCol, vecD, centroidEvery)
     def withCell(df: DataFrame): DataFrame =
-      df.crossJoin(broadcast(centArray(cents)))
-        .withColumn("cell", argmaxCell(col("__v"), VectorOps.normSq(col("__v"))))
-        .drop("__cents")
+      cellAssignment(df, cents, col("__v"), VectorOps.normSq(col("__v")), 1)
     val c = pqReconstruct(
       withCell(corpus.select(col(idCol).as("vec_b"), vecD.as("__v"))),
       corpus, idCol, vecCol, numSub, centroidEvery, dim, Seq("vec_b", "cell"))
     val q = withCell(queries.select(col(idCol).as("q_id"), vecD.as("__v")))
       .select(col("q_id"), col("__v").as("va"),
         VectorOps.normSq(col("__v")).as("na"), col("cell"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    broadcast(q).join(c, Seq("cell"))
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine",
-        VectorOps.cosine(col("va"), col("__vrec"), col("na"), col("__nrec")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(broadcast(q).join(c, Seq("cell")), k)
   }
 
   /** FILTERED vector search — the metadata-constrained query every
@@ -988,19 +923,12 @@ object Similarity {
       VectorOps.normSq(vecD).as("nb"), col(labelCol).as("lb"))
     val q = queries.select(col(idCol).as("q_id"), vecD.as("va"),
       VectorOps.normSq(vecD).as("na"), col(labelCol).as("lq"))
-    val scored = broadcast(q).crossJoin(c)
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine",
-        VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    val pre = scored.where(col("lb") === col("lq"))
-      .withColumn("rnk", row_number().over(w).cast("int"))
-      .where(col("rnk") <= k)
+    val scored = scoreCosine(broadcast(q).crossJoin(c))
+    val pre = rankByCosine(scored.where(col("lb") === col("lq")), k)
       .select(lit("prefilter").as("strategy"), col("q_id"), col("rnk"),
         col("vec_b").as("neighbor_id"))
-    val post = scored
-      .withColumn("rnk", row_number().over(w).cast("int"))
-      .where(col("rnk") <= k && col("lb") === col("lq"))
+    val post = rankByCosine(scored, k)
+      .where(col("lb") === col("lq"))
       .select(lit("postfilter").as("strategy"), col("q_id"), col("rnk"),
         col("vec_b").as("neighbor_id"))
     pre.unionAll(post)
@@ -1048,19 +976,14 @@ object Similarity {
       centroidEvery: Int, path: String): Unit = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val vecD = transform(col(vecCol), x => x.cast("double"))
-    val cents = corpus.where(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), vecD.as("cvec"),
-        VectorOps.normSq(vecD).as("cn"))
+    val cents = centroidSeed(corpus, idCol, vecD, centroidEvery)
     // two independent outputs — overlap them (§2.6): the tiny centroid
     // write back-fills the partitioned corpus write's tail
-    parallelJobs(
-      () => corpus.select(col(idCol).as("vec_b"), vecD.as("vb"),
-          VectorOps.normSq(vecD).as("nb"))
-        .crossJoin(broadcast(centArray(cents)))
-        .withColumn("cell", argmaxCell(col("vb"), col("nb")))
-        .drop("__cents")
+    ParallelJobs.run(Seq(
+      () => cellAssignment(corpus.select(col(idCol).as("vec_b"), vecD.as("vb"),
+          VectorOps.normSq(vecD).as("nb")), cents, col("vb"), col("nb"), 1)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells"),
-      () => cents.write.mode("overwrite").parquet(s"$path/cents"))
+      () => cents.write.mode("overwrite").parquet(s"$path/cents")))
   }
 
   /** ADMIT a new batch into a [[writeIvfIndex]]-persisted index — the
@@ -1100,53 +1023,17 @@ object Similarity {
     * deliberately NOT retrained: a serving index keeps its cell
     * geometry stable under deletes and retrains offline.
     *
-    * One aggregate pass over `cells` (read through `graft-index`, so
-    * no schema-inference job) yields each touched cell with the number
-    * of rows it keeps: a driver-side collect bounded by the number of
-    * cells, the same documented tiny-collect as Scd2Stream's
-    * touched-slice ids. The tombstones are localCheckpointed first, so
-    * that pass and the rewrite see one tombstone set. The rewrite reads
-    * the touched cells it overwrites; dynamic overwrite stages its
-    * output and replaces each cell's directory only at job commit,
-    * after every read. A cell fully emptied by the tombstones writes no
-    * partition under dynamic overwrite, so its directory is removed
-    * explicitly.
+    * The tombstones are collected once into a literal set
+    * ([[tombstoneTest]]); `cells` is read through `graft-index`, so no
+    * schema-inference job; [[eraseRows]] then makes one aggregate pass
+    * for the touched cells and rewrites them, removing the directory of
+    * any cell the tombstones empty.
     */
-  def deleteFromIvfIndex(path: String, tombstones: DataFrame): Unit = {
-    val s = tombstones.sparkSession
-    val corp = s.read.format("graft-index").load(s"$path/cells")
-    val tomb = tombstones
-      .select(col(tombstones.columns.head).as("vec_b")).distinct()
-      .localCheckpoint()
-    val census = corp
-      .join(broadcast(tomb.withColumn("__t", lit(1))), Seq("vec_b"), "left")
-      .groupBy("cell")
-      .agg(count(col("__t")).as("gone"), count(lit(1)).as("n"))
-      .where(col("gone") > 0)
-      .collect()
-    if (census.isEmpty) return
-    val touched = census.map(_.get(0))
-    val kept = census.filter(r => r.getLong(2) > r.getLong(1)).map(_.get(0)).toSet
-    // per-write dynamic overwrite (r14) — no session-global conf window
-    corp.where(col("cell").isin(touched: _*))
-      .join(broadcast(tomb), Seq("vec_b"), "left_anti")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(s"$path/cells")
-    // Resolve the filesystem OF THE INDEX PATH, not fs.defaultFS: with an
-    // s3a:// or hdfs:// index under a file:// default, FileSystem.get would
-    // target the wrong FS and the emptied-cell cleanup would silently no-op,
-    // leaving deleted vectors servable — the exact failure this erasure lane
-    // exists to prevent.
-    val cellsRoot = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val fs = cellsRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    touched.filterNot(kept).foreach { c =>
-      val dir = new org.apache.hadoop.fs.Path(cellsRoot, s"cell=$c")
-      fs.delete(dir, true)
-      require(!fs.exists(dir),
-        s"IVF erasure failed to remove emptied cell directory $dir")
+  def deleteFromIvfIndex(path: String, tombstones: DataFrame): Unit =
+    tombstoneTest(tombstones).foreach { dead =>
+      eraseRows(IndexRoute.GraftIndex(path).read(tombstones.sparkSession, "cells"),
+        s"$path/cells", "cell", dead(col("vec_b")))
     }
-  }
 
   /** PROBE the persisted IVF index ([[writeIvfIndex]]): queries assign
     * to their cell against the stored centroids, cached on the driver
@@ -1159,8 +1046,7 @@ object Similarity {
     */
   def probeIvfIndex(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
-    probeIvfIndexVia(queries, idCol, vecCol, k, Some(s"$path/cents"),
-      sub => queries.sparkSession.read.parquet(s"$path/$sub"))
+    probeIvfRoute(queries, idCol, vecCol, k, IndexRoute.Parquet(path))
 
   /** [[probeIvfIndex]] through the `graft-index` DataSourceV2 serving
     * table (sources/GraftIndexSource.scala) — identical results
@@ -1171,28 +1057,18 @@ object Similarity {
     */
   def probeIvfIndexV2(path: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame =
-    probeIvfIndexVia(queries, idCol, vecCol, k, Some(s"$path/cents"),
-      sub => queries.sparkSession.read.format("graft-index").load(s"$path/$sub"))
+    probeIvfRoute(queries, idCol, vecCol, k, IndexRoute.GraftIndex(path))
 
   /** Catalog-routed probe — identical to [[probeIvfIndexV2]], but the
     * index's sub-tables resolve by NAME through a registered
     * [[graft.sources.GraftIndexCatalog]]: `catalogIndex` is the
-    * `catalog.index` prefix (backtick the index segment when it carries
-    * non-identifier characters), and the probe reads
-    * `catalogIndex.cents` / `catalogIndex.cells` via spark.table — the
-    * serving story with no filesystem paths in the query. The reader
-    * receives the SUB-TABLE name directly (never a slash-joined
-    * pseudo-path: an index name containing '/' inside its backticks
-    * would mis-split — round-10 ADVICE). The centroid cache keys by the
-    * directory the catalog maps `catalogIndex.cents` to.
+    * `catalog.index` prefix ([[IndexRoute.Catalog]]) — the serving story
+    * with no filesystem paths in the query. The centroid cache keys by
+    * the directory the catalog maps `catalogIndex.cents` to.
     */
   def probeIvfIndexCatalog(catalogIndex: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val s = queries.sparkSession
-    probeIvfIndexVia(queries, idCol, vecCol, k,
-      graft.sources.GraftIndexCatalog.dirOf(s, s"$catalogIndex.cents"),
-      sub => s.table(s"$catalogIndex.$sub"))
-  }
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    probeIvfRoute(queries, idCol, vecCol, k, IndexRoute.Catalog(catalogIndex))
 
   /** Probe from ALREADY-LOADED index frames — the STREAMING serving
     * shape: `cells` is the accumulated admissions stream (the
@@ -1226,8 +1102,16 @@ object Similarity {
       .withColumn("cell", argmaxCell(col("va"), col("na"), cents).cast(cellType))
   }
 
-  /** `reader` maps a sub-table NAME ("cents" / "cells") to its frame —
-    * each route closes over its own prefix (path or catalog identifier);
+  /** A stored index's probe through `route`: the centroid cache keys by
+    * the directory `route` names for `cents`.
+    */
+  private def probeIvfRoute(queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, route: IndexRoute): DataFrame = {
+    val s = queries.sparkSession
+    probeIvfIndexVia(queries, idCol, vecCol, k, route.dir(s, "cents"), route.read(s, _))
+  }
+
+  /** `reader` maps a sub-table NAME ("cents" / "cells") to its frame;
     * `centsDir` is the stored centroids' directory, the
     * [[IvfCentroidCache]] key (None: collect them every call).
     *
@@ -1263,15 +1147,8 @@ object Similarity {
       Seq(lit(cell), array(rs.map(r => struct(lit(r.get(0)).as("q_id"),
         typedLit(r.getSeq[Double](1)).as("va"), lit(r.getDouble(2)).as("na"))): _*))
     }: _*).cast(lookupType)
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    corp.where(col("cell").isin(byCell.keys.toSeq: _*))
-      .select(col("vec_b"), col("vb"), col("nb"), inline(element_at(lookup, col("cell"))))
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("cosine",
-        VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(corp.where(col("cell").isin(byCell.keys.toSeq: _*))
+      .select(col("vec_b"), col("vb"), col("nb"), inline(element_at(lookup, col("cell")))), k)
   }
 
   /** Simplified (centroid-based) SILHOUETTE — the cluster-quality audit
@@ -1291,9 +1168,7 @@ object Similarity {
   def silhouette(corpus: DataFrame, idCol: String, vecCol: String,
       centroidEvery: Int): DataFrame = {
     val vecD = transform(col(vecCol), x => x.cast("double"))
-    val cents = corpus.where(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"), vecD.as("cvec"),
-        VectorOps.normSq(vecD).as("cn"))
+    val cents = centroidSeed(corpus, idCol, vecD, centroidEvery)
     val scored = transform(col("__cents"), c =>
       struct(
         VectorOps.cosine(col("__v"), c.getField("cvec"), col("__n"),
@@ -1340,20 +1215,13 @@ object Similarity {
       dim: Int): DataFrame = {
     val cand = ivfPqTopK(corpus, queries, idCol, vecCol, cands,
         centroidEvery, numSub, dim)
-      .select(col("q_id"), col("neighbor_id"))
+      .select(col("q_id"), col("neighbor_id").as("vec_b"))
     val vecD = transform(col(vecCol), x => x.cast("double"))
-    val corp = corpus.select(col(idCol).as("neighbor_id"), vecD.as("vb"),
+    val corp = corpus.select(col(idCol).as("vec_b"), vecD.as("vb"),
       VectorOps.normSq(vecD).as("nb"))
     val q = queries.select(col(idCol).as("q_id"), vecD.as("va"),
       VectorOps.normSq(vecD).as("na"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("neighbor_id").asc)
-    corp.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cosine",
-        VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"))
+    cosineTopK(corp.join(broadcast(cand), Seq("vec_b")).join(broadcast(q), Seq("q_id")), k)
   }
 
   /** Symmetric per-vector int8 quantization — the storage form of a
@@ -1547,15 +1415,6 @@ object Similarity {
         col("__n.__nid").as("neg_id"), col("__n.rnk").as("neg_rank"))
   }
 
-  /** Integer grid for exact centroid sums: components quantize to
-    * multiples of 2^-20 BEFORE summing, so the per-group component sums
-    * are exact BIGINTs (order-free under any partitioning) instead of
-    * order-dependent float folds. x * 2^20 is an exact double op
-    * (power-of-two scaling), so the quantization itself is
-    * engine-reproducible.
-    */
-  val CentroidGrid: Long = 1L << 20
-
   /** Per-label embedding CENTROID DRIFT: cosine of each label's centroid
     * against the global centroid — the semantic counterpart of the
     * lexical TV-drift diagnostic (a well-separated class points away
@@ -1623,14 +1482,8 @@ object Similarity {
     }
     val c = banded(corpus, "vec_b", "vb", "nb")
     val q = banded(queries, "q_id", "va", "na")
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_b").asc)
-    q.join(c, Seq("band", "bucket"))
-      .where(col("q_id") =!= col("vec_b"))
-      .select("q_id", "va", "na", "vec_b", "vb", "nb").distinct()
-      .withColumn("cosine", VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_b").as("neighbor_id"))
+    cosineTopK(q.join(c, Seq("band", "bucket"))
+      .select("q_id", "va", "na", "vec_b", "vb", "nb").distinct(), k)
   }
 
   /** MAXIMAL MARGINAL RELEVANCE diversification: greedily re-rank an
@@ -1660,15 +1513,10 @@ object Similarity {
       VectorOps.normSq(col(vecCol)).as("nb"))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("va"),
       VectorOps.normSq(col(vecCol)).as("na"))
-    val relW = Window.partitionBy("q_id")
-      .orderBy(col("rel").desc, col("vec_b").asc)
-    val cand = broadcast(q).crossJoin(c)
-      .where(col("q_id") =!= col("vec_b"))
-      .withColumn("rel",
-        VectorOps.cosine(col("va"), col("vb"), col("na"), col("nb")))
-      .withColumn("rn", row_number().over(relW))
-      .where(col("rn") <= cands)
-      .select("q_id", "vec_b", "vb", "nb", "rel")
+    // the exact top-`cands` list; its rank-1 row is the first pick
+    val cand = rankByCosine(scoreCosine(broadcast(q).crossJoin(c)), cands)
+      .select(col("q_id"), col("vec_b"), col("vb"), col("nb"),
+        col("cosine").as("rel"), col("rnk"))
       .localCheckpoint()
     val sims = cand.select(col("q_id"), col("vec_b"), col("vb"), col("nb"))
       .join(cand.select(col("q_id"), col("vec_b").as("sel_b"),
@@ -1678,8 +1526,7 @@ object Similarity {
         VectorOps.cosine(col("vb"), col("svb"), col("nb"), col("snb"))
           .as("sim"))
       .localCheckpoint()
-    var selected = cand.withColumn("rn", row_number().over(relW))
-      .where(col("rn") === 1)
+    var selected = cand.where(col("rnk") === 1)
       .select(col("q_id"), col("vec_b").as("sel"),
         lit(1).as("pick"), col("rel").as("score"))
       .localCheckpoint()
@@ -1795,8 +1642,6 @@ object Similarity {
   * the footer cache; an entry is numCells × dim doubles.
   */
 private[graft] object IvfCentroidCache {
-  import org.apache.hadoop.fs.Path
-  import org.apache.spark.sql.SparkSession
   private val MaxEntries = 64
   private val m = new java.util.concurrent.ConcurrentHashMap[
     String, (Seq[(String, Long, Long)], Column)]()
@@ -1845,4 +1690,47 @@ private[graft] object IvfCentroidCache {
     typedLit(cents.select(col("cent_id").cast("long"),
         col("cvec").cast("array<double>"), col("cn").cast("double"))
       .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))))
+}
+
+/** Where a persisted index's sub-tables (`cents`, `cells`, `vecs`,
+  * `edges`) are read from: one of three exclusive routes, shared by the
+  * IVF and graph probes. Every route returns identical rows.
+  */
+sealed trait IndexRoute {
+  /** Sub-table `sub` as a frame. */
+  def read(s: SparkSession, sub: String): DataFrame
+  /** The directory holding sub-table `sub` (a cache key), if known. */
+  def dir(s: SparkSession, sub: String): Option[String]
+}
+
+object IndexRoute {
+  /** Plain parquet files under `path` (`spark.read.parquet` infers
+    * each sub-table's schema with a Spark job of its own).
+    */
+  final case class Parquet(path: String) extends IndexRoute {
+    def read(s: SparkSession, sub: String): DataFrame = s.read.parquet(s"$path/$sub")
+    def dir(s: SparkSession, sub: String): Option[String] = Some(s"$path/$sub")
+  }
+
+  /** The `graft-index` DataSourceV2 table under `path`
+    * (sources/GraftIndexSource.scala).
+    */
+  final case class GraftIndex(path: String) extends IndexRoute {
+    def read(s: SparkSession, sub: String): DataFrame =
+      s.read.format("graft-index").load(s"$path/$sub")
+    def dir(s: SparkSession, sub: String): Option[String] = Some(s"$path/$sub")
+  }
+
+  /** The same V2 table resolved by NAME through a registered
+    * [[graft.sources.GraftIndexCatalog]]: `prefix` is `catalog.index`
+    * (backtick the index segment when it carries non-identifier
+    * characters). The sub-table name is appended as one more identifier
+    * part, never slash-joined into a pseudo-path — an index name
+    * containing '/' inside its backticks would mis-split.
+    */
+  final case class Catalog(prefix: String) extends IndexRoute {
+    def read(s: SparkSession, sub: String): DataFrame = s.table(s"$prefix.$sub")
+    def dir(s: SparkSession, sub: String): Option[String] =
+      graft.sources.GraftIndexCatalog.dirOf(s, s"$prefix.$sub")
+  }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GQuery, QueryGroup, Tables}
-import graft.operators.{Dedup, Incremental, Layout, Multimodal, Relational, Sampling, Similarity, Sketches, TextAnalysis}
+import graft.operators.{Dedup, Incremental, IndexRoute, Layout, Multimodal, Relational, Sampling, Similarity, Sketches, TextAnalysis}
 import graft.streaming.EventsStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2506,7 +2506,7 @@ object ExtQueries extends QueryGroup {
     Similarity.recallAtK(
       Similarity.bruteForceTopK(corpus, q, "vec_id", "embedding", TopK),
       HnswBeamLadder.map(b => f"b$b%02d" ->
-        Similarity.probeGraphIndex(path, q, "vec_id", "embedding", TopK,
+        Similarity.probeGraphIndex(IndexRoute.Parquet(path), q, "vec_id", "embedding", TopK,
           HnswEntryEvery, b, HnswRounds)),
       TopK)
   }
@@ -2524,7 +2524,7 @@ object ExtQueries extends QueryGroup {
     val path = scratchPath(s, "hnsw_idx", d)
     Similarity.writeGraphIndex(Tables.embeddings(s, d), "vec_id",
       "embedding", IvfCentroidEvery, HnswM, path)
-    Similarity.probeGraphIndex(path, annQueries(s, d), "vec_id", "embedding",
+    Similarity.probeGraphIndex(IndexRoute.Parquet(path), annQueries(s, d), "vec_id", "embedding",
       TopK, HnswEntryEvery, HnswBeam, HnswRounds)
   }
 
@@ -2537,8 +2537,8 @@ object ExtQueries extends QueryGroup {
     val path = scratchPath(s, "hnsw_v2idx", d)
     Similarity.writeGraphIndex(Tables.embeddings(s, d), "vec_id",
       "embedding", IvfCentroidEvery, HnswM, path)
-    Similarity.probeGraphIndex(path, annQueries(s, d), "vec_id", "embedding",
-      TopK, HnswEntryEvery, HnswBeam, HnswRounds, viaV2 = true)
+    Similarity.probeGraphIndex(IndexRoute.GraftIndex(path), annQueries(s, d), "vec_id",
+      "embedding", TopK, HnswEntryEvery, HnswBeam, HnswRounds)
   }
 
   /** CATALOG-routed twin of ext_ann_hnsw_v2: the persisted graph probe
@@ -2555,9 +2555,9 @@ object ExtQueries extends QueryGroup {
     s.conf.set("spark.sql.catalog.graft_idx",
       classOf[graft.sources.GraftIndexCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_idx.root", f.getParent)
-    Similarity.probeGraphIndex(path, annQueries(s, d), "vec_id", "embedding",
-      TopK, HnswEntryEvery, HnswBeam, HnswRounds,
-      catalog = Some(s"graft_idx.`${f.getName}`"))
+    Similarity.probeGraphIndex(IndexRoute.Catalog(s"graft_idx.`${f.getName}`"),
+      annQueries(s, d), "vec_id", "embedding", TopK, HnswEntryEvery, HnswBeam,
+      HnswRounds)
   }
 
   /** TOMBSTONE-MASKED probe of the persisted graph index — erasure on a
@@ -2574,7 +2574,7 @@ object ExtQueries extends QueryGroup {
     val emb = Tables.embeddings(s, d)
     Similarity.writeGraphIndex(emb, "vec_id", "embedding",
       IvfCentroidEvery, HnswM, path)
-    Similarity.probeGraphIndex(path, annQueries(s, d), "vec_id", "embedding",
+    Similarity.probeGraphIndex(IndexRoute.Parquet(path), annQueries(s, d), "vec_id", "embedding",
       TopK, HnswEntryEvery, HnswBeam, HnswRounds,
       tombstones = Some(emb
         .where(col("vec_id") % IvfDeleteMod === IvfDeleteRem)
@@ -2603,7 +2603,7 @@ object ExtQueries extends QueryGroup {
     Similarity.compactGraphIndex(path, emb
       .where(col("vec_id") % IvfDeleteMod === IvfDeleteRem)
       .select("vec_id"))
-    Similarity.probeGraphIndex(path,
+    Similarity.probeGraphIndex(IndexRoute.Parquet(path),
       annQueries(s, d).where(col("vec_id") % IvfDeleteMod =!= IvfDeleteRem),
       "vec_id", "embedding", TopK, HnswEntryEvery, HnswBeam, HnswRounds)
   }
@@ -2629,7 +2629,7 @@ object ExtQueries extends QueryGroup {
     Similarity.appendToGraphIndex(
       emb.where(col("vec_id") % IvfAppendMod === 0),
       "vec_id", "embedding", HnswM, path)
-    Similarity.probeGraphIndex(path, annQueries(s, d), "vec_id", "embedding",
+    Similarity.probeGraphIndex(IndexRoute.Parquet(path), annQueries(s, d), "vec_id", "embedding",
       TopK, HnswEntryEvery, HnswBeam, HnswRounds)
   }
 
@@ -3450,7 +3450,7 @@ object ExtQueries extends QueryGroup {
     * kmAssign, reused by the k-means IVF and semantic-dedup oracles.
     */
   private def kmCtesSql(iters: Int): String = {
-    val grid = Similarity.KmeansGrid
+    val grid = Similarity.CentroidGrid
     def assignCos(s: String, c: String) =
       s"${dotOf(s"$s.vec", s"$c.cvec")} / (sqrt($s.nsq) * sqrt($c.cn))"
     val rounds = (1 to iters).map { it =>

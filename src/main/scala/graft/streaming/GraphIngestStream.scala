@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Similarity
+import graft.operators.{IndexRoute, Similarity}
 import org.apache.spark.sql.DataFrame
 
 /** STREAMING ANN ADMISSION — the foreachBatch shape of
@@ -51,7 +51,7 @@ object GraphIngestStream {
     /** Serve top-k off the index as folded so far. */
     def probe(queries: DataFrame, k: Int, entryEvery: Int, beam: Int,
         rounds: Int): DataFrame =
-      Similarity.probeGraphIndex(path, queries, idCol, vecCol, k,
+      Similarity.probeGraphIndex(IndexRoute.Parquet(path), queries, idCol, vecCol, k,
         entryEvery, beam, rounds)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{GraftFunctions, VectorOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The fused codegen dot product must be BIT-IDENTICAL to the built-in
@@ -61,11 +62,18 @@ class DotProductSpec extends SparkSpec {
     (emb, cents)
   }
 
+  /** The assignment helper's (vid, cell, rn): its p = 1 arm is the
+    * nearest-centroid kernel, whose one cell has rank 1.
+    */
+  private def rankedCells(emb: DataFrame, cents: DataFrame, p: Int): DataFrame = {
+    val a = graft.operators.Similarity.cellAssignment(emb, cents, col("vec"), col("nsq"), p)
+    a.select(col("vid"), col("cell"), if (p == 1) lit(1).as("rn") else col("rn"))
+  }
+
   test("graft_nearest_cells ≡ ranked window top-p, row for row, ranks included") {
     val (emb, cents) = centFixture()
     for (p <- Seq(1, 2, 3)) {
-      val fold = graft.operators.Similarity.cellAssignment(emb, cents, p)
-        .select("vid", "cell", "rn")
+      val fold = rankedCells(emb, cents, p)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("vid")
         .orderBy(col("__ccos").desc, col("cent_id").asc)
       val window = emb.crossJoin(broadcast(cents))
@@ -83,10 +91,12 @@ class DotProductSpec extends SparkSpec {
 
   test("graft_nearest_cells: p=1 ≡ graft_nearest_centroid; empty cents → empty array; SQL face") {
     val (emb, cents) = centFixture()
-    val one = graft.operators.Similarity.cellAssignment(emb, cents, 1)
-      .select(col("vid"), col("cell"))
-    val argmax = emb.crossJoin(broadcast(
+    val withCents = emb.crossJoin(broadcast(
         cents.agg(collect_list(struct(col("cent_id"), col("cvec"), col("cn"))).as("__cents"))))
+    val one = withCents.select(col("vid"),
+      explode(call_function(GraftFunctions.NearestCellsName,
+        col("__cents"), col("vec"), col("nsq"), lit(1))).as("cell"))
+    val argmax = withCents
       .select(col("vid"),
         call_function(GraftFunctions.NearestCentroidName,
           col("__cents"), col("vec"), col("nsq")).as("cell"))
@@ -127,8 +137,7 @@ class DotProductSpec extends SparkSpec {
       .toDF("cent_id", "cvec")
       .withColumn("cn", VectorOps.normSq(col("cvec")))
     for (p <- Seq(1, 2, 3)) {
-      val fold = graft.operators.Similarity.cellAssignment(emb, cents, p)
-        .select("vid", "cell", "rn")
+      val fold = rankedCells(emb, cents, p)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("vid")
         .orderBy(col("__ccos").desc, col("cent_id").asc)
       val window = emb.crossJoin(broadcast(cents))
@@ -165,8 +174,6 @@ class DotProductSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val (emb, cents) = centFixture()
-      val plan = graft.operators.Similarity.cellAssignment(emb, cents, 2)
-        .queryExecution.executedPlan
       import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
       import org.apache.spark.sql.execution.window.WindowExec
@@ -178,10 +185,17 @@ class DotProductSpec extends SparkSpec {
         case s: ShuffleExchangeExec => s +: s.children.flatMap(corpusShuffles)
         case other => other.children.flatMap(corpusShuffles)
       }
-      assert(corpusShuffles(plan).isEmpty,
-        s"multi-cell assignment must not shuffle the corpus:\n$plan")
-      assert(plan.collectWithSubqueries { case w: WindowExec => w }.isEmpty,
-        s"multi-cell assignment must not rank a window:\n$plan")
+      // both arms of the one assignment helper: p = 1 (nearest
+      // centroid) and p > 1 (top-p cells + explode)
+      for (p <- Seq(1, 2)) {
+        val plan = graft.operators.Similarity
+          .cellAssignment(emb, cents, col("vec"), col("nsq"), p)
+          .queryExecution.executedPlan
+        assert(corpusShuffles(plan).isEmpty,
+          s"p=$p assignment must not shuffle the corpus:\n$plan")
+        assert(plan.collectWithSubqueries { case w: WindowExec => w }.isEmpty,
+          s"p=$p assignment must not rank a window:\n$plan")
+      }
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 }

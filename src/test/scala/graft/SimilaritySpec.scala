@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, IndexRoute, Similarity}
 import graft.operators.TextAnalysis
 import graft.operators.Multimodal
 import org.apache.spark.sql.DataFrame
@@ -290,7 +290,7 @@ class SimilaritySpec extends SparkSpec {
       .createTempDirectory("graft_hnsw_idx").toString
     try {
       Similarity.writeGraphIndex(corpus, "vec_id", "embedding", 25, 8, path)
-      val probed = Similarity.probeGraphIndex(path, queries, "vec_id",
+      val probed = Similarity.probeGraphIndex(IndexRoute.Parquet(path), queries, "vec_id",
         "embedding", 5, 8, 8, 3)
       val inPlan = Similarity.graphTopK(corpus, queries, "vec_id",
         "embedding", 5, 25, 8, 8, 8, 3)
@@ -299,7 +299,7 @@ class SimilaritySpec extends SparkSpec {
         "persisted-index probe must round-trip losslessly")
       // erasure mask: vec_id % 7 == 3 tombstoned
       val tomb = corpus.where(col("vec_id") % 7 === 3).select("vec_id")
-      val masked = Similarity.probeGraphIndex(path, queries, "vec_id",
+      val masked = Similarity.probeGraphIndex(IndexRoute.Parquet(path), queries, "vec_id",
         "embedding", 5, 8, 8, 3, tombstones = Some(tomb))
       val got = masked.collect()
       assert(got.nonEmpty)
@@ -345,11 +345,15 @@ class SimilaritySpec extends SparkSpec {
       Similarity.writeGraphIndex(corpus, "vec_id", "embedding", 25, 8, path)
       val tomb = corpus.where(col("vec_id") % 7 === 3).select("vec_id")
       // the reference: the masked probe, materialized BEFORE the rewrite
-      val masked = Similarity.probeGraphIndex(path, queries, "vec_id",
+      val masked = Similarity.probeGraphIndex(IndexRoute.Parquet(path), queries, "vec_id",
         "embedding", 5, 8, 8, 3, tombstones = Some(tomb))
         .collect().map(_.toSeq).toSeq
       val bytesBefore = storageBytes
-      Similarity.compactGraphIndex(path, tomb)
+      // the tombstone collect, the edge census (shuffle-map and result
+      // jobs) and rewrite, and a checkpoint and a write per side table;
+      // no tombstone checkpoint, broadcast build or schema inference
+      val jobs = jobsOf(Similarity.compactGraphIndex(path, tomb))._2
+      assert(jobs <= 8, s"a compaction launched $jobs Spark jobs")
       // erasure is physical: no masked endpoint, node, or assignment
       // survives in storage
       assert(spark.read.parquet(s"$path/edges")
@@ -362,7 +366,7 @@ class SimilaritySpec extends SparkSpec {
         s"storage must shrink: $storageBytes vs $bytesBefore")
       // THE contract: the unmasked probe of the compacted index equals
       // the masked probe of the original, row for row
-      val compacted = Similarity.probeGraphIndex(path, queries, "vec_id",
+      val compacted = Similarity.probeGraphIndex(IndexRoute.Parquet(path), queries, "vec_id",
         "embedding", 5, 8, 8, 3).collect().map(_.toSeq).toSeq
       assert(compacted.nonEmpty)
       assert(compacted.groupBy(identity).view.mapValues(_.size).toMap ==
@@ -1140,10 +1144,11 @@ class SimilaritySpec extends SparkSpec {
     val tomb = before.filter(_._2 == victim).map(_._1).toSeq :+
       partialMembers.head
     val tombstones = tomb.toDF("vec_id")
-    // tombstone checkpoint, one census pass and the rewrite, each with
-    // its broadcast; no schema-inference or second census job
+    // one census pass (its shuffle-map and result jobs) and the
+    // rewrite; the local tombstone batch is collected with no job and
+    // ships as a literal set, so no checkpoint and no broadcast build
     val jobs = jobsOf(Similarity.deleteFromIvfIndex(path, tombstones))._2
-    assert(jobs <= 7, s"an erasure launched $jobs Spark jobs")
+    assert(jobs <= 3, s"an erasure launched $jobs Spark jobs")
     val after = spark.read.parquet(s"$path/cells")
       .select("vec_b", "cell").as[(Long, Long)].collect()
     assert(!after.exists(r => tomb.contains(r._1)),
