@@ -490,10 +490,12 @@ object Similarity {
       m: Int, path: String): Unit = {
     val s = newVecs.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val cents = s.read.parquet(s"$path/cents")
-    val storedVecs = s.read.parquet(s"$path/vecs")
-    val storedCells = s.read.parquet(s"$path/cells")
-    val edges0 = s.read.parquet(s"$path/edges")
+    // read through graft-index: no schema-inference job per table
+    def table(sub: String) = IndexRoute.GraftIndex(path).read(s, sub)
+    val cents = table("cents")
+    val storedVecs = table("vecs")
+    val storedCells = table("cells")
+    val edges0 = table("edges")
     // lazy checkpoints (r13): both frames materialize during `out`'s
     // eager checkpoint below and the appends then reuse the blocks —
     // same once-only compute, two fewer barrier jobs per admission

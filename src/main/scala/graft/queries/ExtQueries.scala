@@ -4004,11 +4004,13 @@ object ExtQueries extends QueryGroup {
     * union, NOT EXISTS untouched — an independent check of the
     * single-pass fold.
     *
-    * Scale shape: one orders aggregate (the latest-per-key window over
-    * the changefeed — at 100 TB the feed is a day's delta, not
-    * history), broadcast into ONE pass over the dimension that matches
-    * only open rows (history rows pass the join unmatched), plus an
-    * anti-join of the changes against the open keys for first opens.
+    * Scale shape: the changefeed's keyed rows are collected once and
+    * each key's winner is picked on the driver (at 100 TB the feed is a
+    * day's delta, not history — it must fit the driver), then ONE pass
+    * over the dimension looks up each open row's winner in a map
+    * literal (history rows pass through), and one probe of the open
+    * keys leaves the first opens, appended as a local relation: two
+    * jobs before the result's own, no shuffle, broadcast or join.
     */
   private def scd2Cdc(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.customer(s, d).select(

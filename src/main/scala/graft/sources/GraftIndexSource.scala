@@ -642,6 +642,22 @@ class GraftIndexScan(path: String, tableSchema: StructType,
 
   override def readSchema(): StructType = aggSchema.getOrElse(required)
   override def toBatch: Batch = this
+
+  // two scans of one table with the same pushdown read the same rows,
+  // as Spark's own file scans compare: a plan that reads a table twice
+  // (a self-join, two broadcasts of one frame) then plans one exchange
+  // for both (ReuseExchangeAndSubquery). Runtime filters are compared
+  // by BatchScanExec itself.
+  private def scanKey: Seq[Any] = Seq(path, tableSchema, required,
+    pushedPart.toSeq, hintData.toSeq, partColsOrdered,
+    agg.map(a => (a.aggregateExpressions.map(_.describe()).toSeq,
+      a.groupByExpressions.map(_.describe()).toSeq)),
+    aggSchema, limit, maxFilesPerTrigger, maxBytesPerTrigger, logRetention)
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftIndexScan => o.scanKey == scanKey
+    case _ => false
+  }
+  override def hashCode(): Int = scanKey.hashCode()
   override def description(): String =
     s"graft-index $path, pushedPartitionFilters=[${pushedPart.mkString(", ")}], " +
       s"dataFilterHints=[${hintData.mkString(", ")}], " +

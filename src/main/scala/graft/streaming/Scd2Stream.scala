@@ -1,8 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, RowOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType, MapType, StructType}
 
 /** SCD2 maintenance as a STREAM: the reference's flagship composite
   * (expire superseded rows, insert new current rows — dm:185-232) applied
@@ -63,55 +69,142 @@ object Scd2Stream {
     * values at one timestamp need a monotonic sequence column folded
     * into ts (e.g. ts*2^k + seq) before calling this.
     *
-    * Shape: ONE pass over the snapshot, left-joined to the broadcast
-    * latest-change-per-key on its open rows; each row emits itself
-    * (closed when superseded) plus, on a value change, the new open row.
-    * Keys with no open row take their non-delete winner from an anti-join
-    * of the batch against the open keys. The output derives from the
-    * snapshot through that one branch only, so a checkpointed result
-    * does not inherit (and, fold after fold, compound) its input's plan
-    * constraints.
+    * Shape: the batch's rows with a key reach the driver in ONE
+    * map-only collect, and each key's winner is picked there: the max of
+    * (ts, op, value) under Spark's natural ascending row ordering, whose
+    * NULLS FIRST max is the (ts desc, op desc, value desc) window's rank
+    * 1, with keys grouped as Spark groups them (-0.0 ≡ 0.0, one NaN).
+    * The winners ship to the executors as ONE map literal, key →
+    * struct(value, ts, op), so a single pass over the snapshot looks up
+    * each open row's winner and emits the row itself (closed when
+    * superseded) plus, on a value change, the new open row. A second
+    * collect finds which winners' keys have an open row; the others'
+    * non-delete winners are the first opens, appended as a local
+    * relation. No shuffle, broadcast or join: the fold launches at most
+    * two jobs (a local batch's collect is none) before whatever consumes
+    * it. The output derives from the snapshot through
+    * that one pass only, so a checkpointed result does not inherit (and,
+    * fold after fold, compound) its input's plan constraints.
+    *
+    * Driver bound: the batch's rows with a key are held on the driver
+    * (the broadcast the pick replaced held every winner there too), and
+    * each open row's lookup scans the map, so a batch is a delta of the
+    * dimension, not its history.
     */
   def applyCdc(dim: DataFrame, changes: DataFrame, keyCol: String,
-      valueCol: String, tsCol: String, opCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCol)
-      .orderBy(col(tsCol).desc, col(opCol).desc, col(valueCol).desc)
-    val latest = changes
-      .where(col(keyCol).isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select(col(keyCol).as("__k"), col(valueCol).as("__v"),
-        col(tsCol).as("__ts"), col(opCol).as("__op"))
-    val isDel = col("__op") === "D"
-    val from = col("effective_from")
-    // strictly newer than the open row (an update also supersedes an open
-    // row without a stamp), and a delete or a null-safe value change
-    val closes = (isDel && col("__ts") > from) ||
-      (!isDel && !(col(valueCol) <=> col("__v")) &&
-        (col("__ts") > from || from.isNull))
-    // a dimension row in the snapshot's column order, some columns replaced
-    def row(over: (String, Column)*): Seq[Column] = {
-      val m = over.toMap
-      dim.columns.toSeq.map(c => m.getOrElse(c, col(c)).as(c))
+      valueCol: String, tsCol: String, opCol: String): DataFrame =
+    new CdcBatch(changes, dim.schema, keyCol, valueCol, tsCol, opCol, lit(0))
+      .fold(Seq(0 -> dim)).head
+
+  /** One changefeed batch on the driver: its winners by slice, from the
+    * one collect of `changes`' rows with a key, tagged with `slice`. The
+    * winner's key, value and ts are cast to the dimension's types, which
+    * is what the map lookup compares against.
+    */
+  private final class CdcBatch(changes: DataFrame, dimSchema: StructType,
+      keyCol: String, valueCol: String, tsCol: String, opCol: String,
+      slice: Column) {
+    private val keyType = dimSchema(keyCol).dataType
+    // (ts, op, value) lead, so the natural ordering of the first three
+    // fields is the winner's rank
+    private val rows = changes.where(col(keyCol).isNotNull).select(
+      col(tsCol).cast(dimSchema("effective_from").dataType).as("__ts"),
+      col(opCol).as("__op"),
+      col(valueCol).cast(dimSchema(valueCol).dataType).as("__v"),
+      col(keyCol).cast(keyType).as("__k"), slice.as("__p"))
+    private val types = rows.schema.fields.map(_.dataType)
+
+    // a key as Spark's grouping compares it: floating keys normalized
+    // (NormalizeFloatingNumbers), then the row's bytes
+    private def groupKey(ordinal: Int): InternalRow => UnsafeRow = {
+      val k = BoundReference(ordinal, keyType, nullable = false)
+      val p = UnsafeProjection.create(Seq(keyType match {
+        case FloatType | DoubleType => NormalizeNaNAndZero(k)
+        case _ => k
+      }))
+      r => p(r).copy()
     }
-    val self = row(
-      "effective_to" -> when(closes, col("__ts")).otherwise(col("effective_to")),
-      "is_current" -> when(closes, lit(0)).otherwise(col("is_current")))
-    val opened = row(keyCol -> col("__k"), valueCol -> col("__v"),
-      "effective_from" -> col("__ts"),
-      "effective_to" -> lit(null).cast("long"), "is_current" -> lit(1))
-    val folded = dim
-      .join(broadcast(latest),
-        col(keyCol) === col("__k") && col("is_current") === 1, "left")
-      .select(explode(
-        when(closes && !isDel, array(struct(self: _*), struct(opened: _*)))
-          .otherwise(array(struct(self: _*)))).as("__r"))
-      .select("__r.*")
-    val openKeys = dim.where(col("is_current") === 1).select(col(keyCol).as("__k"))
-    val firstOpen = latest.where(!isDel)
-      .join(openKeys, Seq("__k"), "left_anti")
-      .select(opened: _*)
-    folded.unionByName(firstOpen)
+    private val changeKey = groupKey(3)
+
+    /** Slice id → (collected row, its catalyst twin) of each key's
+      * winner. */
+    val winners: Map[Int, Seq[(Row, InternalRow)]] = {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(rows.schema)
+      val rank = RowOrdering.createNaturalAscendingOrdering(types.take(3).toSeq)
+      rows.collect().toSeq
+        .map(r => (r, toCatalyst(r).asInstanceOf[InternalRow]))
+        .groupBy { case (_, c) => changeKey(c) }.values
+        .map(_.maxBy(_._2)(rank)).toSeq
+        .groupBy(_._2.getInt(4))
+    }
+
+    /** key → struct(__v, __ts, __op) of `ws`, built as one literal. */
+    private def lookup(ws: Seq[(Row, InternalRow)]): Column = {
+      val value = StructType(Seq("__v", "__ts", "__op").map(rows.schema(_)))
+      lit(Literal(ArrayBasedMapData(ws.map(_._2.get(3, keyType)).toArray,
+        ws.map { case (_, c) =>
+          InternalRow(c.get(2, types(2)), c.get(0, types(0)), c.get(1, types(1)))
+        }.toArray), MapType(keyType, value, valueContainsNull = false)))
+    }
+
+    /** Each (slice id, dimension slice) folded with that slice's winners,
+      * lazily; the probe for open keys runs now, one job for all. */
+    def fold(dims: Seq[(Int, DataFrame)]): Seq[DataFrame] = {
+      val slices = dims.map { case (p, d) =>
+        val ws = winners.getOrElse(p, Nil)
+        (d, ws, lookup(ws))
+      }
+      val probes = slices.collect { case (d, ws, l) if ws.nonEmpty =>
+        d.where(col("is_current") === 1 && l(col(keyCol)).isNotNull).select(col(keyCol))
+      }
+      val open = if (probes.isEmpty) Set.empty[UnsafeRow] else {
+        val probe = probes.reduce(_ unionByName _)
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(probe.schema)
+        val openKey = groupKey(0)
+        probe.collect().map(r => openKey(toCatalyst(r).asInstanceOf[InternalRow])).toSet
+      }
+      slices.map { case (dim, ws, l) =>
+        val folded = foldSlice(dim, l)
+        val firstOpens = ws.filterNot { case (_, c) => open(changeKey(c)) }.map(_._1)
+        if (firstOpens.isEmpty) folded
+        else folded.unionByName(changes.sparkSession
+          .createDataFrame(firstOpens.asJava, rows.schema)
+          .where(!isDel).select(opened: _*))
+      }
+    }
+
+    private val isDel = col("__op") === "D"
+
+    // a dimension row in the snapshot's column order, some columns replaced
+    private def row(over: (String, Column)*): Seq[Column] = {
+      val m = over.toMap
+      dimSchema.fieldNames.toSeq.map(c => m.getOrElse(c, col(c)).as(c))
+    }
+
+    private val opened =
+      row(keyCol -> col("__k"), valueCol -> col("__v"),
+        "effective_from" -> col("__ts"),
+        "effective_to" -> lit(null).cast("long"), "is_current" -> lit(1))
+
+    /** The one pass: each open row finds its winner in the map. */
+    private def foldSlice(dim: DataFrame, lookup: Column): DataFrame = {
+      val from = col("effective_from")
+      // strictly newer than the open row (an update also supersedes an
+      // open row without a stamp), and a delete or a null-safe value change
+      val closes = (isDel && col("__ts") > from) ||
+        (!isDel && !(col(valueCol) <=> col("__v")) &&
+          (col("__ts") > from || from.isNull))
+      val self = row(
+        "effective_to" -> when(closes, col("__ts")).otherwise(col("effective_to")),
+        "is_current" -> when(closes, lit(0)).otherwise(col("is_current")))
+      dim.withColumn("__w", when(col("is_current") === 1, lookup(col(keyCol))))
+        .select(col("*"), col(keyCol).as("__k"), col("__w.__v").as("__v"),
+          col("__w.__ts").as("__ts"), col("__w.__op").as("__op"))
+        .select(explode(
+          when(closes && !isDel, array(struct(self: _*), struct(opened: _*)))
+            .otherwise(array(struct(self: _*)))).as("__r"))
+        .select("__r.*")
+    }
   }
 
   /** foreachBatch fold state. The snapshot is held as `numPartitions`
@@ -120,15 +213,20 @@ object Scd2Stream {
     * expression, so batch rows and state rows route identically). Each
     * batch:
     *
-    *   1. derives the touched slice ids from the batch's keys (a
-    *      driver-side set of at most numPartitions ints — bounded
-    *      metadata, not data);
-    *   2. folds [[applyCdc]] over ONLY those slices, each against its
-    *      key-slice of the batch. The fold is per-key throughout
-    *      (latest-per-key window, key-equi joins, key anti-join), and
-    *      every key's rows — dimension and changefeed alike — live in
-    *      exactly one slice, so folding slice by slice is the same
-    *      computation as folding whole frames;
+    *   1. collects its rows with a key, each tagged with its slice id,
+    *      and picks each key's winner on the driver (one map-only job;
+    *      the batch's keyed rows are held on the driver, as the
+    *      broadcast this replaced held its winners). The touched slices
+    *      are the winners' slice ids — at most numPartitions ints;
+    *   2. folds [[applyCdc]]'s pass over ONLY those slices, each against
+    *      its slice's winners, after one probe job across all of them
+    *      for the winners' open keys. The fold is per-key throughout
+    *      (winner pick, key lookup, open-key probe), and every key's
+    *      rows — dimension and changefeed alike — live in exactly one
+    *      slice, so folding slice by slice is the same computation as
+    *      folding whole frames. Each touched slice's successor is then
+    *      checkpointed (one job each): a batch is 2 + touched jobs, and
+    *      a batch without a keyed row is the collect alone;
     *   3. leaves untouched slices' checkpointed RDDs untouched — they
     *      are not referenced by any new plan, so nothing about them is
     *      recomputed, rewritten, or even scanned.
@@ -142,6 +240,7 @@ object Scd2Stream {
       numPartitions: Int = 16) extends FoldState {
     require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
     private def pidExpr = pmod(hash(col(keyCol)), lit(numPartitions))
+    private val schema = initial.schema
     private val parts: Array[Snapshot] = {
       val keyed = initial.withColumn("__pid", pidExpr)
       Array.tabulate(numPartitions) { p =>
@@ -160,17 +259,11 @@ object Scd2Stream {
     def partitionVersions: Seq[Long] = versions.toSeq
 
     def sink(batch: DataFrame, batchId: Long): Unit = fold(batchId) {
-      // one batch materialization, reused per slice
-      FoldState.scratch(batch.where(col(keyCol).isNotNull)
-          .withColumn("__pid", pidExpr)) { keyedBatch =>
-        val touched = keyedBatch.select("__pid").distinct()
-          .collect().map(_.getInt(0)).sorted
-        touched.foreach { p =>
-          parts(p).advance(applyCdc(parts(p).get,
-            keyedBatch.where(col("__pid") === p).drop("__pid"),
-            keyCol, valueCol, tsCol, opCol).coalesce(widths(p)))
-          versions(p) += 1
-        }
+      val cdc = new CdcBatch(batch, schema, keyCol, valueCol, tsCol, opCol, pidExpr)
+      val touched = cdc.winners.keys.toSeq.sorted
+      touched.zip(cdc.fold(touched.map(p => p -> parts(p).get))).foreach { case (p, next) =>
+        parts(p).advance(next.coalesce(widths(p)))
+        versions(p) += 1
       }
     }
 

@@ -350,6 +350,76 @@ object InvariantProps extends Properties("graft.invariants") {
       replayNoop && oneCurrent && ordered
     }
 
+  // applyCdc's rules restated in SQL: the latest change per key by a
+  // row_number over (ts desc, op desc, v desc), the null-safe closing
+  // rule on the open row it supersedes, and NOT EXISTS first opens
+  private val cdcReferenceSql =
+    """WITH latest AS (
+      |  SELECT k, v, ts, op FROM (
+      |    SELECT *, row_number() OVER (
+      |      PARTITION BY k ORDER BY ts DESC, op DESC, v DESC) AS rn
+      |    FROM cdc_ch WHERE k IS NOT NULL)
+      |  WHERE rn = 1),
+      |j AS (
+      |  SELECT d.*, l.k AS lk, l.v AS lv, l.ts AS lts, l.op AS lop,
+      |    (l.op = 'D' AND l.ts > d.effective_from) OR
+      |    (NOT (l.op = 'D') AND NOT (d.v <=> l.v)
+      |      AND (l.ts > d.effective_from OR d.effective_from IS NULL)) AS closes
+      |  FROM cdc_dim d LEFT JOIN latest l ON d.k = l.k AND d.is_current = 1)
+      |SELECT k, v, effective_from,
+      |  CASE WHEN closes THEN lts ELSE effective_to END AS effective_to,
+      |  CASE WHEN closes THEN 0 ELSE is_current END AS is_current
+      |FROM j
+      |UNION ALL
+      |SELECT lk, lv, lts, CAST(NULL AS BIGINT), 1 FROM j
+      |WHERE closes AND NOT (lop = 'D')
+      |UNION ALL
+      |SELECT k, v, ts, CAST(NULL AS BIGINT), 1 FROM latest l
+      |WHERE NOT (op = 'D') AND NOT EXISTS (
+      |  SELECT 1 FROM cdc_dim d WHERE d.is_current = 1 AND d.k = l.k)""".stripMargin
+
+  // key slots: as DOUBLE keys, slots 0/1 are 0.0/-0.0 and 2/3 two NaN
+  // bit patterns, so each pair is one Spark key
+  private val cdcDoubles = Vector(0.0, -0.0, Double.NaN,
+    java.lang.Double.longBitsToDouble(0x7ff8000000000123L), 1.5, -1.5)
+  private def cdcSlotGroup(i: Int): Int = if (i < 4) i / 2 * 2 else i
+
+  property("applyCdc ≡ window / null-safe closes / NOT EXISTS restatement, LONG and DOUBLE keys") =
+    forAll(
+      // dimension: (slot, value, effective_from, open?)
+      Gen.listOfN(6, Gen.zip(Gen.chooseNum(0, 5), Gen.oneOf(Option("a"), Option("b"), None),
+        Gen.oneOf(Option(10L), Option(20L), None), Gen.oneOf(true, false))),
+      // changes: few values, stamps and ops, so ties are the rule: the
+      // same ts with U vs D, null and equal values, late rows, null keys
+      Gen.listOfN(10, Gen.zip(Gen.option(Gen.chooseNum(0, 5)),
+        Gen.oneOf(Option("a"), Option("b"), None), Gen.oneOf(5L, 10L, 20L, 30L),
+        Gen.oneOf("I", "U", "D")))) { (dimRows, chRows) =>
+      import spark.implicits._
+      val opens = dimRows.filter(_._4).distinctBy(r => cdcSlotGroup(r._1))
+      val closed = dimRows.filterNot(_._4)
+      // a key as Spark groups it, for comparing rows across the two sides
+      def canon(k: Any): String = k match {
+        case d: Double => if (d.isNaN) "NaN" else (d + 0.0).toString
+        case o => String.valueOf(o)
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("k", "v", "effective_from", "effective_to", "is_current").collect()
+          .map(r => (canon(r.get(0)), r.toSeq.tail))
+          .groupBy(identity).view.mapValues(_.length).toMap
+      def leg[K: scala.reflect.runtime.universe.TypeTag](key: Int => K): Boolean = {
+        val dim = (opens.map { case (i, v, from, _) => (key(i), v, from, Option.empty[Long], 1) } ++
+          closed.map { case (i, v, _, _) => (key(i), v, Option(1L), Option(5L), 0) })
+          .toDF("k", "v", "effective_from", "effective_to", "is_current")
+        val ch = chRows.map { case (i, v, ts, op) => (i.map(key), v, ts, op) }
+          .toDF("k", "v", "ts", "op")
+        dim.createOrReplaceTempView("cdc_dim")
+        ch.createOrReplaceTempView("cdc_ch")
+        val got = graft.streaming.Scd2Stream.applyCdc(dim, ch, "k", "v", "ts", "op")
+        rows(got) == rows(spark.sql(cdcReferenceSql))
+      }
+      leg(_.toLong) && leg(cdcDoubles)
+    }
+
   property("graft_nearest_cells(p) equals brute-force top-p under (cos desc, id asc)") =
     forAll(
       Gen.listOfN(9, Gen.zip(Gen.chooseNum(0L, 20L),

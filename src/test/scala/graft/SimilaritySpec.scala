@@ -283,6 +283,27 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("graph admission of a 20-row local batch: index tables read with no schema-inference job") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    val rows = corpus.where(col("vec_id") % 10 === 7).orderBy("vec_id").limit(20).collect()
+    val batch = spark.createDataFrame(java.util.Arrays.asList(rows: _*), corpus.schema)
+    val path = java.nio.file.Files.createTempDirectory("graft_hnsw_jobs").toString
+    try {
+      Similarity.writeGraphIndex(corpus.where(col("vec_id") % 10 =!= 7),
+        "vec_id", "embedding", 25, 8, path)
+      // cents, vecs, cells and edges come through graft-index, whose
+      // schema is read on the driver (`spark.read.parquet` adds one
+      // inference job per table), and the recut's two broadcasts of the
+      // stored vectors are one exchange, reused, since equal graft-index
+      // scans compare equal
+      val jobs = jobsOf(Similarity.appendToGraphIndex(batch, "vec_id", "embedding", 8, path))._2
+      assert(jobs <= 19, s"a graph admission launched $jobs Spark jobs")
+      assert(spark.read.parquet(s"$path/vecs").where(col("vid") % 10 === 7).count() == 20)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
+  }
+
   test("persisted graph index: probe ≡ in-plan graphTopK; tombstone mask never returns nor scores deleted ids") {
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val queries = corpus.where(col("vec_id") % 50 === 0)
@@ -593,32 +614,6 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     }
-  }
-
-  /** `body`'s result and the Spark jobs it launched, counted by an
-    * `onJobStart` listener over a job group of its own. Listener events
-    * arrive asynchronously, so a marker job in a second group runs after
-    * `body` and the count is read once the marker's start is seen.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("graft-counted", "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup("graft-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("graft-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("graft-marker"), "listener never saw the marker job")
-      (out, groups.toArray.count(_ == "graft-counted"))
-    } finally sc.removeSparkListener(listener)
   }
 
   // `spark.read.parquet` infers the cells schema with a Spark job of its

@@ -592,7 +592,7 @@ class StreamingSpec extends SparkSpec {
       (2L, Option("b2"), 20L, "U"),
       (3L, Option("c"), 20L, "I")).toDF("k", "v", "ts", "op")
     // localCheckpoint per fold: applyCdc references its input dim twice
-    // (the pass and the open-key anti-join), so an unchecked fold chain
+    // (the pass and the open-key probe), so an unchecked fold chain
     // grows the plan 2^n — KeyedCdcState's per-batch checkpoint discipline
     val d1 = Scd2Stream.applyCdc(dim, b1, "k", "v", "ts", "op").localCheckpoint()
     // key 1: expired at 20, NO current row; key 2: expired + new; key 3: new
@@ -658,16 +658,12 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("KeyedCdcState: 12 mixed CDC folds keep plan constraints flat; 4 slices ≡ 1 slice") {
-    import spark.implicits._
-    import graft.streaming.Scd2Stream
-    val empty = Seq.empty[(Long, Option[String], Long, Option[Long], Int)]
-      .toDF("k", "v", "effective_from", "effective_to", "is_current")
+  // twelve CDC batches: I/U/D over 60 keys (some values null), a hot key
+  // changing many times, late rows older than every earlier batch, and
+  // null keys
+  private def mixedCdcBatches: Seq[Seq[(Option[Long], Option[String], Long, String)]] = {
     val rnd = new scala.util.Random(7)
-    // each batch: I/U/D over 60 keys (some values null), a hot key
-    // changing many times, late rows older than every earlier batch, and
-    // null keys
-    val batches = (0 until 12).map { b =>
+    (0 until 12).map { b =>
       val base = 1000L * (b + 1)
       def op() = Seq("I", "U", "U", "D")(rnd.nextInt(4))
       def value() = if (rnd.nextInt(10) == 0) None else Some(s"v${rnd.nextInt(4)}")
@@ -677,8 +673,16 @@ class StreamingSpec extends SparkSpec {
       val late = Seq.fill(5)((Option(rnd.nextInt(60).toLong), value(),
         rnd.nextInt(500).toLong, op()))
       val nullKeys = Seq.fill(3)((Option.empty[Long], value(), base, "U"))
-      (mixed ++ hot ++ late ++ nullKeys).toDF("k", "v", "ts", "op")
+      mixed ++ hot ++ late ++ nullKeys
     }
+  }
+
+  test("KeyedCdcState: 12 mixed CDC folds keep plan constraints flat; 4 slices ≡ 1 slice") {
+    import spark.implicits._
+    import graft.streaming.Scd2Stream
+    val empty = Seq.empty[(Long, Option[String], Long, Option[Long], Int)]
+      .toDF("k", "v", "effective_from", "effective_to", "is_current")
+    val batches = mixedCdcBatches.map(_.toDF("k", "v", "ts", "op"))
     // summed constraint text, expression ids stripped: ids grow over the
     // session, and their digit count is not plan size
     def constraintChars(s: Scd2Stream.KeyedCdcState): Int =
@@ -714,6 +718,44 @@ class StreamingSpec extends SparkSpec {
     // non-vacuous: closed history, open rows, at most one open row per key
     assert(one.exists(_._5 == 0) && one.exists(_._5 == 1))
     assert(one.filter(_._5 == 1).groupBy(_._1).forall(_._2.size == 1))
+  }
+
+  test("KeyedCdcState.sink job budget: one collect, one probe, one checkpoint per touched slice") {
+    import spark.implicits._
+    import graft.streaming.Scd2Stream
+    val sc = spark.sparkContext
+    val empty = Seq.empty[(Long, Option[String], Long, Option[Long], Int)]
+      .toDF("k", "v", "effective_from", "effective_to", "is_current")
+    // an RDD-backed batch, as a streaming source delivers: collecting it
+    // is a job, where a local relation's collect launches none
+    def batch(rows: Seq[(Option[Long], Option[String], Long, String)]) =
+      sc.parallelize(rows, 2).toDF("k", "v", "ts", "op")
+    Seq(1, 4).foreach { n =>
+      val before = sc.getPersistentRDDs.keySet
+      val s = new Scd2Stream.KeyedCdcState(empty, "k", "v", "ts", "op",
+        numPartitions = n)
+      def liveBlocks = (sc.getPersistentRDDs.keySet -- before).size
+      val perBatch = (mixedCdcBatches :+
+          Seq.fill(3)((Option.empty[Long], Option("x"), 99999L, "U")))
+        .zipWithIndex.map { case (rows, i) =>
+          val v0 = s.partitionVersions
+          val jobs = jobsOf(s.sink(batch(rows), i.toLong))._2
+          val touched = s.partitionVersions.zip(v0).count { case (a, b) => a > b }
+          if (rows.forall(_._1.isEmpty)) {
+            assert(jobs == 1, s"$n slice(s): an all-null-key batch launched $jobs jobs")
+            assert(s.partitionVersions == v0, s"$n slice(s): an all-null-key batch rewrote slices")
+          } else {
+            assert(touched >= 1)
+            assert(jobs <= 2 + touched,
+              s"$n slice(s), batch $i: $jobs jobs for $touched touched slices")
+          }
+          // the fold keeps one checkpoint per slice, nothing per batch
+          assert(liveBlocks == n, s"$n slice(s), batch $i: $liveBlocks live checkpoints")
+          jobs
+        }
+      info(s"$n slice(s): jobs per batch ${perBatch.mkString(", ")}")
+      if (n == 1) assert(perBatch.forall(_ <= 3))
+    }
   }
 
   test("flatMapGroupsWithState sessions: timeout emits completed sessions") {
