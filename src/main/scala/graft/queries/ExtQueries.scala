@@ -4004,13 +4004,16 @@ object ExtQueries extends QueryGroup {
     * union, NOT EXISTS untouched — an independent check of the
     * single-pass fold.
     *
-    * Scale shape: the changefeed's keyed rows are collected once and
-    * each key's winner is picked on the driver (at 100 TB the feed is a
-    * day's delta, not history — it must fit the driver), then ONE pass
-    * over the dimension looks up each open row's winner in a map
-    * literal (history rows pass through), and one probe of the open
-    * keys leaves the first opens, appended as a local relation: two
-    * jobs before the result's own, no shuffle, broadcast or join.
+    * Scale shape: one collect picks each key's winner, each task among
+    * its partition's rows and the driver among the tasks' winners (at
+    * 100 TB the feed is a day's delta, not history — its winners must
+    * fit the driver; here it is the whole orders table, one winner per
+    * ordering customer), then ONE pass over the dimension looks up
+    * each open row's winner in a hash table shipped with the plan
+    * (history rows pass through), and one probe of the open keys
+    * leaves the first opens, appended as a local relation: two jobs,
+    * run when the frame is built, before the result's own; no shuffle,
+    * broadcast or join.
     */
   private def scd2Cdc(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.customer(s, d).select(

@@ -4,11 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, RowOrdering, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, RowOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType, MapType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** SCD2 maintenance as a STREAM: the reference's flagship composite
   * (expire superseded rows, insert new current rows — dm:185-232) applied
@@ -19,7 +19,10 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, MapType, StructType}
   * update-only feed passes `lit("U").as(opCol)`. [[KeyedCdcState]] holds
   * the snapshot hash-partitioned on the business key into N slices and
   * rewrites ONLY the slices whose keys a batch touches — per-batch cost
-  * O(|batch| + |dimension|/N x touched slices), the keyed merge /
+  * O(|batch|) to pick each key's winner (per partition on the executors,
+  * then on the driver among at most one row per key per partition),
+  * plus O(|dimension|/N x touched slices) on the executors, one hash
+  * probe per open row: the keyed merge /
   * partition-overwrite pattern of table formats; `numPartitions = 1` is
   * the full rewrite. foreachBatch delivers at-least-once; `applyCdc` is
   * deterministic in (dim, batch), so a replayed batch folds to the
@@ -69,37 +72,59 @@ object Scd2Stream {
     * values at one timestamp need a monotonic sequence column folded
     * into ts (e.g. ts*2^k + seq) before calling this.
     *
-    * Shape: the batch's rows with a key reach the driver in ONE
-    * map-only collect, and each key's winner is picked there: the max of
-    * (ts, op, value) under Spark's natural ascending row ordering, whose
-    * NULLS FIRST max is the (ts desc, op desc, value desc) window's rank
-    * 1, with keys grouped as Spark groups them (-0.0 ≡ 0.0, one NaN).
-    * The winners ship to the executors as ONE map literal, key →
-    * struct(value, ts, op), so a single pass over the snapshot looks up
-    * each open row's winner and emits the row itself (closed when
-    * superseded) plus, on a value change, the new open row. A second
-    * collect finds which winners' keys have an open row; the others'
-    * non-delete winners are the first opens, appended as a local
-    * relation. No shuffle, broadcast or join: the fold launches at most
-    * two jobs (a local batch's collect is none) before whatever consumes
-    * it. The output derives from the snapshot through
-    * that one pass only, so a checkpointed result does not inherit (and,
-    * fold after fold, compound) its input's plan constraints.
+    * Shape: each key's winner is the max of (ts, op, value) under
+    * Spark's natural ascending row ordering, whose NULLS FIRST max is
+    * the (ts desc, op desc, value desc) window's rank 1, with keys
+    * grouped as Spark groups them (-0.0 ≡ 0.0, one NaN). It is picked in
+    * ONE map-only collect: each task picks its partition's winners, and
+    * the driver picks among those. The winners ship to the executors
+    * inside the plan as ONE hash table, key → struct(value, ts, op), so
+    * a single pass over the snapshot finds each open row's winner in one
+    * hash probe and emits the row itself (closed when superseded) plus,
+    * on a value change, the new open row. A second collect finds which
+    * winners' keys have an open row; the others' non-delete winners are
+    * the first opens, appended as a local relation. No shuffle,
+    * broadcast or join.
     *
-    * Driver bound: the batch's rows with a key are held on the driver
-    * (the broadcast the pick replaced held every winner there too), and
-    * each open row's lookup scans the map, so a batch is a delta of the
-    * dimension, not its history.
+    * The call itself launches those two jobs: it returns a plan that
+    * already holds the winners and the first opens, so building the
+    * fold is not free even if the result is never read. The output
+    * derives from the snapshot through that one pass only, so a
+    * checkpointed result does not inherit (and, fold after fold,
+    * compound) its input's plan constraints; an unchecked chain of folds
+    * instead re-runs every earlier fold's pass and probe on each call.
+    *
+    * Driver bound: the driver receives at most one row per key per
+    * partition of the batch and holds each key's winner, so a batch is a
+    * delta of the dimension, not its history. The executors do O(1) work
+    * per dimension row.
     */
   def applyCdc(dim: DataFrame, changes: DataFrame, keyCol: String,
       valueCol: String, tsCol: String, opCol: String): DataFrame =
     new CdcBatch(changes, dim.schema, keyCol, valueCol, tsCol, opCol, lit(0))
       .fold(Seq(0 -> dim)).head
 
+  /** Each key's winner among (ts, op, value, key, slice) rows: the max of
+    * the first three fields under the natural ascending ordering, keys
+    * grouped as Spark groups them. Keeps copies of the rows. */
+  private def pick(rows: Iterator[InternalRow],
+      types: Seq[DataType]): java.util.HashMap[UnsafeRow, InternalRow] = {
+    val rank = RowOrdering.createNaturalAscendingOrdering(types.take(3))
+    val keyOf = KeyTable.groupKey(types(3), 3)
+    val best = new java.util.HashMap[UnsafeRow, InternalRow]
+    rows.foreach { r =>
+      val k = keyOf(r)
+      val w = best.get(k)
+      if (w == null) best.put(k.copy(), r.copy())
+      else if (rank.gt(r, w)) best.put(k, r.copy())
+    }
+    best
+  }
+
   /** One changefeed batch on the driver: its winners by slice, from the
     * one collect of `changes`' rows with a key, tagged with `slice`. The
     * winner's key, value and ts are cast to the dimension's types, which
-    * is what the map lookup compares against.
+    * is what the lookup compares against.
     */
   private final class CdcBatch(changes: DataFrame, dimSchema: StructType,
       keyCol: String, valueCol: String, tsCol: String, opCol: String,
@@ -112,39 +137,27 @@ object Scd2Stream {
       col(opCol).as("__op"),
       col(valueCol).cast(dimSchema(valueCol).dataType).as("__v"),
       col(keyCol).cast(keyType).as("__k"), slice.as("__p"))
-    private val types = rows.schema.fields.map(_.dataType)
+    private val types = rows.schema.fields.map(_.dataType).toSeq
 
-    // a key as Spark's grouping compares it: floating keys normalized
-    // (NormalizeFloatingNumbers), then the row's bytes
-    private def groupKey(ordinal: Int): InternalRow => UnsafeRow = {
-      val k = BoundReference(ordinal, keyType, nullable = false)
-      val p = UnsafeProjection.create(Seq(keyType match {
-        case FloatType | DoubleType => NormalizeNaNAndZero(k)
-        case _ => k
-      }))
-      r => p(r).copy()
-    }
-    private val changeKey = groupKey(3)
-
-    /** Slice id → (collected row, its catalyst twin) of each key's
-      * winner. */
-    val winners: Map[Int, Seq[(Row, InternalRow)]] = {
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(rows.schema)
-      val rank = RowOrdering.createNaturalAscendingOrdering(types.take(3).toSeq)
-      rows.collect().toSeq
-        .map(r => (r, toCatalyst(r).asInstanceOf[InternalRow]))
-        .groupBy { case (_, c) => changeKey(c) }.values
-        .map(_.maxBy(_._2)(rank)).toSeq
-        .groupBy(_._2.getInt(4))
+    /** Slice id → (normalized key, winner) of each key: each task picks
+      * its partition's winners, so the one collect ships at most one row
+      * per key per partition, and the driver picks among those. */
+    val winners: Map[Int, Seq[(UnsafeRow, InternalRow)]] = {
+      val ts = types // a local: the task closure must not capture this batch
+      val picked = rows.queryExecution.toRdd
+        .mapPartitions(it => pick(it, ts).values.iterator.asScala).collect()
+      pick(picked.iterator, types).asScala.toSeq.groupBy(_._2.getInt(4))
     }
 
-    /** key → struct(__v, __ts, __op) of `ws`, built as one literal. */
-    private def lookup(ws: Seq[(Row, InternalRow)]): Column = {
+    /** key → struct(__v, __ts, __op) of `ws`, as one lookup column. */
+    private def lookup(ws: Seq[(UnsafeRow, InternalRow)]): Column = {
       val value = StructType(Seq("__v", "__ts", "__op").map(rows.schema(_)))
-      lit(Literal(ArrayBasedMapData(ws.map(_._2.get(3, keyType)).toArray,
-        ws.map { case (_, c) =>
-          InternalRow(c.get(2, types(2)), c.get(0, types(0)), c.get(1, types(1)))
-        }.toArray), MapType(keyType, value, valueContainsNull = false)))
+      val toValue = UnsafeProjection.create(Seq(2, 0, 1).map(i =>
+        BoundReference(i, types(i), nullable = true)))
+      val entries = new java.util.HashMap[UnsafeRow, UnsafeRow](ws.size * 2)
+      ws.foreach { case (k, w) => entries.put(k, toValue(w).copy()) }
+      PlanBridge.column(KeyLookup(UnresolvedAttribute.quoted(keyCol),
+        new KeyTable(keyType, value, entries)))
     }
 
     /** Each (slice id, dimension slice) folded with that slice's winners,
@@ -155,17 +168,18 @@ object Scd2Stream {
         (d, ws, lookup(ws))
       }
       val probes = slices.collect { case (d, ws, l) if ws.nonEmpty =>
-        d.where(col("is_current") === 1 && l(col(keyCol)).isNotNull).select(col(keyCol))
+        d.where(col("is_current") === 1 && l.isNotNull).select(col(keyCol))
       }
       val open = if (probes.isEmpty) Set.empty[UnsafeRow] else {
         val probe = probes.reduce(_ unionByName _)
         val toCatalyst = CatalystTypeConverters.createToCatalystConverter(probe.schema)
-        val openKey = groupKey(0)
-        probe.collect().map(r => openKey(toCatalyst(r).asInstanceOf[InternalRow])).toSet
+        val openKey = KeyTable.groupKey(keyType, 0)
+        probe.collect().map(r => openKey(toCatalyst(r).asInstanceOf[InternalRow]).copy()).toSet
       }
+      val toRow = CatalystTypeConverters.createToScalaConverter(rows.schema)
       slices.map { case (dim, ws, l) =>
         val folded = foldSlice(dim, l)
-        val firstOpens = ws.filterNot { case (_, c) => open(changeKey(c)) }.map(_._1)
+        val firstOpens = ws.collect { case (k, w) if !open(k) => toRow(w).asInstanceOf[Row] }
         if (firstOpens.isEmpty) folded
         else folded.unionByName(changes.sparkSession
           .createDataFrame(firstOpens.asJava, rows.schema)
@@ -186,7 +200,7 @@ object Scd2Stream {
         "effective_from" -> col("__ts"),
         "effective_to" -> lit(null).cast("long"), "is_current" -> lit(1))
 
-    /** The one pass: each open row finds its winner in the map. */
+    /** The one pass: each open row finds its winner in the table. */
     private def foldSlice(dim: DataFrame, lookup: Column): DataFrame = {
       val from = col("effective_from")
       // strictly newer than the open row (an update also supersedes an
@@ -197,7 +211,7 @@ object Scd2Stream {
       val self = row(
         "effective_to" -> when(closes, col("__ts")).otherwise(col("effective_to")),
         "is_current" -> when(closes, lit(0)).otherwise(col("is_current")))
-      dim.withColumn("__w", when(col("is_current") === 1, lookup(col(keyCol))))
+      dim.withColumn("__w", when(col("is_current") === 1, lookup))
         .select(col("*"), col(keyCol).as("__k"), col("__w.__v").as("__v"),
           col("__w.__ts").as("__ts"), col("__w.__op").as("__op"))
         .select(explode(
@@ -214,10 +228,10 @@ object Scd2Stream {
     * batch:
     *
     *   1. collects its rows with a key, each tagged with its slice id,
-    *      and picks each key's winner on the driver (one map-only job;
-    *      the batch's keyed rows are held on the driver, as the
-    *      broadcast this replaced held its winners). The touched slices
-    *      are the winners' slice ids — at most numPartitions ints;
+    *      and picks each key's winner (one map-only job, each task
+    *      picking its partition's winners, then the driver among those).
+    *      The touched slices are the winners' slice ids — at most
+    *      numPartitions ints;
     *   2. folds [[applyCdc]]'s pass over ONLY those slices, each against
     *      its slice's winners, after one probe job across all of them
     *      for the winners' open keys. The fold is per-key throughout

@@ -591,9 +591,10 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq((1L, Option.empty[String], 20L, "D"),
       (2L, Option("b2"), 20L, "U"),
       (3L, Option("c"), 20L, "I")).toDF("k", "v", "ts", "op")
-    // localCheckpoint per fold: applyCdc references its input dim twice
-    // (the pass and the open-key probe), so an unchecked fold chain
-    // grows the plan 2^n — KeyedCdcState's per-batch checkpoint discipline
+    // localCheckpoint per fold: applyCdc runs its open-key probe over its
+    // input dim when called, so an unchecked fold chain re-runs every
+    // earlier fold's pass on each call — KeyedCdcState's per-batch
+    // checkpoint discipline
     val d1 = Scd2Stream.applyCdc(dim, b1, "k", "v", "ts", "op").localCheckpoint()
     // key 1: expired at 20, NO current row; key 2: expired + new; key 3: new
     val cur1 = d1.where(col("is_current") === 1)
