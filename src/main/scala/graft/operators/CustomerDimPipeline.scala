@@ -1,16 +1,36 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's whole program as one composable call: dmCustomerProc.py
   * runs 16 SQL blocks top-to-bottom, fully materializing between steps,
   * and accumulates three outputs — the dwd_customer upsert image, the
   * new-customer insert image, and the dwd_hstr SCD2 delta (dm:17-232,
-  * SURVEY §3). Here the same dataflow is ONE lazy DAG per output:
-  * Catalyst prunes and fuses across all block boundaries, so a column
-  * only the final select needs is read exactly once, and shared subtrees
-  * (the staging snapshot, the changed-key set) plan once.
+  * SURVEY §3).
+  *
+  * Like the reference, graft materializes between blocks, once: the
+  * staged snapshot (customer ⋈ order count ⋈ latest order, SQL-1..5).
+  * Every output is derived from it, the delta several times over, and a
+  * lazy plan re-reads the staging tables for each derivation (about ten
+  * per refresh). `run` therefore launches the staging job when called: it
+  * persists the staged rows in executor storage (`MEMORY_AND_DISK`,
+  * through `PlanBridge.persisted`) and returns three lazy outputs over
+  * them; writing them reads no staging file again except the orders the
+  * insert image filters. The persisted rows keep their lineage, so a lost block
+  * is recomputed from the staging files rather than failing a write. They
+  * are no CacheManager entry: the next `run` reads the files again and
+  * never sees this call's rows. `Outputs.release()` unpersists them once
+  * the outputs are written; a caller that drops the outputs without it
+  * leaves an unreachable RDD that Spark's ContextCleaner unpersists.
+  *
+  * PRECONDITION: `c_custkey` is unique in customer, so `cust_id` is
+  * unique in the staged snapshot — the same precondition
+  * `Scd2.keyedUpsert` documents; the upsert and the keyed change
+  * detection both rely on it.
   *
   * Inputs are role-mapped testdata tables (FIXTURES.md): customer plays
   * the customer/party staging join product, orders the account/update
@@ -18,10 +38,15 @@ import org.apache.spark.sql.functions._
   */
 object CustomerDimPipeline {
 
-  final case class Outputs(
-      upsertImage: DataFrame, // SQL-12: current dim after keyed upsert
-      insertImage: DataFrame, // SQL-13: brand-new customers to insert
-      histDelta: DataFrame)   // SQL-14..16: expired ∪ new-current rows
+  final class Outputs private[operators] (
+      val upsertImage: DataFrame, // SQL-12: current dim after keyed upsert
+      val insertImage: DataFrame, // SQL-13: brand-new customers to insert
+      val histDelta: DataFrame,   // SQL-14..16: expired ∪ new-current rows
+      staged: RDD[_]) {
+    /** Unpersists the staged snapshot; write the outputs first (a write
+      * after this recomputes it from the staging files). */
+    def release(): Unit = staged.unpersist(blocking = false)
+  }
 
   def run(spark: SparkSession, sfDir: String, ts: String = "2026-01-01 00:00:00",
       cdate: String = "2023-06-15 00:00:00",
@@ -29,17 +54,18 @@ object CustomerDimPipeline {
     val t = graft.Tables
     def lts(s: String) = to_timestamp(lit(s))
 
-    // -- staging denorm + derived metrics (SQL-1..5 shapes)
+    // -- staging denorm + derived metrics (SQL-1..5 shapes), persisted
     val cust = t.customer(spark, sfDir)
     val ord = t.orders(spark, sfDir)
     val acctCounts = Relational.groupCount(ord, "o_custkey", "acct_count")
     val latest = Relational.latestPerKey(ord, "o_custkey", "o_orderkey")
       .select(col("o_custkey").as("__k"), col("o_orderdate").as("latest_order_date"))
-    val staged = cust
+    val (staged, stagedRows) = PlanBridge.persisted(cust
       .select(col("c_custkey").as("cust_id"), col("c_name").as("cust_name"),
         col("c_mktsegment").as("mkt_segment"), col("c_acctbal").as("acct_bal"))
       .join(acctCounts, col("cust_id") === col("o_custkey"), "left").drop("o_custkey")
-      .join(latest, col("cust_id") === col("__k"), "left").drop("__k")
+      .join(latest, col("cust_id") === col("__k"), "left").drop("__k"),
+      StorageLevel.MEMORY_AND_DISK)
 
     // -- new snapshot with business change (SQL-14 input)
     val newSnap = staged.withColumn("mkt_segment",
@@ -66,19 +92,21 @@ object CustomerDimPipeline {
       Seq("cust_id"))
       .withColumn("etl_date", lts(ts))
 
-    // -- SQL-14..16: change detect -> expire -> new-current -> delta
-    val compareCols = Seq("cust_id", "cust_name", "mkt_segment", "acct_bal")
-    val changedKeys = Scd2.changedRows(newSnap, staged, compareCols)
-      .select("cust_id").distinct()
+    // -- SQL-14..16: change detect -> expire -> new-current -> delta. With
+    // cust_id unique on both sides, a key changed iff its new row differs
+    // from its history row, null-safely, in a compared column: the
+    // multiset difference of the reference's form, as one keyed join
+    // whose two sides give the expired and the new-current rows.
+    val changed = newSnap.as("n").join(hist.as("h"), col("n.cust_id") === col("h.cust_id"))
+      .where(!Seq("cust_name", "mkt_segment", "acct_bal")
+        .map(c => col(s"n.$c") <=> col(s"h.$c")).reduce(_ && _))
     val udate = coalesce(col("latest_order_date"), lts(cdate))
-    val expired = hist
-      .join(changedKeys, Seq("cust_id"), "inner")
+    val expired = changed.select("h.*")
       .withColumn("effective_to_date", udate)
       .withColumn("is_current_record", lit(0))
       .withColumn("sys_effective_to_date", lts(ts))
       .withColumn("etl_date", lts(ts))
-    val newCurrent = newSnap
-      .join(changedKeys, Seq("cust_id"), "inner")
+    val newCurrent = changed.select("n.*")
       .withColumn("effective_from_date", udate)
       .withColumn("effective_to_date", lit(null).cast("timestamp"))
       .withColumn("is_current_record", lit(1))
@@ -87,6 +115,6 @@ object CustomerDimPipeline {
       .withColumn("etl_date", lts(ts))
     val delta = expired.unionByName(newCurrent, allowMissingColumns = true)
 
-    Outputs(upsert, insert, delta)
+    new Outputs(upsert, insert, delta, stagedRows)
   }
 }

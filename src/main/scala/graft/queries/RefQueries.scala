@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GQuery, QueryGroup, Tables}
-import graft.operators.{Relational, Scd2}
+import graft.operators.{CustomerDimPipeline, Relational, Scd2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -623,6 +623,81 @@ object RefQueries extends QueryGroup {
        WHERE effective_from_date <= TIMESTAMP '$ASOF'
          AND (effective_to_date IS NULL OR TIMESTAMP '$ASOF' < effective_to_date)"""
 
+  // ------------------------------------------------- whole program
+  /** The three outputs of `CustomerDimPipeline.run` — the reference's
+    * whole proc in one call (dm:17-232) — each against the reference's
+    * own formulation: the staged snapshot as a left-join chain, the
+    * upsert as a keyed left join, the insert as NOT EXISTS, and the
+    * delta's change detection as the multiset EXCEPT ALL the pipeline
+    * replaces with a keyed join.
+    */
+  private def pipeline(pick: CustomerDimPipeline.Outputs => DataFrame)(
+      s: SparkSession, d: String): DataFrame =
+    pick(CustomerDimPipeline.run(s, d, TS, CDATE, HIST_FROM))
+
+  private val stagedSql =
+    """WITH ac AS (
+          SELECT o_custkey, count(*) AS acct_count FROM orders
+          WHERE o_custkey IS NOT NULL GROUP BY o_custkey),
+        lt AS (
+          SELECT o_custkey, o_orderdate AS latest_order_date FROM (
+            SELECT o_custkey, o_orderdate,
+                   dense_rank() OVER (PARTITION BY o_custkey
+                                      ORDER BY o_orderkey DESC) AS r
+            FROM orders) WHERE r = 1),
+        staged AS (
+          SELECT c_custkey AS cust_id, c_name AS cust_name,
+                 c_mktsegment AS mkt_segment, c_acctbal AS acct_bal,
+                 ac.acct_count, lt.latest_order_date
+          FROM customer
+          LEFT JOIN ac ON c_custkey = ac.o_custkey
+          LEFT JOIN lt ON c_custkey = lt.o_custkey),
+        newsnap AS (
+          SELECT cust_id, cust_name,
+                 CASE WHEN mkt_segment = 'BUILDING' THEN 'BLDG'
+                      ELSE mkt_segment END AS mkt_segment,
+                 acct_bal, acct_count, latest_order_date
+          FROM staged)"""
+
+  private val pipelineUpsertSql =
+    s"""$stagedSql
+        SELECT d.cust_id, d.cust_name,
+               coalesce(u.mkt_segment, d.mkt_segment) AS mkt_segment,
+               d.acct_bal, d.acct_count, d.latest_order_date,
+               TIMESTAMP '$TS' AS etl_date
+        FROM staged d LEFT JOIN newsnap u ON d.cust_id = u.cust_id"""
+
+  private val pipelineInsertSql =
+    s"""$stagedSql
+        SELECT n.*, TIMESTAMP '$TS' AS etl_date
+        FROM newsnap n
+        WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = n.cust_id
+                          AND o_orderstatus = 'F' AND o_orderpriority = '1-URGENT')"""
+
+  private val pipelineDeltaSql =
+    s"""$stagedSql,
+        changed AS (
+          SELECT DISTINCT cust_id FROM (
+            SELECT cust_id, cust_name, mkt_segment, acct_bal FROM newsnap
+            EXCEPT ALL
+            SELECT cust_id, cust_name, mkt_segment, acct_bal FROM staged))
+        SELECT h.*, TIMESTAMP '$HIST_FROM' AS effective_from_date,
+               0 AS is_current_record,
+               coalesce(h.latest_order_date, TIMESTAMP '$CDATE') AS effective_to_date,
+               CAST(NULL AS TIMESTAMP) AS sys_effective_from_date,
+               TIMESTAMP '$TS' AS sys_effective_to_date,
+               TIMESTAMP '$TS' AS etl_date
+        FROM staged h JOIN changed USING (cust_id)
+        UNION ALL BY NAME
+        SELECT n.*,
+               coalesce(n.latest_order_date, TIMESTAMP '$CDATE') AS effective_from_date,
+               1 AS is_current_record,
+               CAST(NULL AS TIMESTAMP) AS effective_to_date,
+               TIMESTAMP '$TS' AS sys_effective_from_date,
+               CAST(NULL AS TIMESTAMP) AS sys_effective_to_date,
+               TIMESTAMP '$TS' AS etl_date
+        FROM newsnap n JOIN changed USING (cust_id)"""
+
   override val queries: Seq[GQuery] = Seq(
     GQuery("q01_denorm_joins", q01, Some(q01Sql), "SQL-1: rename/project/join chain"),
     GQuery("q02_group_count", q02, Some(q02Sql), "SQL-2/3: group-count + attach"),
@@ -645,5 +720,11 @@ object RefQueries extends QueryGroup {
     GQuery("q19_rollup", q19, Some(q19Sql), "grouping sets: rollup subtotals"),
     GQuery("q20_intersect", q20, Some(q20Sql), "multiset intersection"),
     GQuery("q21_top_limit", q21, Some(q21Sql), "ordered LIMIT top-k"),
-    GQuery("q22_asof_dim", q22, Some(q22Sql), "point-in-time SCD2 lookup (time travel over dwd_hstr)"))
+    GQuery("q22_asof_dim", q22, Some(q22Sql), "point-in-time SCD2 lookup (time travel over dwd_hstr)"),
+    GQuery("pipeline_upsert", pipeline(_.upsertImage), Some(pipelineUpsertSql),
+      "whole program: dwd_customer upsert image (SQL-12)"),
+    GQuery("pipeline_insert", pipeline(_.insertImage), Some(pipelineInsertSql),
+      "whole program: new-customer insert image (SQL-13)"),
+    GQuery("pipeline_delta", pipeline(_.histDelta), Some(pipelineDeltaSql),
+      "whole program: dwd_hstr SCD2 delta (SQL-14..16)"))
 }
