@@ -36,8 +36,7 @@ trait SparkSpec extends AnyFunSuite {
     try {
       sc.setJobGroup("graft-counted", "counted")
       val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup("graft-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      markerJob("graft-marker")
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (!groups.contains("graft-marker") && System.nanoTime() < deadline)
         Thread.sleep(10)
@@ -46,14 +45,60 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** `body`'s result and the rows its file scans returned: the
-    * `numOutputRows` of every `FileSourceScanExec` in the executed plans
-    * of the SQL executions `body` ran. Unlike a task's
-    * `inputMetrics.recordsRead`, this leaves out reads of persisted
-    * blocks, which Spark also counts as input records.
+  /** One one-task job in job group `group`, to mark a point in the
+    * listener bus's event order. */
+  private def markerJob(group: String): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+  }
+
+  /** `body`'s result and the input records its tasks read: the
+    * `inputMetrics.recordsRead` of every task of the jobs that start
+    * between a marker job run before `body` and one run after it,
+    * broadcast jobs (which run in a job group of their own) included.
+    * Spark counts a read of a persisted block as input records too, so
+    * this counts the rows `body` read from persisted RDDs.
     */
-  def scannedRowsOf[T](body: => T): (T, Long) = {
-    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+  def inputRecordsOf[T](body: => T): (T, Long) = {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val phase = new AtomicInteger(0) // 1 once the first marker starts, 2 once the second does
+    val counted = ConcurrentHashMap.newKeySet[Int]()
+    val records = new ConcurrentHashMap[Int, Long]() // per stage
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        String.valueOf(e.properties.getProperty("spark.jobGroup.id")) match {
+          case "graft-before" => phase.set(1)
+          case "graft-after" => phase.set(2)
+          case _ => if (phase.get == 1) e.stageIds.foreach(counted.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          records.merge(e.stageId, e.taskMetrics.inputMetrics.recordsRead, _ + _)
+    }
+    sc.addSparkListener(listener)
+    try {
+      markerJob("graft-before")
+      val out = body
+      markerJob("graft-after")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (phase.get != 2 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(phase.get == 2, "listener never saw the marker job")
+      var sum = 0L
+      counted.forEach(st => sum += records.getOrDefault(st, 0L))
+      (out, sum)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the nodes of the executed plans of the SQL
+    * executions `body` ran, each node once: adaptive plans and query
+    * stages are opened, and so are executed commands and subqueries.
+    */
+  def executedNodesOf[T](body: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -81,13 +126,30 @@ trait SparkSpec extends AnyFunSuite {
       .dropWhile(_ ne start).drop(1).takeWhile(_ ne end)
     val visited = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    def scanned(p: SparkPlan): Long = if (!visited.add(p)) 0L else p match {
-      case a: AdaptiveSparkPlanExec => scanned(a.executedPlan)
-      case q: QueryStageExec => scanned(q.plan)
-      case c: CommandResultExec => scanned(c.commandPhysicalPlan)
-      case f: FileSourceScanExec => f.metrics("numOutputRows").value
-      case other => (other.children ++ other.subqueries).map(scanned).sum
+    val nodes = Seq.newBuilder[SparkPlan]
+    def visit(p: SparkPlan): Unit = if (visited.add(p)) {
+      nodes += p
+      p match {
+        case a: AdaptiveSparkPlanExec => visit(a.executedPlan)
+        case q: QueryStageExec => visit(q.plan)
+        case c: CommandResultExec => visit(c.commandPhysicalPlan)
+        case other => (other.children ++ other.subqueries).foreach(visit)
+      }
     }
-    (out, ran.map(qe => scanned(qe.executedPlan)).sum)
+    ran.foreach(qe => visit(qe.executedPlan))
+    (out, nodes.result())
+  }
+
+  /** `body`'s result and the rows its file scans returned: the
+    * `numOutputRows` of every `FileSourceScanExec` in the executed plans
+    * of the SQL executions `body` ran. Unlike a task's
+    * `inputMetrics.recordsRead`, this leaves out reads of persisted
+    * blocks, which Spark also counts as input records.
+    */
+  def scannedRowsOf[T](body: => T): (T, Long) = {
+    val (out, nodes) = executedNodesOf(body)
+    (out, nodes.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metrics("numOutputRows").value
+    }.sum)
   }
 }
