@@ -22,12 +22,13 @@ import org.apache.spark.storage.StorageLevel
   * joined to customer in one shuffle. It persists the staged rows in
   * executor storage (`MEMORY_AND_DISK`, through `PlanBridge.persisted`)
   * and returns three lazy outputs over them; writing them reads no
-  * staging file again. The insert image is a filter on the flag, and the
-  * delta emits both of a changed key's rows from one pass over its keyed
-  * join. The persisted rows keep their lineage, so a lost block is
-  * recomputed from the staging files rather than failing a write. They
-  * are no CacheManager entry: the next `run` reads the files again and
-  * never sees this call's rows. `Outputs.release()` unpersists them once
+  * staging file again. The upsert image is a projection of them, the
+  * insert image a filter on the flag, and the delta emits both of a
+  * changed key's rows from one pass over its keyed join. The persisted
+  * rows keep their lineage, so a lost block is recomputed from the
+  * staging files rather than failing a write. They are no CacheManager
+  * entry: the next `run` reads the files again and never sees this
+  * call's rows. `Outputs.release()` unpersists them once
   * the outputs are written; a caller that drops the outputs without it
   * leaves an unreachable RDD that Spark's ContextCleaner unpersists.
   *
@@ -87,21 +88,23 @@ object CustomerDimPipeline {
     val staged = flagged.drop(UrgentF)
 
     // -- new snapshot with business change (SQL-14 input)
-    def relabel(df: DataFrame) = df.withColumn("mkt_segment",
-      when(col("mkt_segment") === "BUILDING", "BLDG").otherwise(col("mkt_segment")))
+    val relabelled =
+      when(col("mkt_segment") === "BUILDING", "BLDG").otherwise(col("mkt_segment"))
+    def relabel(df: DataFrame) = df.withColumn("mkt_segment", relabelled)
     val newSnap = relabel(staged)
 
-    // -- current dim + history (seeded roles)
-    val dim = staged.withColumn("etl_date", lts(histFrom))
+    // -- history (seeded role)
     val hist = staged
       .withColumn("effective_from_date", lts(histFrom))
       .withColumn("is_current_record", lit(1))
 
-    // -- SQL-12: keyed upsert of changed segments into the dim
-    val updates = newSnap.select(col("cust_id"),
-      col("mkt_segment").as("mkt_segment_new"))
-    val upsert = Scd2.keyedUpsert(dim, updates, Seq("cust_id"),
-        Map("mkt_segment" -> "mkt_segment_new"))
+    // -- SQL-12: keyed upsert of the new snapshot's segments into the dim.
+    // Both sides are the staged rows, one per cust_id, so the keyed join
+    // is a projection: a keyed row takes its relabelled segment, and a
+    // null-key row, which the join matches to nothing, keeps its own.
+    val upsert = staged
+      .withColumn("mkt_segment",
+        when(col("cust_id").isNotNull, relabelled).otherwise(col("mkt_segment")))
       .withColumn("etl_date", lts(ts))
 
     // -- SQL-13: insert image, customers with no F/urgent order

@@ -643,23 +643,38 @@ object Similarity {
   }
 
   /** Erase the rows `dead` selects from the table at `root`, partitioned
-    * by `partCol` and read as `table`. One aggregate pass finds each
-    * partition holding a dead row and whether any row survives there
-    * (a driver-side collect bounded by the partition count); only those
-    * partitions are rewritten, and an emptied one's directory is removed
+    * by `partCol` and read as `table`, in three Spark jobs. The census is
+    * one map-only collect: each task counts (dead, all) rows for EVERY
+    * partition value it read, dead rows or not — a partition whose files
+    * span several tasks would otherwise look emptied — and the driver
+    * sums them (at most one row per file read). It reads `partCol` and
+    * what `dead` reads of every file: the read is O(table), the write
+    * O(touched partitions). Only the partitions holding a dead row are
+    * rewritten, their survivors rebalanced by `partCol` (a shuffle-map
+    * job, then the write) so each gets one file, or a few when AQE splits
+    * a large one; an emptied partition's directory is removed
     * ([[overwriteParts]]). The rewrite reads the partitions it
     * overwrites: dynamic overwrite stages its output and replaces each
     * partition's directory only at job commit, after every read.
     */
   private def eraseRows(table: DataFrame, root: String, partCol: String,
       dead: Column): Unit = {
-    val census = table.groupBy(partCol)
-      .agg(count(when(dead, 1)).as("gone"), count(lit(1)).as("n"))
-      .where(col("gone") > 0)
-      .collect()
+    val counts = table.select(col(partCol), dead).rdd.mapPartitions { rows =>
+      val byPart = scala.collection.mutable.HashMap.empty[Any, Array[Long]]
+      rows.foreach { r =>
+        val c = byPart.getOrElseUpdate(r.get(0), Array(0L, 0L))
+        if (r.getBoolean(1)) c(0) += 1
+        c(1) += 1
+      }
+      byPart.iterator.map { case (v, c) => (v, c(0), c(1)) }
+    }.collect()
+    val census = counts.groupMapReduce(_._1)(c => (c._2, c._3)) {
+      case ((g1, n1), (g2, n2)) => (g1 + g2, n1 + n2)
+    }.filter(_._2._1 > 0)
     if (census.nonEmpty)
-      overwriteParts(table.where(col(partCol).isin(census.map(_.get(0)): _*) && !dead),
-        root, partCol, census.filter(r => r.getLong(1) == r.getLong(2)).map(_.get(0)))
+      overwriteParts(table.where(col(partCol).isin(census.keys.toSeq: _*) && !dead)
+          .hint("rebalance", col(partCol)),
+        root, partCol, census.collect { case (v, (gone, n)) if gone == n => v }.toSeq)
   }
 
   /** The one touched-partition rewrite: `rows` replace the `partCol`
@@ -667,7 +682,10 @@ object Similarity {
     * partition's files stay as they are), then each `emptied` partition,
     * which the overwrite never visits because it writes no row there,
     * has its directory removed — an erasure must not leave servable
-    * bytes behind.
+    * bytes behind. One write job: each task writes one file per
+    * partition value among its rows, so a caller that wants one file per
+    * partition clusters `rows` by `partCol` first ([[eraseRows]] does;
+    * graph admission's checkpointed rows are written as they stand).
     */
   private def overwriteParts(rows: DataFrame, root: String, partCol: String,
       emptied: Seq[Any]): Unit = {
@@ -972,7 +990,9 @@ object Similarity {
     * query time. [[probeIvfIndex]] is the read side; SimilaritySpec
     * asserts probe ≡ the in-plan [[ivfTopK]] and that the probe's scan
     * carries the probed cells' `cell IN (...)` partition filter and reads
-    * only their rows.
+    * only their rows. The rows are clustered by cell before the write (a
+    * rebalance), so each cell starts as one file, or a few right-sized
+    * ones when AQE splits a large cell.
     */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       centroidEvery: Int, path: String): Unit = {
@@ -984,6 +1004,7 @@ object Similarity {
     ParallelJobs.run(Seq(
       () => cellAssignment(corpus.select(col(idCol).as("vec_b"), vecD.as("vb"),
           VectorOps.normSq(vecD).as("nb")), cents, col("vb"), col("nb"), 1)
+        .hint("rebalance", col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells"),
       () => cents.write.mode("overwrite").parquet(s"$path/cents")))
   }
@@ -1002,7 +1023,10 @@ object Similarity {
     *
     * The stored centroids come from [[IvfCentroidCache]] as a literal,
     * the same one the probe assigns its queries with: an admission
-    * launches no centroid job once the cache is warm, only the write.
+    * launches no centroid job once the cache is warm. The batch is
+    * clustered by cell before the write (a rebalance), so an admission
+    * is two jobs — the rebalance's shuffle-map job and the write — and
+    * adds one file to each cell it lands in, not one per task per cell.
     */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
@@ -1014,22 +1038,24 @@ object Similarity {
     newVecs.select(col(idCol).as("vec_b"), vecD.as("vb"),
         VectorOps.normSq(vecD).as("nb"))
       .withColumn("cell", argmaxCell(col("vb"), col("nb"), cents))
+      .hint("rebalance", col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
 
   /** ERASURE from a persisted IVF index (the GDPR-deletion-from-serving
     * lane): remove tombstoned vectors by rewriting ONLY the cell
     * partitions that contain them — dynamic partition overwrite leaves
-    * every untouched cell's files alone, so deletion cost is
-    * O(touched cells), not O(index). The quantizer (centroids) is
-    * deliberately NOT retrained: a serving index keeps its cell
-    * geometry stable under deletes and retrains offline.
+    * every untouched cell's files alone. The census reads the id and
+    * cell columns of every file, so the read is O(index); the write is
+    * O(touched cells), one file per rewritten cell. The quantizer
+    * (centroids) is deliberately NOT retrained: a serving index keeps
+    * its cell geometry stable under deletes and retrains offline.
     *
     * The tombstones are collected once into a literal set
     * ([[tombstoneTest]]); `cells` is read through `graft-index`, so no
-    * schema-inference job; [[eraseRows]] then makes one aggregate pass
-    * for the touched cells and rewrites them, removing the directory of
-    * any cell the tombstones empty.
+    * schema-inference job; [[eraseRows]] then finds the touched cells in
+    * one map-only job and rewrites them in two (rebalance and write),
+    * removing the directory of any cell the tombstones empty.
     */
   def deleteFromIvfIndex(path: String, tombstones: DataFrame): Unit =
     tombstoneTest(tombstones).foreach { dead =>

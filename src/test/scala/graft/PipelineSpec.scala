@@ -196,8 +196,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   /** A staging pair with a null c_name, null c_acctbal, a null segment, a
-    * BUILDING customer with no orders (its udate falls back to cdate),
-    * an order with a null key and one for an unknown customer.
+    * BUILDING customer with no orders (its udate falls back to cdate), a
+    * BUILDING customer with a null c_custkey, an order with a null key and
+    * one for an unknown customer.
     */
   private def writeCraftedStaging(dir: String): Unit = writeStaging(dir,
     """(1, 'Customer#1', 100.5, 'BUILDING'),
@@ -206,7 +207,8 @@ class PipelineSpec extends SparkSpec {
       |(4, 'Customer#4', 20.0,  'BUILDING'),
       |(5, NULL,         NULL,  'AUTOMOBILE'),
       |(6, 'Customer#6', 7.25,  NULL),
-      |(7, 'Customer#7', -3.0,  'HOUSEHOLD')""".stripMargin,
+      |(7, 'Customer#7', -3.0,  'HOUSEHOLD'),
+      |(NULL, 'Customer#0', 9.5, 'BUILDING')""".stripMargin,
     """(10, 1,    'F', '1995-01-02 00:00:00', '1-URGENT'),
       |(11, 1,    'O', '1996-03-04 00:00:00', '2-HIGH'),
       |(12, 2,    'F', '1994-05-06 00:00:00', '3-MEDIUM'),
@@ -250,6 +252,9 @@ class PipelineSpec extends SparkSpec {
             .select(coalesce(col("effective_to_date"), col("effective_from_date")).cast("string"))
             .as[String].collect().toSeq
           assert(noOrders == Seq("2023-06-15 00:00:00", "2023-06-15 00:00:00"))
+          // a null-key customer matches no update: it keeps its segment
+          assert(o.upsertImage.where(col("cust_id").isNull).select("mkt_segment")
+            .as[String].collect().toSeq == Seq("BUILDING"))
         }
         if (dir == nullKeys) {
           // the lone null-key order is the latest; next to keyed orders

@@ -370,9 +370,10 @@ class SimilaritySpec extends SparkSpec {
         "embedding", 5, 8, 8, 3, tombstones = Some(tomb))
         .collect().map(_.toSeq).toSeq
       val bytesBefore = storageBytes
-      // the tombstone collect, the edge census (shuffle-map and result
-      // jobs) and rewrite, and a checkpoint and a write per side table;
-      // no tombstone checkpoint, broadcast build or schema inference
+      // the tombstone collect, the edge census (one map-only job) and
+      // rewrite (its rebalance's shuffle-map job and the write), and a
+      // checkpoint and a write per side table; no tombstone checkpoint,
+      // broadcast build or schema inference
       val jobs = jobsOf(Similarity.compactGraphIndex(path, tomb))._2
       assert(jobs <= 8, s"a compaction launched $jobs Spark jobs")
       // erasure is physical: no masked endpoint, node, or assignment
@@ -1139,9 +1140,10 @@ class SimilaritySpec extends SparkSpec {
     val tomb = before.filter(_._2 == victim).map(_._1).toSeq :+
       partialMembers.head
     val tombstones = tomb.toDF("vec_id")
-    // one census pass (its shuffle-map and result jobs) and the
-    // rewrite; the local tombstone batch is collected with no job and
-    // ships as a literal set, so no checkpoint and no broadcast build
+    // one map-only census job and the rewrite (its rebalance's
+    // shuffle-map job and the write); the local tombstone batch is
+    // collected with no job and ships as a literal set, so no checkpoint
+    // and no broadcast build
     val jobs = jobsOf(Similarity.deleteFromIvfIndex(path, tombstones))._2
     assert(jobs <= 3, s"an erasure launched $jobs Spark jobs")
     val after = spark.read.parquet(s"$path/cells")
@@ -1155,6 +1157,106 @@ class SimilaritySpec extends SparkSpec {
     assert(files(untouched) == untouchedBefore,
       "untouched cell partitions must not be rewritten (O(touched) deletes)")
     assert(after.length == before.length - tomb.length)
+  }
+
+  /** The parquet files of each cell directory of the IVF index at
+    * `path`: cell → file name → the file's bytes. */
+  private def cellFiles(path: String): Map[Long, Map[String, Seq[Byte]]] =
+    new java.io.File(s"$path/cells").listFiles.toSeq
+      .filter(_.getName.startsWith("cell=")).map { d =>
+        d.getName.stripPrefix("cell=").toLong -> d.listFiles.toSeq
+          .filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+      }.toMap
+
+  // With openCostInBytes at maxPartitionBytes every file is a split of its
+  // own, so a cell's files are counted by different census tasks, and the
+  // tasks that read its live files see no dead row there.
+  test("IVF erasure census: a cell whose files span several tasks is rewritten, an emptied one removed, the rest byte for byte") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_census").toString
+    spark.conf.set("spark.sql.files.openCostInBytes", spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    try {
+      Similarity.writeIvfIndex(corpus.where(col("vec_id") % 3 =!= 0), "vec_id", "embedding", 25, path)
+      Seq(0, 3).foreach(r => Similarity.appendToIvfIndex(
+        corpus.where(col("vec_id") % 6 === r), "vec_id", "embedding", path))
+      // cell → file name → the ids it holds
+      val held = spark.read.parquet(s"$path/cells")
+        .select(col("vec_b"), col("cell").cast("long"),
+          regexp_extract(input_file_name(), "[^/]*$", 0))
+        .as[(Long, Long, String)].collect()
+        .groupBy(_._2).map { case (c, rs) =>
+          c -> rs.groupBy(_._3).map { case (f, fr) => f -> fr.map(_._1).toSet }
+        }
+      val multi = held.filter(_._2.size >= 2).keys.toSeq.sorted
+      assert(multi.size >= 3, s"fixture: only ${multi.size} cells hold several files")
+      val (partial, emptied) = (multi(0), multi(1))
+      // every dead row of `partial` sits in one file; its others live
+      val (deadFile, deadIds) = held(partial).toSeq.minBy(_._1)
+      val liveIds = held(partial).values.flatten.toSet -- deadIds
+      assert(liveIds.nonEmpty)
+      val tomb = deadIds ++ held(emptied).values.flatten
+      val before = cellFiles(path)
+      assert(IndexRoute.GraftIndex(path).read(spark, "cells").rdd.getNumPartitions ==
+        before.values.map(_.size).sum, "fixture: the census must read one file per task")
+      Similarity.deleteFromIvfIndex(path, tomb.toSeq.toDF("vec_id"))
+      val after = cellFiles(path)
+      assert(!after.contains(emptied) && !new java.io.File(s"$path/cells/cell=$emptied").exists,
+        "a cell whose rows were all dead, across several files, must be removed")
+      val survivors = spark.read.parquet(s"$path/cells")
+        .where(col("cell") === partial).select("vec_b").as[Long].collect().toSet
+      assert(survivors == liveIds, s"cell $partial lost live rows (dead rows were in $deadFile)")
+      assert(after(partial).keySet.intersect(before(partial).keySet).isEmpty,
+        "the partially erased cell must be rewritten")
+      assert(after - partial == before - partial - emptied,
+        "untouched cells must keep their files byte for byte")
+    } finally {
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
+  }
+
+  test("IVF file layout: an admission adds one file per cell it lands in, in two jobs; an erasure leaves one file per rewritten cell") {
+    val corpus = Tables.embeddings(spark, sf0001)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_layout").toString
+    def cellOf(ids: Set[Long]): Set[Long] = spark.read.parquet(s"$path/cells")
+      .where(col("vec_b").isin(ids.toSeq: _*)).select(col("cell").cast("long"))
+      .as[Long].collect().toSet
+    try {
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", 25, path)
+      assert(cellFiles(path).values.forall(_.size == 1), "a new index holds one file per cell")
+      (0 until 5).foreach { n =>
+        // what a serving caller sends: 100 local rows under fresh ids, which
+        // the local scan spreads over four tasks
+        val rows = corpus.where(col("vec_id") % 5 === n)
+          .withColumn("vec_id", col("vec_id") + (n + 1) * 1000000L).collect()
+        val batch = spark.createDataFrame(java.util.Arrays.asList(rows: _*), corpus.schema)
+        val before = cellFiles(path)
+        val jobs = jobsOf(Similarity.appendToIvfIndex(batch, "vec_id", "embedding", path))._2
+        // the first admission reads the centroids into the cache
+        if (n > 0) assert(jobs <= 2, s"a warm admission launched $jobs Spark jobs")
+        val landed = cellOf(rows.map(_.getAs[Long]("vec_id")).toSet)
+        val added = cellFiles(path).map { case (c, fs) =>
+          c -> (fs.size - before.getOrElse(c, Map.empty).size)
+        }
+        assert(added == added.keys.map(c => c -> (if (landed(c)) 1 else 0)).toMap,
+          s"admission $n added files per cell: $added")
+      }
+      // erase half of the rows of three cells
+      val stored = spark.read.parquet(s"$path/cells").select(col("vec_b"), col("cell").cast("long"))
+        .as[(Long, Long)].collect().groupBy(_._2)
+      val touched = stored.keys.toSeq.sorted.take(3)
+      val tomb = touched.flatMap(c =>
+        stored(c).map(_._1).sorted.zipWithIndex.collect { case (id, i) if i % 2 == 0 => id })
+      val before = cellFiles(path)
+      assert(touched.forall(before(_).size >= 2), "fixture: a touched cell holds a single file")
+      Similarity.deleteFromIvfIndex(path, tomb.toDF("vec_id"))
+      val after = cellFiles(path)
+      touched.foreach(c => assert(after(c).size == 1, s"rewritten cell $c holds ${after(c).size} files"))
+      assert(after -- touched == before -- touched, "untouched cells must keep their files")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    }
   }
 
   test("ext_emb_pca_project: labels partition the corpus, bounds bracket the mean") {
